@@ -12,7 +12,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
     // bench-standard session (local[32] + confs) — shared with the
-    // profilers through Harness so their numbers stay comparable
+    // profiler through Harness so profile and bench numbers compare
     val spark = Harness.session()
     // Warm-up: run EVERY query once at the smallest SF before timing.
     // Each query's generated code (whole-stage codegen classes) is
@@ -98,8 +98,8 @@ object Bench {
     //     "[success]" line (~13 bytes/query: 118 queries ≈ 1.75 kB,
     //     with calibration trimmed to median-only and a stderr budget
     //     guard below).
-    // Locale.ROOT — same invalid-JSON-under-comma-decimal-locale fix
-    // as ProfileIvf/Harness (ADVICE r12)
+    // Locale.ROOT: the f interpolator honors the default locale, and a
+    // comma-decimal locale would emit invalid JSON (ADVICE r12)
     def d3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val okResults = results.filterNot { case (k, _) => errors.contains(k) }

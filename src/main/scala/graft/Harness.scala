@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared measurement harness for the timing mains ([[Bench]],
-  * [[ProfileDedup]], [[ProfileRetrieval]]): ONE definition of the
-  * bench-standard session, the warm/measure directories, and the
-  * warm-then-min-of-N aggregation, so profile numbers stay comparable
-  * to bench numbers by construction — a harness change (conf, warm
-  * default, pass count) edits one place instead of three mains that
-  * must agree for cross-artifact comparisons to mean anything. */
+  * [[Profile]]): ONE definition of the bench-standard session, the
+  * warm/measure directories, and the window-calibration gauge, so
+  * profile numbers stay comparable to bench numbers by construction —
+  * a harness change (conf, warm default) edits one place instead of
+  * mains that must agree for cross-artifact comparisons to mean
+  * anything. */
 object Harness {
 
   def sfDir: String =
@@ -72,10 +72,9 @@ object Harness {
   }
 
   /** Interpolated median: odd counts take the true middle element;
-    * even counts AVERAGE the two middle elements. (r16 ADVICE: the
-    * profiler mains bracket their passes with exactly two calibration
-    * points, and an upper-median-of-2 is just the max — one contention
-    * spike in either bracketing point would inflate the window factor
+    * even counts AVERAGE the two middle elements. (r16 ADVICE: an
+    * upper-median-of-2 is just the max — one contention spike in
+    * either of two calibration points would inflate the window factor
     * bench_diff divides by. Averaging keeps the 2-point case unbiased
     * and leaves odd-count callers unchanged.) */
   def medianOf(xs: Seq[Double]): Double = {
@@ -83,39 +82,5 @@ object Harness {
     val sorted = xs.sorted
     if (sorted.size % 2 == 1) sorted(sorted.size / 2)
     else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
-  }
-
-  /** Profiler driver: warm once at [[warmDir]] (Janino + JIT — see
-    * Bench's warm-pass note for the measured rationale), run `passes`
-    * timed passes of `profile` at [[sfDir]], and print ONE JSON line
-    * of per-stage minimums (min-of-passes: same host-contention
-    * argument as Bench's min-of-3). */
-  def runProfile(metric: String,
-      profile: (SparkSession, String) => Seq[(String, Double)],
-      passes: Int = 3): Unit = {
-    val spark = session()
-    profile(spark, warmDir)
-    // window calibration brackets the timed passes (same gauge as
-    // Bench, r16): cross-window PROFILE_* comparisons get a measured
-    // factor instead of the scatter-prone inference that burned
-    // r14/r15 on PROFILE_STREAM readings
-    calibrationRun(spark)
-    val calBefore = calibrationPoint(spark)
-    val runs = Seq.fill(passes)(profile(spark, sfDir))
-    val calAfter = calibrationPoint(spark)
-    val names = runs.head.map(_._1)
-    val best = names.map { n => n -> runs.map(_.toMap.apply(n)).min }
-    // Locale.ROOT: the f interpolator honors the default locale, and a
-    // comma-decimal locale would emit invalid JSON (ADVICE r12)
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val js = best.map { case (k, v) => Verify.q(k) + ":" + d3(v) }
-      .mkString("{", ",", "}")
-    val cal = s""""calibration":{"points":[${d3(calBefore)},""" +
-      s"""${d3(calAfter)}],"median":${d3(medianOf(Seq(calBefore,
-        calAfter)))},"rows":$CalibrationRows}"""
-    println(s"""{"metric":${Verify.q(metric)},"unit":"sec","stages":$js,""" +
-      s""""passes":$passes,"agg":"min",$cal,"sf":${Verify.q(sfDir)}}""")
-    spark.stop()
   }
 }

@@ -995,19 +995,6 @@ object EventQueries {
     * silently bottlenecking on a pinned count. */
   private val streamRowCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def streamStatePartitions(s: SparkSession, dir: String,
-      stores: Int): Int = {
-    // dev-only sweep override ([[graft.ProfileStream]]): a system
-    // property — read PER CALL so one JVM can sweep counts — and LOUD,
-    // same rationale as SPARK_GRAFT_ONLY (an override leaking into a
-    // driver run must be visible in the log). The driver never sets it.
-    sys.props.get("graft.stream.statePartitions") match {
-      case Some(v) =>
-        println(s"[stream] STATE-PARTITION OVERRIDE: $v (dev sweep)")
-        v.toInt
-      case None => derivedStatePartitions(s, dir, stores)
-    }
-  }
   private def derivedStatePartitions(s: SparkSession, dir: String,
       stores: Int): Int = {
     val key = s"${graft.operators.SkewOps.sessionKey(s)}|$dir"
@@ -1042,11 +1029,11 @@ object EventQueries {
     // collisions, which keyed file dirs don't have)
     val name = streamSinkKey(s, dir, "q32")
     // state partitions derived from input volume (1-store windowed
-    // aggregation) — see streamStatePartitions. The WHOLE pipeline
+    // aggregation) — see derivedStatePartitions. The WHOLE pipeline
     // (UDF registration, file stream, sink read) is built on the clone
     // the helper hands us: registrations do not carry across sessions.
     graft.streaming.StreamOps.withStatePartitions(
-        s, streamStatePartitions(s, dir, stores = 1)) { sess =>
+        s, derivedStatePartitions(s, dir, stores = 1)) { sess =>
       graft.functions.MicrosOf.register(sess)
       val stream = sess.readStream.schema(schema)
         .parquet(stagedStreamDir(s, dir))
@@ -1094,10 +1081,10 @@ object EventQueries {
     val schema = ad.raw.schema // legacy data: raw sets nanosAsLong on demand
     val name = streamSinkKey(s, dir, "q33")
     // state partitions derived from input volume (1-store session
-    // aggregation) — see streamStatePartitions; pipeline built on the
+    // aggregation) — see derivedStatePartitions; pipeline built on the
     // clone (see q32)
     graft.streaming.StreamOps.withStatePartitions(
-        s, streamStatePartitions(s, dir, stores = 1)) { sess =>
+        s, derivedStatePartitions(s, dir, stores = 1)) { sess =>
       graft.functions.MicrosOf.register(sess)
       val stream = sess.readStream.schema(schema)
         .parquet(stagedStreamDir(s, dir))
@@ -1157,9 +1144,9 @@ object EventQueries {
     // join keeps 4 state stores per partition, so over-partitioning
     // tiny state costs pure per-batch commit I/O: 32 → 7.3 s, 8 →
     // 2.6 s at sf0.1; 32 → 8.7 s vs 4 → 3.0 s at sf1) — see
-    // streamStatePartitions; pipeline on the clone (q32)
+    // derivedStatePartitions; pipeline on the clone (q32)
     graft.streaming.StreamOps.withStatePartitions(
-        s, streamStatePartitions(s, dir, stores = 4)) { sess =>
+        s, derivedStatePartitions(s, dir, stores = 4)) { sess =>
       graft.functions.MicrosOf.register(sess)
       val src =
         sess.readStream.schema(schema).parquet(stagedStreamDir(s, dir))

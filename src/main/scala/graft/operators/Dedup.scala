@@ -316,18 +316,6 @@ object Dedup {
     result
   }
 
-  /** Diagnostic breadcrumb from the LAST [[connectedComponents]] call
-    * on this JVM: edge count if it was measured (−1 when the loop path
-    * skipped the count), composed propagation rounds (0 on the driver
-    * fast path), loop materializations (jobs that decided
-    * convergence), and which path ran. Written for ProfileCC's
-    * bounded-iteration evidence — single-threaded dev/probe use only,
-    * never read by the engine. */
-  final case class CcStats(edges: Long, rounds: Int,
-      materializations: Int, fastPath: Boolean)
-  val lastCcStats =
-    new java.util.concurrent.atomic.AtomicReference[CcStats](null)
-
   /** Connected components over an undirected near-dup pair graph
     * (`d1`, `d2` columns): the grouping step that turns pairwise
     * "A≈B" verdicts into dedup CLUSTERS — every doc gets the minimum
@@ -420,12 +408,9 @@ object Dedup {
       basePlan.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val base = if (ownCache) basePlan.persist() else basePlan
     def releaseBase(): Unit = if (ownCache) base.unpersist()
-    var countedEdges = -1L
     if (localEligible) {
       val nPairs = base.count()
-      countedEdges = nPairs
       if (nPairs <= localEdgeThreshold / 4) {
-        lastCcStats.set(CcStats(nPairs, 0, 0, fastPath = true))
         val result = localComponents(pairs.sparkSession, base,
           idType == org.apache.spark.sql.types.IntegerType)
         releaseBase()
@@ -495,7 +480,6 @@ object Dedup {
     // materialization × 2 materializations on the same graphs).
     var converged = false
     var round = 0
-    var materializations = 0
     var sinceCheckpoint = 0
     var depth = 2
     val generations = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -559,11 +543,8 @@ object Dedup {
       generations += labels
       labels = next
       round += depth
-      materializations += 1
       depth = math.min(depth * 2, 8)
     }
-    lastCcStats.set(
-      CcStats(countedEdges, round, materializations, fastPath = false))
     // silent truncation would corrupt the dedup result downstream
     // (non-minimal cluster_ids, several keep=1 rows per component) —
     // pathological graphs (diameter > maxIter) must fail loudly

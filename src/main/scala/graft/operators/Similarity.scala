@@ -251,7 +251,7 @@ object Similarity {
     *
     * The default is 0 — the broadcast path ALWAYS. The literal form
     * measured fastest at oracle cluster counts when the assignment was
-    * its own codegen stage, but ProfileIvf/ProfileIvfDiag (round 12)
+    * its own codegen stage, but the round-12 IVF profile (PROFILE_IVF)
     * caught a 50× cliff the isolated measurement missed: fused into a
     * join stage (ivfTopK's candidate scoring, semanticDedup's pair
     * stage), the combined stage's generated code blows past the

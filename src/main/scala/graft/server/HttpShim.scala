@@ -165,7 +165,11 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
         case e: IllegalArgumentException =>
           respond(ex, 400, Json.write(Map("error" -> e.getMessage)))
         case e: Throwable =>
-          respond(ex, 500, Json.write(Map("error" -> e.toString)))
+          // the exception names engine internals (classes, columns,
+          // paths): it goes to the server log, never to the client
+          System.err.println(
+            s"[http] 500 ${ex.getRequestMethod} ${ex.getRequestURI.getPath}: $e")
+          respond(ex, 500, """{"error":"internal error"}""")
       }
     })
 

@@ -16,7 +16,7 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("medianOf: even count averages the two middles (r16 ADVICE: " +
-    "upper-median-of-2 is max, biasing bracketed profiler windows)") {
+    "upper-median-of-2 is max, biasing two-point calibration windows)") {
     assert(Harness.medianOf(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
     assert(Harness.medianOf(Seq(1.0, 3.0)) == 2.0)
   }

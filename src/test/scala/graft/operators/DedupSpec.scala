@@ -312,21 +312,6 @@ class DedupSpec extends AnyFunSuite {
       Seq((1, 1, 1L), (2, 1, 0L), (5, 5, 1L), (7, 5, 0L)))
   }
 
-  test("connectedComponents: lastCcStats breadcrumb records the path, " +
-    "edge count, and bounded iteration counters") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("d1", "d2")
-    Dedup.connectedComponents(pairs).collect()
-    val fast = Dedup.lastCcStats.get()
-    assert(fast.fastPath && fast.edges == 3L &&
-      fast.rounds == 0 && fast.materializations == 0)
-    Dedup.connectedComponents(pairs, localEdgeThreshold = 0).collect()
-    val loop = Dedup.lastCcStats.get()
-    // diameter-2 chain: one materialization converges, one confirms;
-    // edges uncounted on the forced-loop path (no localEligible count)
-    assert(!loop.fastPath && loop.edges == -1L &&
-      loop.materializations >= 1 && loop.rounds >= loop.materializations)
-  }
-
   test("connectedComponents: mixed-width id columns fall through to the " +
     "loop; null endpoints register singletons on the fast path") {
     // d1 long / d2 int: the fast path's typed getters would CCE, so

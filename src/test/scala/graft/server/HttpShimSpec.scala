@@ -363,6 +363,27 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally s2.stop()
   }
 
+  test("a server fault answers a generic 500 with no exception detail") {
+    // a points frame without value_r fails inside the route's query,
+    // past every 4xx check
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val s2 = new HttpShim(spark, ad.pointsAll.drop("value_r"), ad.attConf,
+      ad.attNames)
+    s2.start()
+    try {
+      val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${s2.boundPort}/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          """{"targets": [{"cs": "events.cs:10000", "target": "u1/click"}],
+            |"range": {"from": "2024-01-05", "to": "2024-01-20"},
+            |"interval": "1d"}""".stripMargin)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 500)
+      assert(r.body() == """{"error":"internal error"}""")
+      assert(!r.body().contains("Exception"))
+    } finally s2.stop()
+  }
+
   test("malformed JSON answers 400") {
     val r = post("/query", """{"targets": [""")
     assert(r.statusCode() == 400)
