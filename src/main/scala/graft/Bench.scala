@@ -129,9 +129,10 @@ object Bench {
       .mkString("{", ",", "}")
     // total covers successful queries only; failures are listed explicitly
     val total = okResults.map(_._2).sum
-    // calibration fields ride the headline line so they reach both
-    // BENCH_SELF.json and the driver artifact's tail (~90 chars —
-    // the compact final line stays well under the 2000-char tail)
+    // calibration fields and the run stamp (cpus, -Xmx, git revision,
+    // sf dir) ride the headline line so they reach both
+    // BENCH_SELF.json and the captured output tail (~180 chars —
+    // the compact final line stays under the 2000-char tail)
     val calMedian = Harness.medianOf(calPoints.toSeq)
     val calJson =
       s""""calibration":{"points":${calPoints.map(d3).mkString("[", ",", "]")},""" +
@@ -139,7 +140,8 @@ object Bench {
     val headline =
       s"""{"metric":"total","value":${d3(total)},"unit":"sec",""" +
       s""""n_queries":${names.size},"n_failed":${errors.size},""" +
-      s""""passes":3,"agg":"min",$calJson,"sf":${Verify.q(sfDir)}}"""
+      s""""passes":3,"agg":"min",$calJson,""" +
+      s""""stamp":${graft.server.Json.write(Harness.stamp(spark, sfDir))}}"""
     val perQueryFull =
       s"""{"metric":"per_query","unit":"sec","queries":$qs,""" +
       s""""errors":$errJson,"sf":${Verify.q(sfDir)}}"""

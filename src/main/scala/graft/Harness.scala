@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** Shared measurement harness for the timing mains ([[Bench]],
@@ -35,6 +37,21 @@ object Harness {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
+
+  /** The run conditions every timing artifact carries, so a number
+    * read in another window can be traced to its cause: the session's
+    * cpus, the JVM's `-Xmx`, `git describe --dirty` of the working
+    * tree, and the data directory measured. */
+  def stamp(spark: SparkSession, sf: String): ListMap[String, Any] =
+    ListMap(
+      "cpus" -> spark.sparkContext.defaultParallelism,
+      "xmx" -> java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.findLast(_.startsWith("-Xmx"))
+        .getOrElse(s"-Xmx${Runtime.getRuntime.maxMemory >> 20}m"),
+      "git" -> scala.util.Try(scala.sys.process.Process(
+        Seq("git", "describe", "--always", "--dirty")).!!.trim)
+        .getOrElse("unknown"),
+      "sf" -> sf)
 
   /** Rows in the fixed calibration workload — sized so one run takes
     * ~0.5–1 s on the stated 32-core bench harness: long enough to feel

@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
@@ -67,14 +66,8 @@ object Profile {
     val t0 = System.currentTimeMillis()
     val t1 = try { once(dir); System.currentTimeMillis() }
       finally { rec.drain(); spark.sparkContext.removeSparkListener(rec) }
-    Json.write(rec.report(t0, t1) ++ ListMap("query" -> name, "stamp" -> ListMap(
-      "cpus" -> spark.sparkContext.defaultParallelism,
-      "xmx" -> java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.findLast(_.startsWith("-Xmx"))
-        .getOrElse(s"-Xmx${Runtime.getRuntime.maxMemory >> 20}m"),
-      "git" -> scala.util.Try(scala.sys.process.Process(
-        Seq("git", "describe", "--always", "--dirty")).!!.trim).getOrElse("unknown"),
-      "sf" -> dir)))
+    Json.write(rec.report(t0, t1) ++
+      ListMap("query" -> name, "stamp" -> Harness.stamp(spark, dir)))
   }
 
   private def r3(d: Double): Double = math.round(d * 1000) / 1000.0

@@ -39,13 +39,10 @@ object PipelineQueries {
   private def docsSpread(s: SparkSession, dir: String): DataFrame = {
     val df = docs(s, dir)
     val scanParts = df.rdd.getNumPartitions
-    // target parallelism: conf-overridable (r18, ADVICE) — point-in-time
-    // defaultParallelism is transiently low under dynamic allocation at
-    // job start, so a cluster deployment pins graft.spread.parallelism
-    // to its steady-state core count instead; the local default keeps
-    // the bench behavior byte-identical
-    val target = s.conf.get("graft.spread.parallelism",
-      s.sparkContext.defaultParallelism.toString).toInt
+    // defaultParallelism returns spark.default.parallelism when set,
+    // so a cluster whose dynamic allocation starts low pins that
+    // Spark conf to its steady-state core count
+    val target = s.sparkContext.defaultParallelism
     if (scanParts >= target) df
     else df.repartition(target)
   }

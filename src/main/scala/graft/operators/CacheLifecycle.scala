@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** Explicit release for operator-internal persists.
   *
@@ -111,23 +112,22 @@ private[graft] object CacheLifecycle {
   def unpersistAfterFirstUse(result: DataFrame, cached: Dataset[_]): Unit =
     releaseAfterFirstUse(result)(() => cached.unpersist(blocking = false))
 
-  /** Persist a TEXT-BEARING frame with a size-gated storage level: a
+  /** Estimated input bytes past which a text-bearing cache goes
+    * DISK_ONLY (see [[textStorageLevel]]). */
+  val TextMemMaxBytes: Long = 4L << 30
+
+  /** The ONE storage-level decision for text-bearing caches: a
     * deserialized in-memory copy of corpus text competes with execution
-    * memory at scale, so past `graft.cache.textMemMaxBytes` (input-size
-    * estimate, default 4 GiB) the cache goes DISK_ONLY — still one
-    * compute pass instead of N, read back off sequential local disk.
-    * Small (bench-scale) inputs keep MEMORY_AND_DISK and their plans/
-    * timings. The same gate stripBoilerplate shipped with in r18;
-    * factored here for the other multi-consumer text frames. */
-  def persistTextGated(df: DataFrame): DataFrame = {
-    val maxMem = df.sparkSession.conf
-      .get("graft.cache.textMemMaxBytes", (4L << 30).toString).toLong
-    val level =
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxMem)
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.DISK_ONLY
-    df.persist(level)
-  }
+    * memory at scale, so when `sizedBy`'s input-size estimate exceeds
+    * [[TextMemMaxBytes]] the cache goes DISK_ONLY — still one compute
+    * pass instead of N, read back off sequential local disk. Small
+    * (bench-scale) inputs keep MEMORY_AND_DISK and their plans/timings.
+    * `sizedBy` is the frame whose size decides (the cached frame itself,
+    * or the corpus it is derived from). */
+  def textStorageLevel(sizedBy: DataFrame): StorageLevel =
+    if (sizedBy.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        TextMemMaxBytes) StorageLevel.MEMORY_AND_DISK
+    else StorageLevel.DISK_ONLY
 
   /** The general form: run `release` once, after the first completed
     * query containing `result`'s plan — for resources that are not a

@@ -710,29 +710,37 @@ object Dedup {
     * one bounded struct-max aggregate over the member frame, and the
     * winner table (one row per cluster) broadcasts back. Zero
     * corpus-sized shuffles, no windows. */
-  def bestQualityKeep(clusters: DataFrame, quality: DataFrame): DataFrame = {
+  def bestQualityKeep(clusters: DataFrame, quality: DataFrame): DataFrame =
+    bestQualityKeep(clusters, quality, MembersPersistMinBytes)
+
+  /** Estimated `quality` bytes from which [[bestQualityKeep]] persists
+    * its members frame: between p65's quality estimate at sf0.1
+    * (354 KB, where the persist loses) and at sf1 (3.5 MB, where it
+    * starts to win) — see the measurements in [[bestQualityKeep]]. */
+  val MembersPersistMinBytes: Long = 2L << 20
+
+  /** [[bestQualityKeep]] with its persist gate at `persistMinBytes`
+    * (specs force the persist branch on tiny fixtures). */
+  private[operators] def bestQualityKeep(clusters: DataFrame,
+      quality: DataFrame, persistMinBytes: Long): DataFrame = {
     // members feeds BOTH the per-cluster argmax (the broadcast build
     // side) and the final audit join — unpersisted the `quality`
     // subtree runs twice per materialization, and quality is typically
     // a FULL-CORPUS classifier pass (the r17 p65 plan shows the
     // classifierScore scan+projection as two identical legs). The
-    // persist is SIZE-GATED on the quality input's estimated bytes
-    // (`graft.cache.membersPersistMinBytes`, default 1 GiB): an r18
-    // same-window A/B ladder measured the cache round-trip at 1.3–1.4×
-    // control-normalized on p65 at sf0.1 (legs 4.90/3.17/5.34/2.45 s
-    // persist/no/persist/no against p20+p33 controls) — at small
-    // inputs the fused re-scan is cheaper than the cache machinery,
-    // while past the gate the persist removes one full corpus
-    // classifier pass. Same provably-small-else-assume-large logic as
-    // importanceWeights' broadcast gate; results identical either way
-    // (the cached frame is thin: doc_id, margin, cluster_id — cluster
-    // MEMBERS only after the inner join), released by the one-shot
-    // listener at the result's first materialization.
-    val minBytes = quality.sparkSession.conf
-      .get("graft.cache.membersPersistMinBytes", (1L << 30).toString)
-      .toLong
-    val qStats = quality.queryExecution.optimizedPlan.stats.sizeInBytes
-    val qSmall = qStats.isValidLong && qStats <= minBytes
+    // persist is SIZE-GATED on the quality input's estimated bytes.
+    // Measured on p65 (graft.Bench, persist forced vs not, ABBA/BAAB
+    // order, 4-core host): sf0.1 2.66/2.61 s vs 2.57/2.57 s — and
+    // 1.3–1.4× slower in the r18 ladder — so small inputs re-scan;
+    // sf1 3.92/3.99 s vs 4.87/3.99 s; sf3 8.46/9.55 s vs 11.79/11.67 s;
+    // sf10 24.11/23.53 s vs 31.66/29.09 s — past the gate the persist
+    // saves a full corpus classifier pass.
+    // Results are identical either way (the cached frame is thin:
+    // doc_id, margin, cluster_id — cluster MEMBERS only after the inner
+    // join), released by the one-shot listener at the result's first
+    // materialization.
+    val qSmall = quality.queryExecution.optimizedPlan.stats.sizeInBytes <
+      persistMinBytes
     val membersBase = quality.select(col("doc_id"), col("margin"))
       .join(broadcast(clusters.select(col("doc_id"), col("cluster_id"))),
         Seq("doc_id"))
@@ -948,20 +956,11 @@ object Dedup {
     // rewrite side), so this is the WIDEST persist of the r17 batch —
     // gated by the same-window sf1 A/B like the rest; released after
     // the result's first materialization.
-    // Storage level is SIZE-GATED (r18, ADVICE): a deserialized
-    // in-memory copy of the full chunk text roughly doubles the
-    // corpus working set at scale and competes with execution memory —
-    // past the input-size gate the cache spills to DISK_ONLY (still
-    // one tokenize+sha2 pass instead of two; the read back is
-    // sequential local disk). The bench corpus stays far under the
-    // gate, so local plans and timings are unchanged.
-    val textMemMax = corpus.sparkSession.conf
-      .get("graft.cache.textMemMaxBytes", (4L << 30).toString).toLong
-    val chLevel =
-      if (corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-          <= textMemMax)
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.DISK_ONLY
+    // Storage level is SIZE-GATED on the corpus (r18, ADVICE): a
+    // deserialized in-memory copy of the full chunk text roughly
+    // doubles the corpus working set at scale, so past the gate the
+    // cache goes DISK_ONLY (still one tokenize+sha2 pass instead of
+    // two). The bench corpus stays far under the gate.
     val ch = corpus
       .select(col("doc_id"),
         split(coalesce(col("text"), lit("")), " ").as("ts"))
@@ -972,7 +971,7 @@ object Dedup {
       .select(col("doc_id"), (col("pos") + 1).as("ci"),
         col("col").as("chunk"))
       .withColumn("d", sha2(col("chunk"), 256))
-      .persist(chLevel)
+      .persist(CacheLifecycle.textStorageLevel(corpus))
     val buckets = SkewOps.defaultBuckets(corpus)
     val boil = SkewOps.saltedAgg(ch.select(col("d"), col("doc_id")),
       keys = Seq("d"), saltFrom = "doc_id", buckets = buckets,

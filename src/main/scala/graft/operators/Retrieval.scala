@@ -30,23 +30,6 @@ object Retrieval {
     .where(length(col("w")) >= 1)
     .distinct()
 
-  /** Selectivity gate for the postings-prune ordering (the r17 ORDER
-    * NOTE, now an actual branch): `true` pulls the broadcast
-    * query-vocabulary prune BELOW the tf/distinct aggregate —
-    * `join∘distinct ≡ distinct∘join` on the aggregate's own key, so
-    * both orders are bit-identical — which shrinks the one
-    * corpus-sized postings exchange when the query vocabulary is a
-    * SELECTIVE slice of the corpus vocabulary. Default FALSE
-    * (aggregate-then-prune): on corpora where the eval vocabulary
-    * covers most tokens the early probe is pure per-occurrence cost
-    * (bench corpus: 100% coverage, p72 measured 1.27× slower with the
-    * reorder in r17). Flip it per-session for production eval suites
-    * with |query vocab| ≪ |corpus vocab|; RetrievalSpec pins both
-    * branches to identical results. */
-  private def pruneBeforeAggregate(df: DataFrame): Boolean =
-    df.sparkSession.conf
-      .get("graft.retrieval.selectiveQueries", "false").toBoolean
-
   /** Rarity weights over a query-vocab-pruned postings frame whose
     * rows are distinct per (doc_id, w): `scale div df` — the integer
     * IDF surrogate both scorers share (floor division preserves the
@@ -118,11 +101,11 @@ object Retrieval {
     val vocab = broadcast(qt.select(col("w")).distinct())
     // postings restricted to the query vocabulary; df over THIS set
     // equals df over the corpus for every token that can ever score.
-    // ORDER (r17 NOTE → r18 gate): aggregate-then-prune by default;
-    // [[pruneBeforeAggregate]] pulls the vocab prune below the
-    // distinct for selective eval vocabularies (join∘distinct ≡
-    // distinct∘join on the distinct's own key — bit-identical, both
-    // branches pinned equal in RetrievalSpec).
+    // ORDER (r17 NOTE): aggregate-then-prune. Pruning below the
+    // distinct is bit-identical (join∘distinct ≡ distinct∘join on the
+    // distinct's own key) but pays a per-occurrence probe; on the
+    // bench corpus, whose eval vocabulary covers every token, it
+    // measured p72 1.27× slower.
     // Persisted: both the df aggregate (broadcast build side) and the
     // scoring join probe it — without the cache the corpus
     // explode+distinct runs TWICE per invocation, and at 100 TB that
@@ -132,10 +115,7 @@ object Retrieval {
     val toks = corpus
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) >= 1)
-    val rel = (if (pruneBeforeAggregate(corpus))
-        toks.join(vocab, Seq("w")).distinct()
-      else toks.distinct().join(vocab, Seq("w")))
-      .persist()
+    val rel = toks.distinct().join(vocab, Seq("w")).persist()
     // rel rows are distinct (doc_id, w), so count(*) IS the document
     // frequency — no second distinct aggregate
     val wt = rarityWeights(rel, scale)
@@ -230,17 +210,10 @@ object Retrieval {
       .where(col("dl") >= 1)
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
     val vocab = broadcast(qt.select(col("w")).distinct())
-    // aggregate-then-prune by default; [[pruneBeforeAggregate]] pulls
-    // the vocab prune below the tf aggregate for selective query
-    // vocabularies (the prune key is the aggregate's own key, so the
-    // per-(doc_id, w) counts are untouched — bit-identical branches,
-    // pinned in RetrievalSpec)
-    val grouped = if (pruneBeforeAggregate(corpus)) ct.join(vocab, Seq("w"))
-      else ct
-    val tf = grouped.groupBy(col("doc_id"), col("w"))
+    // aggregate-then-prune, as in [[lexicalTopKImpl]]
+    val rel = ct.groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"), min(col("dl")).as("dl"))
-    val rel = (if (pruneBeforeAggregate(corpus)) tf
-      else tf.join(vocab, Seq("w")))
+      .join(vocab, Seq("w"))
       .persist()
     val wt = rarityWeights(rel, scale)
     val scored = rel
@@ -301,13 +274,18 @@ object Retrieval {
     val qt = queryTokens(queries).persist()
     // corpus persisted (r18): the mining chain reads the corpus once
     // or twice inside the scorer (postings; + the BM25 stats pass) and
-    // ONCE MORE for the candidate-text fetch (`dset`) — each previously
-    // a full parquet scan + upstream union/transform. One cached
-    // (doc_id, text) projection feeds every leg; size-gated storage
-    // level as in [[bm25TopK]]; released after the result's first
-    // materialization.
-    val c = CacheLifecycle.persistTextGated(
-      corpus.select(col("doc_id"), col("text")))
+    // ONCE MORE for the candidate-text fetch (`dset`) — each a full
+    // parquet scan + upstream union/transform. One cached (doc_id,
+    // text) projection feeds every leg; released after the result's
+    // first materialization.
+    // NOTE (measured, kept for BOTH scorers): skipping this cache for
+    // the lexical scorer's two readers did not win on p67 at sf0.1 —
+    // interleaved in one JVM on a 4-core host, 10 order-alternated
+    // pairs, medians 2.38 s direct / 2.40 s cached at local[4] and
+    // 4.97 s / 4.52 s at local[32] (cached faster in 10 of 10 pairs);
+    // each direct re-read repeats the upstream round-robin text shuffle.
+    val proj = corpus.select(col("doc_id"), col("text"))
+    val c = proj.persist(CacheLifecycle.textStorageLevel(proj))
     // Q×k rows, referenced three times below (candidate rows, the
     // semi-join key set, the gate) — persist so retrieval runs once.
     // `scorer` picks the retrieval stage: "lexical" (flat rarity sum)

@@ -748,6 +748,11 @@ object TextStats {
     result
   }
 
+  /** Estimated target-input bytes up to which [[importanceWeights]]
+    * broadcasts the target model — far under Spark's 8 GB broadcast
+    * cap, with room for the driver to build it. */
+  val BroadcastModelMaxBytes: Long = 256L << 20
+
   /** DSIR-style importance weighting for domain-TARGETED selection:
     * score every corpus document by how much more likely a TARGET
     * domain's bigram model finds its transitions than the corpus's
@@ -801,15 +806,13 @@ object TextStats {
     // SIZE-GATED (r18, ADVICE): a caller passing a non-small target
     // would hit the 8 GB broadcast cap / driver OOM where the old
     // shuffled join handled any size — fall back to the unhinted join
-    // when the target INPUT's estimated bytes exceed the gate (the
-    // model aggregate is never larger than its input). Results are
-    // identical either way; only the join strategy moves.
-    val tMaxBytes = target.sparkSession.conf
-      .get("graft.broadcastModel.maxBytes", (256L << 20).toString).toLong
-    val tSmall = target.queryExecution.optimizedPlan.stats.sizeInBytes
-      .isValidLong &&
-      target.queryExecution.optimizedPlan.stats.sizeInBytes <= tMaxBytes
-    val mTSide = if (tSmall) broadcast(mT) else mT
+    // when the target INPUT's estimated bytes exceed
+    // [[BroadcastModelMaxBytes]] (the model aggregate is never larger
+    // than its input). Results are identical either way; only the join
+    // strategy moves.
+    val tBytes = target.queryExecution.optimizedPlan.stats.sizeInBytes
+    val mTSide =
+      if (tBytes <= BroadcastModelMaxBytes) broadcast(mT) else mT
     val stats = mC.join(mTSide, Seq("b"), "left")
       .select(col("b"), col("bi_c"),
         coalesce(expr(s"(bi_t * u_c * ${scale}L) div (bi_c * u_t)"),

@@ -183,19 +183,19 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
     }.toMap
   }
 
+  /** A client-sent `max`: non-positive values are a client error —
+    * the IllegalArgumentException becomes a 400 in [[handle]]. */
+  private def positiveMax(m: Int): Int =
+    if (m > 0) m
+    else throw new IllegalArgumentException(s"max must be positive, got $m")
+
   /** The optional O6 row cap from a request body, CLAMPED to the
     * server ceiling: a client-sized `max` (say 2·10⁹) must not
     * reinstate the unbounded driver-side render
-    * [[ArchiveApi.DefaultRawRowCap]] exists to prevent. Non-positive
-    * values are a client error — the IllegalArgumentException becomes
-    * a 400 in [[handle]]. */
+    * [[ArchiveApi.DefaultRawRowCap]] exists to prevent. */
   private def requestedMax(b: Map[String, Any]): Int =
-    b.get("max").map(Json.num(_).toInt) match {
-      case Some(m) if m <= 0 =>
-        throw new IllegalArgumentException(s"max must be positive, got $m")
-      case Some(m) => math.min(m, ArchiveApi.DefaultRawRowCap)
-      case None => ArchiveApi.DefaultRawRowCap
-    }
+    b.get("max").map(m => math.min(positiveMax(Json.num(m).toInt),
+      ArchiveApi.DefaultRawRowCap)).getOrElse(ArchiveApi.DefaultRawRowCap)
 
   private def body(ex: HttpExchange): Any =
     Json.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
@@ -232,7 +232,7 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
       throw new IllegalArgumentException("missing 'cs'"))
     val glob = p.getOrElse("search",
       throw new IllegalArgumentException("missing 'search'"))
-    val max = p.get("max").map(_.toInt).getOrElse(100)
+    val max = p.get("max").map(m => positiveMax(m.toInt)).getOrElse(100)
     val attrs = ArchiveApi.attributes(attNames, cs, glob, max)
       .collect().map(_.getString(0)).toSeq
     respond(ex, 200, Json.write(Map("attributes" -> attrs)))

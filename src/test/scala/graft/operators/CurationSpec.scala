@@ -275,32 +275,33 @@ class CurationSpec extends AnyFunSuite {
     assert(r.orderBy("rank").collect().map(_.getLong(2)).toSeq == Seq(2L, 1L))
   }
 
-  test("prune-before-aggregate branch (graft.retrieval.selectiveQueries) " +
-    "is bit-identical to the default for both scorers") {
-    // the r18 selectivity gate: join∘distinct ≡ distinct∘join on the
-    // aggregate's own key, so both plan orders must produce the same
-    // rows — including docs with repeated tokens (tf must survive the
-    // reorder) and tokens outside the query vocabulary (pruned either
-    // way). The corpus mixes both.
+  test("mineHardNegatives caches exactly one corpus projection for " +
+    "either scorer, and releases it") {
+    // one cached (doc_id, text) projection feeds every corpus reader:
+    // bm25's three (postings, stats pass, candidate-text fetch) and
+    // lexical's two — dropping it for lexical measured no win on p67
     val corpus = Seq(
-      (1L, "q q q x rare"),
-      (2L, "q y y z"),
-      (3L, "rare z z q"),
-      (4L, "none of these match"))
+      (10L, "alpha beta gamma delta"),
+      (20L, "alpha unrelated words"),
+      (21L, "beta other stuff"))
       .toDF("doc_id", "text")
-    val queries = Seq((9L, "q rare"), (8L, "z")).toDF("query_id", "text")
-    def collectAll(scorer: String) = (scorer match {
-      case "lexical" => Retrieval.lexicalTopK(corpus, queries, k = 5)
-      case _ => Retrieval.bm25TopK(corpus, queries, k = 5)
-    }).orderBy("query_id", "rank").collect().toSeq
+    val queries = Seq((10L, "alpha beta gamma delta"))
+      .toDF("query_id", "text")
+    val cm = spark.sharedState.cacheManager
+    val proj = corpus.select("doc_id", "text")
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    def cached = cm.lookupCachedData(proj).isDefined
     for (scorer <- Seq("lexical", "bm25")) {
-      val dflt = collectAll(scorer)
-      spark.conf.set("graft.retrieval.selectiveQueries", "true")
-      try {
-        val pruned = collectAll(scorer)
-        assert(pruned == dflt,
-          s"$scorer branches diverge:\n default=$dflt\n pruned=$pruned")
-      } finally spark.conf.unset("graft.retrieval.selectiveQueries")
+      assert(!cached)
+      val r = Retrieval.mineHardNegatives(corpus, queries, k = 2, nNeg = 1,
+        scorer = scorer)
+      // persist registers synchronously; the cache manager keeps one
+      // entry per plan, so a hit is exactly one cached projection
+      assert(cached, s"$scorer: corpus projection not cached")
+      assert(r.count() == 1)
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (cached && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(!cached, s"$scorer: corpus projection still pinned")
     }
   }
 

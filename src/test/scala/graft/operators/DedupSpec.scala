@@ -393,31 +393,27 @@ class DedupSpec extends AnyFunSuite {
     val clusters = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "cluster_id")
     val quality = Seq((1L, 5L), (2L, 9L), (3L, 0L)).toDF("doc_id", "margin")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set("graft.cache.membersPersistMinBytes", "0")
-    try {
-      val r = Dedup.bestQualityKeep(clusters, quality)
-      // persist() registers with the cache manager synchronously —
-      // getPersistentRDDs would only show it after materialization
-      assert(!spark.sharedState.cacheManager.isEmpty,
-        "gate=0 must take the persist branch")
-      assert(r.count() == 2)
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      while (leaked.nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(leaked.isEmpty, s"members cache still pinned: $leaked")
-      // a second materialization recomputes and still answers correctly
-      assert(r.orderBy("doc_id").collect().map(_.getBoolean(4)).toSeq ==
-        Seq(false, true))
-    } finally spark.conf.unset("graft.cache.membersPersistMinBytes")
+    val r = Dedup.bestQualityKeep(clusters, quality, persistMinBytes = 0L)
+    // persist() registers with the cache manager synchronously —
+    // getPersistentRDDs would only show it after materialization
+    assert(!spark.sharedState.cacheManager.isEmpty,
+      "gate=0 must take the persist branch")
+    assert(r.count() == 2)
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    while (leaked.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    assert(leaked.isEmpty, s"members cache still pinned: $leaked")
+    // a second materialization recomputes and still answers correctly
+    assert(r.orderBy("doc_id").collect().map(_.getBoolean(4)).toSeq ==
+      Seq(false, true))
   }
 
   test("bestQualityKeep size gate: a provably-small quality input " +
     "skips the persist and both branches agree") {
-    // The r18 session-3 A/B measured the members cache round-trip at
-    // 1.3–1.4× control-normalized on p65 at sf0.1 — below the gate the
-    // fused re-scan is cheaper, so small inputs must NOT persist, and
-    // the branch choice must be result-invisible.
+    // Below the gate the fused re-scan is cheaper than the members
+    // cache (p65 at sf0.1, see MembersPersistMinBytes), so small inputs
+    // must NOT persist, and the branch choice must be result-invisible.
     val clusters = Seq((1L, 1L), (2L, 1L), (5L, 5L), (7L, 5L))
       .toDF("doc_id", "cluster_id")
     val quality = Seq((1L, -3L), (2L, 8L), (5L, 0L), (7L, 0L), (99L, 4L))
@@ -427,11 +423,8 @@ class DedupSpec extends AnyFunSuite {
       .orderBy("cluster_id", "doc_id").collect().toSeq
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "a tiny in-memory quality frame must take the no-persist branch")
-    spark.conf.set("graft.cache.membersPersistMinBytes", "0")
-    val forced =
-      try Dedup.bestQualityKeep(clusters, quality)
-        .orderBy("cluster_id", "doc_id").collect().toSeq
-      finally spark.conf.unset("graft.cache.membersPersistMinBytes")
+    val forced = Dedup.bestQualityKeep(clusters, quality, persistMinBytes = 0L)
+      .orderBy("cluster_id", "doc_id").collect().toSeq
     assert(gated == forced, "persist gate changed the result set")
   }
 

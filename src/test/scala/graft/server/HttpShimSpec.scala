@@ -92,6 +92,12 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       a.startsWith("events/stream/u") && a.endsWith("/click")))
     // missing params → 400, not a stack trace
     assert(get("/attributes?cs=events.cs:10000").statusCode() == 400)
+    // non-positive max is a client error, not a Spark limit() failure
+    for (bad <- Seq("0", "-5")) {
+      val r = get(s"/attributes?cs=events.cs:10000&search=*&max=$bad")
+      assert(r.statusCode() == 400, s"max=$bad must be a client error")
+      assert(r.body().contains("max must be positive"))
+    }
   }
 
   test("POST /search does Grafana substring matching") {

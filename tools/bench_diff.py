@@ -109,6 +109,27 @@ def calibration_median(path: str):
     return cal["median"] if cal else None
 
 
+def sf_of(total: dict) -> str:
+    """The measured sf dir of a total line: inside the run stamp since
+    the stamp landed, top-level before."""
+    return (total.get("stamp") or {}).get("sf", total.get("sf", "?"))
+
+
+def cpus_of(path: str):
+    """Cores the run used: the artifact wrapper's `cpus`, else the total
+    line's run stamp; None for unstamped artifacts."""
+    try:
+        wrapper = json.loads(open(path).read())
+        if isinstance(wrapper, dict) and "cpus" in wrapper:
+            return wrapper["cpus"]
+    except json.JSONDecodeError:
+        pass
+    try:
+        return (total_of(path).get("stamp") or {}).get("cpus")
+    except SystemExit:
+        return None
+
+
 def lines_of(path: str) -> str:
     text = open(path).read()
     try:
@@ -122,7 +143,7 @@ def lines_of(path: str) -> str:
 
 def headline(path: str) -> None:
     d = total_of(path)
-    sf = d.get("sf", "?")
+    sf = sf_of(d)
     cal = d.get("calibration")
     cal_txt = (f" Window calibration median "
                f"{cal['median']:.3f} s." if cal else "")
@@ -144,16 +165,16 @@ def scale_pair(small_path: str, large_path: str) -> None:
     if ca and cb:
         norm = (b["value"] / cb) / (a["value"] / ca)
         print(f"**Scale pair: {a['value']:.3f} s (sf dir "
-              f"`{a.get('sf', '?')}`, calibration {ca:.3f} s) -> "
-              f"{b['value']:.3f} s (sf dir `{b.get('sf', '?')}`, "
+              f"`{sf_of(a)}`, calibration {ca:.3f} s) -> "
+              f"{b['value']:.3f} s (sf dir `{sf_of(b)}`, "
               f"calibration {cb:.3f} s): raw {raw:.2f}x, "
               f"calibration-normalized {norm:.2f}x.**")
     else:
         missing = ("either side" if not (ca or cb) else
                    small_path if not ca else large_path)
         print(f"**Scale pair: {a['value']:.3f} s (sf dir "
-              f"`{a.get('sf', '?')}`) -> {b['value']:.3f} s (sf dir "
-              f"`{b.get('sf', '?')}`): raw {raw:.2f}x** "
+              f"`{sf_of(a)}`) -> {b['value']:.3f} s (sf dir "
+              f"`{sf_of(b)}`): raw {raw:.2f}x** "
               f"(no calibration on {missing}; RAW ratio only)")
 
 
@@ -187,6 +208,12 @@ def main() -> None:
         # the gauge is easy to misread as a normalized comparison
         print(f"note: only {old_path if cal_old else new_path} carries "
               f"calibration; ratios below are RAW")
+    cpus_old, cpus_new = cpus_of(old_path), cpus_of(new_path)
+    if cpus_old and cpus_new and cpus_old != cpus_new:
+        # r18: BENCH_SELF.json silently held an 8-core run next to
+        # 32-core artifacts — core count moves every ratio
+        print(f"WARNING: cpus differ ({cpus_old} -> {cpus_new}); the "
+              f"runs are not comparable query by query")
     pairs = align(old, new)
     common = sorted(pairs)
     drifted = []

@@ -148,6 +148,27 @@ def main() -> None:
         assert "calibration-normalized 0.75x" in out, out
         out = run_pair(pre, driver)
         assert "raw 1.50x" in out and "RAW ratio only" in out, out
+
+        # run stamp: a stamped total line carries cpus and the sf dir;
+        # differing cpus (stamp vs the wrapper's field) warn,
+        # equal or unknown cpus do not
+        stamped = write(d, "stamped.json", FULL.replace(
+            '"rows":4294967296},"sf":"x"}',
+            '"rows":4294967296},"stamp":{"cpus":8,"xmx":"-Xmx4g",'
+            '"git":"abc","sf":"y"}}', 1))
+        assert bench_diff.cpus_of(stamped) == 8
+        assert bench_diff.sf_of(bench_diff.total_of(stamped)) == "y"
+        assert bench_diff.cpus_of(full) is None
+        assert bench_diff.cpus_of(driver) is None
+        out = run(stamped, driver)
+        assert "cpus differ" not in out, out
+        wrapped = write(d, "wrapped.json", json.dumps(
+            dict(json.loads(DRIVER), cpus=32)))
+        assert bench_diff.cpus_of(wrapped) == 32
+        out = run(stamped, wrapped)
+        assert "WARNING: cpus differ (8 -> 32)" in out, out
+        out = run(wrapped, wrapped)
+        assert "cpus differ" not in out, out
     print("OK: bench_diff self-test passed")
 
 
