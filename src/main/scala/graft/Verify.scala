@@ -48,6 +48,19 @@ object Verify {
     }
   }
 
+  /** Ids of the RDDs persisted since `before` that are still registered
+    * once the asynchronous releases have drained (polled for up to
+    * `timeoutMs`), not counting the catalog TTL cache, which is meant
+    * to outlive a query. */
+  def pinnedSince(spark: SparkSession, before: Set[Int],
+      timeoutMs: Long = 30000L): Set[Int] = {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet --
+      before -- graft.sources.EventsArchiveAdapter.catalogCacheRddIds(spark)
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    while (pinned.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    pinned
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -88,6 +101,7 @@ object Verify {
         paths.reverse.foreach(Files.delete)
       }
     }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     selected.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -108,6 +122,8 @@ object Verify {
     println(s"[verify] $ok/${selected.size} queries written, " +
       s"${errors.size} FAILED" +
       (if (errors.nonEmpty) s": ${errors.keys.mkString(", ")}" else ""))
+    println("[verify] persisted RDDs still registered after run: " +
+      pinnedSince(spark, persistedBefore).size)
     // exit 0 even with failures: the driver records per-query results —
     // a nonzero rc could void the queries that DID pass. Failures are
     // loud via verify_errors.json + the summary line above.

@@ -204,5 +204,8 @@ object ArchiveCache {
       value.foreach { case (_, old) => onEvict(old) }
       value = None
     }
+
+    /** The held value, if any, without loading or expiring it. */
+    def peek: Option[T] = synchronized(value.map(_._2))
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * string's bytes into [0, 2³¹−1): acc ← (acc·131 + byte) mod (2³¹−1).
   *
   * This is the content-derived shingle id of the MinHash pipeline
-  * ([[graft.operators.Dedup.minhashNearDups]] `ids="poly"`): unlike a
+  * ([[graft.operators.Dedup.minhashNearDups]]): unlike a
   * sorted dense vocabulary it needs NO global structure — no distinct,
   * no sort, no id join — so the id assignment is a pure per-row
   * projection that scales embarrassingly; and unlike `xxhash64` it is

@@ -10,10 +10,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Several operators persist an intermediate so the ONE materialization
   * of their (lazy) result shares it across multiple readers —
-  * [[Similarity.semanticDedup]]'s assignment, [[Raster]]'s
-  * range-sorted line projection. Left alone, each invocation pins
-  * storage memory until LRU pressure evicts it: a long-lived server
-  * session accumulates one cached plan per request.
+  * [[Similarity.semanticDedup]]'s assignment, [[Dedup.minhashNearDups]]'
+  * shingle-id sets. Left alone, each invocation pins storage memory
+  * until LRU pressure evicts it: a long-lived server session
+  * accumulates one cached plan per request. (Where the readers are
+  * jobs over ONE RDD, Spark already shares the shuffle and no persist
+  * is needed — [[Raster]]'s line pass.) DESIGN_CENSUS.md lists every
+  * persist that is left and how it is released.
   * [[unpersistAfterFirstUse]] registers a ONE-SHOT
   * [[QueryExecutionListener]] that unpersists the intermediate as soon
   * as the first completed query CONTAINS the result's plan (consumers

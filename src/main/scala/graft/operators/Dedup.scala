@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  - MinHash-LSH generates candidates via banded bucket join — the one
   *    operator family where an all-pairs crossJoin is tempting and
   *    fatal; candidates are O(collisions), not O(n²);
-  *  - Jaccard verification joins token postings only for candidate
-  *    pairs;
+  *  - Jaccard verification intersects the in-row shingle-id sets of
+  *    candidate pairs only;
   *  - blocked Jaccard restricts pairing to explicit blocking keys;
   *  - per-doc windows (fingerprints) partition by doc_id — bounded by
   *    document length, no skew.
@@ -37,7 +37,9 @@ object Dedup {
     * key (the row-per-permutation formulation multiplies the shingle
     * table ×N before aggregating; this one never materializes it).
     * Permutation i is h_i(x) = (a_i·x + b_i) mod P, a_i = 1+2i,
-    * b_i = 7+3i, over the dense shingle ids in `dt` (doc_id, tid). */
+    * b_i = 7+3i, over the shingle ids in `dt` (doc_id, tid). The
+    * exploded reference form of the in-row `minhash_sigs` expression
+    * the pipeline uses (DedupSpec pins their equality). */
   def minhashSignatures(dt: DataFrame, numPerms: Int): DataFrame = {
     val sigs = (0 until numPerms).map { i =>
       min((col("tid") * (1 + 2 * i) + (7 + 3 * i)) % HashP).as(s"sig$i")
@@ -45,30 +47,15 @@ object Dedup {
     dt.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*)
   }
 
-  /** LSH banding → (doc_id, band, bkey): band b's key is the
-    * comma-joined signature slice sig(b·r)…sig(b·r+r−1) — same string
-    * the oracle builds with `string_agg(sig, ',' ORDER BY i)`. One
-    * posexplode over in-row band keys; no extra aggregation. */
-  def lshBands(sigs: DataFrame, numPerms: Int, rowsPerBand: Int): DataFrame = {
-    // a remainder would silently DROP the trailing permutations from
-    // banding — paid for in the signature aggregate, absent from the
-    // detection probability the caller thinks they configured
-    require(numPerms % rowsPerBand == 0,
-      s"rowsPerBand=$rowsPerBand must divide numPerms=$numPerms")
-    val bandKeys = (0 until numPerms / rowsPerBand).map { b =>
-      concat_ws(",", (0 until rowsPerBand).map(r =>
-        col(s"sig${b * rowsPerBand + r}").cast("string")): _*)
-    }
-    sigs.select(col("doc_id"),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-  }
-
   /** Band-key columns over an in-row `sig` array<long> column: band b's
     * key is the comma-joined slice sig[b·r+1 … b·r+r] — the same string
     * the oracle's `string_agg(sig, ',' ORDER BY i)` builds. Shared by
     * the batch and streaming MinHash pipelines. */
   def sigBandKeys(numPerms: Int, rowsPerBand: Int): Seq[Column] = {
-    require(numPerms % rowsPerBand == 0, // see lshBands
+    // a remainder would silently DROP the trailing permutations from
+    // banding — paid for in the signature, absent from the detection
+    // probability the caller thinks they configured
+    require(numPerms % rowsPerBand == 0,
       s"rowsPerBand=$rowsPerBand must divide numPerms=$numPerms")
     (0 until numPerms / rowsPerBand).map { b =>
       concat_ws(",", (0 until rowsPerBand).map(r =>
@@ -98,9 +85,9 @@ object Dedup {
     * merges the bucket transitively WHEN the anchor pairs pass
     * verification. That is a RECALL caveat, not just a cost one:
     * members B and C of an over-cap bucket merge only if BOTH
-    * anchor–B and anchor–C survive jaccardVerify, so a B~C duplicate
-    * whose anchor pair falls below the threshold is missed — the
-    * thinning can change the clustering, not only the pair count.
+    * anchor–B and anchor–C pass the exact-Jaccard verify, so a B~C
+    * duplicate whose anchor pair falls below the threshold is missed —
+    * the thinning can change the clustering, not only the pair count.
     * (In practice an over-cap bucket means the band key stopped
     * discriminating — its members are near-copies — so anchor pairs
     * usually verify; but callers needing full recall inside
@@ -135,67 +122,7 @@ object Dedup {
     * rejects duplicate CollectMetrics names within one query tree). */
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Exact Jaccard over the id-set table `dt` for the given candidate
-    * pairs; keeps pairs with similarity ≥ `threshold`. The division is
-    * a single IEEE op on exact integer counts — engine-deterministic.
-    *
-    * The full postings table never shuffles: `dt` is first semi-joined
-    * (broadcast) down to the docs that appear in SOME candidate pair —
-    * O(collisions) docs — and the intersection join + size aggregate
-    * run on that small slice. (Joining the raw `dt` re-shuffles every
-    * doc's postings to verify a handful of pairs; at 100 TB that is a
-    * full-corpus shuffle for a kilobyte of output. The broadcast is
-    * bounded by the LSH collision count, the same bound `candidates`
-    * itself already carries.) */
-  def jaccardVerify(candidates: DataFrame, dt: DataFrame, threshold: Double): DataFrame = {
-    val pairDocs = candidates.select(col("d1").as("doc_id"))
-      .unionByName(candidates.select(col("d2").as("doc_id")))
-      .distinct()
-    val dtC = dt.join(broadcast(pairDocs), Seq("doc_id"))
-    val sz = dtC.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = candidates
-      .join(dtC.select(col("doc_id").as("d1"), col("tid")), Seq("d1"))
-      .join(dtC.select(col("doc_id").as("d2"), col("tid")), Seq("d2", "tid"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sz.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
-      .join(sz.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
-      .withColumn("n_union", col("n1") + col("n2") - col("n_inter"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / col("n_union"))
-      .where(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("n_inter"), col("n_union"),
-        col("jaccard"))
-  }
-
-  /** Full MinHash-LSH near-dup pipeline over a (doc_id, text) corpus:
-    * k-shingles → content-hash ids → signatures → bands → candidates →
-    * exact Jaccard ≥ threshold.
-    *
-    * Shingle-id strategies (`ids`):
-    *  - `"poly"` (default): `poly_hash31(shingle)` — a pure per-row
-    *    projection, no vocabulary, no distinct/sort/join, AND
-    *    oracle-reproducible (DuckDB computes the same byte recurrence;
-    *    see [[graft.functions.PolyHash31]]). The id assignment costs
-    *    nothing at any scale — this is both the bench path and the
-    *    100 TB path.
-    *  - `"dense"`: sorted-vocabulary ids via [[TextOps.vocab]] —
-    *    collision-free and oracle-reproducible, at the cost of a
-    *    distinct + range-sort + join over the shingle universe.
-    *  - `"hash64"`: `xxhash64 mod P` — engine-specific (NOT
-    *    DuckDB-checkable), for deployments that want Spark's native
-    *    hash.
-    * All three produce the same verified pairs (any injective-ish id
-    * works; parity is test-covered), so the choice is operational.
-    *
-    * The id table `dt` feeds signatures + both sides of the
-    * verification, so it is persisted; `sigs` likewise (the band
-    * self-join consumes it twice). Lifecycle: MEMORY_AND_DISK under
-    * Spark's LRU block manager — callers running many corpora through
-    * one session may clear via `cacheManager.clearCache()` or rely on
-    * LRU eviction (never OOM, worst case recompute). */
-  /** Shared poly-branch candidate pipeline: per-doc shingle-id SETS
+  /** Shared MinHash candidate pipeline: per-doc shingle-id SETS
     * (persisted — the caller owns their release), the same sets with
     * the MinHash signature derived in-row from the cached tids (NOT
     * persisted), and the LSH candidate pairs (the only shuffles are
@@ -223,50 +150,46 @@ object Dedup {
     (sets, withSig, lshCandidates(bands, maxBucket))
   }
 
+  /** Full MinHash-LSH near-dup pipeline over a (doc_id, text) corpus:
+    * k-shingle id sets → signatures → bands → candidates → exact
+    * Jaccard ≥ threshold.
+    *
+    * Shingle ids are `poly_hash31(shingle)` — a pure per-row
+    * projection, no vocabulary, no distinct/sort/join, AND
+    * oracle-reproducible (DuckDB computes the same byte recurrence;
+    * see [[graft.functions.PolyHash31]]), so id assignment costs
+    * nothing at any scale.
+    *
+    * Lifecycle: the shingle-id sets feed the banding and both verify
+    * legs, so they are persisted and released after the result's first
+    * materialization ([[CacheLifecycle]]); the candidate pairs have one
+    * reader and stay in-plan. */
   def minhashNearDups(corpus: DataFrame, spark: SparkSession,
       shingleK: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5, ids: String = "poly",
-      maxBucket: Int = 1000): DataFrame = {
+      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     graft.functions.PolyHash31.register(spark)
-    ids match {
-      case "poly" =>
-        val (ds, _, cands0) = polyCandidates(corpus, shingleK, numPerms,
-          rowsPerBand, maxBucket)
-        val cands = cands0.persist()
-        // verify in-row: candidate pairs are FEW (LSH collisions), so a
-        // per-pair array_intersect of two ~doc-length sets beats any
-        // postings shuffle. (blockedJaccard documents the opposite
-        // choice — there every within-block pair is a candidate.)
-        cands
-          .join(ds.select(col("doc_id").as("d1"), col("tids").as("t1")),
-            Seq("d1"))
-          .join(ds.select(col("doc_id").as("d2"), col("tids").as("t2")),
-            Seq("d2"))
-          .withColumn("n_inter",
-            size(array_intersect(col("t1"), col("t2"))).cast("long"))
-          .withColumn("n_union",
-            size(col("t1")).cast("long") + size(col("t2")) - col("n_inter"))
-          .withColumn("jaccard",
-            col("n_inter").cast("double") / col("n_union"))
-          .where(col("jaccard") >= threshold)
-          .select(col("d1"), col("d2"), col("n_inter"), col("n_union"),
-            col("jaccard"))
-      case "dense" | "hash64" =>
-        val sh = TextOps.shingles(corpus, shingleK)
-        val dt = (if (ids == "dense") {
-          val v = TextOps.vocab(sh, "shingle")
-          sh.join(v, Seq("shingle")).select(col("doc_id"), col("tid"))
-        } else {
-          sh.select(col("doc_id"),
-            pmod(xxhash64(col("shingle")), lit(TextOps.HashP)).as("tid"))
-        }).persist()
-        val sigs = minhashSignatures(dt, numPerms)
-        val cands = lshCandidates(lshBands(sigs, numPerms, rowsPerBand),
-          maxBucket).persist()
-        jaccardVerify(cands, dt, threshold)
-      case other => throw new IllegalArgumentException(
-        s"ids must be poly|dense|hash64, got '$other'")
-    }
+    val (ds, _, cands) = polyCandidates(corpus, shingleK, numPerms,
+      rowsPerBand, maxBucket)
+    // verify in-row: candidate pairs are FEW (LSH collisions), so a
+    // per-pair array_intersect of two ~doc-length sets beats any
+    // postings shuffle. (blockedJaccard documents the opposite choice
+    // — there every within-block pair is a candidate.)
+    val result = cands
+      .join(ds.select(col("doc_id").as("d1"), col("tids").as("t1")),
+        Seq("d1"))
+      .join(ds.select(col("doc_id").as("d2"), col("tids").as("t2")),
+        Seq("d2"))
+      .withColumn("n_inter",
+        size(array_intersect(col("t1"), col("t2"))).cast("long"))
+      .withColumn("n_union",
+        size(col("t1")).cast("long") + size(col("t2")) - col("n_inter"))
+      .withColumn("jaccard",
+        col("n_inter").cast("double") / col("n_union"))
+      .where(col("jaccard") >= threshold)
+      .select(col("d1"), col("d2"), col("n_inter"), col("n_union"),
+        col("jaccard"))
+    CacheLifecycle.unpersistAfterFirstUse(result, ds)
+    result
   }
 
   /** MinHash ESTIMATOR audit over the LSH candidate pairs: for each
@@ -276,9 +199,9 @@ object Dedup {
     * check that tells an operator whether `numPerms` is adequate
     * before trusting estimate-thresholded dedup at full scale.
     *
-    * Same pipeline shape as the poly branch of [[minhashNearDups]]
-    * (sets and signatures stay in-row; the only shuffles are the band
-    * groupBy and the pair distinct); the audit adds one in-row
+    * Same pipeline shape as [[minhashNearDups]] (sets and signatures
+    * stay in-row; the only shuffles are the band groupBy and the pair
+    * distinct); the audit adds one in-row
     * `zip_with` agreement count per candidate pair — candidates are
     * few by construction, so the audit is free at any corpus size.
     * The shingle-set cache is released after the result's first
@@ -650,7 +573,10 @@ object Dedup {
     * the corpus movement. The final near-dup elimination is a LEFT
     * ANTI join against the non-canonical cluster members — O(LSH
     * collisions) rows, always broadcast-able. `kept` is persisted: it
-    * feeds both the near-dup detector and the final anti-join. */
+    * feeds both the near-dup detector and the final anti-join, and is
+    * released after the result's first materialization. The pair list
+    * is persisted for the eager count and clustering below, and
+    * released as soon as clustering returns. */
   def dedupedCorpus(corpus: DataFrame, spark: SparkSession,
       shingleK: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.5): DataFrame = {
@@ -664,7 +590,6 @@ object Dedup {
       .persist()
     // persisted: connectedComponents' edge table and its convergence
     // loop would otherwise replay the verify join per materialization
-    // (LRU lifecycle, as in minhashNearDups)
     val pairs = minhashNearDups(kept, spark, shingleK, numPerms,
       rowsPerBand, threshold).select(col("d1"), col("d2")).persist()
     // Materialize the pair cache eagerly (CC's first job would do it
@@ -684,13 +609,18 @@ object Dedup {
         s"dedupedCorpus: $overflow LSH bucket(s) exceeded the pair cap " +
           "and were star-expanded; near-dup recall inside those buckets " +
           "may be reduced (raise maxBucket for full recall)")
-    val nonCanonical = connectedComponents(pairs)
+    // connectedComponents is eager and its output is local or
+    // checkpointed, so nothing reads the pair cache after it returns
+    val nonCanonical = try connectedComponents(pairs)
       .where(col("keep") === 0).select(col("doc_id"))
+    finally pairs.unpersist()
     // explicit broadcast: the CC output is checkpoint-backed (no
     // catalog stats), so the planner would otherwise default this
     // O(collisions)-row side to a full sort-merge join of the corpus
-    kept.join(broadcast(nonCanonical), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"))
+    val result = kept.join(broadcast(nonCanonical), Seq("doc_id"),
+      "left_anti").select(col("doc_id"))
+    CacheLifecycle.unpersistAfterFirstUse(result, kept)
+    result
   }
 
   /** Quality-aware canonical pick over dup clusters — the keep rule
@@ -843,8 +773,8 @@ object Dedup {
   private def incrementalCore(newDocs: DataFrame, exDigests: DataFrame,
       eb: DataFrame, shingleK: Int, numPerms: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
-    // feeds both the banding and the final anti-join; stays cached
-    // under LRU (minhashNearDups' lifecycle note)
+    // feeds both the banding and the final anti-join; released after
+    // the result's first materialization
     val fresh = newDocs
       .withColumn("fp", sha2(col("text"), 256))
       .join(exDigests, Seq("fp"), "left_anti")
@@ -859,8 +789,10 @@ object Dedup {
         size(col("nt")).cast("long") + size(col("et")) - col("n_inter"))
       .where(col("n_inter").cast("double") / col("n_union") >= threshold)
       .select(col("nid").as("doc_id")).distinct()
-    fresh.join(broadcast(nearDup), Seq("doc_id"), "left_anti")
+    val result = fresh.join(broadcast(nearDup), Seq("doc_id"), "left_anti")
       .select(col("doc_id"))
+    CacheLifecycle.unpersistAfterFirstUse(result, fresh)
+    result
   }
 
   /** Chunk-level exact dedup stats: split each doc into aligned
@@ -1265,8 +1197,7 @@ object Dedup {
     // (blk, bval, doc_id, simhash) postings — persisted: the bucket
     // stats and BOTH legs of the pair join read it. Released via
     // CacheLifecycle after the result's first action (same pattern as
-    // polyCandidates' sets) so repeated calls in a long-lived session
-    // don't accumulate dead cached frames until LRU pressure.
+    // polyCandidates' sets).
     val blocks = sh
       .select(col("doc_id"), col("simhash"), explode(blockArr).as("p"))
       .select(col("p.blk").as("blk"), col("p.bval").as("bval"),

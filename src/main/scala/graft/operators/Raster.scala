@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * points feed it, so the collect at the end is O(pixels), never
   * O(points) (SURVEY.md §7.5.6). Binning is a plain hash aggregate
   * (partial+final, one shuffle); line rasterization needs consecutive
-  * points, i.e. one shuffle+sort per attribute via a window `lag`, then
-  * a flatMap that emits covered pixels per segment (≤ width+height per
-  * segment) followed by the same hash aggregate.
+  * points, i.e. one range shuffle + in-partition sort, then a flatMap
+  * that emits covered pixels per segment (≤ width+height per segment)
+  * followed by the same hash aggregate.
   *
   * Divergence: datashader draws anti-aliased lines with numba kernels
   * (`plot.py:22-27`); we use a deterministic integer Bresenham so
@@ -160,9 +160,11 @@ object Raster {
     * partitions as its size demands — sorts within partitions, emits
     * Bresenham cells per consecutive pair inside each partition, and
     * stitches the O(#partitions) cross-partition segment pairs on the
-    * driver. One pass over cached sorted data + one O(#partitions)
-    * collect; no per-key sort bottleneck. Output key columns are
-    * strings (keys are NUL-joined for the typed pass).
+    * driver. The edge collect and the cell pass read one RDD, so the
+    * second job reuses the range shuffle's map output (Spark's own
+    * shuffle reuse — no cache to release); no per-key sort bottleneck.
+    * Output key columns are strings (keys are NUL-joined for the typed
+    * pass).
     *
     * Limitation (documented divergence from datashader): segments are
     * rasterized from their true endpoints and clipped per-cell, not
@@ -220,28 +222,26 @@ object Raster {
         col("t").cast("long").as("t"),
         col(tieCol).cast("long").as("tie"))
       .as[LP]
-    // cached so the edge-collect job and the returned (lazy) cell frame
-    // share one shuffle+sort; released by [[CacheLifecycle]] after the
-    // result's first materialization (below) — the projection is
-    // 5 narrow columns, the same order of magnitude as the reference's
-    // per-day data cache entries (utils.py:174-236)
+    // the edge collect and the cell pass below read ONE RDD, so they
+    // share its range shuffle: the second job finds the map output of
+    // the same ShuffleDependency and skips the map stage — no cache
     val sorted = prepared
       .repartitionByRange(col("k"), col("t"), col("tie"))
       .sortWithinPartitions(col("k"), col("t"), col("tie"))
-      .persist()
+      .rdd
     val kernel = segCells(aa, height) _
     // within-partition consecutive pairs
-    val inner = sorted.mapPartitions { it =>
+    val inner = spark.createDataset(sorted.mapPartitions { it =>
       var prev: LP = null
       it.flatMap { cur =>
         val out = if (prev != null) kernel(prev, cur) else Nil
         prev = cur
         out
       }
-    }
+    })
     // cross-partition pairs: (last of partition i, first of the next
     // non-empty partition) — O(#partitions) rows, stitched driver-side
-    val edges = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
+    val edges = sorted.mapPartitionsWithIndex { (i, it) =>
       if (it.isEmpty) Iterator.empty
       else {
         val first = it.next(); var last = first
@@ -259,17 +259,12 @@ object Raster {
     val keyCols = keys.zipWithIndex.map { case (name, i) =>
       split(col("k"), KeySep).getItem(i).as(name)
     }
-    val res = cells
+    cells
       .where(col("px").between(0, width - 1)
         && col("py").between(0, height - 1))
       .groupBy(col("k"), col("px"), col("py"))
       .agg(sum(col("w")).as(outCol))
       .select(keyCols ++ Seq(col("px"), col("py"), col(outCol)): _*)
-    // the edge-collect above already materialized the cache; after the
-    // returned frame's own first materialization (the `inner` reader)
-    // nothing re-reads it — release instead of waiting for LRU
-    CacheLifecycle.unpersistAfterFirstUse(res, sorted)
-    res
   }
 
   /** A4 (opt-in variant) — ANTI-ALIASED line rasterization: per-cell

@@ -154,17 +154,19 @@ object Sampling {
       trainVal: String, heldoutVal: String,
       shingleK: Int = 3): DataFrame = {
     graft.functions.PolyHash31.register(docs.sparkSession)
-    // consumed by both split slices below; stays cached under LRU
-    // (Dedup.minhashNearDups' lifecycle note)
+    // consumed by both split slices below; released after the
+    // result's first materialization
     val sets = TextOps.shingleIdSets(docs, shingleK, keep = Seq(splitCol))
       .persist()
     val testTids = sets.where(col(splitCol) === heldoutVal)
       .select(explode(col("tids")).as("tid")).distinct()
-    sets.where(col(splitCol) === trainVal)
+    val result = sets.where(col(splitCol) === trainVal)
       .select(col("doc_id"), explode(col("tids")).as("tid"))
       .join(testTids, Seq("tid"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))
+    CacheLifecycle.unpersistAfterFirstUse(result, sets)
+    result
   }
 
   /** Split-LEAKAGE audit: near-duplicate pairs that STRADDLE a
@@ -391,8 +393,7 @@ object Sampling {
     * partition id `pid` (kept so tests can assert the sort really
     * distributed). Input must carry `strataCols`, `doc_id`, `n_tok`.
     *
-    * Shape (the same two-pass offset pattern as
-    * [[TextOps.vocab]]'s zipWithIndex rank): range-repartition +
+    * Shape (a two-pass offset pattern): range-repartition +
     * sort-within-partitions on (strata…, doc_id) spreads EVERY stratum
     * — including a corpus-dominating one — across ordered partition
     * ranges; pass 1 computes each partition's local running sums
@@ -405,7 +406,8 @@ object Sampling {
     * affect `cum`: ranges are ordered and the carry-in is exactly the
     * token mass of earlier ranges. The local frame is persisted
     * (MEMORY_AND_DISK) because the totals pass and the join both
-    * consume it; blocks are LRU-evicted, worst case recomputed. */
+    * consume it, and released after the result's first
+    * materialization. */
   private[graft] def runningTokenSum(base: DataFrame,
       strataCols: Seq[String]): DataFrame =
     runningSum(base, strataCols, Seq("doc_id"), "n_tok")
@@ -511,9 +513,11 @@ object Sampling {
       (d, c) => d.withColumnRenamed(c, s"__o_$c"))
     val cond = strataCols.map(c => col(c) <=> col(s"__o_$c"))
       .foldLeft(col("pid") === col("__o_pid"))(_ && _)
-    local.join(broadcast(renamed), cond)
+    val result = local.join(broadcast(renamed), cond)
       .withColumn("cum", col("local_cum") + col("carry"))
       .drop(("local_cum" +: "carry" +: "__o_pid" +:
         strataCols.map(c => s"__o_$c")): _*)
+    CacheLifecycle.unpersistAfterFirstUse(result, local)
+    result
   }
 }

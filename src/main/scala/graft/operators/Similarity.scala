@@ -383,7 +383,7 @@ object Similarity {
     // cached: the pair join's two sides and the final keep join would
     // otherwise each re-derive the assignment — three more corpus
     // scans (plan-checked: no exchange reuse, the sides differ by the
-    // anchor filter). LRU-evicted, the linesRaster pattern.
+    // anchor filter). Released after the result's first use (below).
     val aug = assigned.join(broadcast(sizes), Seq("clab")).persist()
     // left side of the pair join: whole cell normally, anchor-only for
     // oversized cells (star degradation)
@@ -418,8 +418,7 @@ object Similarity {
     // explicit cache lifecycle ([[CacheLifecycle]]): the persist
     // exists so the result's ONE materialization shares the assignment
     // across its three readers — release it as soon as that
-    // materialization completes, instead of pinning storage memory
-    // until LRU pressure.
+    // materialization completes.
     CacheLifecycle.unpersistAfterFirstUse(res, aug)
     res
   }

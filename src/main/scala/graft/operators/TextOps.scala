@@ -10,12 +10,9 @@ import org.apache.spark.sql.functions._
   * a single IEEE division of exact integers) so the DuckDB oracle
   * reproduces results bit-for-bit. Token/shingle ids are NEVER an
   * engine hash (Spark's murmur3/xxhash64 and DuckDB's hash differ);
-  * the two oracle-reproducible strategies are a sorted dense
-  * [[vocab]] (collision-free, costs a distinct + range-sort + join)
-  * and the content-derived [[graft.functions.PolyHash31]] recurrence
-  * (a pure projection, zero coordination — what the MinHash pipeline
-  * uses). Operators whose id space must be dense (SimHash's quadratic
-  * threshold hash) keep the vocabulary.
+  * ids come from the content-derived [[graft.functions.PolyHash31]]
+  * recurrence — a pure projection, zero coordination, reproducible in
+  * the oracle.
   */
 object TextOps {
 
@@ -27,38 +24,10 @@ object TextOps {
     docs.select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("w"))
 
-  /** Distinct k-word shingles per doc — computed with an array
-    * `transform` over the split tokens inside narrow projections.
-    * (A lead()-window formulation needs a shuffle+sort per document
-    * before the first aggregation; this shape reaches the distinct
-    * directly from the scan. The oracle uses the window formulation —
-    * the shingle SETS are identical either way.)
-    *
-    * The split is HOISTED into its own projection and the lambda reads
-    * `element_at(ws, i+j)` — O(1) lookups, no per-position re-split or
-    * array copy. (A `split(text)` INSIDE the lambda re-evaluates per
-    * shingle position — O(tokens²) per doc, measured 4.6× slower at
-    * sf0.1 — and `slice` allocates a fresh array per shingle.
-    * CollapseProject keeps the hoist: `ws` is referenced k+2 times, so
-    * the optimizer does not inline it back.) */
-  def shingles(docs: DataFrame, k: Int): DataFrame = {
-    require(k >= 2 && k <= 8, s"shingle size $k out of range")
-    val terms = (0 until k).map(j => s"element_at(ws, i + $j)")
-      .mkString(", ")
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), explode(expr(
-        s"""case when size(ws) >= $k
-           |then transform(sequence(1, size(ws) - ${k - 1}),
-           |  i -> concat_ws(' ', $terms))
-           |else array() end""".stripMargin)).as("shingle"))
-      .distinct()
-  }
-
   /** Per-doc DISTINCT shingle-id SET as one array row: (doc_id, tids)
     * with tids = array_distinct of [[graft.functions.PolyHash31]] over
-    * the k-shingles — the same id set [[shingles]]+hash yields after
-    * explode+distinct, built without EITHER: the distinct is in-row
+    * the k-shingles — the id set an explode+distinct over the
+    * shingles would yield, built without EITHER: the distinct is in-row
     * (`array_distinct`), the ids are content-derived, so the whole
     * stage is a narrow projection with NO shuffle. This is the MinHash
     * pipeline's 100 TB input shape: per-doc state is bounded by doc
@@ -83,46 +52,6 @@ object TextOps {
         s"""array_distinct(transform(sequence(1, size(ws) - ${k - 1}),
            |  i -> poly_hash31(concat_ws(' ', $terms))))""".stripMargin)
         .as("tids"): _*)
-  }
-
-  /** Dense vocabulary: term → tid (1-based, global sorted order —
-    * identical to DuckDB's `row_number() OVER (ORDER BY term)`).
-    *
-    * NOT a global `row_number` window (that funnels every distinct term
-    * through ONE sort task — round 2's 27 s p02 hotspot). Two parallel
-    * passes instead: range-repartition + sort-within-partitions puts
-    * the terms in global order across ordered partition ranges, then
-    * `zipWithIndex` (itself a count pass + a map pass) assigns the
-    * global rank without ever centralizing the data. Partition-boundary
-    * choice cannot affect ids: ranges are ordered, so the global rank
-    * of a term is the same wherever the cuts land. Precondition: no
-    * null terms (Spark sorts nulls first, DuckDB last — token/shingle
-    * sources never produce null). See the object doc for the true
-    * 100 TB variant (hash ids, no vocabulary at all). */
-  def vocab(terms: DataFrame, termCol: String): DataFrame = {
-    val spark = terms.sparkSession
-    val distinct = terms.select(col(termCol)).distinct()
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // zipWithIndex's eager count pass + the downstream map pass both
-    // consume `sorted`; persisting saves re-running the distinct
-    // aggregation (MEMORY_AND_DISK, LRU-evicted — worst case recompute)
-    val sorted = distinct
-      .repartitionByRange(parts, col(termCol))
-      .sortWithinPartitions(termCol)
-      .persist()
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "tid", org.apache.spark.sql.types.LongType, nullable = false))
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    val res = spark.createDataFrame(indexed, schema)
-    // zipWithIndex's eager count already consumed the cache once; the
-    // returned frame's first materialization is the only other reader
-    // — release then instead of pinning one distinct-term set per call
-    // until LRU pressure (the library-wide CacheLifecycle contract)
-    CacheLifecycle.unpersistAfterFirstUse(res, sorted)
-    res
   }
 
   /** Corpus with planted near-duplicates: every doc_id % every`th doc

@@ -629,7 +629,7 @@ object TextStats {
   def bigramNovelty(docs: DataFrame): DataFrame = {
     graft.functions.PolyHash31.register(docs.sparkSession)
     // consumed by both the per-doc counts and the postings explode;
-    // stays cached under LRU (Dedup.minhashNearDups' lifecycle note)
+    // released after the result's first materialization
     val ds = TextOps.shingleIdSets(docs, 2).persist()
     val nb = ds.select(col("doc_id"),
       size(col("tids")).cast("long").as("n_bigrams"))
@@ -639,11 +639,13 @@ object TextStats {
       .where(col("df") === 1)
       .groupBy(col("owner").as("doc_id"))
       .agg(count(lit(1)).as("n_unique"))
-    nb.join(uniq, Seq("doc_id"), "left")
+    val result = nb.join(uniq, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_bigrams"),
         coalesce(col("n_unique"), lit(0L)).as("n_unique"))
       .withColumn("novelty",
         col("n_unique").cast("double") / col("n_bigrams"))
+    CacheLifecycle.unpersistAfterFirstUse(result, ds)
+    result
   }
 
   /** Bigram-LM surprise scoring — the CCNet-family perplexity filter:
@@ -677,7 +679,7 @@ object TextStats {
     * `scale` bounds: `uni · scale` must fit int64 — at corpora past
     * ~9·10¹² occurrences of one token, lower `scale`; the ordering is
     * unaffected. Docs with < 2 tokens have no transitions and emit no
-    * row (the [[TextOps.shingles]] contract). */
+    * row (the [[TextOps.shingleIdSets]] contract). */
   /** Bigram OCCURRENCES (doc_id, w1, b): one row per token transition
     * (duplicates kept — these are LM counts, not shingle sets), b =
     * the content-derived `poly_hash31` of "w1 w2". One in-row array

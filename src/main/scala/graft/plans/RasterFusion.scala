@@ -16,17 +16,20 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * `spark.experimental.extraStrategies` (the same public hook
   * [[DerivedDivBounds]] uses for its optimizer rule).
   *
-  * Why a whole-operator plan node (preference (c) in the build rules):
-  * the declarative [[graft.operators.Raster.binPoints]] chain is
-  * already codegen-friendly, but it materializes a projected row per
-  * POINT between the filter/projection stage and the generic hash
-  * aggregate. The fused operator exploits what the planner cannot
-  * know: the aggregate's key domain is a bounded PIXEL GRID, so a
-  * single pass can filter, project t→px / value→py and accumulate
-  * (cnt, sum, min, max) into a per-partition hash grid without ever
-  * emitting the intermediate row — one operator, zero intermediate
-  * materialization, partial state bounded by #keys × width × height
-  * cells per task (never by point count).
+  * Why a whole-operator plan node: NOT to avoid materializing rows —
+  * whole-stage codegen already fuses the declarative
+  * [[graft.operators.Raster.binPoints]] filter, pixel projection and
+  * partial aggregate into one loop with no intermediate row. The win
+  * is per request: every `/image` window bakes its own t0/t1/vmin/vmax
+  * literals into the declarative stages, so each request pays a fresh
+  * codegen (and compile) of those stages, plus the generic hash
+  * aggregate's per-row overhead. The fused exec is precompiled Scala
+  * whose parameters are plain fields, and it accumulates
+  * (cnt, sum, min, max) straight into a per-partition hash grid whose
+  * key domain is the bounded PIXEL grid — partial state is bounded by
+  * #keys × width × height cells per task, never by point count. The
+  * in-JVM A/B against the declarative twin is recorded in
+  * DESIGN_CENSUS.md.
   *
   * Plan shape: [[RasterBinPlan]] (logical) →
   * [[RasterBinPartialExec]] (narrow: one pass per child partition) →

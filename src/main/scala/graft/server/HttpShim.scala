@@ -271,7 +271,7 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
   handle("/httpquery", "POST") { ex =>
     val b = Json.obj(body(ex))
     val attrs = Json.arr(b("attributes")).map(Json.str)
-    val tr = Json.arr(b("time_range"))
+    val tr = Json.arrOf(b("time_range"), 2, "time_range")
     val t0 = TimeFns.parseNaiveUtc(Json.str(tr(0)))
     val t1 = TimeFns.parseNaiveUtc(Json.str(tr(1)))
     val out = ArchiveApi.rawQuery(points, attrs, t0, t1, None,
@@ -290,10 +290,10 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
         o.get("color").map(parseColor).getOrElse(0xff0000),
         o.get("y_axis").map(v => Json.num(v).toInt).getOrElse(0))
     }
-    val tr = Json.arr(b("time_range"))
+    val tr = Json.arrOf(b("time_range"), 2, "time_range")
     val t0 = TimeFns.parseNaiveUtc(Json.str(tr(0)))
     val t1 = TimeFns.parseNaiveUtc(Json.str(tr(1)))
-    val size = Json.arr(b("size"))
+    val size = Json.arrOf(b("size"), 2, "size")
     val (w, h) = (Json.num(size(0)).toInt, Json.num(size(1)).toInt)
     // a client-sized canvas must not size driver allocations unbounded
     // (w×h int arrays per axis + the BufferedImage): same rationale as

@@ -12,8 +12,10 @@ package graft.server
   */
 object Json {
 
-  final case class JsonError(msg: String, at: Int)
-      extends RuntimeException(s"$msg at offset $at")
+  /** A malformed body (`at` = its offset) or a well-formed value of the
+    * wrong shape (`at` < 0, no offset to report). */
+  final case class JsonError(msg: String, at: Int = -1)
+      extends RuntimeException(if (at >= 0) s"$msg at offset $at" else msg)
 
   def parse(s: String): Any = {
     val p = new Parser(s)
@@ -167,12 +169,43 @@ object Json {
 
   // ------------------------------------------------------------ accessors
 
-  def obj(v: Any): Map[String, Any] = v.asInstanceOf[Map[String, Any]]
-  def arr(v: Any): Vector[Any] = v.asInstanceOf[Vector[Any]]
-  def str(v: Any): String = v.asInstanceOf[String]
+  // A value of the wrong JSON type (or null) is a client error: each
+  // accessor throws JsonError, which the shim answers with a 400.
+
+  private def kind(v: Any): String = v match {
+    case null => "null"
+    case _: Map[_, _] => "an object"
+    case _: Vector[_] => "an array"
+    case _: String => "a string"
+    case _: Boolean => "a boolean"
+    case _ => "a number"
+  }
+
+  private def wrongType(want: String, v: Any): Nothing =
+    throw JsonError(s"expected $want, got ${kind(v)}")
+
+  def obj(v: Any): Map[String, Any] = v match {
+    case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+    case other => wrongType("an object", other)
+  }
+  def arr(v: Any): Vector[Any] = v match {
+    case xs: Vector[_] => xs
+    case other => wrongType("an array", other)
+  }
+  /** An array of exactly `n` elements — `what` names it in the error. */
+  def arrOf(v: Any, n: Int, what: String): Vector[Any] = {
+    val xs = arr(v)
+    if (xs.length != n)
+      throw JsonError(s"$what must have $n elements, got ${xs.length}")
+    xs
+  }
+  def str(v: Any): String = v match {
+    case s: String => s
+    case other => wrongType("a string", other)
+  }
   def num(v: Any): Double = v match {
     case d: Double => d
-    case s: String => s.toDouble
-    case other => other.toString.toDouble
+    case s: String => s.toDoubleOption.getOrElse(wrongType("a number", s))
+    case other => wrongType("a number", other)
   }
 }

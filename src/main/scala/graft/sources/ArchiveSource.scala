@@ -428,4 +428,20 @@ object EventsArchiveAdapter {
     caches.computeIfAbsent(s"${spark.hashCode()}|$sfDir|$kind",
       _ => new TtlCache[DataFrame](60000L, () => build().cache(),
         onEvict = df => { df.unpersist(); () })).get()
+
+  /** Ids of the materialized RDDs behind `spark`'s live catalog frames —
+    * the one persist meant to outlive a request, so leak audits
+    * ([[graft.Verify.pinnedSince]]) leave it out. */
+  private[graft] def catalogCacheRddIds(spark: SparkSession): Set[Int] = {
+    import scala.jdk.CollectionConverters._
+    caches.asScala.collect {
+      case (k, c) if k.startsWith(s"${spark.hashCode()}|") => c.peek
+    }.flatten.flatMap { df =>
+      df.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+            r.cacheBuilder.cachedColumnBuffers.id
+      }
+    }.toSet
+  }
 }

@@ -76,20 +76,6 @@ class DedupSpec extends AnyFunSuite {
       s"shingle-set cache still pinned after materialization: $leaked")
   }
 
-  test("all three shingle-id strategies find the same verified pairs") {
-    val corpus = docs.union(Seq(
-      (10L, "quick brown fox jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text"))
-    def pairs(ids: String) =
-      Dedup.minhashNearDups(corpus, spark, threshold = 0.5, ids = ids)
-        .select("d1", "d2", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // signatures differ (different id spaces) but the verified output —
-    // candidate pairs that pass exact Jaccard — must agree
-    val poly = pairs("poly")
-    assert(poly == pairs("dense") && poly == pairs("hash64"))
-  }
-
   test("poly_hash31: codegen ≡ interpreted ≡ the DuckDB recurrence") {
     graft.functions.PolyHash31.register(spark)
     // golden value cross-checked against DuckDB:
@@ -126,24 +112,6 @@ class DedupSpec extends AnyFunSuite {
     viaExpr.foreach { case (d, sig) => assert(sig == viaAgg(d), s"doc $d") }
   }
 
-  test("vocab: parallel two-pass rank equals the sorted dense ids") {
-    val rnd = new scala.util.Random(7)
-    val words = (0 until 500).map(_ => rnd.alphanumeric.take(6).mkString)
-    val df = words.zipWithIndex.map { case (w, i) => (i.toLong, w) }
-      .toDF("doc_id", "w")
-    val got = TextOps.vocab(df, "w").collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
-    val expected = words.distinct.sorted.zipWithIndex
-      .map { case (w, i) => (w, i + 1L) }
-    assert(got.toSeq == expected)
-    // no unpartitioned window in the plan — the round-2 hotspot
-    val ws = TextOps.vocab(df, "w").queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.isEmpty => w
-    }
-    assert(ws.isEmpty)
-  }
-
   test("lshCandidates: degenerate buckets degrade to star pairs") {
     // one healthy bucket (2 docs) + one degenerate bucket (5 docs)
     val bands = (Seq((0, "k1", 10L), (0, "k1", 11L)) ++
@@ -161,16 +129,6 @@ class DedupSpec extends AnyFunSuite {
       && m.getAs[Int]("max_bucket_size") == 5))
     // default cap keeps all pairs: 1 + C(5,2)
     assert(Dedup.lshCandidates(bands).count() == 11L)
-  }
-
-  test("jaccardVerify computes exact set Jaccard for candidates") {
-    val dt = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 2L), (2L, 3L), (2L, 4L))
-      .toDF("doc_id", "tid")
-    val cand = Seq((1L, 2L)).toDF("d1", "d2")
-    val r = Dedup.jaccardVerify(cand, dt, 0.0).collect()
-    assert(r.length == 1)
-    assert(r.head.getLong(2) == 2L && r.head.getLong(3) == 4L
-      && r.head.getDouble(4) == 0.5)
   }
 
   test("simhash: identical texts share a signature, distinct texts differ") {
@@ -498,16 +456,12 @@ class DedupSpec extends AnyFunSuite {
     assert(out(3L)._1 == 0L)
   }
 
-  test("lshBands/sigBandKeys reject a remainder that would silently " +
+  test("sigBandKeys rejects a remainder that would silently " +
     "drop trailing permutations from banding") {
     val e = intercept[IllegalArgumentException] {
       Dedup.sigBandKeys(numPerms = 16, rowsPerBand = 5)
     }
     assert(e.getMessage.contains("divide"))
-    val sigs = Seq((1L, 1L, 2L)).toDF("doc_id", "sig0", "sig1")
-    intercept[IllegalArgumentException] {
-      Dedup.lshBands(sigs, numPerms = 2, rowsPerBand = 3)
-    }
   }
 
   test("scrubRepeatedNgrams: an exact duplicate pair is fully " +

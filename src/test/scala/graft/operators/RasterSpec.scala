@@ -119,8 +119,8 @@ class RasterSpec extends AnyFunSuite {
     }
   }
 
-  test("binLines releases its sorted-projection cache after the result's " +
-    "first materialization") {
+  test("binLines leaves no persisted RDD: its two jobs share the range " +
+    "shuffle") {
     val pts = Seq(
       ("a", 0L, 100L, 0.5), ("a", 1L, 300L, 2.5),
       ("a", 3L, 700L, 0.5), ("a", 4L, 900L, 0.5))

@@ -394,5 +394,29 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = post("/query", """{"targets": [""")
     assert(r.statusCode() == 400)
     assert(Json.obj(Json.parse(r.body())).contains("error"))
+    // well-formed JSON of the wrong shape is a client error too
+    val attrs = """[{"name": "u1/click"}]"""
+    val range = """["2024-01-05", "2024-01-20"]"""
+    def image(attributes: String = attrs, timeRange: String = range,
+        size: String = "[100, 50]") =
+      s"""{"attributes": $attributes, "time_range": $timeRange,
+         |"size": $size}""".stripMargin
+    val bodies = Seq(
+      "/image" -> "null",
+      "/image" -> "[]",
+      "/query" -> "null",
+      "/image" -> image(attributes = "5"),
+      "/image" -> image(attributes = """[{"name": null}]"""),
+      "/image" -> image(size = "[]"),
+      "/image" -> image(size = "[100, null]"),
+      "/image" -> image(timeRange = """["2024-01-05"]"""),
+      "/httpquery" ->
+        s"""{"attributes": $attrs, "time_range": ["2024-01-05"]}""",
+      "/query" -> """{"targets": 5, "range": {}}""")
+    bodies.foreach { case (route, body) =>
+      val r = post(route, body)
+      assert(r.statusCode() == 400, s"$route $body answered ${r.body()}")
+      assert(Json.obj(Json.parse(r.body())).contains("error"))
+    }
   }
 }
