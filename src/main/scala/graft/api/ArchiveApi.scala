@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{Catalog, Extrema, Raster, Resample}
 import graft.render.Render
@@ -12,10 +12,11 @@ import graft.render.Render
   * raster → shade → stack → PNG+base64).
   *
   * Execution shape at scale: `imageQuery` is exactly two aggregation
-  * passes over the points (extrema, then grids — the same two-phase
-  * structure as `server.py:114-138`, because y ranges feed the pixel
-  * transform), each collecting only O(#attributes) rows or O(pixels)
-  * cells; `rawQuery` collects the user-requested (resampled) rows like
+  * passes over the points per REQUEST, whatever its number of y-axes
+  * (extrema, then grids — the same two-phase structure as
+  * `server.py:114-138`, because y ranges feed the pixel transform),
+  * each collecting only O(#attributes) rows or O(pixels) cells;
+  * `rawQuery` collects the user-requested (resampled) rows like
   * the reference's pandas renderers. No driver loop ever touches raw
   * points.
   */
@@ -200,99 +201,131 @@ object ArchiveApi {
 
   /** §3.1 `POST /image` — the interactive plot query. `points` needs
     * att_name, t (µs), value_r, and `tieCol` for deterministic segment
-    * pairing. Returns base64 PNGs per y-axis plus hover descs. */
+    * pairing. Returns base64 PNGs per y-axis plus hover descs.
+    *
+    * Every phase runs once per REQUEST over all its y-axes, as the
+    * reference's one fetch and one extrema pass do (`server.py:127-138`):
+    * one persisted window, one extrema job grouped by (axis,
+    * attribute), axis limits on the driver, then one line-raster pass
+    * and one fused hover pass in which each attribute bins with its own
+    * axis's y-scale. Rows carry their axis slot from a literal map
+    * (attribute → the axes listing it, exploded), so an attribute on
+    * two axes renders on both, with no join. Each axis's PNG, y-range
+    * and hover descs equal those of a request for that axis alone; an
+    * attribute listed on several axes keeps the desc of the last of
+    * them in `attrs.groupBy(_.yAxis)` order. */
   def imageQuery(points: DataFrame, attrs: Seq[AttrSpec],
       t0Us: Long, t1Us: Long, width: Int, height: Int,
       axes: Map[Int, AxisSpec] = Map.empty,
       tieCol: String = "point_id",
       antialias: Boolean = false): ImageResult = {
-    val byAxis = attrs.groupBy(_.yAxis)
+    if (attrs.isEmpty) return ImageResult(Map.empty, Map.empty)
+    val byAxis = attrs.groupBy(_.yAxis).toSeq
+    val specs = byAxis.map { case (axis, _) =>
+      axes.getOrElse(axis, AxisSpec()) }
+    val names = attrs.map(_.name).distinct
+    // one row per (point, index the point's attribute maps to): a map
+    // literal attribute → indices, exploded — no join, no extra job
+    def explodeBy(indices: String => Seq[Int]): Column = explode(element_at(
+      typedLit(names.map(n => n -> indices(n)).toMap), col("att_name")))
     val images = Map.newBuilder[String, AxisImage]
     val descs = Map.newBuilder[String, HoverDesc]
-
-    byAxis.foreach { case (axis, axisAttrs) =>
-      val spec = axes.getOrElse(axis, AxisSpec())
-      val names = axisAttrs.map(_.name)
-      // persisted: the axis window is scanned three times (extrema,
-      // line raster, hover) and every use is collected inside this
-      // block, so the release is synchronous — one scan per request
-      // instead of three
-      val axisPoints = points.where(col("att_name").isin(names: _*)
-        && col("t").between(t0Us, t1Us)).persist()
-      try {
-
-      // phase 1 — extrema (A2/A7 + manual override, plot.py:74-109)
-      val ex = Extrema.perAttribute(axisPoints, Seq("att_name"), spec.isLog)
+    // persisted: the window is read three times (extrema, line raster,
+    // hover) and every read is collected inside this call, so the
+    // release is synchronous — one scan per request, whatever its axes
+    val window = points.where(col("att_name").isin(names: _*)
+      && col("t").between(t0Us, t1Us)).persist()
+    try {
+      // phase 1 — extrema per (slot, attribute) (A2/A7, plot.py:74-109);
+      // only log-axis rows must be positive
+      val logSlots = typedLit(specs.indices.filter(specs(_).isLog).toArray)
+      val ex = Extrema.perAttribute(
+          window.withColumn("slot", explodeBy(n =>
+            byAxis.indices.filter(byAxis(_)._2.exists(_.name == n)))),
+          Seq("slot", "att_name"), array_contains(logSlots, col("slot")))
         .collect().map { r =>
-          r.getString(0) -> (Option(r.get(1)).map(_.toString.toDouble),
-            Option(r.get(2)).map(_.toString.toDouble), r.getLong(3))
+          (r.getInt(0), r.getString(1)) -> (
+            Option(r.get(2)).map(_.toString.toDouble),
+            Option(r.get(3)).map(_.toString.toDouble), r.getLong(4))
         }.toMap
-      val totalPoints = ex.map { case (k, (_, _, n)) => k -> n }
-      val nodata = names.filter(n =>
-        ex.get(n).forall(e => e._1.isEmpty || e._2.isEmpty))
-      val present = names.filterNot(nodata.contains)
-      val vmins = present.flatMap(n => spec.min.orElse(ex(n)._1))
-      val vmaxs = present.flatMap(n => spec.max.orElse(ex(n)._2))
-      if (vmins.nonEmpty && vmaxs.nonEmpty) {
-        // A3 axis limits + 5%-pad / constant-range (plot.py:112-188)
-        val (yLo, yHi) = Extrema.padRange(vmins.min, vmaxs.max, spec.isLog)
-
-        // phase 2 — grids: lines for the image, points for hover.
+      // A3 axis limits + manual override + 5%-pad / constant-range
+      // (plot.py:112-188), per slot on the driver
+      val present = byAxis.indices.map { i =>
+        byAxis(i)._2.map(_.name).filter(n =>
+          ex.get((i, n)).exists(e => e._1.nonEmpty && e._2.nonEmpty))
+      }
+      val ranges = byAxis.indices.map { i =>
+        val vmins = present(i).flatMap(n => specs(i).min.orElse(ex((i, n))._1))
+        val vmaxs = present(i).flatMap(n => specs(i).max.orElse(ex((i, n))._2))
+        if (vmins.isEmpty || vmaxs.isEmpty) None
+        else Some(Extrema.padRange(vmins.min, vmaxs.max, specs(i).isLog))
+      }
+      val drawn = byAxis.indices.filter(ranges(_).isDefined)
+      if (drawn.nonEmpty) {
+        // phase 2 — one line raster and one fused hover pass over every
+        // drawn (slot, present attribute) pair, keyed by the slot's
+        // index in `drawn`, which is also its y-scale's index
+        val scales = drawn.map { i =>
+          val (lo, hi) = ranges(i).get
+          graft.plans.YScale(lo, hi, specs(i).isLog)
+        }
+        val keyed = window.withColumn("scale", explodeBy(n =>
+          drawn.indices.filter(s => present(drawn(s)).contains(n))))
+        val keys = Seq("scale", "att_name")
         // AA opt-in swaps the per-cell statistic (coverage w256 vs hit
         // count) — eq-hist shading is rank-based, so both feed it
         // unchanged
-        val lineRaster =
-          if (antialias) Raster.binLinesAA _ else Raster.binLines _
-        val presentPoints = axisPoints.where(col("att_name").isin(present: _*))
-        val lineCells = lineRaster(
-          presentPoints,
-          Seq("att_name"), tieCol, t0Us, t1Us, yLo, yHi, width, height,
-          spec.isLog).collect()
+        val lineCells = (
+          if (antialias) Raster.binLinesAA(keyed, keys, tieCol, t0Us, t1Us,
+            scales, col("scale"), width, height)
+          else Raster.binLines(keyed, keys, tieCol, t0Us, t1Us,
+            scales, col("scale"), width, height)).collect()
         // hover reductions run FUSED end-to-end (one exchange, merged
         // per pixel column in the exec): the driver receives O(width)
         // rows per attribute, not the O(width×height) grid
-        val hoverGrid = graft.plans.RasterFusion.hoverColumns(
-          presentPoints,
-          Seq("att_name"), t0Us, t1Us, yLo, yHi, width, height,
-          spec.isLog).collect()
-        // ONE pass over each collected grid — a per-attribute
-        // linear filter would rescan the full array per attribute
-        // (O(attrs × cells) of driver CPU on the interactive path)
-        val cellsByName = lineCells.groupBy(_.getString(0))
-        val hoverByName = hoverGrid.groupBy(_.getString(0))
+        val hoverGrid = graft.plans.RasterFusion.hoverColumns(keyed, keys,
+          t0Us, t1Us, scales, col("scale"), width, height).collect()
+        // ONE pass over each collected grid — a per-attribute linear
+        // filter would rescan the full array per attribute (O(attrs ×
+        // cells) of driver CPU on the interactive path)
+        val cellsByKey = lineCells.groupBy(r =>
+          (r.getString(0).toInt, r.getString(1)))
+        val hoverByKey = hoverGrid.groupBy(r => (r.getInt(0), r.getString(1)))
 
-        val layers = axisAttrs.filter(a => present.contains(a.name)).map { a =>
-          val cells = cellsByName
-            .getOrElse(a.name, Array.empty[org.apache.spark.sql.Row])
-            .map(r => (r.getLong(1).toInt, r.getLong(2).toInt, r.getLong(3)))
-          // eq-hist is datashader's default and therefore the
-          // reference's (plot.py:36); Render.shade is the linear option
-          Render.shadeEqHist(Render.Grid(a.name, a.color, width, height,
-            cells.toSeq))
-        }
-        val img = Render.stack(layers.toSeq, width, height)
-        images += axis.toString -> AxisImage(Render.pngBase64(img),
-          (yLo, yHi), (t0Us / 1000.0, t1Us / 1000.0))
+        drawn.zipWithIndex.foreach { case (i, s) =>
+          val (axis, axisAttrs) = byAxis(i)
+          val (yLo, yHi) = ranges(i).get
+          val layers = axisAttrs.filter(a => present(i).contains(a.name))
+            .map { a =>
+              val cells = cellsByKey.getOrElse((s, a.name), Array.empty[Row])
+                .map(r => (r.getLong(2).toInt, r.getLong(3).toInt, r.getLong(4)))
+              // eq-hist is datashader's default and therefore the
+              // reference's (plot.py:36); Render.shade is the linear option
+              Render.shadeEqHist(Render.Grid(a.name, a.color, width, height,
+                cells.toSeq))
+            }
+          val img = Render.stack(layers, width, height)
+          images += axis.toString -> AxisImage(Render.pngBase64(img),
+            (yLo, yHi), (t0Us / 1000.0, t1Us / 1000.0))
 
-        // hover reductions (A6, plot.py:44-60) — already column-level
-        // rows (att_name, px, col_min, col_max, col_count)
-        present.foreach { name =>
-          val cols = hoverByName
-            .getOrElse(name, Array.empty[org.apache.spark.sql.Row])
-            .sortBy(_.getLong(1))
-          val indices = cols.map(_.getLong(1).toInt).toSeq
-          descs += name -> HoverDesc(
-            totalPoints.getOrElse(name, 0L),
-            indices,
-            cols.map(_.getDouble(2)).toSeq, // col_min
-            cols.map(_.getDouble(3)).toSeq, // col_max
-            indices.map(i =>
-              t0Us + (i + 0.5) * (t1Us - t0Us) / width), // column centers, µs
-            cols.map(_.getLong(4)).toSeq) // col_count
+          // hover reductions (A6, plot.py:44-60) — already column-level
+          // rows (scale, att_name, px, col_min, col_max, col_count)
+          present(i).foreach { name =>
+            val cols = hoverByKey.getOrElse((s, name), Array.empty[Row])
+              .sortBy(_.getLong(2))
+            val indices = cols.map(_.getLong(2).toInt).toSeq
+            descs += name -> HoverDesc(
+              ex.get((i, name)).map(_._3).getOrElse(0L),
+              indices,
+              cols.map(_.getDouble(3)).toSeq, // col_min
+              cols.map(_.getDouble(4)).toSeq, // col_max
+              indices.map(c =>
+                t0Us + (c + 0.5) * (t1Us - t0Us) / width), // column centers, µs
+              cols.map(_.getLong(5)).toSeq) // col_count
+          }
         }
       }
-      } finally axisPoints.unpersist(blocking = false)
-    }
+    } finally window.unpersist(blocking = false)
     ImageResult(images.result(), descs.result())
   }
 }

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{GlobFns, TimeFns}
 import graft.operators.{Catalog, Extrema, Raster, Resample}
@@ -1189,10 +1189,11 @@ object EventQueries {
     * computes per-attribute extrema rolled into per-axis limits (A2 →
     * A3, exactly q04/q06's shapes); the C7 padding
     * ([[Extrema.padRange]], `plot.py:160-188`) turns each axis's
-    * limits into its y-range; phase 2 rasterizes each axis's points
-    * through the FUSED bin operator with the COMPUTED padded range as
-    * the pixel transform — the dependency the individual q04/q06/q07
-    * greens never exercised (their ranges were constants). Limits are
+    * limits into its y-range; phase 2 rasterizes every axis's points
+    * in ONE fused bin operator, each axis with its COMPUTED padded
+    * range as the pixel transform (a per-key y-scale table) — the
+    * dependency the individual q04/q06/q07 greens never exercised
+    * (their ranges were constants). Limits are
     * O(#axes) driver state — the reference collects the same rows
     * before building its datashader canvases, and at 100 TB the
     * collect is 3 rows. Cross-engine float safety: the padded bounds
@@ -1200,15 +1201,17 @@ object EventQueries {
     * 2-decimal extrema (q07's argument), so the bin boundaries are
     * bit-identical in both engines; `vmean` keeps q07's round(6). */
   /** Shared `/image` phase 1 (q36 raster / q43 hover): the PERSISTED
-    * visible window with its y_axis assignment — read 1 + #axes times
-    * (extrema, then one fused operator per axis), so the one scan is
+    * visible window with its y_axis assignment — read twice (extrema,
+    * then the one fused operator over every axis), so the one scan is
     * cached and released after the result's first consumption (the
     * same window-caching the reference's period cache provides its
-    * /image handler) — plus the per-axis PADDED ranges: extrema →
+    * /image handler) — plus the per-axis PADDED y-scales: extrema →
     * axis limits → [[Extrema.padRange]], O(#axes) driver rows like
-    * the reference's collected limits. */
+    * the reference's collected limits — and the column indexing a
+    * row's axis into them (null for an axis with no limits, whose rows
+    * the fused operator skips, as `plot.py:156` does). */
   private def imageWindow(s: SparkSession, dir: String)
-      : (DataFrame, Seq[(Long, Double, Double)]) = {
+      : (DataFrame, Seq[graft.plans.YScale], Column) = {
     val vis = pts(s, dir)
       .where(EventsArchiveAdapter.tsRangeUs(Epoch2024, TEnd))
       .withColumn("y_axis", (col("user_id") % 3).cast("long"))
@@ -1220,31 +1223,23 @@ object EventQueries {
     val ranges = limits.toSeq
       .filter(r => !r.isNullAt(1) && !r.isNullAt(2)) // plot.py:156 continue
       .sortBy(_.getLong(0))
-      .map { r =>
-        val (lo, hi) =
-          Extrema.padRange(r.getDouble(1), r.getDouble(2), logScale = false)
-        (r.getLong(0), lo, hi)
-      }
-    (vis, ranges)
+    val scales = ranges.map { r =>
+      val (lo, hi) =
+        Extrema.padRange(r.getDouble(1), r.getDouble(2), logScale = false)
+      graft.plans.YScale(lo, hi)
+    }
+    val scaleOf = element_at(
+      typedLit(ranges.map(_.getLong(0)).zipWithIndex.toMap), col("y_axis"))
+    (vis, scales, scaleOf)
   }
 
   private def q36(s: SparkSession, dir: String): DataFrame = {
-    val (vis, ranges) = imageWindow(s, dir)
-    // empty-window guard: with no non-null axis limits (no rows, or
-    // all-NaN) there is nothing to raster — mirror the oracle's
-    // graceful 0 rows via one always-false raster instead of
-    // crashing reduce on an empty Seq (and still release vis)
-    val rasters =
-      if (ranges.isEmpty)
-        Seq(graft.plans.RasterFusion.binPoints(
-          vis.where(lit(false)), Seq("y_axis"),
-          Epoch2024, TEnd, 0.0, 1.0, W, H))
-      else ranges.map { case (axis, lo, hi) =>
-        graft.plans.RasterFusion.binPoints(
-          vis.where(col("y_axis") === axis), Seq("y_axis"),
-          Epoch2024, TEnd, lo, hi, W, H)
-      }
-    val out = rasters.reduce(_ unionByName _)
+    val (vis, scales, scaleOf) = imageWindow(s, dir)
+    // one fused operator bins every axis with its own padded range; an
+    // empty window (no non-null axis limits) has no scales, so every
+    // row is skipped and the query yields the oracle's graceful 0 rows
+    val out = graft.plans.RasterFusion.binPoints(vis, Seq("y_axis"),
+        Epoch2024, TEnd, scales, scaleOf, W, H)
       .withColumn("vmean", round(col("vmean"), 6))
       .orderBy(col("y_axis"), col("px"), col("py"))
     graft.operators.CacheLifecycle.unpersistAfterFirstUse(out, vis)
@@ -1303,18 +1298,9 @@ object EventQueries {
     * hover with CONSTANT ranges; this closes the same two-phase
     * dependency q36 closed for the raster grid. */
   private def q43(s: SparkSession, dir: String): DataFrame = {
-    val (vis, ranges) = imageWindow(s, dir)
-    val hovers =
-      if (ranges.isEmpty) // empty-window guard — see q36
-        Seq(graft.plans.RasterFusion.hoverColumns(
-          vis.where(lit(false)), Seq("y_axis"),
-          Epoch2024, TEnd, 0.0, 1.0, W, H))
-      else ranges.map { case (axis, lo, hi) =>
-        graft.plans.RasterFusion.hoverColumns(
-          vis.where(col("y_axis") === axis), Seq("y_axis"),
-          Epoch2024, TEnd, lo, hi, W, H)
-      }
-    val out = hovers.reduce(_ unionByName _)
+    val (vis, scales, scaleOf) = imageWindow(s, dir)
+    val out = graft.plans.RasterFusion.hoverColumns(vis, Seq("y_axis"),
+        Epoch2024, TEnd, scales, scaleOf, W, H)
       .orderBy(col("y_axis"), col("px"))
     graft.operators.CacheLifecycle.unpersistAfterFirstUse(out, vis)
     out

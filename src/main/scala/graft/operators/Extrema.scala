@@ -26,8 +26,15 @@ object Extrema {
     * matches it exactly — ours counts the log-filtered rows, documented
     * divergence. */
   def perAttribute(points: DataFrame, keys: Seq[String],
-      logScale: Boolean = false): DataFrame = {
-    val base = if (logScale) points.where(col("value_r") > 0) else points
+      logScale: Boolean = false): DataFrame =
+    perAttribute(points, keys, lit(logScale))
+
+  /** [[perAttribute]] with the log filter per ROW: `logRows` says which
+    * rows belong to a log-scale series, and only those must be
+    * positive — one pass over series of mixed scales. */
+  def perAttribute(points: DataFrame, keys: Seq[String],
+      logRows: Column): DataFrame = {
+    val base = points.where(!logRows || col("value_r") > 0)
     val clean = when(isnan(col("value_r")), lit(null)).otherwise(col("value_r"))
     base.groupBy(keys.map(col): _*)
       .agg(

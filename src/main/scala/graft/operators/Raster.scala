@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.{RasterParams, YScale}
 
 /** A4/A5/A6 — 2-D binned rasterization of (time, value) points into a
   * width×height pixel grid (reference `plot.py:15-60`, datashader
@@ -90,6 +90,11 @@ object Raster {
         min(col("vmin")).as("col_min"),
         max(col("vmax")).as("col_max"),
         sum(col("cnt")).as("col_count"))
+
+  /** A line point before pixel projection: series key, time, value,
+    * tie-breaker and y-scale index (null: no scale, dropped). */
+  private[operators] final case class LinePoint(k: String, t: Long,
+      v: java.lang.Double, tie: Long, s: java.lang.Integer)
 
   /** A line point after pixel projection; `k` is the NUL-joined series
     * key, `py` is None for NaN values (line-break semantics). */
@@ -182,46 +187,67 @@ object Raster {
   def binLines(points: DataFrame, keys: Seq[String], tieCol: String,
       t0Us: Long, t1Us: Long, vmin: Double, vmax: Double,
       width: Int, height: Int, logScale: Boolean = false): DataFrame =
-    linesRaster(points, keys, tieCol, t0Us, t1Us, vmin, vmax, width,
-      height, logScale, aa = false, outCol = "cnt")
+    binLines(points, keys, tieCol, t0Us, t1Us,
+      Seq(YScale(vmin, vmax, logScale)), lit(0), width, height)
+
+  /** [[binLines]] with one y-scale per row: `scaleOf` is an int column
+    * indexing `scales` (the [[graft.plans.RasterFusion]] contract), so
+    * the series of every y-axis of a request rasterize in ONE pass. A
+    * row whose index is null is dropped. */
+  def binLines(points: DataFrame, keys: Seq[String], tieCol: String,
+      t0Us: Long, t1Us: Long, scales: Seq[YScale], scaleOf: Column,
+      width: Int, height: Int): DataFrame =
+    linesRaster(points, keys, tieCol, scaleOf,
+      RasterParams(keys.length, t0Us, t1Us, width, height,
+        scales.toIndexedSeq), aa = false, outCol = "cnt")
 
   /** Shared distribution scaffold for [[binLines]] / [[binLinesAA]]:
     * only the per-segment kernel (Bresenham at w=1 vs AA coverage
     * units) and the summed column's name differ — the partitioning,
     * boundary stitching, clipping and aggregation are one code path.
     * Summing w=1 is exactly the hit count, so binLines' output is
-    * bit-identical to its original count(*) form. */
+    * bit-identical to its original count(*) form.
+    *
+    * The window filter, pixel projection and canvas clip run in the
+    * typed stages through [[RasterParams]] — the same scalar `px`/`py`
+    * the fused exec uses, bit-identical to [[pxCol]]/[[pyCol]] — so no
+    * request literal (window, canvas, y-range) reaches generated code
+    * and a new window compiles nothing here. */
   private def linesRaster(points: DataFrame, keys: Seq[String],
-      tieCol: String, t0Us: Long, t1Us: Long, vmin: Double, vmax: Double,
-      width: Int, height: Int, logScale: Boolean, aa: Boolean,
+      tieCol: String, scaleOf: Column, p: RasterParams, aa: Boolean,
       outCol: String): DataFrame = {
     // same plan-time contract as the fused RasterFusion.binPoints —
-    // a zero-length range would otherwise null pxCol's division and
-    // least() would silently clamp every point into the last column
-    require(t1Us > t0Us && width > 0 && height > 0,
-      s"degenerate raster window: t=[$t0Us,$t1Us] ${width}x$height")
+    // a zero-length range would otherwise make every px a division by
+    // zero
+    require(p.t1 > p.t0 && p.width > 0 && p.height > 0,
+      s"degenerate raster window: t=[${p.t0},${p.t1}] ${p.width}x${p.height}")
     val spark = points.sparkSession
     import spark.implicits._
-    // a NaN value breaks the line; so does a non-positive value on a
-    // log axis (datashader: log10 of it is NaN → the segment is
-    // dropped). The explicit guard matters: pyCol's log10 returns null
-    // for v ≤ 0, but its `least(…, height-1)` SKIPS nulls (Spark
-    // least/greatest semantics) and would silently clamp those points
-    // to the TOP row instead of breaking
-    val breakValue =
-      if (logScale) isnan(col("value_r")) || col("value_r") <= 0
-      else isnan(col("value_r"))
+    val height = p.height
     val prepared = points
-      .where(col("t").between(t0Us, t1Us))
+      .where(col("t").isNotNull)
       .select(
         concat_ws(KeySep, keys.map(col(_).cast("string")): _*).as("k"),
-        pxCol(col("t"), t0Us, t1Us, width).as("px"),
-        when(breakValue, lit(null))
-          .otherwise(pyCol(col("value_r"), vmin, vmax, height, logScale))
-          .cast("long").as("py"),
         col("t").cast("long").as("t"),
-        col(tieCol).cast("long").as("tie"))
-      .as[LP]
+        col("value_r").cast("double").as("v"),
+        col(tieCol).cast("long").as("tie"),
+        scaleOf.cast("int").as("s"))
+      .as[LinePoint]
+      .flatMap { r =>
+        if (r.s == null || !p.inWindow(r.t)) Iterator.empty
+        else {
+          val scale = p.scales(r.s)
+          // a NaN value breaks the line; so does a non-positive value
+          // on a log axis (datashader: log10 of it is NaN → the
+          // segment is dropped). A null value projects to the top
+          // row, as the oracles' null-skipping `least` has it.
+          val py =
+            if (r.v == null) Some(height - 1L)
+            else if (scale.breaks(r.v)) None
+            else Some(scale.py(r.v, height))
+          Iterator.single(LP(r.k, p.px(r.t), py, r.t, r.tie))
+        }
+      }
     // the edge collect and the cell pass below read ONE RDD, so they
     // share its range shuffle: the second job finds the map output of
     // the same ShuffleDependency and skips the map stage — no cache
@@ -229,7 +255,12 @@ object Raster {
       .repartitionByRange(col("k"), col("t"), col("tie"))
       .sortWithinPartitions(col("k"), col("t"), col("tie"))
       .rdd
-    val kernel = segCells(aa, height) _
+    // cells outside the canvas are clipped per cell, here rather than
+    // in SQL, so the canvas size stays out of generated code
+    val kernel = { (a: LP, b: LP) =>
+      segCells(aa, height)(a, b).filter { case (_, x, y, _) =>
+        x >= 0 && x < p.width && y >= 0 && y < height }
+    }
     // within-partition consecutive pairs
     val inner = spark.createDataset(sorted.mapPartitions { it =>
       var prev: LP = null
@@ -260,8 +291,6 @@ object Raster {
       split(col("k"), KeySep).getItem(i).as(name)
     }
     cells
-      .where(col("px").between(0, width - 1)
-        && col("py").between(0, height - 1))
       .groupBy(col("k"), col("px"), col("py"))
       .agg(sum(col("w")).as(outCol))
       .select(keyCols ++ Seq(col("px"), col("py"), col(outCol)): _*)
@@ -287,8 +316,16 @@ object Raster {
   def binLinesAA(points: DataFrame, keys: Seq[String], tieCol: String,
       t0Us: Long, t1Us: Long, vmin: Double, vmax: Double,
       width: Int, height: Int, logScale: Boolean = false): DataFrame =
-    linesRaster(points, keys, tieCol, t0Us, t1Us, vmin, vmax, width,
-      height, logScale, aa = true, outCol = "w256")
+    binLinesAA(points, keys, tieCol, t0Us, t1Us,
+      Seq(YScale(vmin, vmax, logScale)), lit(0), width, height)
+
+  /** [[binLinesAA]] with one y-scale per row, as for [[binLines]]. */
+  def binLinesAA(points: DataFrame, keys: Seq[String], tieCol: String,
+      t0Us: Long, t1Us: Long, scales: Seq[YScale], scaleOf: Column,
+      width: Int, height: Int): DataFrame =
+    linesRaster(points, keys, tieCol, scaleOf,
+      RasterParams(keys.length, t0Us, t1Us, width, height,
+        scales.toIndexedSeq), aa = true, outCol = "w256")
 
   /** Anti-aliased line kernel in integer-rational arithmetic: for each
     * major-axis step from (x0,y0) → (x1,y1) (start excluded, like

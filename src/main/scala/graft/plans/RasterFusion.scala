@@ -1,13 +1,14 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** SURVEY §4's raster-fusion strategy: the `/image` hot path's
@@ -39,7 +40,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * `keys…, px, py, cnt, vmean, vmin, vmax`. Every px/py/filter rule
   * replicates [[graft.operators.Raster.binPoints]] EXACTLY —
   * RasterFusionSpec pins value parity on fixtures and asserts the
-  * fused operators appear in the executed plan. */
+  * fused operators appear in the executed plan.
+  *
+  * Per-key scales: the y-transform is a small [[YScale]] table in
+  * [[RasterParams]], and every input row carries an int index into
+  * it, so one pass bins all the y-axes of an `/image` request, each
+  * with its own range (q36/q43, `ArchiveApi.imageQuery`). The
+  * scalar-range APIs are the one-entry table. All three execs report
+  * `number of output rows`, and the merges `partial cells merged`, so
+  * `graft.Profile` names them in a stage's nodes. */
 object RasterFusion {
 
   /** Idempotent strategy registration (mirrors
@@ -55,32 +64,24 @@ object RasterFusion {
 
   /** Fused drop-in for [[graft.operators.Raster.binPoints]]: same
     * arguments, same output schema `(keys…, px, py, cnt, vmean, vmin,
-    * vmax)`, same values — different physical plan. */
+    * vmax)`, same values — different physical plan. The one-entry case
+    * of the per-key-scale form below. */
   def binPoints(points: DataFrame, keys: Seq[String],
       t0Us: Long, t1Us: Long, vmin: Double, vmax: Double,
-      width: Int, height: Int, logScale: Boolean = false): DataFrame = {
-    require(t1Us > t0Us && width > 0 && height > 0)
-    // the exec reads (keys…, t, value_r) POSITIONALLY off the select
-    // below; a key literally named "t" or "value_r" would make that
-    // select duplicate/shift columns and silently bin the wrong slots
-    require(!keys.exists(Set("t", "value_r")),
-      s"raster key columns may not be named 't' or 'value_r': $keys")
-    val spark = points.sparkSession
-    register(spark)
-    // explicit casts: the exec reads t/value_r POSITIONALLY as
-    // long/double — an int t or float value_r that the declarative
-    // operator would coerce via expression analysis must be coerced
-    // here too, or the raw slot reads return garbage
-    val child = points.select(keys.map(col) :+
-      col("t").cast("long").as("t") :+
-      col("value_r").cast("double").as("value_r"): _*)
-    val plan = RasterBinPlan(
-      RasterParams(keys.length, t0Us, t1Us, vmin, vmax, width, height,
-        logScale),
-      child.queryExecution.analyzed)
-    GraftPlanBridge.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-  }
+      width: Int, height: Int, logScale: Boolean = false): DataFrame =
+    binPoints(points, keys, t0Us, t1Us, Seq(YScale(vmin, vmax, logScale)),
+      lit(0), width, height)
+
+  /** [[binPoints]] with one y-scale per row: `scaleOf` is an int column
+    * indexing `scales`, so each key (say, each y-axis of an `/image`
+    * request) bins with its own `(vmin, vmax, log)` in ONE pass. A row
+    * whose index is null has no scale and is not binned. */
+  def binPoints(points: DataFrame, keys: Seq[String], t0Us: Long,
+      t1Us: Long, scales: Seq[YScale], scaleOf: Column, width: Int,
+      height: Int): DataFrame =
+    fused(points, keys, scaleOf,
+      RasterParams(keys.length, t0Us, t1Us, width, height,
+        scales.toIndexedSeq))(RasterBinPlan(_, _))
 
   /** Fused drop-in for [[graft.operators.Raster.binPoints]] ∘
     * [[graft.operators.Raster.hoverColumns]] — the `/image` hover path
@@ -97,30 +98,75 @@ object RasterFusion {
     * needs finalizing first; RasterFusionSpec pins parity). */
   def hoverColumns(points: DataFrame, keys: Seq[String],
       t0Us: Long, t1Us: Long, vmin: Double, vmax: Double,
-      width: Int, height: Int, logScale: Boolean = false): DataFrame = {
-    require(t1Us > t0Us && width > 0 && height > 0)
+      width: Int, height: Int, logScale: Boolean = false): DataFrame =
+    hoverColumns(points, keys, t0Us, t1Us,
+      Seq(YScale(vmin, vmax, logScale)), lit(0), width, height)
+
+  /** [[hoverColumns]] with one y-scale per row, as for [[binPoints]]. */
+  def hoverColumns(points: DataFrame, keys: Seq[String], t0Us: Long,
+      t1Us: Long, scales: Seq[YScale], scaleOf: Column, width: Int,
+      height: Int): DataFrame =
+    fused(points, keys, scaleOf,
+      RasterParams(keys.length, t0Us, t1Us, width, height,
+        scales.toIndexedSeq))(RasterHoverPlan(_, _))
+
+  private def fused(points: DataFrame, keys: Seq[String], scaleOf: Column,
+      params: RasterParams)(
+      node: (RasterParams, LogicalPlan) => LogicalPlan): DataFrame = {
+    require(params.t1 > params.t0 && params.width > 0 && params.height > 0)
+    // the exec reads (keys…, t, value_r, scale) POSITIONALLY off the
+    // select below; a key literally named "t" or "value_r" would make
+    // that select duplicate/shift columns and silently bin the wrong slots
     require(!keys.exists(Set("t", "value_r")),
       s"raster key columns may not be named 't' or 'value_r': $keys")
     val spark = points.sparkSession
     register(spark)
+    // explicit casts: the exec reads t/value_r POSITIONALLY as
+    // long/double — an int t or float value_r that the declarative
+    // operator would coerce via expression analysis must be coerced
+    // here too, or the raw slot reads return garbage
     val child = points.select(keys.map(col) :+
       col("t").cast("long").as("t") :+
-      col("value_r").cast("double").as("value_r"): _*)
-    val plan = RasterHoverPlan(
-      RasterParams(keys.length, t0Us, t1Us, vmin, vmax, width, height,
-        logScale),
-      child.queryExecution.analyzed)
+      col("value_r").cast("double").as("value_r") :+
+      scaleOf.cast("int").as("scale"): _*)
     GraftPlanBridge.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      node(params, child.queryExecution.analyzed))
   }
 }
 
-/** The scalar grid parameters, serializable into task closures. The
-  * scalar functions replicate `Raster.pxCol` / `Raster.pyCol` / the
-  * `binPoints` filter bit for bit (same op order, same coercions). */
+/** One y-axis scale: `[vmin, vmax]`, linear or log10. `py` and `keep`
+  * replicate `Raster.pyCol` and the `binPoints` value filter bit for
+  * bit: the axis bounds' log10 is the driver-side `Math.log10` the
+  * column form baked into its literals, the value's is
+  * `StrictMath.log10`, which Spark's `log10` expression calls. */
+final case class YScale(vmin: Double, vmax: Double,
+    logScale: Boolean = false) {
+  private val lo = if (logScale) math.log10(vmin) else vmin
+  private val span = (if (logScale) math.log10(vmax) else vmax) - lo
+  private val keepLo =
+    if (logScale) math.max(vmin, java.lang.Double.MIN_VALUE) else vmin
+
+  def py(v: Double, height: Int): Long = {
+    val value = if (logScale) StrictMath.log10(v) else v
+    math.min(math.floor((value - lo) / span * height),
+      (height - 1L).toDouble).toLong
+  }
+
+  /** The value filter of a binned point. */
+  def keep(v: Double): Boolean = !v.isNaN && v >= keepLo && v <= vmax
+
+  /** A line breaks at this value: NaN, or non-positive on a log axis
+    * (datashader drops a segment whose log10 endpoint is NaN). */
+  def breaks(v: Double): Boolean = v.isNaN || (logScale && v <= 0)
+}
+
+/** The grid parameters, serializable into task closures: the time
+  * window and canvas, and a small table of y-scales that rows index.
+  * `px` replicates `Raster.pxCol` bit for bit (same op order, same
+  * coercions); a single-scale raster is the one-entry table. */
 final case class RasterParams(numKeys: Int, t0: Long, t1: Long,
-    vmin: Double, vmax: Double, width: Int, height: Int,
-    logScale: Boolean) {
+    width: Int, height: Int, scales: IndexedSeq[YScale]) {
 
   def px(t: Long): Long = {
     val num = (t - t0) * width.toLong
@@ -129,23 +175,16 @@ final case class RasterParams(numKeys: Int, t0: Long, t1: Long,
     math.min(((num - m).toDouble / span.toDouble).toLong, width - 1L)
   }
 
-  def py(v: Double): Long = {
-    val (value, lo, hi) =
-      if (logScale) (math.log10(v), math.log10(vmin), math.log10(vmax))
-      else (v, vmin, vmax)
-    math.min(math.floor((value - lo) / (hi - lo) * height),
-      (height - 1L).toDouble).toLong
-  }
+  def py(v: Double, scale: Int): Long = scales(scale).py(v, height)
 
-  def keep(t: Long, v: Double): Boolean = {
-    val lo = if (logScale) math.max(vmin, java.lang.Double.MIN_VALUE)
-             else vmin
-    t >= t0 && t <= t1 && !v.isNaN && v >= lo && v <= vmax
-  }
+  def inWindow(t: Long): Boolean = t >= t0 && t <= t1
+
+  def keep(t: Long, v: Double, scale: Int): Boolean =
+    inWindow(t) && scales(scale).keep(v)
 }
 
-/** Logical raster-bin node. The child MUST produce `keys…, t, value_r`
-  * positionally ([[RasterFusion.binPoints]] guarantees it). The six
+/** Logical raster-bin node. The child MUST produce `keys…, t, value_r,
+  * scale` positionally ([[RasterFusion.binPoints]] guarantees it). The six
   * grid attributes are constructor state so `copy`/`transform` keep
   * their exprIds stable — downstream resolution binds to them. */
 final case class RasterBinPlan(params: RasterParams, child: LogicalPlan,
@@ -157,9 +196,9 @@ final case class RasterBinPlan(params: RasterParams, child: LogicalPlan,
   // gridAttrs are produced here, not consumed from the child — without
   // this the planner would flag them as missing inputs
   override def producedAttributes: AttributeSet = AttributeSet(gridAttrs)
-  // the exec reads the child POSITIONALLY (keys…, t, value_r), so every
-  // child column is semantically referenced even though no expression
-  // names t/value_r — without this, ColumnPruning inserts a Project
+  // the exec reads the child POSITIONALLY (keys…, t, value_r, scale),
+  // so every child column is semantically referenced even though no
+  // expression names t/value_r/scale — without this, ColumnPruning inserts a Project
   // under the node and the positional reads land on pruned slots
   override def references: AttributeSet = child.outputSet
   override protected def withNewChildInternal(
@@ -177,7 +216,7 @@ object RasterBinPlan {
 }
 
 /** Logical fused-hover node — same child contract as [[RasterBinPlan]]
-  * (positional `keys…, t, value_r`), column-reduction output. */
+  * (positional `keys…, t, value_r, scale`), column-reduction output. */
 final case class RasterHoverPlan(params: RasterParams, child: LogicalPlan,
     hoverAttrs: Seq[Attribute] = RasterHoverPlan.freshHoverAttrs())
   extends UnaryNode {
@@ -263,9 +302,15 @@ private[plans] object CellAgg {
   * One fold implementation means the UnsafeRow key-copy discipline
   * can never diverge between the merges. */
 private[plans] object CellFold {
+  /** The merges' SQLMetrics: final rows out, partial cells folded in. */
+  def metrics(sc: org.apache.spark.SparkContext): Map[String, SQLMetric] =
+    Map(
+      "numOutputRows" -> SQLMetrics.createMetric(sc, "number of output rows"),
+      "cellsMerged" -> SQLMetrics.createMetric(sc, "partial cells merged"))
+
   def fold(rows: Iterator[InternalRow], childTypes: Array[DataType],
-      numKeys: Int,
-      groupWidth: Int): java.util.HashMap[InternalRow, CellAgg] = {
+      numKeys: Int, groupWidth: Int,
+      cellsMerged: SQLMetric): java.util.HashMap[InternalRow, CellAgg] = {
     // map key: UnsafeRow over the group prefix — value-based equality
     // and hashing; copied once on first sight (the projection reuses
     // its buffer). The scratch row WRAPS the array (no per-row alloc).
@@ -276,6 +321,7 @@ private[plans] object CellFold {
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         keyVals)
     rows.foreach { row =>
+      cellsMerged += 1
       var i = 0
       while (i < groupWidth) { keyVals(i) = row.get(i, childTypes(i)); i += 1 }
       val uKey = keyProj(keyRow)
@@ -292,7 +338,8 @@ private[plans] object CellFold {
 
 /** One pass over each child partition: filter + pixel projection +
   * grid accumulation, emitting one partial row per non-empty cell —
-  * `keys…, px, py, cnt, sum, mn, mx`. */
+  * `keys…, px, py, cnt, sum, mn, mx`. Each row is projected with the
+  * y-scale its `scale` slot indexes; a null index skips the row. */
 final case class RasterBinPartialExec(params: RasterParams,
     child: SparkPlan,
     aggAttrs: Seq[Attribute] = RasterBinPartialExec.freshAggAttrs())
@@ -305,9 +352,14 @@ final case class RasterBinPartialExec(params: RasterParams,
   override def output: Seq[Attribute] =
     child.output.take(params.numKeys) ++ aggAttrs
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext,
+      "number of output rows"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val p = params
     val k = p.numKeys
+    val numOut = longMetric("numOutputRows")
     val keyTypes: Array[DataType] =
       child.output.take(k).map(_.dataType).toArray
     val outTypes: Array[DataType] = output.map(_.dataType).toArray
@@ -327,14 +379,16 @@ final case class RasterBinPartialExec(params: RasterParams,
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           keyVals)
       rows.foreach { row =>
-        if (!row.isNullAt(k) && !row.isNullAt(k + 1)) {
+        if (!row.isNullAt(k) && !row.isNullAt(k + 1) &&
+            !row.isNullAt(k + 2)) {
           val t = row.getLong(k)
           val v = row.getDouble(k + 1)
-          if (p.keep(t, v)) {
+          val s = row.getInt(k + 2)
+          if (p.keep(t, v, s)) {
             var i = 0
             while (i < k) { keyVals(i) = row.get(i, keyTypes(i)); i += 1 }
             keyVals(k) = p.px(t)
-            keyVals(k + 1) = p.py(v)
+            keyVals(k + 1) = p.py(v, s)
             val uKey = keyProj(keyRow)
             val agg = grid.get(uKey)
             if (agg == null)
@@ -357,6 +411,7 @@ final case class RasterBinPartialExec(params: RasterParams,
           vals(k + 1) = key.getLong(k + 1)
           vals(k + 2) = a.cnt; vals(k + 3) = a.sum
           vals(k + 4) = a.mn; vals(k + 5) = a.mx
+          numOut += 1
           outProj(InternalRow.fromSeq(vals.toIndexedSeq))
         }
       }
@@ -386,12 +441,18 @@ final case class RasterBinMergeExec(output: Seq[Attribute], numKeys: Int,
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(child.output.take(numKeys + 2)))
 
+  override lazy val metrics: Map[String, SQLMetric] =
+    CellFold.metrics(sparkContext)
+
   override protected def doExecute(): RDD[InternalRow] = {
     val k = numKeys
     val childTypes: Array[DataType] = child.output.map(_.dataType).toArray
     val outTypes: Array[DataType] = output.map(_.dataType).toArray
+    val (numOut, merged) =
+      (longMetric("numOutputRows"), longMetric("cellsMerged"))
     child.execute().mapPartitions({ rows =>
-      val grid = CellFold.fold(rows, childTypes, k, groupWidth = k + 2)
+      val grid = CellFold.fold(rows, childTypes, k, groupWidth = k + 2,
+        merged)
       val outProj = UnsafeProjection.create(outTypes)
       val it = grid.entrySet().iterator()
       new Iterator[InternalRow] {
@@ -410,6 +471,7 @@ final case class RasterBinMergeExec(output: Seq[Attribute], numKeys: Int,
           // bit-identical to the oracle's formulation at any scale
           vals(k + 3) = a.sum.toDouble / (a.cnt.toDouble * 1e6)
           vals(k + 4) = a.mn; vals(k + 5) = a.mx
+          numOut += 1
           outProj(InternalRow.fromSeq(vals.toIndexedSeq))
         }
       }
@@ -433,14 +495,20 @@ final case class RasterHoverMergeExec(output: Seq[Attribute], numKeys: Int,
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(child.output.take(numKeys + 1)))
 
+  override lazy val metrics: Map[String, SQLMetric] =
+    CellFold.metrics(sparkContext)
+
   override protected def doExecute(): RDD[InternalRow] = {
     val k = numKeys
     val childTypes: Array[DataType] = child.output.map(_.dataType).toArray
     val outTypes: Array[DataType] = output.map(_.dataType).toArray
+    val (numOut, merged) =
+      (longMetric("numOutputRows"), longMetric("cellsMerged"))
     child.execute().mapPartitions({ rows =>
       // groupWidth k+1: group on (keys…, px) — the py slot is ignored,
       // the per-cell sums fold straight into column reductions
-      val cols = CellFold.fold(rows, childTypes, k, groupWidth = k + 1)
+      val cols = CellFold.fold(rows, childTypes, k, groupWidth = k + 1,
+        merged)
       val outProj = UnsafeProjection.create(outTypes)
       val it = cols.entrySet().iterator()
       new Iterator[InternalRow] {
@@ -453,6 +521,7 @@ final case class RasterHoverMergeExec(output: Seq[Attribute], numKeys: Int,
           while (i < k) { vals(i) = key.get(i, childTypes(i)); i += 1 }
           vals(k) = key.getLong(k)
           vals(k + 1) = a.mn; vals(k + 2) = a.mx; vals(k + 3) = a.cnt
+          numOut += 1
           outProj(InternalRow.fromSeq(vals.toIndexedSeq))
         }
       }

@@ -60,17 +60,20 @@ class PlanGuardSpec extends AnyFunSuite {
       s"q41: a union branch lost its raw-ts bound (pushed=$pushed)")
   }
 
-  test("q36/q43 image capstones plan one FUSED raster operator per " +
-    "axis over the persisted window") {
+  test("q36/q43 image capstones plan ONE fused raster operator for all " +
+    "axes over the persisted window") {
     // the two-phase pipeline must keep phase 2 on the custom fused
-    // exec (filter+pixel-bin+partial-agg in one pass), one per y-axis
+    // exec (filter+pixel-bin+partial-agg in one pass), and bin all
+    // three y-axes in that one pass, each with its own scale
     Seq("q36_image_pipeline", "q43_image_hover").foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val fused = df.queryExecution.sparkPlan.collect {
         case p: graft.plans.RasterBinPartialExec => p
       }
-      assert(fused.length == 3,
-        s"$name: expected 3 fused raster partials, got ${fused.length}")
+      assert(fused.length == 1,
+        s"$name: expected 1 fused raster partial, got ${fused.length}")
+      assert(fused.head.params.scales.length == 3,
+        s"$name: expected 3 axis scales, got ${fused.head.params.scales}")
       spark.sharedState.cacheManager.clearCache() // release imageWindow
     }
   }

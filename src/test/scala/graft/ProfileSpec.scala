@@ -33,4 +33,27 @@ class ProfileSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Profile.run(SparkTestBase.spark, "q99_no_such_query", dir, dir))
   }
+
+  test("profile of q36 at sf0.001 names the fused raster execs: row and " +
+    "merge counts, and the stages that ran them") {
+    val p = Json.obj(Json.parse(Profile.run(SparkTestBase.spark,
+      "q36_image_pipeline", dir, dir)))
+    val nodes = Json.arr(p("executions")).flatMap(e =>
+      Json.arr(Json.obj(e)("nodes"))).map(Json.obj)
+    def metric(node: String, m: String): Seq[Double] = nodes
+      .filter(n => Json.str(n("name")) == node)
+      .flatMap(n => Json.obj(n("metrics")).get(m).map(Json.num))
+    assert(metric("RasterBinPartial", "number of output rows").exists(_ > 0))
+    val merged = metric("RasterBinMerge", "number of output rows")
+    assert(merged.exists(_ > 0))
+    assert(metric("RasterBinMerge", "partial cells merged").sum >= merged.sum)
+    // the stages running the execs carry their names and a wall share
+    val stages = Json.arr(p("stages")).map(Json.obj)
+    Seq("RasterBinPartial", "RasterBinMerge").foreach { node =>
+      val ran = stages.filter(s =>
+        Json.arr(s("nodes")).map(Json.str).contains(node))
+      assert(ran.nonEmpty && ran.map(s => Json.num(s("share_ms"))).sum > 0,
+        s"no stage attributed to $node")
+    }
+  }
 }

@@ -225,4 +225,35 @@ class RasterSpec extends AnyFunSuite {
     assert(run().toSeq == want)
     assert(run().toSeq == want) // deterministic across executions
   }
+
+  test("binLines/binLinesAA with per-key scales equal one call per " +
+    "scale; a null scale index drops the series") {
+    val rows = (0 until 60).map { i =>
+      val k = Seq("lin", "log", "none")(i % 3)
+      (k, i.toLong, i.toLong * 15, if (i % 11 == 0) Double.NaN
+        else (i % 8) - 2.0)
+    }
+    val pts = rows.toDF("att_name", "point_id", "t", "value_r")
+    val scales = Seq(graft.plans.YScale(-2.0, 5.0),
+      graft.plans.YScale(0.5, 5.0, logScale = true))
+    val scaleOf = when(col("att_name") === "lin", lit(0))
+      .when(col("att_name") === "log", lit(1))
+    def only(k: String) = pts.where(col("att_name") === k)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("att_name", "px", "py").collect().map(_.toSeq).toSeq
+    val multi = Raster.binLines(pts, Seq("att_name"), "point_id", 0L, 1000L,
+      scales, scaleOf, 16, 8)
+    val want = Raster.binLines(only("lin"), Seq("att_name"), "point_id",
+        0L, 1000L, -2.0, 5.0, 16, 8)
+      .unionByName(Raster.binLines(only("log"), Seq("att_name"), "point_id",
+        0L, 1000L, 0.5, 5.0, 16, 8, logScale = true))
+    assert(canon(multi) == canon(want) && canon(multi).nonEmpty)
+    val multiAA = Raster.binLinesAA(pts, Seq("att_name"), "point_id",
+      0L, 1000L, scales, scaleOf, 16, 8)
+    val wantAA = Raster.binLinesAA(only("lin"), Seq("att_name"), "point_id",
+        0L, 1000L, -2.0, 5.0, 16, 8)
+      .unionByName(Raster.binLinesAA(only("log"), Seq("att_name"),
+        "point_id", 0L, 1000L, 0.5, 5.0, 16, 8, logScale = true))
+    assert(canon(multiAA) == canon(wantAA) && canon(multiAA).nonEmpty)
+  }
 }

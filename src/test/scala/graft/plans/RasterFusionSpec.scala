@@ -145,4 +145,60 @@ class RasterFusionSpec extends AnyFunSuite {
       .orderBy(col("event_type")).collect()
     assert(top.map(_.toSeq).toSeq == want.map(_.toSeq).toSeq)
   }
+
+  test("per-key scales: one fused pass equals one call per scale, and a " +
+    "null scale index skips the row") {
+    val fx = fixture.unionByName(fixture.where(col("point_id") < 60)
+      .withColumn("event_type", lit("other")))
+    val (t0, t1, w, h) = (0L, 1000000L, 32, 16)
+    val scales = Seq(YScale(0.0, 9.75), YScale(0.25, 9.75, logScale = true))
+    // "other" maps to no scale
+    val scaleOf = when(col("event_type") === "click", lit(0))
+      .when(col("event_type") === "view", lit(1))
+    def only(k: String) = fx.where(col("event_type") === k)
+    val grid = RasterFusion.binPoints(fx, Seq("event_type"), t0, t1,
+      scales, scaleOf, w, h)
+    val gridWant = RasterFusion.binPoints(only("click"), Seq("event_type"),
+        t0, t1, 0.0, 9.75, w, h)
+      .unionByName(RasterFusion.binPoints(only("view"), Seq("event_type"),
+        t0, t1, 0.25, 9.75, w, h, logScale = true))
+    assert(canon(grid) == canon(gridWant) && canon(grid).nonEmpty)
+    def c(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("event_type", "px").collect().map(_.toSeq).toSeq
+    val hover = RasterFusion.hoverColumns(fx, Seq("event_type"), t0, t1,
+      scales, scaleOf, w, h)
+    val hoverWant = RasterFusion.hoverColumns(only("click"),
+        Seq("event_type"), t0, t1, 0.0, 9.75, w, h)
+      .unionByName(RasterFusion.hoverColumns(only("view"),
+        Seq("event_type"), t0, t1, 0.25, 9.75, w, h, logScale = true))
+    assert(c(hover) == c(hoverWant) && c(hover).nonEmpty)
+  }
+
+  test("every fused exec reports output rows; the merges report the " +
+    "partial cells they merged") {
+    val fused = RasterFusion.binPoints(fixture, Seq("event_type"),
+      0L, 1000000L, 0.0, 9.75, 32, 16)
+    val rows = fused.collect().length
+    // descends into the adaptive plan's query stages
+    val plans = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    def metric(node: String, m: String): Long =
+      plans.collect(fused.queryExecution.executedPlan) {
+        case p if p.nodeName == node => p.metrics(m).value
+      }.sum
+    val partialCells = metric("RasterBinPartial", "numOutputRows")
+    assert(metric("RasterBinMerge", "numOutputRows") == rows && rows > 0)
+    assert(partialCells >= rows)
+    assert(metric("RasterBinMerge", "cellsMerged") == partialCells)
+    val hover = RasterFusion.hoverColumns(fixture, Seq("event_type"),
+      0L, 1000000L, 0.0, 9.75, 32, 16)
+    val cols = hover.collect().length
+    def hoverMetric(node: String, m: String): Long =
+      plans.collect(hover.queryExecution.executedPlan) {
+        case p if p.nodeName == node => p.metrics(m).value
+      }.sum
+    assert(hoverMetric("RasterHoverMerge", "numOutputRows") == cols)
+    assert(hoverMetric("RasterHoverMerge", "cellsMerged") ==
+      hoverMetric("RasterBinPartial", "numOutputRows"))
+  }
 }

@@ -303,4 +303,107 @@ class RenderSpec extends AnyFunSuite {
     assert(res.images.contains("0"))
     assert(!res.descs.contains("a") && res.descs.contains("b"))
   }
+
+  /** Three axes over one window: a log axis (with non-positive values
+    * and an all-NaN attribute), a manual min/max axis narrower than
+    * its data, and attribute "a" listed on two axes. */
+  private def multiAxisFixture = {
+    val rows = (0 until 60).map(i => ("a", i.toLong, i.toLong * 16,
+        1.0 + (i % 10))) ++
+      (0 until 40).map(i => ("b", 100L + i, i.toLong * 25,
+        (i % 9) - 3.0)) ++
+      (0 until 10).map(i => ("nan", 200L + i, i.toLong * 90, Double.NaN)) ++
+      (0 until 30).map(i => ("c", 300L + i, i.toLong * 33,
+        2.0 + (i % 6) * 0.75))
+    rows.toDF("att_name", "point_id", "t", "value_r")
+  }
+  private val multiAttrs = Seq(
+    ArchiveApi.AttrSpec("a", 0xff0000, 0),
+    ArchiveApi.AttrSpec("b", 0x00ff00, 1),
+    ArchiveApi.AttrSpec("nan", 0x0000ff, 1),
+    ArchiveApi.AttrSpec("a", 0xffff00, 2),
+    ArchiveApi.AttrSpec("c", 0x00ffff, 2))
+  private val multiAxes = Map(
+    1 -> ArchiveApi.AxisSpec(scale = Some("log")),
+    2 -> ArchiveApi.AxisSpec(min = Some(0.0), max = Some(8.0)))
+
+  Seq(false, true).foreach { aa =>
+    test(s"imageQuery over three axes equals one request per axis " +
+      s"(antialias=$aa)") {
+      val df = multiAxisFixture
+      def run(attrs: Seq[ArchiveApi.AttrSpec]) = ArchiveApi.imageQuery(
+        df, attrs, 0L, 1000L, 24, 12, multiAxes, antialias = aa)
+      val all = run(multiAttrs)
+      assert(all.images.keySet == Set("0", "1", "2"))
+      val solo = Seq(0, 1, 2).map(ax =>
+        ax -> run(multiAttrs.filter(_.yAxis == ax))).toMap
+      Seq(0, 1, 2).foreach { ax =>
+        val (got, want) = (all.images(ax.toString), solo(ax).images(ax.toString))
+        assert(got.imageBase64 == want.imageBase64, s"axis $ax PNG differs")
+        assert(got.yRange == want.yRange && got.xRangeMs == want.xRangeMs)
+      }
+      // the all-NaN attribute has no desc; "a" keeps the desc of the
+      // axis iterated last, and its two axes' descs really differ
+      // (axis 2's manual max of 8 drops a's 9s and 10s from hover)
+      assert(!all.descs.contains("nan") && all.descs.keySet == Set("a", "b", "c"))
+      val aAxes = multiAttrs.groupBy(_.yAxis).toSeq.map(_._1)
+        .filter(ax => multiAttrs.exists(x => x.yAxis == ax && x.name == "a"))
+      assert(solo(0).descs("a") != solo(2).descs("a"))
+      assert(all.descs("a") == solo(aAxes.last).descs("a"))
+      assert(all.descs("b") == solo(1).descs("b"))
+      assert(all.descs("c") == solo(2).descs("c"))
+      // the log axis counts only b's positive values
+      assert(all.descs("b").totalPoints == (0 until 40).count(i => i % 9 > 3))
+    }
+  }
+
+  /** Jobs and codegen compiles started while `body` runs on this
+    * thread (jobs matched by a local-property tag, counted once the
+    * listener bus has delivered every job end). */
+  private def jobsAndCompiles(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobTag") == tag))
+          started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (started.contains(e.jobId)) ended.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    sc.setLocalProperty("graft.test.jobTag", tag)
+    try body finally sc.setLocalProperty("graft.test.jobTag", null)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((started.isEmpty || started.size != ended.get) &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    sc.removeSparkListener(l)
+    (started.size, compiles)
+  }
+
+  test("imageQuery: a three-axis request runs no more Spark jobs than " +
+    "the same attributes on one axis") {
+    val df = multiAxisFixture
+    val oneAxis = multiAttrs.map(_.copy(yAxis = 0)).distinct
+    def run(attrs: Seq[ArchiveApi.AttrSpec]) =
+      ArchiveApi.imageQuery(df, attrs, 0L, 1000L, 24, 12, multiAxes)
+    val (three, _) = jobsAndCompiles(run(multiAttrs))
+    val (one, _) = jobsAndCompiles(run(oneAxis))
+    assert(three > 0 && three <= one, s"3 axes: $three jobs, 1 axis: $one")
+  }
+
+  test("imageQuery: a second call over a NEW window compiles at most " +
+    "one codegen class (the window filter)") {
+    val df = multiAxisFixture
+    def run(t0: Long, t1: Long, w: Int, h: Int) = ArchiveApi.imageQuery(
+      df, multiAttrs, t0, t1, w, h, multiAxes)
+    run(0L, 1000L, 24, 12)
+    val (_, compiles) = jobsAndCompiles(run(13L, 977L, 31, 9))
+    assert(compiles <= 1, s"a new window compiled $compiles classes")
+  }
 }
