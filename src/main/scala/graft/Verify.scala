@@ -50,12 +50,10 @@ object Verify {
 
   /** Ids of the RDDs persisted since `before` that are still registered
     * once the asynchronous releases have drained (polled for up to
-    * `timeoutMs`), not counting the catalog TTL cache, which is meant
-    * to outlive a query. */
+    * `timeoutMs`). */
   def pinnedSince(spark: SparkSession, before: Set[Int],
       timeoutMs: Long = 30000L): Set[Int] = {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet --
-      before -- graft.sources.EventsArchiveAdapter.catalogCacheRddIds(spark)
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     while (pinned.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     pinned

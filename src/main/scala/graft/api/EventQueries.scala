@@ -269,7 +269,7 @@ object EventQueries {
     Catalog.search(new EventsArchiveAdapter(s, dir).attNames, Glob)
 
   private val q11Sql = {
-    val re = "(?i)" + GlobFns.globToRegex(Glob)
+    val re = GlobFns.globRegex(Glob)
     s"""WITH an AS (SELECT DISTINCT
        |    'events/stream/u' || user_id || '/' || event_type AS attribute
        |  FROM events)
@@ -837,7 +837,8 @@ object EventQueries {
   private val Q31Ids = Seq(8, 12, 16, 20, 24, 28)
 
   private def multiTypeArchive(s: SparkSession, dir: String): String =
-    multiTypeRoots.computeIfAbsent(s"${s.hashCode()}|$dir", _ => {
+    // one spare build on a lost race leaks one temp dir — harmless
+    graft.operators.SkewOps.sessionMemo(multiTypeRoots, s, dir) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-multitype").toString
       val p = pts(s, dir)
@@ -859,7 +860,7 @@ object EventQueries {
         .drop("_ty")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/att_conf")
       root
-    })
+    }
 
   // ------------------------------------------- flat multi-file archive scan
   /** q35 — a time window over a FLAT day-rolled multi-file archive,
@@ -879,7 +880,7 @@ object EventQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def flatArchive(s: SparkSession, dir: String): String =
-    flatRoots.computeIfAbsent(s"${s.hashCode()}|$dir", _ => {
+    graft.operators.SkewOps.sessionMemo(flatRoots, s, dir) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-flat").toString
       pts(s, dir).select(
@@ -893,7 +894,7 @@ object EventQueries {
         .repartitionByRange(15, col("ts"))
         .write.mode("overwrite").parquet(s"$root/events.parquet")
       root
-    })
+    }
 
   private def q35(s: SparkSession, dir: String): DataFrame =
     new EventsArchiveAdapter(s, flatArchive(s, dir)).pointsAll
@@ -997,15 +998,8 @@ object EventQueries {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def derivedStatePartitions(s: SparkSession, dir: String,
       stores: Int): Int = {
-    val key = s"${graft.operators.SkewOps.sessionKey(s)}|$dir"
-    // compute OUTSIDE the map's bin lock (a Spark job under
-    // computeIfAbsent would block unrelated readers; see SkewOps)
-    var rows = streamRowCounts.get(key)
-    if (rows == null) {
-      val n: java.lang.Long = s.read.parquet(stagedStreamDir(s, dir)).count()
-      val prev = streamRowCounts.putIfAbsent(key, n)
-      rows = if (prev == null) n else prev
-    }
+    val rows = graft.operators.SkewOps.sessionMemo(streamRowCounts, s, dir)(
+      java.lang.Long.valueOf(s.read.parquet(stagedStreamDir(s, dir)).count()))
     graft.streaming.StreamOps.statePartitionsFor(rows.longValue(),
       graft.streaming.StreamOps.StateSizing(numStores = stores))
   }

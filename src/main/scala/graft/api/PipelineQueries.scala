@@ -915,14 +915,9 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, (String, String, Long)]()
 
   private def p60(s: SparkSession, dir: String): DataFrame = {
-    // fixture staged OUTSIDE the map's bin lock — writeDedupState and
-    // count are Spark jobs, and a job under computeIfAbsent would
-    // block unrelated readers sharing the bin (see SkewOps); keyed by
-    // the stable session UUID, not the reusable identity hash. A lost
-    // putIfAbsent race leaks one temp dir — harmless and bounded.
-    val key = s"${graft.operators.SkewOps.sessionKey(s)}|$dir"
-    var entry = p60Roots.get(key)
-    if (entry == null) {
+    // a lost race's spare build leaks one temp dir — harmless, bounded
+    val (stateRoot, streamDir, nDocs) =
+      graft.operators.SkewOps.sessionMemo(p60Roots, s, dir) {
       val state = java.nio.file.Files
         .createTempDirectory("graft-p60-state").toString
       Dedup.writeDedupState(
@@ -939,11 +934,8 @@ object PipelineQueries {
           java.nio.file.Files.copy(src, d.resolve("documents.parquet"))
           d.toString
         }
-      val computed = (state, sd, docs(s, dir).count())
-      val prev = p60Roots.putIfAbsent(key, computed)
-      entry = if (prev == null) computed else prev
+      (state, sd, docs(s, dir).count())
     }
-    val (stateRoot, streamDir, nDocs) = entry
     val schema = docs(s, dir).schema
     val name = EventQueries.streamSinkKey(s, dir, "p60")
     // shuffle partitions derived from input volume (the op itself is

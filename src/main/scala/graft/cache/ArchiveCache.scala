@@ -1,6 +1,5 @@
 package graft.cache
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -16,8 +15,8 @@ import org.apache.spark.storage.StorageLevel
   *    `data_time >= bound` fresh rows, and union (`hdbpp.py:362-397`
   *    — the second-truncation avoids duplicating rows whose sub-second
   *    µs part arrived after the cached read).
-  *  - **TTL catalog cache (S5)**: 60 s memoization of the catalog scans
-  *    (`utils.py:29-50`, `hdbpp.py:213,230`).
+  *  - **TTL cache (S5)**: 60 s memoization of the catalog
+  *    (`utils.py:29-50`), behind [[graft.server.HttpShim]]'s snapshot.
   *
   * Scale note: `persist()` delegates eviction to Spark's LRU block
   * manager (the reference hand-rolls a 1 GB LRU, `utils.py:174-236`);
@@ -157,33 +156,9 @@ object ArchiveCache {
     }
   }
 
-  /** R3 — stale-response fence (reference client `actions.js:125-189`:
-    * responses arriving out of order are dropped unless they belong to
-    * the LATEST issued fetch). Server-side analog for any async caller:
-    * tag each issued request per key with a monotonically increasing
-    * stamp; a completion is accepted only if its stamp is still the
-    * latest for its key. */
-  final class RequestFence[K] {
-    private val latest = new ConcurrentHashMap[K, Long]()
-
-    /** Register a new request for `key`; returns its stamp. */
-    def issue(key: K): Long =
-      latest.compute(key, (_, v) => v + 1) // missing key → 0 + 1
-
-    /** True iff `stamp` is still the newest issued for `key` — older
-      * (stale) completions must be dropped by the caller. */
-    def accept(key: K, stamp: Long): Boolean =
-      latest.getOrDefault(key, 0L) == stamp
-  }
-
-  /** S5 — TTL memoization (`utils.py:29-50`). `clock` injectable.
-    * `onEvict` runs on the value being replaced at TTL expiry (and on
-    * `invalidate()`) — cached-DataFrame users unpersist there, so a
-    * long-lived session does not accumulate one persisted block set
-    * per 60 s refresh. */
+  /** S5 — TTL memoization (`utils.py:29-50`). `clock` injectable. */
   final class TtlCache[T](ttlMs: Long, load: () => T,
-      clock: () => Long = () => System.currentTimeMillis(),
-      onEvict: T => Unit = (_: T) => ()) {
+      clock: () => Long = () => System.currentTimeMillis()) {
     private var value: Option[(Long, T)] = None
     private[cache] var loads = 0L
 
@@ -191,21 +166,14 @@ object ArchiveCache {
       val now = clock()
       value match {
         case Some((at, v)) if now - at < ttlMs => v
-        case prev =>
+        case _ =>
           loads += 1
           val v = load()
           value = Some((now, v))
-          prev.foreach { case (_, old) => onEvict(old) }
           v
       }
     }
 
-    def invalidate(): Unit = synchronized {
-      value.foreach { case (_, old) => onEvict(old) }
-      value = None
-    }
-
-    /** The held value, if any, without loading or expiring it. */
-    def peek: Option[T] = synchronized(value.map(_._2))
+    def invalidate(): Unit = synchronized { value = None }
   }
 }

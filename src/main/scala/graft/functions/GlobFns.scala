@@ -61,9 +61,10 @@ object GlobFns {
     sb.append('$').toString
   }
 
-  /** Case-insensitive glob match on a column (F5). */
-  def globMatch(c: Column, glob: String): Column =
-    c.rlike("(?i)" + globToRegex(glob))
+  /** Case-insensitive anchored glob regex (F5). */
+  def globRegex(glob: String): String = "(?i)" + globToRegex(glob)
+
+  def globMatch(c: Column, glob: String): Column = c.rlike(globRegex(glob))
 
   /** Case-insensitive substring match (F6, Grafana `/search`). */
   def substringRegex(term: String): String = "(?i)" + regexQuote(term)

@@ -10,28 +10,32 @@ import graft.functions.GlobFns
   * (S7/O4).
   *
   * Scale: catalogs are ~100k rows (reference `hdbpp.py:216-218`) — tiny
-  * next to the point data. They are cached and BROADCAST into any join
-  * against point scans (J1), never shuffled. Unlike the reference
-  * (Cassandra can't server-side wildcard, so it fetches all names and
-  * regex-matches in Python), the Spark scan evaluates the regex inside
-  * whole-stage codegen.
+  * next to the point data. They are BROADCAST into any join against
+  * point scans (J1), never shuffled. The searches here evaluate the
+  * regex inside whole-stage codegen; [[graft.server.HttpShim]] matches
+  * a 60 s snapshot of [[formatted]] in process, as the reference does.
   */
 object Catalog {
 
+  /** The formatted `domain/family/member/name` attribute every catalog
+    * search matches and sorts (reference `hdbpp.py:219-228`). */
+  private val attribute = concat_ws("/", col("domain"), col("family"),
+    col("member"), col("name")).as("attribute")
+
+  /** `(cs_name, attribute)` — the catalog's one name projection. */
+  def formatted(attNames: DataFrame): DataFrame =
+    attNames.select(col("cs_name"), attribute)
+
   /** F5+O1 — glob search over formatted attribute names, sorted.
-    * Reference `server.py:73-89`. */
+    * Reference `server.py:73-89`. `attNames` needs no `cs_name`. */
   def search(attNames: DataFrame, glob: String): DataFrame =
-    attNames
-      .select(concat_ws("/", col("domain"), col("family"), col("member"),
-        col("name")).as("attribute"))
+    attNames.select(attribute)
       .where(GlobFns.globMatch(col("attribute"), glob))
       .orderBy("attribute")
 
   /** F6 — Grafana substring search. Reference `server.py:196-207`. */
   def searchSubstring(attNames: DataFrame, term: String): DataFrame =
-    attNames
-      .select(concat_ws("/", col("domain"), col("family"), col("member"),
-        col("name")).as("attribute"))
+    attNames.select(attribute)
       .where(GlobFns.substringMatch(col("attribute"), term))
       .orderBy("attribute")
 
@@ -43,9 +47,7 @@ object Catalog {
     * builds cs → [(d,f,m,n)] dicts). Sorted inside the list so results
     * are deterministic. */
   def namesPerCs(attNames: DataFrame): DataFrame =
-    attNames
-      .select(col("cs_name"), concat_ws("/", col("domain"), col("family"),
-        col("member"), col("name")).as("attribute"))
+    formatted(attNames)
       .groupBy("cs_name")
       .agg(
         count(lit(1)).as("n_attributes"),

@@ -104,9 +104,8 @@ object SkewOps {
     * relation on repeat calls — the gate's serialized critical path
     * (one scalar aggregate + the share filter over `dim`) is a
     * LATENCY constant (~1.3–1.4× plain on a local run, StressSpec),
-    * paid per CALL before this cache and once per corpus after it,
-    * the same memoization shape as the adapter's `catalogCache`. The
-    * hot set is ≤ 2·buckets keys by construction, so an entry is tiny;
+    * paid per CALL before this cache and once per corpus after it.
+    * The hot set is ≤ 2·buckets keys by construction, so an entry is tiny;
     * the map is size-capped as a leak backstop. Caveat (shared with
     * every plan-keyed cache): a dim whose UNDERLYING FILES change
     * under an identical plan replays the stale gate decision — results
@@ -136,6 +135,24 @@ object SkewOps {
   private lazy val sessionUuidMethod =
     classOf[org.apache.spark.sql.classic.SparkSession]
       .getMethod("sessionUUID")
+
+  /** `memo`'s value for (`sess`, `dir`), or `build`'s result stored
+    * there on a miss. `build` runs OUTSIDE the map's bin lock — a Spark
+    * job under computeIfAbsent would block unrelated readers sharing
+    * the bin — so a lost race runs one spare build, and the first
+    * stored value wins. */
+  private[graft] def sessionMemo[V](
+      memo: java.util.concurrent.ConcurrentHashMap[String, V],
+      sess: org.apache.spark.sql.SparkSession, dir: String)(build: => V): V = {
+    val key = s"${sessionKey(sess)}|$dir"
+    val hit = memo.get(key)
+    if (hit != null) hit
+    else {
+      val built = build
+      val prev = memo.putIfAbsent(key, built)
+      if (prev == null) built else prev
+    }
+  }
 
   private def cachedHotKeys(dim: DataFrame, key: String, weightCol: String,
       buckets: Int): DataFrame = {

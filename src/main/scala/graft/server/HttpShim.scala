@@ -4,9 +4,12 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.api.ArchiveApi
-import graft.functions.TimeFns
+import graft.cache.ArchiveCache.TtlCache
+import graft.functions.{GlobFns, TimeFns}
 import graft.operators.Catalog
 
 /** HTTP tier over the library façade, mirroring the reference server's
@@ -14,16 +17,24 @@ import graft.operators.Catalog
   * GET /attributes, POST /image, POST /query, POST /search,
   * POST /httpquery. Built on the JDK's `com.sun.net.httpserver` — the
   * engine ships zero extra dependencies, and the HTTP tier is a thin
-  * shim by design: every route body is one [[ArchiveApi]] call, so the
-  * serving layer adds parsing/encoding only (SURVEY scoped the server
+  * shim by design: every data route body is one [[ArchiveApi]] call, so
+  * the serving layer adds parsing/encoding only (SURVEY scoped the server
   * OUT of the engine; this closes the gap a reference user hits first).
   *
   * Execution model: requests run Spark actions on the driver; the
   * cluster parallelism lives in the queries themselves, exactly as in
-  * library use. The handler pool is small and the shim is stateless —
-  * horizontal scale-out is N shims over one long-lived SparkSession
-  * each (the reference runs one aiohttp process with a thread pool,
-  * `server.py:283`).
+  * library use. The handler pool is small — horizontal scale-out is N
+  * shims over one long-lived SparkSession each (the reference runs one
+  * aiohttp process with a thread pool, `server.py:283`).
+  *
+  * State: one catalog snapshot, memoized for [[HttpShim.CatalogTtlMs]]
+  * as the reference memoizes its catalog fetch (`hdbpp.py:213-228`):
+  * the control-system list and the formatted names per control system,
+  * one collect each, loaded by the first catalog request after expiry.
+  * In between, the catalog routes run no Spark job. They answer what
+  * the DataFrame path answers ([[ArchiveApi.attributes]]): the regex
+  * `GlobFns` hands `RLIKE`, matched as `RLIKE` does (`Matcher.find`),
+  * in Spark's string order. Driver memory: about 40–80 MB at 1M names.
   *
   * Documented divergences from the reference:
   *  - target addressing: `att_name` carries no control-system prefix
@@ -36,9 +47,14 @@ import graft.operators.Catalog
   *    `server.py:293-296`; a library shim takes it as a parameter and
   *    omits the route when absent).
   */
-final class HttpShim(spark: SparkSession, points: DataFrame,
-    attConf: DataFrame, attNames: DataFrame, port: Int = 0,
-    staticDir: Option[String] = None) {
+final class HttpShim private[server] (spark: SparkSession,
+    points: DataFrame, attConf: DataFrame, attNames: DataFrame, port: Int,
+    staticDir: Option[String], clock: () => Long) {
+
+  def this(spark: SparkSession, points: DataFrame, attConf: DataFrame,
+      attNames: DataFrame, port: Int = 0, staticDir: Option[String] = None) =
+    this(spark, points, attConf, attNames, port, staticDir,
+      () => System.currentTimeMillis())
 
   // the raster-fusion strategy is SESSION state: install it once at
   // shim construction, so request threads never mutate
@@ -211,6 +227,28 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
     case _ => 0xff0000
   }
 
+  // ------------------------------------------------------------ catalog
+
+  private val controlSystems = new TtlCache[Seq[String]](
+    HttpShim.CatalogTtlMs, () => ArchiveApi.controlSystems(
+      HttpShim.relisted(attConf)).collect().map(_.getString(0)).toSeq,
+    clock)
+
+  private val namesByCs = new TtlCache[Map[String, Array[String]]](
+    HttpShim.CatalogTtlMs, () => Catalog.formatted(
+      HttpShim.relisted(attNames)).collect()
+      .groupBy(_.getString(0))
+      .map { case (cs, rows) =>
+        cs -> HttpShim.sparkSorted(rows.map(_.getString(1))) },
+    clock)
+
+  /** The names of control system `cs` that `regex` finds, in order. */
+  private def matching(cs: String, regex: String): Iterator[String] = {
+    val p = java.util.regex.Pattern.compile(regex)
+    namesByCs.get().getOrElse(cs, Array.empty[String]).iterator
+      .filter(p.matcher(_).find())
+  }
+
   // ------------------------------------------------------------ routes
 
   // GET /health — liveness probe (server.py:58-60)
@@ -220,9 +258,8 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
 
   // GET /controlsystems (server.py:63-70)
   handle("/controlsystems", "GET") { ex =>
-    val cs = ArchiveApi.controlSystems(attConf)
-      .collect().map(_.getString(0)).toSeq
-    respond(ex, 200, Json.write(Map("controlsystems" -> cs)))
+    respond(ex, 200,
+      Json.write(Map("controlsystems" -> controlSystems.get())))
   }
 
   // GET /attributes?cs=…&search=…&max=… (server.py:73-89)
@@ -233,8 +270,7 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
     val glob = p.getOrElse("search",
       throw new IllegalArgumentException("missing 'search'"))
     val max = p.get("max").map(m => positiveMax(m.toInt)).getOrElse(100)
-    val attrs = ArchiveApi.attributes(attNames, cs, glob, max)
-      .collect().map(_.getString(0)).toSeq
+    val attrs = matching(cs, GlobFns.globRegex(glob)).take(max).toSeq
     respond(ex, 200, Json.write(Map("attributes" -> attrs)))
   }
 
@@ -244,10 +280,8 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
     val b = Json.obj(body(ex))
     val cs = Json.str(b("cs"))
     val term = Json.str(b("target"))
-    val matches = Catalog.searchSubstring(
-      attNames.where(col("cs_name") === cs), term)
-      .collect().map(_.getString(0)).toSeq
-    respond(ex, 200, Json.write(matches))
+    respond(ex, 200,
+      Json.write(matching(cs, GlobFns.substringRegex(term)).toSeq))
   }
 
   // POST /query — Grafana data query: targets + range + optional
@@ -376,6 +410,25 @@ final class HttpShim(spark: SparkSession, points: DataFrame,
 }
 
 object HttpShim {
+  /** How long a catalog snapshot answers before the next catalog
+    * request reloads it (reference `hdbpp.py:213,230`). */
+  val CatalogTtlMs = 60000L
+
+  /** `df` after re-listing the files under its scans: a frame keeps the
+    * file listing it was built with, so a reload would otherwise never
+    * see names appended since. */
+  private def relisted(df: DataFrame): DataFrame = {
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .foreach { case r: HadoopFsRelation => r.location.refresh(); case _ => }
+    df
+  }
+
+  /** `names` in Spark's string order: `UTF8String.compareTo`, the order
+    * `orderBy` gives a string column. */
+  private def sparkSorted(names: Array[String]): Array[String] =
+    names.map(n => UTF8String.fromString(n) -> n)
+      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+
   /** Per-side cap on /image canvas dimensions — bounds the driver's
     * per-request pixel allocations the way [[ArchiveApi
     * .DefaultRawRowCap]] bounds raw-render rows. */

@@ -215,47 +215,43 @@ final class EventsArchiveAdapter(val spark: SparkSession, sfDir: String)
       && col("period").between(p0, p1))
 
   /** Catalogs derive from a `distinct()` over the events scan — a full
-    * shuffle. Like the reference's 60 s-TTL memoized catalog fetch
-    * (`hdbpp.py:213-228`), the distinct result is persisted and shared
-    * across queries of the same (session, dir) so four catalog queries
-    * don't pay four scans (S5). */
+    * shuffle per action. They are plain frames, like
+    * [[ParquetArchiveSource]]'s: the 60 s memo of the reference's
+    * catalog fetch (`hdbpp.py:213-228`, S5) lives in the one reader that
+    * repeats them, the HTTP tier ([[graft.server.HttpShim]]). */
   def attConf: DataFrame =
-    EventsArchiveAdapter.catalogCache(spark, sfDir, "attConf", () =>
-      pointsAll.select("att_name", "att_conf_id").distinct()
-        .withColumn("cs_name", lit("events.cs:10000"))
-        .withColumn("data_type", lit("scalar_devdouble_ro")))
+    pointsAll.select("att_name", "att_conf_id").distinct()
+      .withColumn("cs_name", lit("events.cs:10000"))
+      .withColumn("data_type", lit("scalar_devdouble_ro"))
 
   def attNames: DataFrame =
-    EventsArchiveAdapter.catalogCache(spark, sfDir, "attNames", () =>
-      raw.select(col("user_id"), col("event_type")).distinct()
-        .select(
-          lit("events.cs:10000").as("cs_name"),
-          lit("events").as("domain"),
-          lit("stream").as("family"),
-          concat(lit("u"), col("user_id")).as("member"),
-          col("event_type").as("name")))
+    raw.select(col("user_id"), col("event_type")).distinct()
+      .select(
+        lit("events.cs:10000").as("cs_name"),
+        lit("events").as("domain"),
+        lit("stream").as("family"),
+        concat(lit("u"), col("user_id")).as("member"),
+        col("event_type").as("name"))
 
   /** Synthesized att_parameter view: the events table has no property
     * log, so each attribute gets ONE parameter row at its first point
     * (label = attribute name, engine-native µs times). Real archives
     * use the physical table ([[ArchiveWriter.writeParameters]]). */
   def attParameter: DataFrame =
-    EventsArchiveAdapter.catalogCache(spark, sfDir, "attParameter", () =>
-      pointsAll.groupBy(col("att_conf_id"), col("att_name"))
-        .agg(min(col("t")).as("recv_time"))
-        .select(col("att_conf_id"), col("recv_time"),
-          col("recv_time").as("insert_time"), col("att_name").as("label"),
-          lit("au").as("unit"), lit("1").as("standard_unit"),
-          lit("%6.2f").as("format"), lit(null).cast("string")
-            .as("description")))
+    pointsAll.groupBy(col("att_conf_id"), col("att_name"))
+      .agg(min(col("t")).as("recv_time"))
+      .select(col("att_conf_id"), col("recv_time"),
+        col("recv_time").as("insert_time"), col("att_name").as("label"),
+        lit("au").as("unit"), lit("1").as("standard_unit"),
+        lit("%6.2f").as("format"), lit(null).cast("string")
+          .as("description"))
 
   /** Synthesized att_history view: one "add" event per attribute at its
     * first point — the adapter analog of the archiver's event log. */
   def attHistory: DataFrame =
-    EventsArchiveAdapter.catalogCache(spark, sfDir, "attHistory", () =>
-      pointsAll.groupBy(col("att_conf_id"))
-        .agg(min(col("t")).as("time"))
-        .select(col("att_conf_id"), col("time"), lit("add").as("event")))
+    pointsAll.groupBy(col("att_conf_id"))
+      .agg(min(col("t")).as("time"))
+      .select(col("att_conf_id"), col("time"), lit("add").as("event"))
 }
 
 /** Cassandra-connector-backed [[ArchiveSource]] — the deployment the
@@ -360,8 +356,6 @@ object CassandraArchiveSource {
 }
 
 object EventsArchiveAdapter {
-  import graft.cache.ArchiveCache.TtlCache
-
   /** True iff `e` (or a cause) is Spark's rejection of an unreadable
     * parquet type — the signal that the files are legacy
     * TIMESTAMP(NANOS) and need `nanosAsLong`. Error-class name first
@@ -415,33 +409,4 @@ object EventsArchiveAdapter {
   /** Strictly-before cutoff. */
   def tsLtUs(t1Us: Long): org.apache.spark.sql.Column =
     col("t") < t1Us
-
-  private val caches =
-    new java.util.concurrent.ConcurrentHashMap[String, TtlCache[DataFrame]]()
-
-  /** 60 s-TTL memoized, persisted catalog frame (reference
-    * `utils.py:29-50` memoization of `get_attributes`/`get_configs`).
-    * The expiring frame is unpersisted on refresh — without the evict
-    * hook a long-lived session accrues one dead block set per TTL. */
-  private def catalogCache(spark: SparkSession, sfDir: String, kind: String,
-      build: () => DataFrame): DataFrame =
-    caches.computeIfAbsent(s"${spark.hashCode()}|$sfDir|$kind",
-      _ => new TtlCache[DataFrame](60000L, () => build().cache(),
-        onEvict = df => { df.unpersist(); () })).get()
-
-  /** Ids of the materialized RDDs behind `spark`'s live catalog frames —
-    * the one persist meant to outlive a request, so leak audits
-    * ([[graft.Verify.pinnedSince]]) leave it out. */
-  private[graft] def catalogCacheRddIds(spark: SparkSession): Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    caches.asScala.collect {
-      case (k, c) if k.startsWith(s"${spark.hashCode()}|") => c.peek
-    }.flatten.flatMap { df =>
-      df.queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
-          if r.cacheBuilder.isCachedColumnBuffersLoaded =>
-            r.cacheBuilder.cachedColumnBuffers.id
-      }
-    }.toSet
-  }
 }

@@ -4,9 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every operator-internal persist is released after use (or does not
   * exist): running each query that reaches a persist site listed in
-  * DESIGN_CENSUS.md, in one session, leaves no persisted RDD behind.
-  * The catalog TTL cache is the one persist meant to outlive a query,
-  * and [[Verify.pinnedSince]] leaves it out. */
+  * DESIGN_CENSUS.md, in one session, leaves no persisted RDD behind. */
 class PinnedCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -26,8 +24,7 @@ class PinnedCacheSpec extends AnyFunSuite {
     "q11_search_glob", "q24_asof_join", "q36_image_pipeline",
     "q43_image_hover", "q44_period_cache_range")
 
-  test("census queries leave no persisted RDD registered after they " +
-    "materialize (catalog TTL cache excepted)") {
+  test("census queries leave no persisted RDD behind") {
     assert(CensusQueries.forall(SparkEntry.queries.contains),
       s"unknown: ${CensusQueries.filterNot(SparkEntry.queries.contains)}")
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -196,17 +196,6 @@ class CacheSpec extends AnyFunSuite {
     assert(merged.count() == 1)
   }
 
-  test("RequestFence drops stale completions, accepts the latest (R3)") {
-    val f = new ArchiveCache.RequestFence[String]
-    val s1 = f.issue("plot")
-    val s2 = f.issue("plot")
-    assert(!f.accept("plot", s1)) // superseded before completing
-    assert(f.accept("plot", s2))
-    assert(f.accept("plot", s2)) // idempotent until a newer issue
-    val other = f.issue("search")
-    assert(f.accept("search", other) && f.accept("plot", s2))
-  }
-
   test("TtlCache: memoizes within TTL, reloads after expiry (S5)") {
     var now = 1000L
     var loaded = 0
@@ -219,20 +208,6 @@ class CacheSpec extends AnyFunSuite {
     assert(c.get() == 2 && loaded == 2)
     c.invalidate()
     assert(c.get() == 3)
-  }
-
-  test("TtlCache evicts the replaced value on refresh and invalidate") {
-    var now = 0L
-    var loaded = 0
-    val evicted = scala.collection.mutable.Buffer[Int]()
-    val c = new ArchiveCache.TtlCache[Int](100L, () => { loaded += 1; loaded },
-      () => now, v => { evicted += v; () })
-    assert(c.get() == 1 && evicted.isEmpty)
-    now = 150L
-    assert(c.get() == 2 && evicted.toSeq == Seq(1)) // old value released
-    c.invalidate()
-    assert(evicted.toSeq == Seq(1, 2))
-    assert(c.get() == 3) // still usable after invalidate
   }
 
   test("pointsResolved unions typed tables with value_r widened (hdbpp.py:404-410)") {

@@ -1,10 +1,15 @@
 package graft.server
 
-import java.net.URI
+import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
+import graft.api.ArchiveApi
+import graft.operators.Catalog
 import graft.sources.EventsArchiveAdapter
 
 /** End-to-end HTTP round-trips against the shim over the sf0.001
@@ -92,6 +97,9 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       a.startsWith("events/stream/u") && a.endsWith("/click")))
     // missing params → 400, not a stack trace
     assert(get("/attributes?cs=events.cs:10000").statusCode() == 400)
+    // a glob that translates to an invalid regex is the client's error
+    assert(get("/attributes?cs=events.cs:10000&search=%5Bz-a%5D")
+      .statusCode() == 400)
     // non-positive max is a client error, not a Spark limit() failure
     for (bad <- Seq("0", "-5")) {
       val r = get(s"/attributes?cs=events.cs:10000&search=*&max=$bad")
@@ -418,5 +426,202 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.statusCode() == 400, s"$route $body answered ${r.body()}")
       assert(Json.obj(Json.parse(r.body())).contains("error"))
     }
+  }
+
+  // ------------------------------------------------------------ catalog
+
+  /** A shim over the given catalog frames on an ephemeral port, its
+    * catalog clock read from `now`. */
+  private def catalogShim(conf: DataFrame, names: DataFrame,
+      now: () => Long = () => System.currentTimeMillis()): HttpShim = {
+    val s = new HttpShim(spark, spark.emptyDataFrame, conf, names, 0, None,
+      now)
+    s.start()
+    s
+  }
+
+  private def getFrom(s: HttpShim, path: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${s.boundPort}$path")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def attributesOf(s: HttpShim, cs: String, glob: String,
+      max: Option[Int]): HttpResponse[String] = {
+    def enc(v: String) = URLEncoder.encode(v, UTF_8)
+    getFrom(s, s"/attributes?cs=${enc(cs)}&search=${enc(glob)}" +
+      max.map(m => s"&max=$m").getOrElse(""))
+  }
+
+  private def searchOf(s: HttpShim, cs: String,
+      term: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${s.boundPort}/search"))
+      .POST(HttpRequest.BodyPublishers.ofString(
+        Json.write(Map("cs" -> cs, "target" -> term)))).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def strings(df: DataFrame): Seq[String] =
+    df.collect().map(_.getString(0)).toSeq
+
+  /** Names whose sort and match are easy to get wrong in process:
+    * mixed case, regex metacharacters, a duplicate, a null control
+    * system, and `Ａ` (U+FF21) against `😀` (U+1F600), which Java's
+    * UTF-16 `String.compareTo` orders the other way round from Spark's
+    * UTF-8 binary order. */
+  private def trickyNames: DataFrame = {
+    import spark.implicits._
+    Seq(
+      ("cs1", "r1", "vac", "pump.01", "pressure"),
+      ("cs1", "r1", "vac", "pump+01", "Pressure"),
+      ("cs1", "R1", "VAC", "pump-02", "pressure"),
+      ("cs1", "r1", "vac", "pump01", "pressure"),
+      ("cs1", "r1", "vac", "pump01", "pressure"),
+      ("cs1", "r1", "mag", "\uFF21", "current"),
+      ("cs1", "r1", "mag", "\uD83D\uDE00", "current"),
+      ("cs1", "r1", "mag", "\u00e9", "current"),
+      ("cs1", "r1", "mag", "[x]", "current"),
+      ("cs2", "r2", "rf", "tx-01", "power"),
+      (null, "r9", "x", "y", "z"))
+      .toDF("cs_name", "domain", "family", "member", "name")
+  }
+
+  private def trickyConf: DataFrame = {
+    import spark.implicits._
+    Seq(("cs2", "r2/rf/tx-01/power"), ("cs1", "r1/vac/pump01/pressure"),
+      ("cs1", "r1/mag/[x]/current"), (null, "r9/x/y/z"))
+      .toDF("cs_name", "att_name")
+  }
+
+  test("catalog routes answer byte-identically to the DataFrame path") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val Cs = "events.cs:10000"
+    val events = (ad.attConf, ad.attNames, Seq[(String, String, Option[Int])](
+      (Cs, "*", None),
+      (Cs, "events/stream/u?/click", None),
+      (Cs, "events/stream/u[!1]*/view", None),
+      (Cs, "events/stream/u1[0-3]/*", None),
+      (Cs, "EVENTS/Stream/U1*/CLICK", None),
+      (Cs, "events.stream/*", None),
+      (Cs, "events/stream/u1+/click", None),
+      (Cs, "nothing*", None),
+      (Cs, "*", Some(3)),
+      (Cs, "*/u1*", Some(1000)),
+      ("nope:1", "*", None)),
+      Seq(Cs -> "click", Cs -> "U1", Cs -> "u12/", Cs -> ".", Cs -> "+",
+        Cs -> "", Cs -> "zzz", "nope:1" -> "click"))
+    val tricky = (trickyConf, trickyNames, Seq[(String, String, Option[Int])](
+      ("cs1", "*", None),
+      ("cs1", "*", Some(4)),
+      ("cs1", "r1/vac/pump.01/*", None),
+      ("cs1", "r1/vac/pump+01/*", None),
+      ("cs1", "r1/vac/pump?01/PRESSURE", None),
+      ("cs1", "r1/vac/pump[!.+]0*/*", None),
+      ("cs1", "*/mag/[[]x]/*", None),
+      ("cs1", "*/mag/*", None),
+      ("cs2", "*", None),
+      ("cs3", "*", None)),
+      Seq("cs1" -> ".", "cs1" -> "+", "cs1" -> "PUMP", "cs1" -> "\u00e9",
+        "cs1" -> "", "cs1" -> "[x]", "cs1" -> "\\", "cs2" -> "TX"))
+    for ((conf, names, globs, terms) <- Seq(events, tricky)) {
+      val s = catalogShim(conf, names)
+      try {
+        val cs = getFrom(s, "/controlsystems")
+        assert(cs.statusCode() == 200)
+        assert(cs.body() == Json.write(Map("controlsystems" ->
+          strings(ArchiveApi.controlSystems(conf)))))
+        for ((c, glob, max) <- globs) {
+          val r = attributesOf(s, c, glob, max)
+          val want = strings(ArchiveApi.attributes(names, c, glob,
+            max.getOrElse(100)))
+          assert(r.statusCode() == 200, s"$c $glob")
+          assert(r.body() == Json.write(Map("attributes" -> want)),
+            s"/attributes cs=$c search=$glob max=$max")
+        }
+        for ((c, term) <- terms) {
+          val r = searchOf(s, c, term)
+          val want = strings(Catalog.searchSubstring(
+            names.where(names("cs_name") === c), term))
+          assert(r.statusCode() == 200, s"$c $term")
+          assert(r.body() == Json.write(want), s"/search cs=$c target=$term")
+        }
+      } finally s.stop()
+    }
+    // the fixture exercises the order Java's String.compareTo gets wrong
+    val mag = strings(Catalog.search(trickyNames.where("cs_name = 'cs1'"),
+      "*/mag/*"))
+    assert(mag != mag.sorted, "fixture must separate UTF-8 and UTF-16 order")
+  }
+
+  /** Spark jobs started while `body` runs. Marker jobs tagged before and
+    * after it fence the asynchronous listener bus. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val Fence = "graft.test.catalogFence"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(Fence)))
+          .getOrElse("job"))
+    }
+    def fence(tag: String): Unit = {
+      sc.setLocalProperty(Fence, tag)
+      try spark.range(1).count() finally sc.setLocalProperty(Fence, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      fence("open")
+      body
+      fence("close")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("close") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val events = seen.asScala.toSeq
+      assert(events.contains("close"), "listener bus never drained")
+      events.slice(events.lastIndexOf("open") + 1,
+        events.indexOf("close")).size
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a catalog request inside the TTL runs no Spark job") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val s = catalogShim(ad.attConf, ad.attNames)
+    try {
+      def catalog(): Unit = {
+        assert(getFrom(s, "/controlsystems").statusCode() == 200)
+        assert(attributesOf(s, "events.cs:10000", "*/u1*/c*", Some(5))
+          .statusCode() == 200)
+        assert(searchOf(s, "events.cs:10000", "click").statusCode() == 200)
+      }
+      assert(jobsDuring(catalog()) > 0, "the first requests load the snapshot")
+      assert(jobsDuring(catalog()) == 0)
+    } finally s.stop()
+  }
+
+  test("the catalog snapshot reloads after 60 s and sees appended names") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-names")
+      .resolve("att_names").toString
+    def write(rows: Seq[(String, String)], mode: String): Unit =
+      rows.map { case (m, n) => ("cs1", "r1", "vac", m, n) }
+        .toDF("cs_name", "domain", "family", "member", "name")
+        .write.mode(mode).parquet(path)
+    write(Seq("pump01" -> "pressure", "pump02" -> "pressure"), "overwrite")
+    var now = 0L
+    val s = catalogShim(trickyConf, spark.read.parquet(path), () => now)
+    def names(): Seq[String] = {
+      val r = attributesOf(s, "cs1", "*", None)
+      assert(r.statusCode() == 200)
+      Json.arr(Json.obj(Json.parse(r.body()))("attributes")).map(Json.str)
+    }
+    try {
+      val before = Seq("r1/vac/pump01/pressure", "r1/vac/pump02/pressure")
+      assert(names() == before)
+      write(Seq("pump03" -> "pressure"), "append")
+      now += HttpShim.CatalogTtlMs - 1
+      assert(names() == before, "the snapshot answers until the TTL runs out")
+      now += 1
+      assert(names() == before :+ "r1/vac/pump03/pressure")
+    } finally s.stop()
   }
 }
