@@ -21,9 +21,9 @@ object Harness {
 
   /** The bench-standard local session: `local[N]` with N shuffle
     * partitions (N = SPARK_GRAFT_CPUS, default 32 — the stated bench
-    * harness), UTC, UI off, WARN logs, [[graft.plans.DerivedDivBounds]]
-    * registered, and the legacy parquet nanos flag the driver's events
-    * layout needs. */
+    * harness), UTC, UI off, WARN logs, [[graft.functions.GraftExtensions]]
+    * installed (functions, derived bounds, lifted literals), and the
+    * legacy parquet nanos flag the driver's events layout needs. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -31,9 +31,9 @@ object Harness {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.DerivedDivBounds.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }

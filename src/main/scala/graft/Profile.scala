@@ -2,8 +2,10 @@ package graft
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerDriverAccumUpdates,
   SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
@@ -31,6 +33,10 @@ import graft.server.Json
   *    scan time, shuffle write + fetch-wait time, and the rest;
   *  - `unattributed`: stages no plan names (jobs outside any SQL
   *    execution, or stages that reported no task).
+  *
+  * `codegen` counts the classes the profiled run compiled and the
+  * milliseconds that took (Spark's codegen cache misses; the warm run
+  * compiled the shapes it shares), part of the `driver` layer.
   *
   * Usage: `sbt "runMain graft.Profile p74_bm25_negatives,q34_stream_range_join"`.
   */
@@ -63,12 +69,22 @@ object Profile {
     once(warmDir)
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
+    val (compiles0, compileNs0) = codegen()
     val t0 = System.currentTimeMillis()
     val t1 = try { once(dir); System.currentTimeMillis() }
       finally { rec.drain(); spark.sparkContext.removeSparkListener(rec) }
-    Json.write(rec.report(t0, t1) ++
-      ListMap("query" -> name, "stamp" -> Harness.stamp(spark, dir)))
+    val (compiles1, compileNs1) = codegen()
+    Json.write(rec.report(t0, t1) ++ ListMap(
+      "codegen" -> ListMap("compiles" -> (compiles1 - compiles0),
+        "compile_ms" -> r3((compileNs1 - compileNs0) / 1e6)),
+      "query" -> name, "stamp" -> Harness.stamp(spark, dir)))
   }
+
+  /** Classes compiled and nanoseconds spent compiling them, so far in
+    * this JVM (the counts of Spark's codegen cache misses). */
+  private def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
 
   private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
 

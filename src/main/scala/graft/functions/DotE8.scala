@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** `dot_e8(a, b)` — exact quantized dot product of two float arrays:
@@ -193,5 +195,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // derived-column predicate derivation (pushable raw-ts bounds from
     // filters on `t = ts div 1000` — see the rule's scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.DerivedDivBounds)
+    // per-request literals read from references, not spelled into
+    // generated code: the pre-transition hook runs in every adaptive
+    // query stage and in non-adaptive plans (cached relations) alike
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.ParamLiterals
+    })
   }
 }

@@ -66,13 +66,28 @@ final class HttpShim private[server] (spark: SparkSession,
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
 
   /** Ephemeral-port servers report the bound port here. */
   def boundPort: Int = server.getAddress.getPort
 
+  // named by port, and shut down with the server: a stopped shim leaves
+  // no handler thread behind to keep its JVM alive
+  private val handlers = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(HttpShim.HandlerThreads,
+      (r: Runnable) => new Thread(r,
+        s"${HttpShim.handlerThreadPrefix(boundPort)}${n.incrementAndGet()}"))
+  }
+  server.setExecutor(handlers)
+
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+
+  /** Stops accepting, lets running handlers finish, and ends the pool. */
+  def stop(): Unit = {
+    server.stop(0)
+    handlers.shutdown()
+    handlers.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+  }
 
   // ------------------------------------------------------------ plumbing
 
@@ -413,6 +428,12 @@ object HttpShim {
   /** How long a catalog snapshot answers before the next catalog
     * request reloads it (reference `hdbpp.py:213,230`). */
   val CatalogTtlMs = 60000L
+
+  /** Request handler threads per shim. */
+  val HandlerThreads = 4
+
+  /** The name prefix of the handler threads of the shim on `port`. */
+  def handlerThreadPrefix(port: Int): String = s"graft-http-$port-"
 
   /** `df` after re-listing the files under its scans: a frame keeps the
     * file listing it was built with, so a reload would otherwise never

@@ -4,16 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** Every library entry point must work FIRST in a session it has
-  * never seen: `newSession()` shares the context but starts with an
-  * empty function registry and fresh experimental optimizations —
-  * exactly the environment that masked the round-4 decontaminate bug
-  * (poly_hash31 only registered by an earlier, unrelated call). One
-  * operator per self-registering family, invoked on a virgin session
-  * each time. */
+  * never seen: a session that shares the context but installs no
+  * `GraftExtensions` starts with an empty function registry and fresh
+  * experimental optimizations — exactly the environment that masked
+  * the round-4 decontaminate bug (poly_hash31 only registered by an
+  * earlier, unrelated call). One operator per self-registering family,
+  * invoked on a virgin session each time. */
 class FreshSessionSpec extends AnyFunSuite {
 
   test("dedup pipeline self-registers its SQL functions") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     import s.implicits._
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -26,7 +26,7 @@ class FreshSessionSpec extends AnyFunSuite {
   }
 
   test("decontaminate works first in a fresh session") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     import s.implicits._
     val train = Seq((0L, "the quick brown fox jumps high"),
       (1L, "clean text entirely")).toDF("doc_id", "text")
@@ -38,7 +38,7 @@ class FreshSessionSpec extends AnyFunSuite {
   }
 
   test("split form of decontaminate works first in a fresh session") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     import s.implicits._
     val docs = Seq(
       (0L, "the quick brown fox jumps high", "train"),
@@ -51,7 +51,7 @@ class FreshSessionSpec extends AnyFunSuite {
   }
 
   test("sampling draws self-register the hash function") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     import s.implicits._
     val docs = Seq((0L, "en", "a b c"), (1L, "en", "d e"),
       (2L, "de", "f g h i")).toDF("doc_id", "lang", "text")
@@ -64,7 +64,7 @@ class FreshSessionSpec extends AnyFunSuite {
   }
 
   test("text/fingerprint operators self-register") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     import s.implicits._
     val docs = Seq((0L, "a b c d e"), (1L, "a b c d e"))
       .toDF("doc_id", "text")
@@ -76,7 +76,7 @@ class FreshSessionSpec extends AnyFunSuite {
   }
 
   test("naive derived-column filter prunes via the adapter in a fresh session") {
-    val s = SparkTestBase.spark.newSession()
+    val s = SparkTestBase.bareSession()
     val ad = new graft.sources.EventsArchiveAdapter(s, "/root/testdata/sf0.001")
     val df = ad.pointsAll
       .where(col("t") >= graft.api.EventQueries.T0
@@ -104,11 +104,11 @@ class FreshSessionSpec extends AnyFunSuite {
     def run(s: org.apache.spark.sql.SparkSession, name: String) =
       SparkEntry.queries(name)(s, dir).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
-    val chicago = SparkTestBase.spark.newSession()
+    val chicago = SparkTestBase.bareSession()
     chicago.conf.set("spark.sql.session.timeZone", "America/Chicago")
     Seq("q35_flat_archive_window", "q37_parse_naive_utc",
       "q38_period_days", "q40_axis_padding").foreach { name =>
-      val utc = run(SparkTestBase.spark.newSession(), name)
+      val utc = run(SparkTestBase.bareSession(), name)
       val shifted = run(chicago, name)
       assert(utc == shifted, s"$name differs under a non-UTC session " +
         s"(first diff: ${utc.zip(shifted).find(p => p._1 != p._2)})")

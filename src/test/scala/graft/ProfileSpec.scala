@@ -27,6 +27,10 @@ class ProfileSpec extends AnyFunSuite {
       Json.obj(n("metrics")).get("number of output rows").exists(Json.num(_) > 0)))
     val stages = Json.arr(p("stages")).map(Json.obj)
     assert(stages.nonEmpty && stages.forall(s => Json.num(s("skew")) >= 1))
+    // warmed on the same data, the profiled run compiles nothing new
+    val codegen = Json.obj(p("codegen"))
+    assert(Json.num(codegen("compiles")) == 0 &&
+      Json.num(codegen("compile_ms")) == 0, codegen)
     val stamp = Json.obj(p("stamp"))
     assert(Set("cpus", "xmx", "git", "sf").subsetOf(stamp.keySet))
     assert(Json.str(stamp("sf")) == dir)

@@ -13,11 +13,19 @@ object SparkTestBase {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // every suite runs with the derived-bound rule installed — any
-    // result it corrupted would fail the corresponding spec
-    graft.plans.DerivedDivBounds.register(s)
+    // every suite runs with the graft rules installed (derived bounds,
+    // lifted literals) — any result one corrupted would fail its spec
     s
   }
+
+  /** An extension-free session over the same context, for specs that
+    * must see what a session built without `GraftExtensions` sees:
+    * entry points that self-register, and the answers the graft rules
+    * must not change. One root, so one extra shared state per JVM;
+    * each call forks a virgin session from it. */
+  private lazy val bare = org.apache.spark.sql.classic.BareSession.of(spark)
+  def bareSession(): SparkSession = bare.newSession()
 }

@@ -624,4 +624,38 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(names() == before :+ "r1/vac/pump03/pressure")
     } finally s.stop()
   }
+
+  test("a stopped shim leaves no handler thread: three shims started, " +
+    "queried and stopped in one JVM") {
+    val ad = new EventsArchiveAdapter(spark, "/root/testdata/sf0.001")
+    def handlerThreads(port: Int): Seq[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.toSeq.filter(t => t.isAlive &&
+        t.getName.startsWith(HttpShim.handlerThreadPrefix(port)))
+    }
+    (1 to 3).foreach { i =>
+      val s = new HttpShim(spark, ad.pointsAll, ad.attConf, ad.attNames)
+      s.start()
+      val port = s.boundPort
+      try {
+        val at = s"http://127.0.0.1:$port"
+        // one request per handler thread, so the pool starts all of them
+        (1 to HttpShim.HandlerThreads).foreach { _ =>
+          assert(client.send(HttpRequest.newBuilder(URI.create(at + "/health"))
+            .GET().build(), HttpResponse.BodyHandlers.ofString())
+            .statusCode() == 200)
+        }
+        val q = client.send(HttpRequest.newBuilder(URI.create(at + "/query"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"targets": [{"target": "u1/click"}],
+              |"range": {"from": "2024-01-05", "to": "2024-01-20"}}"""
+              .stripMargin)).build(), HttpResponse.BodyHandlers.ofString())
+        assert(q.statusCode() == 200 && q.body().contains("u1/click"))
+        assert(handlerThreads(port).size == HttpShim.HandlerThreads,
+          s"shim $i")
+      } finally s.stop()
+      assert(handlerThreads(port).isEmpty,
+        s"shim $i left ${handlerThreads(port).map(_.getName)}")
+    }
+  }
 }
