@@ -170,8 +170,9 @@ object EventQueries {
   private def q07(s: SparkSession, dir: String): DataFrame =
     // the FUSED raster path (plans/RasterFusion.scala): one custom
     // operator for filter+pixel-bin+partial-agg; value parity with
-    // Raster.binPoints is plan-asserted in RasterFusionSpec and
-    // hash-pinned here against the same oracle
+    // the declarative DeclarativeRaster.binPoints (test scope) is
+    // plan-asserted in RasterFusionSpec and hash-pinned here against
+    // the same oracle
     graft.plans.RasterFusion.binPoints(
       pts(s, dir).where(EventsArchiveAdapter.tsRangeUs(Epoch2024, TEnd)),
       Seq("event_type"), Epoch2024, TEnd, 0.0, VMax, W, H)
@@ -202,9 +203,9 @@ object EventQueries {
   private def q08(s: SparkSession, dir: String): DataFrame =
     // the FUSED hover path (plans/RasterFusion.hoverColumns): one
     // exchange on (keys, px) instead of grid + second aggregate; value
-    // parity with the declarative Raster.binPoints ∘ hoverColumns
-    // composition is plan-asserted in RasterFusionSpec and hash-pinned
-    // here against the unchanged oracle
+    // parity with the declarative DeclarativeRaster.binPoints ∘
+    // hoverColumns composition (test scope) is plan-asserted in
+    // RasterFusionSpec and hash-pinned here against the unchanged oracle
     graft.plans.RasterFusion.hoverColumns(
       pts(s, dir).where(EventsArchiveAdapter.tsRangeUs(Epoch2024, TEnd)),
       Seq("event_type"), Epoch2024, TEnd, 0.0, VMax, W, H)

@@ -18,13 +18,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * [[DerivedDivBounds]] uses for its optimizer rule).
   *
   * Why a whole-operator plan node: NOT to avoid materializing rows —
-  * whole-stage codegen already fuses the declarative
-  * [[graft.operators.Raster.binPoints]] filter, pixel projection and
-  * partial aggregate into one loop with no intermediate row. The win
-  * is per request: every `/image` window bakes its own t0/t1/vmin/vmax
-  * literals into the declarative stages, so each request pays a fresh
-  * codegen (and compile) of those stages, plus the generic hash
-  * aggregate's per-row overhead. The fused exec is precompiled Scala
+  * whole-stage codegen already fuses the filter, pixel projection and
+  * partial aggregate of the declarative twin
+  * (`DeclarativeRaster.binPoints`, test scope) into one loop with no
+  * intermediate row. The win is per request: every `/image` window
+  * bakes its own t0/t1/vmin/vmax literals into the declarative stages,
+  * so each request pays a fresh codegen (and compile) of those stages,
+  * plus the generic hash aggregate's per-row overhead. The fused exec is precompiled Scala
   * whose parameters are plain fields, and it accumulates
   * (cnt, sum, min, max) straight into a per-partition hash grid whose
   * key domain is the bounded PIXEL grid — partial state is bounded by
@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * `EnsureRequirements` against [[RasterBinMergeExec]]'s required
   * distribution → merge combines cells and emits
   * `keys…, px, py, cnt, vmean, vmin, vmax`. Every px/py/filter rule
-  * replicates [[graft.operators.Raster.binPoints]] EXACTLY —
+  * replicates the declarative `DeclarativeRaster.binPoints` EXACTLY —
   * RasterFusionSpec pins value parity on fixtures and asserts the
   * fused operators appear in the executed plan.
   *
@@ -62,7 +62,7 @@ object RasterFusion {
         spark.experimental.extraStrategies :+ RasterStrategy
   }
 
-  /** Fused drop-in for [[graft.operators.Raster.binPoints]]: same
+  /** Fused form of the declarative `DeclarativeRaster.binPoints`: same
     * arguments, same output schema `(keys…, px, py, cnt, vmean, vmin,
     * vmax)`, same values — different physical plan. The one-entry case
     * of the per-key-scale form below. */
@@ -83,8 +83,8 @@ object RasterFusion {
       RasterParams(keys.length, t0Us, t1Us, width, height,
         scales.toIndexedSeq))(RasterBinPlan(_, _))
 
-  /** Fused drop-in for [[graft.operators.Raster.binPoints]] ∘
-    * [[graft.operators.Raster.hoverColumns]] — the `/image` hover path
+  /** Fused form of the declarative `DeclarativeRaster.binPoints` ∘
+    * `DeclarativeRaster.hoverColumns` — the `/image` hover path
     * end-to-end as ONE custom plan: filter + pixel-project + partial
     * grid accumulation ([[RasterBinPartialExec]], unchanged), then a
     * single exchange clustered on (keys, px) into
@@ -136,8 +136,8 @@ object RasterFusion {
 }
 
 /** One y-axis scale: `[vmin, vmax]`, linear or log10. `py` and `keep`
-  * replicate `Raster.pyCol` and the `binPoints` value filter bit for
-  * bit: the axis bounds' log10 is the driver-side `Math.log10` the
+  * replicate `DeclarativeRaster.pyCol` and its `binPoints` value
+  * filter bit for bit: the axis bounds' log10 is the driver-side `Math.log10` the
   * column form baked into its literals, the value's is
   * `StrictMath.log10`, which Spark's `log10` expression calls. */
 final case class YScale(vmin: Double, vmax: Double,
@@ -163,8 +163,9 @@ final case class YScale(vmin: Double, vmax: Double,
 
 /** The grid parameters, serializable into task closures: the time
   * window and canvas, and a small table of y-scales that rows index.
-  * `px` replicates `Raster.pxCol` bit for bit (same op order, same
-  * coercions); a single-scale raster is the one-entry table. */
+  * `px` replicates `DeclarativeRaster.pxCol` bit for bit (same op
+  * order, same coercions); a single-scale raster is the one-entry
+  * table. */
 final case class RasterParams(numKeys: Int, t0: Long, t1: Long,
     width: Int, height: Int, scales: IndexedSeq[YScale]) {
 

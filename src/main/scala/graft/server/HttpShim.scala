@@ -4,8 +4,9 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, LogicalRelation}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.api.ArchiveApi
 import graft.cache.ArchiveCache.TtlCache
@@ -27,14 +28,24 @@ import graft.operators.Catalog
   * shims over one long-lived SparkSession each (the reference runs one
   * aiohttp process with a thread pool, `server.py:283`).
   *
-  * State: one catalog snapshot, memoized for [[HttpShim.CatalogTtlMs]]
-  * as the reference memoizes its catalog fetch (`hdbpp.py:213-228`):
+  * State: two driver-side memos. First, one catalog snapshot, memoized
+  * for [[HttpShim.CatalogTtlMs]] as the reference memoizes its catalog
+  * fetch (`hdbpp.py:213-228`):
   * the control-system list and the formatted names per control system,
   * one collect each, loaded by the first catalog request after expiry.
   * In between, the catalog routes run no Spark job. They answer what
   * the DataFrame path answers ([[ArchiveApi.attributes]]): the regex
   * `GlobFns` hands `RLIKE`, matched as `RLIKE` does (`Matcher.find`),
   * in Spark's string order. Driver memory: about 40–80 MB at 1M names.
+  *
+  * Second, an LRU of finished `/image` answers, bounded at
+  * [[HttpShim.ImageCacheBytes]] of stored response bytes (32 MiB of
+  * driver memory), keyed by the parsed request, the negotiated coding
+  * and the file listing the points scan reads. A hit, and a request
+  * identical to one still rendering, runs no Spark job
+  * ([[respondCacheable]]). A points frame with a leaf that is not a file
+  * relation (a local frame, an RDD, a DSv2 source) is never cached: its
+  * data has no listing to key on.
   *
   * Documented divergences from the reference:
   *  - target addressing: `att_name` carries no control-system prefix
@@ -50,6 +61,7 @@ import graft.operators.Catalog
 final class HttpShim private[server] (spark: SparkSession,
     points: DataFrame, attConf: DataFrame, attNames: DataFrame, port: Int,
     staticDir: Option[String], clock: () => Long) {
+  import HttpShim.{Answer, ImageKey, ImageRequest, Listing}
 
   def this(spark: SparkSession, points: DataFrame, attConf: DataFrame,
       attNames: DataFrame, port: Int = 0, staticDir: Option[String] = None) =
@@ -59,9 +71,9 @@ final class HttpShim private[server] (spark: SparkSession,
   // the raster-fusion strategy is SESSION state: install it once at
   // shim construction, so request threads never mutate
   // `experimental.extraStrategies` — the per-call register() inside
-  // binPoints/hoverColumns stays as an idempotent belt (synchronized,
-  // contains-check only once installed) for library users without a
-  // shim
+  // RasterFusion.binPoints/hoverColumns stays as an idempotent belt
+  // (synchronized, contains-check only once installed) for library
+  // users without a shim
   graft.plans.RasterFusion.register(spark)
 
   private val server =
@@ -100,13 +112,14 @@ final class HttpShim private[server] (spark: SparkSession,
     // the reference gzips every data response (server.py:147,164,180) —
     // its PNG-transport size math counts on it: raw JSON hover descs +
     // base64 PNGs are 3-10× larger uncompressed
-    val bytes = if (acceptsGzip(ex)) {
-      ex.getResponseHeaders.set("Content-Encoding", "gzip")
-      val bos = new java.io.ByteArrayOutputStream(raw.length / 4 + 64)
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      try gz.write(raw) finally gz.close()
-      bos.toByteArray
-    } else raw
+    val gzip = acceptsGzip(ex)
+    send(ex, status, if (gzip) HttpShim.gzip(raw) else raw, contentType, gzip)
+  }
+
+  /** Send `bytes`, already in the negotiated coding. */
+  private def send(ex: HttpExchange, status: Int, bytes: Array[Byte],
+      contentType: String, gzip: Boolean): Unit = {
+    if (gzip) ex.getResponseHeaders.set("Content-Encoding", "gzip")
     ex.getResponseHeaders.set("Content-Type", contentType)
     // the body varies by negotiated encoding, so caches must key on it
     // (RFC 7231 §7.1.4) — without this a shared cache could serve a
@@ -140,36 +153,30 @@ final class HttpShim private[server] (spark: SparkSession,
       .orElse(entries.get("*")).exists(_ > 0.0)
   }
 
-  /** 200-with-ETag / 304 conditional response. The viewer re-requests
-    * an identical grid whenever the user pans away and back (the
-    * reference's stale-response fencing, plot.js, exists because of
-    * exactly that re-fetch pattern); the render is deterministic for a
-    * given request, so a strong ETag over the response body lets the
-    * client skip the base64-PNG transfer entirely on a hit. The Spark
-    * work still runs — the ETag is computed from its output — but the
-    * dominant cost for pan-return, the payload, goes to zero. */
-  private def respondCacheable(ex: HttpExchange, bodyJson: String): Unit = {
-    // a strong ETag names the REPRESENTATION (RFC 7232 §2.1), and the
-    // gzip and identity encodings are different representations — fold
-    // the negotiated coding into the digest so they never share a tag
-    val enc = if (acceptsGzip(ex)) "gzip" else "identity"
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest((enc + "\u0000" + bodyJson).getBytes(UTF_8))
-    val etag = "\"" + digest.take(16).map("%02x".format(_)).mkString + "\""
-    ex.getResponseHeaders.set("ETag", etag)
+  /** 200-with-ETag / 304 conditional response of a finished `/image`
+    * answer. The viewer re-requests an identical grid whenever the user
+    * pans away and back (the reference's stale-response fencing,
+    * plot.js, exists because of exactly that re-fetch pattern). The
+    * answer comes from [[imageAnswer]], which keeps it: a pan-return
+    * whose grid is still stored and whose files have not changed runs
+    * no Spark job, re-encodes nothing and re-hashes nothing. A client
+    * that still holds the ETag gets a 304 and no payload; one that sent
+    * the repeat before the first answer arrived gets the stored bytes. */
+  private def respondCacheable(ex: HttpExchange, answer: Answer): Unit = {
+    ex.getResponseHeaders.set("ETag", answer.etag)
     val matches = Option(ex.getRequestHeaders.getFirst("If-None-Match"))
       .exists { v =>
         // RFC 7232 §3.2: comma list; W/ weak prefix compares equal for
         // If-None-Match (weak comparison); bare * matches anything
         v.trim == "*" ||
-          v.split(',').map(_.trim.stripPrefix("W/")).contains(etag)
+          v.split(',').map(_.trim.stripPrefix("W/")).contains(answer.etag)
       }
     if (matches) {
       ex.getResponseHeaders.set("Vary", "Accept-Encoding")
       ex.getResponseHeaders.set("Access-Control-Allow-Origin", "*")
       ex.sendResponseHeaders(304, -1L) // 304 carries no body
       ex.getResponseBody.close()
-    } else respond(ex, 200, bodyJson)
+    } else send(ex, 200, answer.body, "application/json", answer.gzip)
   }
 
   /** Register a route. The JDK server matches contexts by raw string
@@ -363,8 +370,81 @@ final class HttpShim private[server] (spark: SparkSession,
     // the reference-parity Bresenham raster
     val aa = b.get("antialias").collect { case v: Boolean => v }
       .getOrElse(false)
-    val result = ArchiveApi.imageQuery(points, attrs.toSeq, t0, t1, w, h,
-      axes, antialias = aa)
+    respondCacheable(ex, imageAnswer(
+      ImageRequest(attrs.toSeq, t0, t1, w, h, axes, aa), acceptsGzip(ex)))
+  }
+
+  // ------------------------------------------------------------ /image cache
+
+  /** The file indexes of the relations `points` reads, or None when one
+    * of its leaves is not a file relation: only a file listing tells a
+    * stored answer from a stale one. */
+  private val pointIndexes: Option[Seq[FileIndex]] = {
+    val leaves = points.queryExecution.analyzed.collectWithSubqueries {
+      case l: LeafNode => l
+    }
+    val indexes = leaves.collect { case l: LogicalRelation =>
+      l.relation }.collect { case r: HadoopFsRelation => r.location }
+    if (indexes.size == leaves.size) Some(indexes) else None
+  }
+
+  private val imageCache = new HttpShim.ImageLru[ImageKey](
+    HttpShim.ImageCacheBytes)
+  private val rendering =
+    new java.util.concurrent.ConcurrentHashMap[ImageKey,
+      java.util.concurrent.CompletableFuture[Answer]]()
+  // the listing last seen: equal listings are held once, whatever the
+  // number of stored keys that name them
+  @volatile private var lastListing: Listing = Nil
+
+  /** The files the scan would read now, as sorted (path, length, mtime):
+    * the in-memory listing the index plans from, so no file-system
+    * call. A refresh that adds, grows or rewrites a file changes it. */
+  private def listing(indexes: Seq[FileIndex]): Listing = {
+    val now = indexes.flatMap(_.listFiles(Nil, Nil)).flatMap(_.files)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val last = lastListing
+    if (now == last) last else { lastListing = now; now }
+  }
+
+  /** The answer to `req` in the coding `gzip` names: stored, shared
+    * with an identical request still rendering, or rendered here. An
+    * answer is stored only if the listing did not change while it
+    * rendered. A failed render is neither stored nor kept: it fails its
+    * waiters with the same exception, and so the same status. */
+  private def imageAnswer(req: ImageRequest, gzip: Boolean): Answer =
+    pointIndexes match {
+      case None => render(req, gzip)
+      case Some(indexes) =>
+        val files = listing(indexes)
+        val key = ImageKey(req, gzip, files)
+        imageCache.get(key).getOrElse {
+          val mine = new java.util.concurrent.CompletableFuture[Answer]()
+          val running = rendering.putIfAbsent(key, mine)
+          if (running != null) {
+            try running.get()
+            catch { case e: java.util.concurrent.ExecutionException =>
+              throw e.getCause }
+          } else try {
+            // stored by a render that finished since the lookup above
+            val answer = imageCache.get(key).getOrElse {
+              val a = render(req, gzip)
+              if (listing(indexes) == files) imageCache.put(key, a)
+              a
+            }
+            mine.complete(answer)
+            answer
+          } catch { case e: Throwable =>
+            mine.completeExceptionally(e)
+            throw e
+          } finally rendering.remove(key, mine)
+        }
+    }
+
+  /** Run the `/image` pipeline and encode its answer. */
+  private def render(req: ImageRequest, gzip: Boolean): Answer = {
+    val result = ArchiveApi.imageQuery(points, req.attrs, req.t0Us,
+      req.t1Us, req.width, req.height, req.axes, antialias = req.antialias)
     val images = result.images.map { case (axis, img) =>
       axis -> Map(
         "image" -> img.imageBase64,
@@ -380,8 +460,8 @@ final class HttpShim private[server] (spark: SparkSession,
         "timestamps" -> d.timestamps,
         "counts" -> d.counts.map(_.toDouble))
     }
-    respondCacheable(ex,
-      Json.write(Map("images" -> images, "descs" -> descs)))
+    HttpShim.answer(Json.write(Map("images" -> images, "descs" -> descs)),
+      gzip)
   }
 
   // GET /static/… (+ "/" → index.html) — the client-bundle route
@@ -454,4 +534,73 @@ object HttpShim {
     * per-request pixel allocations the way [[ArchiveApi
     * .DefaultRawRowCap]] bounds raw-render rows. */
   val MaxImageDim = 8192
+
+  /** Bytes of finished `/image` answers one shim keeps on the driver.
+    * 32 MiB holds about 900 answers at the 34 KB a gzip answer measures
+    * (`server.wire_bytes_per_image`, perfbench viewer): hours of one
+    * user's pans, while staying a small share of a driver heap sized
+    * for Spark. An answer over a quarter of it is not stored, so one
+    * huge canvas cannot flush the rest. */
+  val ImageCacheBytes: Long = 32L << 20
+
+  /** A parsed `/image` request: everything its answer depends on,
+    * besides the data. */
+  private[server] final case class ImageRequest(attrs: Seq[ArchiveApi.AttrSpec],
+      t0Us: Long, t1Us: Long, width: Int, height: Int,
+      axes: Map[Int, ArchiveApi.AxisSpec], antialias: Boolean)
+
+  /** Sorted (path, length, mtime) of the files a scan reads. */
+  private[server] type Listing = Seq[(String, Long, Long)]
+
+  private[server] final case class ImageKey(request: ImageRequest,
+      gzip: Boolean, files: Listing)
+
+  /** A finished response: its wire bytes (gzip bytes when `gzip`) and
+    * its strong ETag. */
+  private[server] final case class Answer(body: Array[Byte], etag: String,
+      gzip: Boolean)
+
+  /** `bodyJson` encoded for the wire. A strong ETag names the
+    * REPRESENTATION (RFC 7232 §2.1), and the gzip and identity codings
+    * are different representations: the coding is folded into the
+    * digest so they never share a tag. */
+  private[server] def answer(bodyJson: String, gzip: Boolean): Answer = {
+    val enc = if (gzip) "gzip" else "identity"
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((enc + "\u0000" + bodyJson).getBytes(UTF_8))
+    val etag = "\"" + digest.take(16).map("%02x".format(_)).mkString + "\""
+    val raw = bodyJson.getBytes(UTF_8)
+    Answer(if (gzip) HttpShim.gzip(raw) else raw, etag, gzip)
+  }
+
+  private def gzip(raw: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream(raw.length / 4 + 64)
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    try gz.write(raw) finally gz.close()
+    bos.toByteArray
+  }
+
+  /** Least-recently-used answers, at most `maxBytes` of bodies; an
+    * answer over a quarter of that is not stored. */
+  private[server] final class ImageLru[K](maxBytes: Long) {
+    private val entries =
+      new java.util.LinkedHashMap[K, Answer](16, 0.75f, true)
+    private var bytes = 0L
+
+    def get(k: K): Option[Answer] = synchronized(Option(entries.get(k)))
+
+    def put(k: K, a: Answer): Unit = synchronized {
+      if (a.body.length <= maxBytes / 4) {
+        Option(entries.put(k, a)).foreach(old => bytes -= old.body.length)
+        bytes += a.body.length
+        val eldest = entries.values.iterator
+        while (bytes > maxBytes) {
+          bytes -= eldest.next().body.length
+          eldest.remove()
+        }
+      }
+    }
+
+    def storedBytes: Long = synchronized(bytes)
+  }
 }

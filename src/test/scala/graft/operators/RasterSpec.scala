@@ -27,18 +27,18 @@ class RasterSpec extends AnyFunSuite {
 
   test("pxCol bins µs timestamps, clamping the right edge") {
     val r = Seq(0L, 499L, 500L, 999L, 1000L).toDF("t")
-      .select(Raster.pxCol(col("t"), 0L, 1000L, 2).as("px"))
+      .select(DeclarativeRaster.pxCol(col("t"), 0L, 1000L, 2).as("px"))
       .as[Long].collect()
     assert(r.toSeq == Seq(0L, 0L, 1L, 1L, 1L)) // t=1000 (t1) clamps to last px
   }
 
   test("pyCol linear and log scales") {
     val lin = Seq(0.0, 4.9, 5.0, 10.0).toDF("v")
-      .select(Raster.pyCol(col("v"), 0.0, 10.0, 2).as("py"))
+      .select(DeclarativeRaster.pyCol(col("v"), 0.0, 10.0, 2).as("py"))
       .as[Long].collect()
     assert(lin.toSeq == Seq(0L, 0L, 1L, 1L))
     val log = Seq(1.0, 9.0, 10.0, 100.0).toDF("v")
-      .select(Raster.pyCol(col("v"), 1.0, 100.0, 2, logScale = true).as("py"))
+      .select(DeclarativeRaster.pyCol(col("v"), 1.0, 100.0, 2, logScale = true).as("py"))
       .as[Long].collect()
     assert(log.toSeq == Seq(0L, 0L, 1L, 1L))
   }
@@ -50,7 +50,7 @@ class RasterSpec extends AnyFunSuite {
       ("a", 999L, 9.0), // out of value range [0,4]
       ("a", 500L, Double.NaN)) // dropped
       .toDF("att_name", "t", "value_r")
-    val grid = Raster.binPoints(pts, Seq("att_name"), 0L, 1000L, 0.0, 4.0, 4, 2)
+    val grid = DeclarativeRaster.binPoints(pts, Seq("att_name"), 0L, 1000L, 0.0, 4.0, 4, 2)
       .orderBy("px", "py").collect()
     assert(grid.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
       r.getDouble(4), r.getDouble(5), r.getDouble(6))).toSeq == Seq(
@@ -62,8 +62,8 @@ class RasterSpec extends AnyFunSuite {
   test("hoverColumns collapses the grid along y (A6)") {
     val pts = Seq(("a", 0L, 1.0), ("a", 100L, 3.0), ("a", 600L, 2.0))
       .toDF("att_name", "t", "value_r")
-    val hov = Raster.hoverColumns(
-      Raster.binPoints(pts, Seq("att_name"), 0L, 1000L, 0.0, 4.0, 4, 2),
+    val hov = DeclarativeRaster.hoverColumns(
+      DeclarativeRaster.binPoints(pts, Seq("att_name"), 0L, 1000L, 0.0, 4.0, 4, 2),
       Seq("att_name")).orderBy("px").collect()
     assert(hov.map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3),
       r.getLong(4))).toSeq == Seq((0L, 1.0, 3.0, 2L), (2L, 2.0, 2.0, 1L)))
@@ -111,7 +111,7 @@ class RasterSpec extends AnyFunSuite {
     val pts = Seq((0L, 0.5, 1L)).toDF("t", "value_r", "point_id")
       .withColumn("att_name", lit("a"))
     intercept[IllegalArgumentException] {
-      Raster.binPoints(pts, Seq("att_name"), 5L, 5L, 0.0, 1.0, 4, 4)
+      DeclarativeRaster.binPoints(pts, Seq("att_name"), 5L, 5L, 0.0, 1.0, 4, 4)
     }
     intercept[IllegalArgumentException] {
       Raster.binLines(pts, Seq("att_name"), "point_id",
@@ -153,8 +153,8 @@ class RasterSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("att_name").orderBy("t", "point_id")
     val proj = pts
-      .withColumn("px", Raster.pxCol(col("t"), 0L, 1000L, 16))
-      .withColumn("py", Raster.pyCol(col("value_r"), 0.0, 7.0, 8))
+      .withColumn("px", DeclarativeRaster.pxCol(col("t"), 0L, 1000L, 16))
+      .withColumn("py", DeclarativeRaster.pyCol(col("value_r"), 0.0, 7.0, 8))
       .withColumn("px0", lag("px", 1).over(w))
       .withColumn("py0", lag("py", 1).over(w))
       .where(col("px0").isNotNull)

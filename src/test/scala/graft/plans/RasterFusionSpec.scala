@@ -3,7 +3,7 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.operators.Raster
+import graft.operators.DeclarativeRaster
 
 class RasterFusionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -27,7 +27,7 @@ class RasterFusionSpec extends AnyFunSuite {
     val (t0, t1, vmin, vmax, w, h) = (0L, 1000000L, 0.0, 9.75, 32, 16)
     val fused = RasterFusion.binPoints(fixture, Seq("event_type"),
       t0, t1, vmin, vmax, w, h)
-    val plain = Raster.binPoints(fixture, Seq("event_type"),
+    val plain = DeclarativeRaster.binPoints(fixture, Seq("event_type"),
       t0, t1, vmin, vmax, w, h)
     assert(fused.columns.toSeq == plain.columns.toSeq)
     assert(canon(fused) == canon(plain))
@@ -36,7 +36,7 @@ class RasterFusionSpec extends AnyFunSuite {
   test("fused binPoints matches on a log scale and on empty input") {
     val logf = RasterFusion.binPoints(fixture.where(col("value_r") > 0),
       Seq("event_type"), 0L, 1000000L, 0.25, 9.75, 16, 8, logScale = true)
-    val logp = Raster.binPoints(fixture.where(col("value_r") > 0),
+    val logp = DeclarativeRaster.binPoints(fixture.where(col("value_r") > 0),
       Seq("event_type"), 0L, 1000000L, 0.25, 9.75, 16, 8, logScale = true)
     assert(canon(logf) == canon(logp))
     val empty = RasterFusion.binPoints(
@@ -48,7 +48,7 @@ class RasterFusionSpec extends AnyFunSuite {
   test("fused binPoints with NO key columns (whole-canvas grid)") {
     val fused = RasterFusion.binPoints(fixture, Seq.empty,
       0L, 1000000L, 0.0, 9.75, 32, 16)
-    val plain = Raster.binPoints(fixture, Seq.empty,
+    val plain = DeclarativeRaster.binPoints(fixture, Seq.empty,
       0L, 1000000L, 0.0, 9.75, 32, 16)
     val f = fused.orderBy("px", "py").collect().map(_.toSeq).toSeq
     val p = plain.orderBy("px", "py").collect().map(_.toSeq).toSeq
@@ -72,8 +72,8 @@ class RasterFusionSpec extends AnyFunSuite {
     val (t0, t1, vmin, vmax, w, h) = (0L, 1000000L, 0.0, 9.75, 32, 16)
     val fused = RasterFusion.hoverColumns(fixture, Seq("event_type"),
       t0, t1, vmin, vmax, w, h)
-    val plain = Raster.hoverColumns(
-      Raster.binPoints(fixture, Seq("event_type"), t0, t1, vmin, vmax,
+    val plain = DeclarativeRaster.hoverColumns(
+      DeclarativeRaster.binPoints(fixture, Seq("event_type"), t0, t1, vmin, vmax,
         w, h), Seq("event_type"))
     assert(fused.columns.toSeq == plain.columns.toSeq)
     def c(df: org.apache.spark.sql.DataFrame) =
@@ -82,8 +82,8 @@ class RasterFusionSpec extends AnyFunSuite {
     // log scale + no-key variants share the same partial; spot-check
     val logF = RasterFusion.hoverColumns(fixture.where(col("value_r") > 0),
       Seq.empty, t0, t1, 0.25, vmax, 16, 8, logScale = true)
-    val logP = Raster.hoverColumns(
-      Raster.binPoints(fixture.where(col("value_r") > 0), Seq.empty,
+    val logP = DeclarativeRaster.hoverColumns(
+      DeclarativeRaster.binPoints(fixture.where(col("value_r") > 0), Seq.empty,
         t0, t1, 0.25, vmax, 16, 8, logScale = true), Seq.empty)
     def cx(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("px").collect().map(_.toSeq).toSeq
@@ -123,9 +123,9 @@ class RasterFusionSpec extends AnyFunSuite {
     // parity with the declarative grid → column reduction on the SAME
     // log parameters (q30 pins this against DuckDB; this pins it
     // in-engine on the fixture)
-    val grid = Raster.binPoints(fixture, Seq("event_type"),
+    val grid = DeclarativeRaster.binPoints(fixture, Seq("event_type"),
       0L, 1000000L, 0.25, 9.75, 32, 16, logScale = true)
-    val want = Raster.hoverColumns(grid, Seq("event_type"))
+    val want = DeclarativeRaster.hoverColumns(grid, Seq("event_type"))
       .orderBy(col("event_type"), col("px")).collect()
     val got = rows.sortBy(r => (r.getString(0), r.getLong(1)))
     assert(got.map(_.toSeq).toSeq == want.map(_.toSeq).toSeq)
@@ -139,7 +139,7 @@ class RasterFusionSpec extends AnyFunSuite {
     val top = fused.where(col("cnt") > 0)
       .groupBy(col("event_type")).agg(sum(col("cnt")).as("total"))
       .orderBy(col("event_type")).collect()
-    val want = Raster.binPoints(fixture, Seq("event_type"),
+    val want = DeclarativeRaster.binPoints(fixture, Seq("event_type"),
       0L, 1000000L, 0.0, 9.75, 32, 16)
       .groupBy(col("event_type")).agg(sum(col("cnt")).as("total"))
       .orderBy(col("event_type")).collect()

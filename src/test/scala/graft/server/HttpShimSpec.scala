@@ -552,11 +552,13 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mag != mag.sorted, "fixture must separate UTF-8 and UTF-16 order")
   }
 
+  /** The local property that tags [[jobsDuring]]'s marker jobs. */
+  private val Fence = "graft.test.catalogFence"
+
   /** Spark jobs started while `body` runs. Marker jobs tagged before and
     * after it fence the asynchronous listener bus. */
   private def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val Fence = "graft.test.catalogFence"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -656,6 +658,248 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally s.stop()
       assert(handlerThreads(port).isEmpty,
         s"shim $i left ${handlerThreads(port).map(_.getName)}")
+    }
+  }
+
+  // ------------------------------------------------------------ /image cache
+
+  private def imageReq(w: Int, h: Int,
+      attrs: Seq[String] = Seq("u1/click")): String =
+    Json.write(Map(
+      "attributes" -> attrs.map(n => Map("name" -> n, "color" -> "#00ff00",
+        "y_axis" -> 0.0)),
+      "time_range" -> Seq("2024-01-05", "2024-01-20"),
+      "size" -> Seq(w.toDouble, h.toDouble)))
+
+  /** POST `json` to `/image` of `s`, in gzip or identity, optionally
+    * conditional on `etag`; the raw wire bytes come back. */
+  private def postImage(s: HttpShim, json: String, gzip: Boolean,
+      etag: Option[String] = None): HttpResponse[Array[Byte]] = {
+    val b = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${s.boundPort}/image"))
+      .header("Accept-Encoding", if (gzip) "gzip" else "identity")
+    etag.foreach(b.header("If-None-Match", _))
+    client.send(b.POST(HttpRequest.BodyPublishers.ofString(json)).build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+  }
+
+  private def etagOf(r: HttpResponse[_]): String =
+    r.headers().firstValue("ETag").orElse("")
+
+  /** An image-only shim over `points`, started; stopped after `f`. */
+  private def withShim[T](points: DataFrame)(f: HttpShim => T): T = {
+    val s = new HttpShim(spark, points, spark.emptyDataFrame,
+      spark.emptyDataFrame)
+    s.start()
+    try f(s) finally s.stop()
+  }
+
+  /** What a shim with an empty cache answers. */
+  private def fresh(points: DataFrame, json: String,
+      gzip: Boolean): HttpResponse[Array[Byte]] =
+    withShim(points)(postImage(_, json, gzip))
+
+  /** A three-file copy of the `Harness.warmDir` events, split at
+    * 2024-01-11 and 2024-01-21 into `chunk-<i>.parquet`; the directory
+    * goes to `f`. */
+  private def withArchive[T](f: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-image-cache")
+    java.nio.file.Files.createDirectory(dir.resolve("events.parquet"))
+    try {
+      (0 until 3).foreach(i => writeChunk(dir, i, identity))
+      f(dir)
+    } finally deleteTree(dir)
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.delete(p))
+
+  private val ChunkEdges = Seq("2024-01-01", "2024-01-11", "2024-01-21",
+    "2024-02-01").map(d => java.time.LocalDate.parse(d).atStartOfDay())
+
+  private def chunk(i: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    spark.read.parquet(s"${graft.Harness.warmDir}/events.parquet")
+      .where(col("ts") >= lit(ChunkEdges(i)) && col("ts") < lit(ChunkEdges(i + 1)))
+  }
+
+  /** (Re)write chunk `i` of the archive at `dir` from `edit(chunk(i))`. */
+  private def writeChunk(dir: java.nio.file.Path, i: Int,
+      edit: DataFrame => DataFrame): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-chunk")
+    try {
+      val out = tmp.resolve("out")
+      edit(chunk(i)).coalesce(1).write.parquet(out.toString)
+      val part = java.nio.file.Files.list(out).filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.findFirst().get()
+      java.nio.file.Files.move(part,
+        dir.resolve("events.parquet").resolve(s"chunk-$i.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally deleteTree(tmp)
+  }
+
+  /** The three attributes with the most points in chunk 1. */
+  private def busiestInChunk1: Seq[String] = {
+    import org.apache.spark.sql.functions.{col, concat, desc, lit}
+    chunk(1).groupBy(concat(lit("u"), col("user_id"), lit("/"),
+        col("event_type")).as("n")).count()
+      .orderBy(desc("count"), col("n")).limit(3).collect()
+      .map(_.getString(0)).toSeq
+  }
+
+  test("a stored /image answer is byte-identical to a fresh shim's, " +
+    "gzip and identity, ETag included") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val req = imageReq(110, 55)
+    for (gzip <- Seq(true, false)) {
+      val first = postImage(shim, req, gzip)
+      val hit = postImage(shim, req, gzip)
+      val want = fresh(ad.pointsAll, req, gzip)
+      for (r <- Seq(first, hit, want)) assert(r.statusCode() == 200)
+      assert(hit.body().sameElements(want.body()), s"gzip=$gzip")
+      assert(hit.body().sameElements(first.body()), s"gzip=$gzip")
+      assert(etagOf(hit) == etagOf(want) && etagOf(hit).nonEmpty)
+      assert(hit.headers().firstValue("Content-Encoding").orElse("") ==
+        (if (gzip) "gzip" else ""))
+    }
+  }
+
+  test("a second identical /image runs no Spark job") {
+    val req = imageReq(130, 65)
+    assert(jobsDuring(assert(postImage(shim, req, gzip = true)
+      .statusCode() == 200)) > 0, "the first request renders")
+    assert(jobsDuring(assert(postImage(shim, req, gzip = true)
+      .statusCode() == 200)) == 0)
+  }
+
+  test("a stored /image answers its own ETag with a 304 and no job") {
+    val req = imageReq(120, 60)
+    val first = postImage(shim, req, gzip = true)
+    assert(first.statusCode() == 200)
+    var cond: HttpResponse[Array[Byte]] = null
+    assert(jobsDuring {
+      cond = postImage(shim, req, gzip = true, etag = Some(etagOf(first)))
+    } == 0)
+    assert(cond.statusCode() == 304 && cond.body().isEmpty)
+    assert(etagOf(cond) == etagOf(first))
+  }
+
+  test("a rewritten file inside the window re-keys /image once the " +
+    "catalog reload refreshes the relation")(withArchive { dir =>
+    val attrs = busiestInChunk1
+    val req = imageReq(100, 50, attrs)
+    var now = 0L
+    val ad = new EventsArchiveAdapter(spark, dir.toString)
+    val s = new HttpShim(spark, ad.pointsAll, ad.attConf, ad.attNames, 0,
+      None, () => now)
+    s.start()
+    try {
+      val first = postImage(s, req, gzip = false)
+      assert(first.statusCode() == 200)
+      assert(getFrom(s, "/controlsystems").statusCode() == 200)
+      // values scaled, so every y-range and hover min/max moves
+      writeChunk(dir, 1, c => c.withColumn("value",
+        org.apache.spark.sql.functions.col("value") * 3 + 7))
+      now += HttpShim.CatalogTtlMs
+      assert(getFrom(s, "/controlsystems").statusCode() == 200)
+      val after = postImage(s, req, gzip = false)
+      assert(after.statusCode() == 200)
+      val want = fresh(new EventsArchiveAdapter(spark, dir.toString).pointsAll,
+        req, gzip = false)
+      assert(after.body().sameElements(want.body()))
+      assert(!after.body().sameElements(first.body()))
+      assert(etagOf(after) != etagOf(first))
+    } finally s.stop()
+  })
+
+  test("a points frame that is not a file relation is never cached") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val all = ad.pointsAll
+    import scala.jdk.CollectionConverters._
+    val local = spark.createDataFrame(all.collect().toSeq.asJava, all.schema)
+    assert(local.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val req = imageReq(100, 50)
+    withShim(local) { s =>
+      val first = postImage(s, req, gzip = false)
+      assert(first.statusCode() == 200)
+      assert(jobsDuring(assert(postImage(s, req, gzip = false)
+        .statusCode() == 200)) > 0)
+      // the same answer the file-backed frame gives
+      assert(first.body().sameElements(
+        fresh(ad.pointsAll, req, gzip = false).body()))
+    }
+  }
+
+  test("past its byte bound the /image cache evicts the least recently " +
+    "used answer; an answer over a quarter of the bound is not stored") {
+    val lru = new HttpShim.ImageLru[String](100)
+    def answer(n: Int) = HttpShim.Answer(new Array[Byte](n), "\"e\"", false)
+    Seq("a", "b", "c", "d").foreach(lru.put(_, answer(25)))
+    assert(lru.storedBytes == 100)
+    assert(lru.get("a").isDefined) // now the most recently used
+    lru.put("e", answer(25))
+    assert(lru.get("b").isEmpty, "b was the least recently used")
+    assert(Seq("a", "c", "d", "e").forall(lru.get(_).isDefined))
+    assert(lru.storedBytes == 100)
+    lru.put("big", answer(26))
+    assert(lru.get("big").isEmpty && lru.storedBytes == 100)
+    lru.put("a", answer(10)) // a replaced entry gives its bytes back
+    assert(lru.storedBytes == 85)
+  }
+
+  test("a failed /image render is not cached")(withArchive { dir =>
+    val req = imageReq(100, 50, busiestInChunk1)
+    val ad = new EventsArchiveAdapter(spark, dir.toString)
+    withShim(ad.pointsAll) { s =>
+      val file = dir.resolve("events.parquet").resolve("chunk-1.parquet")
+      val good = java.nio.file.Files.readAllBytes(file)
+      // same length, no parquet footer: the scan fails, the listing
+      // the index holds does not change
+      java.nio.file.Files.write(file, new Array[Byte](good.length))
+      val failed = postImage(s, req, gzip = false)
+      assert(failed.statusCode() == 500)
+      java.nio.file.Files.write(file, good)
+      val retried = postImage(s, req, gzip = false)
+      assert(retried.statusCode() == 200)
+      assert(retried.body().sameElements(fresh(
+        new EventsArchiveAdapter(spark, dir.toString).pointsAll, req,
+        gzip = false).body()))
+    }
+  })
+
+  test("two concurrent identical /image requests render once") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val req = imageReq(140, 70)
+    var once = 0
+    withShim(ad.pointsAll)(s =>
+      once = jobsDuring(assert(postImage(s, req, gzip = true)
+        .statusCode() == 200)))
+    assert(once > 0)
+    // the second request goes out once the first one's render has
+    // started its first job
+    val rendering = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty(Fence) == null))
+          rendering.countDown()
+    }
+    withShim(ad.pointsAll) { s =>
+      var both = Seq.empty[HttpResponse[Array[Byte]]]
+      spark.sparkContext.addSparkListener(l)
+      val twice = try jobsDuring {
+        val a = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+          postImage(s, req, gzip = true))
+        assert(rendering.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        val b = postImage(s, req, gzip = true)
+        both = Seq(a.get(120, java.util.concurrent.TimeUnit.SECONDS), b)
+      } finally spark.sparkContext.removeSparkListener(l)
+      assert(both.forall(_.statusCode() == 200))
+      assert(both(0).body().sameElements(both(1).body()))
+      assert(twice == once, s"two requests ran $twice jobs, one runs $once")
     }
   }
 }
