@@ -6,7 +6,7 @@ import graft.operators.{Catalog, Extrema, Raster, Resample}
 import graft.render.Render
 
 /** Query façade mirroring the reference server's routes (SURVEY §3):
-  * `search` / `controlSystems` (catalog), `rawQuery` (the Grafana
+  * `attributes` / `controlSystems` (catalog), `rawQuery` (the Grafana
   * `/query` endpoint: filter → resample → CSV or JSON), and
   * `imageQuery` (the `/image` hot path: extrema → axis limits → pad →
   * raster → shade → stack → PNG+base64).
@@ -44,10 +44,6 @@ object ArchiveApi {
 
   final case class ImageResult(images: Map[String, AxisImage],
       descs: Map[String, HoverDesc])
-
-  /** F5+O1 — glob search over the catalog (route `GET /attributes`). */
-  def search(attNames: DataFrame, glob: String): DataFrame =
-    Catalog.search(attNames, glob)
 
   /** Route `GET /attributes?cs=…&search=…&max=…` — glob search with the
     * result cap APPLIED (the reference parses `max` but never uses it,
@@ -97,28 +93,6 @@ object ArchiveApi {
     * range renders at most this many rows. */
   val DefaultRawRowCap: Int = 1000000
 
-  /** §3.2 `POST /query` — inclusive time filter, optional resample,
-    * rendered as the reference's CSV block or Grafana JSON format.
-    * `points` needs att_name, t (µs), value_r.
-    *
-    * Driver-memory bound, in two stages. (1) The CAP is applied on a
-    * TIME-FIRST sort (t, att_name, value_r — the trailing columns make
-    * the cap boundary deterministic under duplicate timestamps) via a
-    * real `limit(maxRows)` — Spark plans `TakeOrderedAndProject`, so
-    * the top-k runs DISTRIBUTED (per-partition bounded heaps) and
-    * hitting the cap behaves exactly like querying a shorter range:
-    * the render covers [t0, t_cap] uniformly across EVERY requested
-    * attribute (an attribute-first cap would silently drop whole
-    * later-sorted attributes — indistinguishable from "no data").
-    * (2) The surviving ≤cap rows are RE-SORTED DISTRIBUTED into
-    * request-attribute-major order and streamed through
-    * [[Render.SeriesStream]]: `toLocalIterator` pulls one sort
-    * partition at a time and every row appends straight into the
-    * output buffer, so peak driver state beyond the response payload
-    * itself is one partition of rows — not the old per-attribute
-    * LinkedHashMap that buffered all ≤cap rows a second time. The cap
-    * bounds the intervaled (resampled) path too: a micro-interval over
-    * a wide range explodes the same way raw points do. */
   /** Target rows per range partition of the raw render's final sort —
     * the unit `toLocalIterator` buffers driver-side. 64k rows of
     * (name, t, value) is a few MB; at the 1M default cap the regroup
@@ -179,6 +153,28 @@ object ArchiveApi {
       .sortWithinPartitions(sortCols: _*)
   }
 
+  /** §3.2 `POST /query` — inclusive time filter, optional resample,
+    * rendered as the reference's CSV block or Grafana JSON format.
+    * `points` needs att_name, t (µs), value_r.
+    *
+    * Driver-memory bound, in two stages. (1) The CAP is applied on a
+    * TIME-FIRST sort (t, att_name, value_r — the trailing columns make
+    * the cap boundary deterministic under duplicate timestamps) via a
+    * real `limit(maxRows)` — Spark plans `TakeOrderedAndProject`, so
+    * the top-k runs DISTRIBUTED (per-partition bounded heaps) and
+    * hitting the cap behaves exactly like querying a shorter range:
+    * the render covers [t0, t_cap] uniformly across EVERY requested
+    * attribute (an attribute-first cap would silently drop whole
+    * later-sorted attributes — indistinguishable from "no data").
+    * (2) The surviving ≤cap rows are RE-SORTED DISTRIBUTED into
+    * request-attribute-major order and streamed through
+    * [[Render.SeriesStream]]: `toLocalIterator` pulls one sort
+    * partition at a time and every row appends straight into the
+    * output buffer, so peak driver state beyond the response payload
+    * itself is one partition of rows — not the old per-attribute
+    * LinkedHashMap that buffered all ≤cap rows a second time. The cap
+    * bounds the intervaled (resampled) path too: a micro-interval over
+    * a wide range explodes the same way raw points do. */
   def rawQuery(points: DataFrame, attrNames: Seq[String],
       t0Us: Long, t1Us: Long, interval: Option[String],
       asCsv: Boolean, maxRows: Int = DefaultRawRowCap): String = {

@@ -1179,22 +1179,6 @@ object EventQueries {
        |ORDER BY p.user_id, e.err_id, p.pid""".stripMargin
 
   // ---------------------------------------------------------------- q36 /image capstone
-  /** q36 — the `/image` endpoint's TWO-PHASE pipeline as ONE oracled
-    * query (reference `server.py:92-148` + `plot.py:74-220`): phase 1
-    * computes per-attribute extrema rolled into per-axis limits (A2 →
-    * A3, exactly q04/q06's shapes); the C7 padding
-    * ([[Extrema.padRange]], `plot.py:160-188`) turns each axis's
-    * limits into its y-range; phase 2 rasterizes every axis's points
-    * in ONE fused bin operator, each axis with its COMPUTED padded
-    * range as the pixel transform (a per-key y-scale table) — the
-    * dependency the individual q04/q06/q07 greens never exercised
-    * (their ranges were constants). Limits are
-    * O(#axes) driver state — the reference collects the same rows
-    * before building its datashader canvases, and at 100 TB the
-    * collect is 3 rows. Cross-engine float safety: the padded bounds
-    * and the pixel projection are single-IEEE-op chains over exact
-    * 2-decimal extrema (q07's argument), so the bin boundaries are
-    * bit-identical in both engines; `vmean` keeps q07's round(6). */
   /** Shared `/image` phase 1 (q36 raster / q43 hover): the PERSISTED
     * visible window with its y_axis assignment — read twice (extrema,
     * then the one fused operator over every axis), so the one scan is
@@ -1228,6 +1212,22 @@ object EventQueries {
     (vis, scales, scaleOf)
   }
 
+  /** q36 — the `/image` endpoint's TWO-PHASE pipeline as ONE oracled
+    * query (reference `server.py:92-148` + `plot.py:74-220`): phase 1
+    * computes per-attribute extrema rolled into per-axis limits (A2 →
+    * A3, exactly q04/q06's shapes); the C7 padding
+    * ([[Extrema.padRange]], `plot.py:160-188`) turns each axis's
+    * limits into its y-range; phase 2 rasterizes every axis's points
+    * in ONE fused bin operator, each axis with its COMPUTED padded
+    * range as the pixel transform (a per-key y-scale table) — the
+    * dependency the individual q04/q06/q07 greens never exercised
+    * (their ranges were constants). Limits are
+    * O(#axes) driver state — the reference collects the same rows
+    * before building its datashader canvases, and at 100 TB the
+    * collect is 3 rows. Cross-engine float safety: the padded bounds
+    * and the pixel projection are single-IEEE-op chains over exact
+    * 2-decimal extrema (q07's argument), so the bin boundaries are
+    * bit-identical in both engines; `vmean` keeps q07's round(6). */
   private def q36(s: SparkSession, dir: String): DataFrame = {
     val (vis, scales, scaleOf) = imageWindow(s, dir)
     // one fused operator bins every axis with its own padded range; an

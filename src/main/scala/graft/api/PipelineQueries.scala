@@ -715,14 +715,6 @@ object PipelineQueries {
        |FROM ranked WHERE rn <= 20 ORDER BY clab, rn""".stripMargin
 
   // ---------------------------------------------------------------- product quantization
-  /** Shared PQ CTE chain (m=8 subspaces × 8 dims, 16 codes): quantized
-    * components split by subspace, the deterministic init
-    * `(vec_id + 3·sub) mod 16`, one Lloyd round of integer-exact
-    * centroid means (p38's positive-mod floor division), and the
-    * encoding — per (vector, subspace) the code maximizing
-    * `2·dot − ‖c‖²` (= argmin distance up to the code-independent
-    * ‖x‖²), ties to the smallest code. Mirrors
-    * [[Similarity.pqCodebooks]]/[[Similarity.pqEncode]] term by term. */
   /** The quantized-component CTE shared by the PQ chain; p58 swaps in
     * a superset `el` that also carries `label` for the IVF side. */
   private val pqElCte =
@@ -733,6 +725,14 @@ object PipelineQueries {
        |    generate_subscripts(embedding, 1) AS i
        |  FROM embeddings)""".stripMargin
 
+  /** Shared PQ CTE chain (m=8 subspaces × 8 dims, 16 codes): quantized
+    * components split by subspace, the deterministic init
+    * `(vec_id + 3·sub) mod 16`, one Lloyd round of integer-exact
+    * centroid means (p38's positive-mod floor division), and the
+    * encoding — per (vector, subspace) the code maximizing
+    * `2·dot − ‖c‖²` (= argmin distance up to the code-independent
+    * ‖x‖²), ties to the smallest code. Mirrors
+    * [[Similarity.pqCodebooks]]/[[Similarity.pqEncode]] term by term. */
   private val pqChain =
     s"""sel AS (SELECT vec_id, CAST((i - 1) // 8 AS INTEGER) AS sub,
        |               ((i - 1) % 8) + 1 AS j, qv FROM el),
@@ -1496,11 +1496,6 @@ object PipelineQueries {
       |ORDER BY c.lang, c.source""".stripMargin
 
   // ---------------------------------------------------------------- incremental dedup
-  /** Incremental ingest: a synthetic "new batch" (exact copies of
-    * doc_id%40 docs at +3000000, near-copies of doc_id%30 docs with 3
-    * words dropped at +4000000, plus genuinely-new docs: the reversed
-    * token sequence of doc_id%35 docs at +5000000) deduped against the
-    * existing corpus. Only the reversed docs survive. */
   /** The synthetic ingest batch p28/p36 share (see [[p28]] scaladoc). */
   private def incBatch(base: DataFrame): DataFrame =
     base.where(col("doc_id") % 40 === 0)
@@ -1522,6 +1517,11 @@ object PipelineQueries {
   // argument is weak — three of the five readers are ~8%-selectivity
   // slices (%40/%30/%35), so a full-text cache write outweighs the
   // pruned parquet re-reads it saves. Same verdict for p36.
+  /** Incremental ingest: a synthetic "new batch" (exact copies of
+    * doc_id%40 docs at +3000000, near-copies of doc_id%30 docs with 3
+    * words dropped at +4000000, plus genuinely-new docs: the reversed
+    * token sequence of doc_id%35 docs at +5000000) deduped against the
+    * existing corpus. Only the reversed docs survive. */
   private def p28(s: SparkSession, dir: String): DataFrame = {
     val base = docsSpread(s, dir).select(col("doc_id"), col("text"))
     Dedup.incrementalDedup(incBatch(base), base, s).orderBy(col("doc_id"))

@@ -88,7 +88,6 @@ object DotE8 {
     if (v >= 0) Math.round(v) else -Math.round(-v)
   }
 
-  private val info = new ExpressionInfo(classOf[DotE8].getName, "dot_e8")
   private[functions] val builder = (args: Seq[Expression]) => {
     require(args.length == 2, "dot_e8 takes exactly 2 arguments")
     DotE8(args.head, args(1))

@@ -26,9 +26,6 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   */
 object TimeFns {
 
-  /** Epoch microseconds of a TimestampType column (the reference's `t`). */
-  def epochUs(ts: Column): Column = unix_micros(ts)
-
   /** Epoch µs from the reference's split (second-precision ts + µs
     * remainder) representation, `hdbpp.py:84-87`. */
   def epochUsSplit(dataTime: Column, dataTimeUs: Column): Column =

@@ -2,7 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Data model for the HDB++-style archive engine.
+/* Data model for the HDB++-style archive engine.
   *
   * Mirrors the reference's data model (see SURVEY.md §1):
   *  - an *attribute* is a named scalar time-series identified by a 5-part
@@ -18,23 +18,6 @@ import org.apache.spark.sql.types._
   * UTC dates (the reference mixes local dates with UTC timestamps, see
   * SURVEY.md §7.5.3).
   */
-
-/** One archived point of a scalar attribute. */
-final case class DataPoint(
-    att_conf_id: Int,
-    period: String, // "YYYY-MM-DD" (UTC) — partition column
-    data_time: java.sql.Timestamp,
-    data_time_us: Int,
-    value_r: Double,
-    error_desc: String)
-
-/** Catalog row: attribute name → conf id + data table type.
-  * Reference `hdbpp.py:161-164`. */
-final case class AttConf(
-    cs_name: String,
-    att_name: String,
-    att_conf_id: Int,
-    data_type: String)
 
 /** Catalog row for name search. Reference `hdbpp.py:154-157`. */
 final case class AttName(
@@ -121,17 +104,4 @@ object TangoTypes {
     StructField("data_time_us", IntegerType, nullable = true),
     StructField("value_r", valueType, nullable = true),
     StructField("error_desc", StringType, nullable = true)))
-
-  val attConfSchema: StructType = StructType(Seq(
-    StructField("cs_name", StringType, nullable = false),
-    StructField("att_name", StringType, nullable = false),
-    StructField("att_conf_id", IntegerType, nullable = false),
-    StructField("data_type", StringType, nullable = false)))
-
-  val attNamesSchema: StructType = StructType(Seq(
-    StructField("cs_name", StringType, nullable = false),
-    StructField("domain", StringType, nullable = false),
-    StructField("family", StringType, nullable = false),
-    StructField("member", StringType, nullable = false),
-    StructField("name", StringType, nullable = false)))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GlobFns
 
 /** Catalog / lookup operators: wildcard search (F5/F6/O1), control-system
-  * listing (O2/J2), parameter point-in-time lookup (S6/O3), history scan
+  * listing (O2), parameter point-in-time lookup (S6/O3), history scan
   * (S7/O4).
   *
   * Scale: catalogs are ~100k rows (reference `hdbpp.py:216-218`) — tiny
@@ -42,17 +42,6 @@ object Catalog {
   /** O2 — distinct control systems, sorted. Reference `server.py:63-70`. */
   def controlSystems(attConf: DataFrame): DataFrame =
     attConf.select(col("cs_name")).distinct().orderBy("cs_name")
-
-  /** J2 — names grouped per control system (reference `hdbpp.py:219-228`
-    * builds cs → [(d,f,m,n)] dicts). Sorted inside the list so results
-    * are deterministic. */
-  def namesPerCs(attNames: DataFrame): DataFrame =
-    formatted(attNames)
-      .groupBy("cs_name")
-      .agg(
-        count(lit(1)).as("n_attributes"),
-        array_join(sort_array(collect_list(col("attribute"))), ",")
-          .as("attributes"))
 
   /** S6/O3 — point-in-time lookup: latest row per key strictly before a
     * cutoff (reference `hdbpp.py:167-177`: ORDER BY recv_time DESC

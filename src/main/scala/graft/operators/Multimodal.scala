@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns with
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * (`javax.imageio` — PNG/JPEG/BMP/GIF), PCM-WAV audio via
   * [[WavCodecProvider]] (`javax.sound.sampled`), and multi-frame
   * VIDEO via [[GifVideoCodecProvider]] (animated GIF through the
-  * imageio sequence API — real frame counts, per-frame decode,
-  * temporal sampling). The deterministic [[FakeCodec]] STUB remains
-  * only as the unclaimed-kind backstop; containers the JDK has no
+  * imageio sequence API — real frame counts, per-frame decode). The
+  * deterministic [[FakeCodec]] STUB remains only as the unclaimed-kind
+  * backstop; containers the JDK has no
   * codec for (mp4/webm — no av libraries here) take a JavaCPP/FFmpeg
   * provider through the same SPI, zero operator changes.
   *
@@ -83,51 +83,6 @@ object Multimodal {
     extractFeatures(withPayload(docs)).toDF()
       .select(col("doc_id"), col("kind"), col("byte_len"), col("width"),
         col("height"), col("checksum"), col("feature"))
-
-  /** One sampled frame of a "video" payload. */
-  final case class Frame(doc_id: Long, frame_no: Int, frame_len: Long,
-      checksum: Long)
-
-  /** Frame sampling: each payload row fans out to `n` frames via the
-    * codec's [[MediaCodec.frames]] hook — real per-frame decode where
-    * the codec supports it ([[GifVideoCodecProvider]] samples the
-    * animation's actual frames), byte-slice stub decode otherwise —
-    * the one-to-many mapPartitions shape a video pipeline needs, with
-    * the codec held once per task, not once per frame. */
-  def sampleFrames(media: DataFrame, n: Int): Dataset[Frame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val codecs = scala.collection.mutable.Map.empty[String, MediaCodec]
-      rows.flatMap { row =>
-        codecs.getOrElseUpdate(row.kind, MediaCodec.forKind(row.kind))
-          .frames(row, n)
-      }
-    }
-  }
-
-  /** "Resize": re-encode the payload at a reduced byte budget (every
-    * k-th byte in the stub) and re-extract features — the
-    * transform-then-redecode shape of a thumbnail pipeline. */
-  def resized(media: DataFrame, keepEvery: Int): Dataset[MediaFeatures] = {
-    // plan-time validation, like every sibling knob: keepEvery = 0
-    // would plan fine and then `i % 0` every non-empty payload inside
-    // the tasks; negative would silently keep only byte 0
-    require(keepEvery >= 1, s"keepEvery must be >= 1, got $keepEvery")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      val codecs = scala.collection.mutable.Map.empty[String, MediaCodec]
-      rows.map { row =>
-        val small = row.payload.indices.collect {
-          case i if i % keepEvery == 0 => row.payload(i)
-        }.toArray
-        val kind = s"${row.kind};thumb"
-        codecs.getOrElseUpdate(kind, MediaCodec.forKind(kind))
-          .decode(MediaRow(row.doc_id, kind, small))
-      }
-    }
-  }
 }
 
 /** Decoder SPI: an online build drops a real decoder (javax.imageio,
@@ -143,25 +98,6 @@ trait MediaCodec {
     * every kind no provider claims. */
   def claims(kind: String): Boolean
   def decode(row: Multimodal.MediaRow): Multimodal.MediaFeatures
-
-  /** Sample `n` frames of a multi-frame payload. The default is the
-    * byte-slice STUB every single-frame codec inherits (slice i =
-    * payload[i·len/n, (i+1)·len/n) run through [[decode]]) — multi-
-    * frame codecs override with real container-frame decode
-    * ([[GifVideoCodecProvider]]). Kept on the SPI so the operator
-    * tier ([[Multimodal.sampleFrames]]) never special-cases kinds. */
-  def frames(row: Multimodal.MediaRow, n: Int): Iterator[Multimodal.Frame] = {
-    val len = row.payload.length
-    (0 until n).iterator.map { i =>
-      // long arithmetic: i*len wraps Int for payloads past
-      // ~Int.MaxValue/n bytes, handing copyOfRange inverted bounds —
-      // a task throw this module exists to never produce
-      val slice = java.util.Arrays.copyOfRange(row.payload,
-        (i.toLong * len / n).toInt, ((i + 1).toLong * len / n).toInt)
-      val d = decode(Multimodal.MediaRow(row.doc_id, row.kind, slice))
-      Multimodal.Frame(row.doc_id, i, d.byte_len, d.checksum)
-    }
-  }
 }
 
 object MediaCodec {
@@ -215,20 +151,19 @@ object MediaCodec {
   * built-in (the PNG render sink already uses it), so PNG/JPEG/BMP/GIF
   * decode needs zero new dependencies; only audio/video stay with the
   * fake codec in this container. Claims the standard image MIME kinds
-  * (parameters after `;` ignored, so a `image/png;thumb` re-decode
-  * routes here too) and NEVER `image/fake` — the oracle fixtures'
-  * payloads are fake-kind text bytes and keep their byte-level decode.
+  * (parameters after `;` ignored) and NEVER `image/fake` — the oracle
+  * fixtures' payloads are fake-kind text bytes and keep their
+  * byte-level decode.
   *
   * Decode contract (all deterministic): real pixel `width`/`height`;
   * `checksum` = CRC32 of the payload bytes; `feature` = 8-bin
   * luminance histogram (integer 299/587/114 weights) normalized by
-  * pixel count. A payload ImageIO cannot parse — truncated file, or a
-  * byte-sliced "thumbnail" of a real format — yields the CORRUPT
-  * marker: width = height = 0, zero feature vector, checksum still
-  * computed, so a 100 TB curation scan can count/quarantine bad media
-  * without a task ever throwing. One provider instance per task via
-  * [[MediaCodec.forKind]]; `ImageIO.read` allocates per call and holds
-  * no shared native state. */
+  * pixel count. A payload ImageIO cannot parse — a truncated file,
+  * say — yields the CORRUPT marker: width = height = 0, zero feature
+  * vector, checksum still computed, so a 100 TB curation scan can
+  * count/quarantine bad media without a task ever throwing. One
+  * provider instance per task via [[MediaCodec.forKind]]; `ImageIO.read`
+  * allocates per call and holds no shared native state. */
 class ImageIoCodecProvider extends MediaCodec {
   override def claims(kind: String): Boolean = {
     val base = kind.takeWhile(_ != ';')
@@ -357,11 +292,10 @@ class WavCodecProvider extends MediaCodec {
 /** REAL multi-frame VIDEO decoder on the SPI — animated GIF through
   * JDK `javax.imageio`, whose GIF plugin reads every frame of a
   * sequence (`getNumImages(true)` / `read(i)`), so the video path —
-  * container parse, frame count, per-frame decode, temporal frame
-  * sampling — runs for real with zero new dependencies. GIF is the
-  * one multi-frame container the JDK ships a codec for; an FFmpeg
-  * provider for mp4/webm drops in through the same SPI hook
-  * ([[MediaCodec.frames]]), zero operator changes. Claims the
+  * container parse, frame count, per-frame decode — runs for real
+  * with zero new dependencies. GIF is the one multi-frame container
+  * the JDK ships a codec for; an FFmpeg provider for mp4/webm drops
+  * in through the same SPI, zero operator changes. Claims the
   * `video/gif` kind (the sandbox convention for "animated GIF treated
   * as video"); plain `image/gif` stills keep routing to
   * [[ImageIoCodecProvider]].
@@ -369,13 +303,9 @@ class WavCodecProvider extends MediaCodec {
   * Decode contract (all deterministic): [[decode]] aggregates the
   * WHOLE animation — first-frame width/height, CRC32 of the payload
   * bytes, 8-bin luminance histogram summed over every frame's pixels
-  * and normalized by total pixel count. [[frames]] samples `n` frames
-  * evenly across the true frame count (frame j = floor(j·F/n), the
-  * temporal analogue of the byte-slice stub), each decoded for real:
-  * `frame_len` = that frame's pixel count, `checksum` = CRC32 over
-  * its row-major RGB bytes. Unparseable payloads yield the CORRUPT
-  * marker from [[decode]] and an empty frame iterator — a curation
-  * scan quarantines bad media without task failures. */
+  * and normalized by total pixel count. Unparseable payloads yield
+  * the CORRUPT marker — a curation scan quarantines bad media without
+  * task failures. */
 class GifVideoCodecProvider extends MediaCodec {
   override def claims(kind: String): Boolean =
     kind.takeWhile(_ != ';') == "video/gif"
@@ -413,28 +343,6 @@ class GifVideoCodecProvider extends MediaCodec {
       checksum = crc.getValue, feature = new Array[Float](8)))
   }
 
-  override def frames(row: Multimodal.MediaRow,
-      n: Int): Iterator[Multimodal.Frame] =
-    GifVideoCodecProvider.withReader(row.payload) { (reader, nFrames) =>
-      (0 until n).map { j =>
-        val img = reader.read(j * nFrames / n)
-        val crc = new java.util.zip.CRC32
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            crc.update((rgb >> 16) & 0xff)
-            crc.update((rgb >> 8) & 0xff)
-            crc.update(rgb & 0xff)
-            x += 1
-          }
-          y += 1
-        }
-        Multimodal.Frame(row.doc_id, j,
-          img.getWidth.toLong * img.getHeight, crc.getValue)
-      }
-    }.getOrElse(Nil).iterator
 }
 
 object GifVideoCodecProvider {

@@ -462,37 +462,6 @@ object Similarity {
     * `dot / sqrt(double(n1) · double(n2))` — identical op order in the
     * oracle, so the doubles are bit-equal (norms ≈ 6e9 ≪ 2⁵³, exact as
     * doubles; sqrt/mul/div are correctly-rounded IEEE in any engine). */
-  /** Memoized hot-bucket gate for [[cosineNearDups]] — the SkewOps
-    * gateCache shape: per (session, emb plan, params), the ≤ 2^nPlanes
-    * buckets whose population exceeds `maxBlock`, with their sub-block
-    * count. Collected ONCE per corpus as a tiny plan-time job (which
-    * doubles as the cache fill for `withBucket`); repeat calls replay
-    * the decision. A stale decision after the underlying files change
-    * under an identical plan only mis-tunes the SPLIT — results are
-    * pair-set-identical for any split. */
-  private val hotBucketCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Long)]]()
-  private[operators] def clearHotBucketCache(): Unit = hotBucketCache.clear()
-
-  private def hotBuckets(withBucket: DataFrame, maxBlock: Int)
-      : Array[(Long, Long)] = {
-    val key = s"${SkewOps.sessionKey(withBucket.sparkSession)}|" +
-      s"${withBucket.queryExecution.analyzed.semanticHash()}|$maxBlock"
-    var cached = hotBucketCache.get(key)
-    if (cached == null) {
-      if (hotBucketCache.size > 256) hotBucketCache.clear()
-      val computed = withBucket.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("bn"))
-        .where(col("bn") > maxBlock)
-        .collect()
-        .map(r => r.getLong(0) ->
-          (r.getLong(1) + maxBlock - 1) / maxBlock)
-      val prev = hotBucketCache.putIfAbsent(key, computed)
-      cached = if (prev == null) computed else prev
-    }
-    cached
-  }
-
   def cosineNearDups(emb: DataFrame, threshold: Double,
       nPlanes: Int = 8, dim: Int = 64, maxBlock: Int = 4096): DataFrame = {
     require(maxBlock >= 1, s"maxBlock must be positive, got $maxBlock")
@@ -517,11 +486,18 @@ object Similarity {
     // same-bucket pair still meets exactly once (at the block of its
     // d2), so the result set is untouched, but one bucket's quadratic
     // verification spreads over nb tasks instead of one (guide §2.5:
-    // split the key AQE cannot). The hot list is gate-collected and
-    // memoized ([[hotBuckets]]); with no hot bucket — every local
-    // corpus — the plan is EXACTLY the plain bucket self-join over the
-    // cache, no replication, no extra join column.
-    val hot = hotBuckets(withBucket, maxBlock)
+    // split the key AQE cannot). The hot list (≤ 2^nPlanes buckets
+    // with their block counts) is collected on every call by a tiny
+    // plan-time job over the cache, which doubles as its fill, so the
+    // decision always reads the files the call reads; with no hot
+    // bucket — every local corpus — the plan is EXACTLY the plain
+    // bucket self-join over the cache, no replication, no extra join
+    // column.
+    val hot = withBucket.groupBy(col("bucket"))
+      .agg(count(lit(1)).as("bn"))
+      .where(col("bn") > maxBlock)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1) + maxBlock - 1) / maxBlock)
     val a0 = withBucket.select(col("bucket"), col("vec_id").as("d1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
     val b0 = withBucket.select(col("bucket"), col("vec_id").as("d2"),
@@ -828,18 +804,6 @@ object Similarity {
       .as("codes")): _*)
   }
 
-  /** PQ asymmetric-distance (ADC) top-k search: queries stay
-    * full-precision, the corpus is its PQ codes, and a query×code
-    * score is the table lookup Σ_s dt[s][code_s] with dt[s][c] =
-    * round(q·10⁴)·c — the classic ADC layout. The per-query distance
-    * tables (Q×m×codes longs) are computed driver-side from the
-    * collected query vectors and ride a broadcast; the corpus side is
-    * one projection over the CODES (m small ints per row — the point
-    * of PQ: at 100 TB the scan reads 32× less than the embeddings),
-    * no corpus shuffle until the per-query top-k. Scores are exact
-    * int64, ties to the smaller neighbor id; ranking quality vs exact
-    * dot is the PQ approximation trade, pinned against the DuckDB
-    * replay (p57), not against brute force. */
   /** The per-query ADC distance table: dt[s][c−1] = q_s · centroid c
     * of subspace s (exact int64 over e4-quantized components) — m ×
     * codes longs per query, built driver-side from the collected
@@ -866,6 +830,18 @@ object Similarity {
        |  acc + element_at(element_at(dt, s),
        |                   element_at(codes, s)))""".stripMargin)
 
+  /** PQ asymmetric-distance (ADC) top-k search: queries stay
+    * full-precision, the corpus is its PQ codes, and a query×code
+    * score is the table lookup Σ_s dt[s][code_s] with dt[s][c] =
+    * round(q·10⁴)·c — the classic ADC layout. The per-query distance
+    * tables (Q×m×codes longs) are computed driver-side from the
+    * collected query vectors and ride a broadcast; the corpus side is
+    * one projection over the CODES (m small ints per row — the point
+    * of PQ: at 100 TB the scan reads 32× less than the embeddings),
+    * no corpus shuffle until the per-query top-k. Scores are exact
+    * int64, ties to the smaller neighbor id; ranking quality vs exact
+    * dot is the PQ approximation trade, pinned against the DuckDB
+    * replay (p57), not against brute force. */
   def pqSearchAdc(emb: DataFrame, nQueries: Int, k: Int, m: Int = 8,
       codes: Int = 16, dims: Int = 64): DataFrame = {
     val spark = emb.sparkSession

@@ -20,62 +20,6 @@ object SkewOps {
     math.min(1024, math.max(2, df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt))
 
-  /** Salted equi-join of a skewed `fact` against a small-ish `dim`
-    * on `key`: the fact side gets a deterministic salt in [0, buckets)
-    * derived from a uniqueness column (NOT random — reruns must
-    * produce identical partitioning for retry safety), the dim side is
-    * replicated `buckets`× with every salt value, and the join key
-    * becomes (key, salt) — a hot key now spreads over `buckets`
-    * reducers instead of one.
-    *
-    * dim grows `buckets`×, so this suits dims small enough that
-    * replication is cheap but too big (or too mid-sized) to broadcast
-    * outright. */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-      saltFrom: String, buckets: Int): DataFrame = {
-    require(buckets > 1, "need at least 2 salt buckets")
-    val salted = fact.withColumn("_salt",
-      pmod(xxhash64(col(saltFrom)), lit(buckets)))
-    val replicated = dim.withColumn("_salt",
-      explode(lit((0 until buckets).toArray)))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
-
-  /** Skew-GATED salted equi-join: [[saltedJoin]]'s hot-key spreading,
-    * paid ONLY for keys that are actually hot. `weightCol` is a column
-    * of `dim` holding the fact-side row count for that key (every call
-    * site already has one — the frequency/df/count column IS the
-    * probe-row count); a key is hot when its share of the total
-    * exceeds `1/(2·buckets)`, i.e. it would fill more than half a
-    * reducer by itself. Consequences, both by construction:
-    *
-    *  - at most `2·buckets` keys can exceed that share, so the hot set
-    *    is always broadcastable (≤ 2048 keys at the 1024-bucket cap) —
-    *    no "what if the hot list is huge" failure mode;
-    *  - on a skew-free corpus the hot set is EMPTY: every row gets
-    *    the constant salt 0, the dim side replicates nothing, and
-    *    AQE's empty-relation propagation folds both probe joins into
-    *    null-literal projections — the join's WORK is that of the
-    *    plain equi-join. The residual wall-clock cost is the gate's
-    *    serialized critical path (the dim aggregate must materialize
-    *    before the fact stages replan): StressSpec prices it at
-    *    ~1.3–1.4× plain on a 1.2M-posting local run, a latency
-    *    constant that amortizes as the fact side grows — vs the
-    *    1.25–2.65× PROPORTIONAL replication insurance of
-    *    unconditional salting, which worsens with bucket count.
-    *
-    * The gate itself costs one scalar aggregate + the share filter
-    * over `dim`'s key set — vocabulary-sized work, noise next to the
-    * postings. It runs as its own small job at plan-construction time
-    * (the two dim reads inside it share one reused exchange —
-    * SkewOpsSpec), is memoized per (session, dim plan) in
-    * [[clearGateCache]]'s cache, and the MAIN query then reads the
-    * dim subtree exactly once (replication against the local hot
-    * list) — so repeat calls over one corpus pay the gate zero times,
-    * the round-8 critique's remaining latency constant. Salting stays
-    * deterministic (hash of `saltFrom`, threshold from exact counts),
-    * so retries repartition identically and results are bit-equal to
-    * the plain join. */
   /** The gate: keys whose `weightCol` share of the total exceeds
     * `1/(2·buckets)` — at most `2·buckets` DISTINCT keys can qualify.
     * The distinct matters for the join contract: a dim with duplicate
@@ -93,12 +37,6 @@ object SkewOps {
       .withColumn("_hot", lit(1))
   }
 
-  /** `joinType` extends the contract to left joins: each fact row
-    * carries exactly one salt and its key's dim row exists AT that salt
-    * (all salts when hot, salt 0 otherwise), so unmatched-fact
-    * preservation is identical to the plain `fact.join(dim, key,
-    * "left")` — including null-key fact rows, which match nothing and
-    * survive with null dim columns. */
   /** Gate-decision cache: the hot-key list collected once per
     * (session, dim plan, key, weight, buckets) and replayed as a local
     * relation on repeat calls — the gate's serialized critical path
@@ -182,6 +120,54 @@ object SkewOps {
       java.util.Arrays.asList(rows: _*), schema)
   }
 
+  /** Skew-GATED salted equi-join of a skewed `fact` against `dim` on
+    * `key`: a hot key's fact rows get a deterministic salt in
+    * [0, buckets) derived from `saltFrom` (NOT random — reruns must
+    * produce identical partitioning for retry safety) and its dim row
+    * is replicated `buckets`× with every salt value, so the key spreads
+    * over `buckets` reducers instead of one — paid ONLY for keys that
+    * are actually hot. `weightCol` is a column of `dim` holding the
+    * fact-side row count for that key (every call site already has
+    * one — the frequency/df/count column IS the probe-row count); a
+    * key is hot when its share of the total exceeds `1/(2·buckets)`,
+    * i.e. it would fill more than half a reducer by itself.
+    * Consequences, both by construction:
+    *
+    *  - at most `2·buckets` keys can exceed that share, so the hot set
+    *    is always broadcastable (≤ 2048 keys at the 1024-bucket cap) —
+    *    no "what if the hot list is huge" failure mode;
+    *  - on a skew-free corpus the hot set is EMPTY: every row gets
+    *    the constant salt 0, the dim side replicates nothing, and
+    *    AQE's empty-relation propagation folds both probe joins into
+    *    null-literal projections — the join's WORK is that of the
+    *    plain equi-join. The residual wall-clock cost is the gate's
+    *    serialized critical path (the dim aggregate must materialize
+    *    before the fact stages replan): StressSpec prices it at
+    *    ~1.3–1.4× plain on a 1.2M-posting local run, a latency
+    *    constant that amortizes as the fact side grows — vs the
+    *    1.25–2.65× PROPORTIONAL replication insurance the
+    *    unconditional salting it replaced measured there, which
+    *    worsens with bucket count.
+    *
+    * The gate itself costs one scalar aggregate + the share filter
+    * over `dim`'s key set — vocabulary-sized work, noise next to the
+    * postings. It runs as its own small job at plan-construction time
+    * (the two dim reads inside it share one reused exchange —
+    * SkewOpsSpec), is memoized per (session, dim plan) in
+    * [[clearGateCache]]'s cache, and the MAIN query then reads the
+    * dim subtree exactly once (replication against the local hot
+    * list) — so repeat calls over one corpus pay the gate zero times,
+    * the round-8 critique's remaining latency constant. Salting stays
+    * deterministic (hash of `saltFrom`, threshold from exact counts),
+    * so retries repartition identically and results are bit-equal to
+    * the plain join.
+    *
+    * `joinType` extends the contract to left joins: each fact row
+    * carries exactly one salt and its key's dim row exists AT that salt
+    * (all salts when hot, salt 0 otherwise), so unmatched-fact
+    * preservation is identical to the plain `fact.join(dim, key,
+    * "left")` — including null-key fact rows, which match nothing and
+    * survive with null dim columns. */
   def hotSaltedJoin(fact: DataFrame, dim: DataFrame, key: String,
       saltFrom: String, buckets: Int, weightCol: String,
       joinType: String = "inner"): DataFrame = {

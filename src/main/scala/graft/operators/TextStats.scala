@@ -50,6 +50,11 @@ object TextStats {
     * Cells with fewer than k distinct hashes are EXACT (the sketch
     * holds the whole hashed vocabulary; `h_k` is null). Hash
     * collisions under-count exactly identically in both engines.
+    * One explode + one aggregate, so it runs under Structured
+    * Streaming as-is: the k-smallest buffer becomes per-group state,
+    * merged per micro-batch as the batch aggregate merges per
+    * partition — stream-over-prefix ≡ batch-over-prefix at every
+    * micro-batch (StreamOpsSpec; emit in `complete`/`update` mode).
     * Output: groupCols, n_sketch, h_k, est_distinct. */
   def kmvDistinctTokens(docs: DataFrame, groupCols: Seq[String],
       k: Int = 128, salt: String = "kmv"): DataFrame = {
@@ -564,8 +569,9 @@ object TextStats {
   /** The sketch STATE of [[histQuantileSketch]]: per-stratum log-bin
     * counts — one hash aggregate whose per-group state is ≤ 64·B
     * counters, mergeable by addition. Runs under Structured Streaming
-    * as-is (see [[graft.streaming.StreamOps.streamingHistBins]]);
-    * [[histQuantiles]] is the batch finisher either way. */
+    * as-is (stream-over-prefix ≡ batch-over-prefix at every
+    * micro-batch, StreamOpsSpec); [[histQuantiles]] is the batch
+    * finisher either way. */
   def histBins(docs: DataFrame, strataCols: Seq[String],
       binsPerOctave: Int): DataFrame = {
     require(binsPerOctave >= 1)
@@ -648,38 +654,6 @@ object TextStats {
     result
   }
 
-  /** Bigram-LM surprise scoring — the CCNet-family perplexity filter:
-    * train a bigram model ON the corpus (one pass), then score every
-    * document by its average conditional surprise; docs whose token
-    * transitions the corpus model finds improbable (gibberish, boiler
-    * word-salad, wrong-language fragments) score high and get culled.
-    *
-    * The surprise is an INTEGER surrogate for −log p(w2|w1): per
-    * bigram occurrence, `(uni(w1) · scale) div bi(w1,w2)` — exactly
-    * `scale / p(w2|w1)` floored, so the per-transition ordering of the
-    * true negative log-likelihood is preserved (x ↦ log x is
-    * monotone) and the whole pipeline stays bit-reproducible in any
-    * engine; a float `ln` would differ in the last ulp across libm
-    * implementations and make hash-comparison impossible. `uni(w1)` is
-    * w1's occurrence count AS A PREFIX, derived from the bigram count
-    * table itself (Σ_w2 bi(w1,w2)) — no second corpus aggregate, and
-    * p(·|w1) sums to exactly 1 over the observed transitions.
-    *
-    * Scale shape: bigram occurrences (doc_id, w1, b) come from one
-    * in-row array transform; counts are ONE hash aggregate on the
-    * content-derived bigram id (collisions merge identically in both
-    * engines and inherit the min prefix — the [[Dedup.simhash]]
-    * measure-zero fuzz argument); the prefix totals re-aggregate the
-    * COUNT TABLE (bigram-vocabulary-sized), not the corpus, and both
-    * Zipf-prone joins are salted — counts⋈prefix on w1 ("the"-prefixed
-    * bigrams are a constant fraction of the vocabulary) and
-    * postings⋈counts on b ("of the" is a constant fraction of all
-    * postings, the [[saltedFreqJoin]] argument exactly).
-    *
-    * `scale` bounds: `uni · scale` must fit int64 — at corpora past
-    * ~9·10¹² occurrences of one token, lower `scale`; the ordering is
-    * unaffected. Docs with < 2 tokens have no transitions and emit no
-    * row (the [[TextOps.shingleIdSets]] contract). */
   /** Bigram OCCURRENCES (doc_id, w1, b): one row per token transition
     * (duplicates kept — these are LM counts, not shingle sets), b =
     * the content-derived `poly_hash31` of "w1 w2". One in-row array
@@ -723,6 +697,38 @@ object TextStats {
     SkewOps.hotSaltedJoin(cnt, uni, "w1", "b", buckets, "_nb").drop("_nb")
   }
 
+  /** Bigram-LM surprise scoring — the CCNet-family perplexity filter:
+    * train a bigram model ON the corpus (one pass), then score every
+    * document by its average conditional surprise; docs whose token
+    * transitions the corpus model finds improbable (gibberish, boiler
+    * word-salad, wrong-language fragments) score high and get culled.
+    *
+    * The surprise is an INTEGER surrogate for −log p(w2|w1): per
+    * bigram occurrence, `(uni(w1) · scale) div bi(w1,w2)` — exactly
+    * `scale / p(w2|w1)` floored, so the per-transition ordering of the
+    * true negative log-likelihood is preserved (x ↦ log x is
+    * monotone) and the whole pipeline stays bit-reproducible in any
+    * engine; a float `ln` would differ in the last ulp across libm
+    * implementations and make hash-comparison impossible. `uni(w1)` is
+    * w1's occurrence count AS A PREFIX, derived from the bigram count
+    * table itself (Σ_w2 bi(w1,w2)) — no second corpus aggregate, and
+    * p(·|w1) sums to exactly 1 over the observed transitions.
+    *
+    * Scale shape: bigram occurrences (doc_id, w1, b) come from one
+    * in-row array transform; counts are ONE hash aggregate on the
+    * content-derived bigram id (collisions merge identically in both
+    * engines and inherit the min prefix — the [[Dedup.simhash]]
+    * measure-zero fuzz argument); the prefix totals re-aggregate the
+    * COUNT TABLE (bigram-vocabulary-sized), not the corpus, and both
+    * Zipf-prone joins are salted — counts⋈prefix on w1 ("the"-prefixed
+    * bigrams are a constant fraction of the vocabulary) and
+    * postings⋈counts on b ("of the" is a constant fraction of all
+    * postings, the [[saltedFreqJoin]] argument exactly).
+    *
+    * `scale` bounds: `uni · scale` must fit int64 — at corpora past
+    * ~9·10¹² occurrences of one token, lower `scale`; the ordering is
+    * unaffected. Docs with < 2 tokens have no transitions and emit no
+    * row (the [[TextOps.shingleIdSets]] contract). */
   def bigramSurprise(docs: DataFrame, scale: Long = 1000000L): DataFrame = {
     require(scale > 0, s"scale must be positive, got $scale")
     val buckets = SkewOps.defaultBuckets(docs)
@@ -1018,7 +1024,7 @@ object TextStats {
     // one exchange (a groupBy-j + regroup pair would pay two), and the
     // single-aggregate plan is what lets the SAME operator run under
     // Structured Streaming (multiple streaming aggregations are
-    // unsupported; see StreamOps.streamingHllDistinct)
+    // unsupported; StreamOpsSpec runs it on a stream)
     ranked
       .groupBy(groupCols.map(col): _*)
       .agg(TopK.registerMax(m, col("j"), col("r")).as("ra"))

@@ -129,7 +129,8 @@ object TopK {
     * days, or corpora with no double-count (max is idempotent and
     * commutative). O(m) state per group, map-side combinable, and a
     * legal streaming state buffer for the same reason
-    * ([[graft.streaming.StreamOps.streamingHllDistinct]]). */
+    * ([[graft.operators.TextStats.hllDistinctTokens]] runs on a stream
+    * as-is, StreamOpsSpec). */
   final case class BufR(regs: Seq[Int])
 
   final class RegisterMax(m: Int)

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 import graft.functions.TimeFns
 import scala.jdk.CollectionConverters._
 
@@ -13,14 +11,13 @@ import scala.jdk.CollectionConverters._
   * The reference has no push pipeline (websockets are a listed "Idea",
   * `server.py:33`); these operators are the Spark-native way to stand
   * one up: `readStream` on the archive directory → the SAME transforms
-  * the batch path uses → windowed aggregation with watermarks, plus a
-  * stateful change-detector mirroring what a Tango HDB++ archiver does
-  * upstream (only archive points that moved enough).
+  * the batch path uses → windowed aggregation, sessions and range
+  * joins with watermarks.
   *
-  * Scale: both are standard Spark stateful operators — state is
-  * per-key bounded (window aggregates evicted by the watermark; one
-  * row of state per attribute for the change detector), partitioned by
-  * the shuffle like any aggregation.
+  * Scale: these are standard Spark stateful operators — state is
+  * per-key bounded (window aggregates, open sessions and buffered join
+  * rows evicted by the watermark), partitioned by the shuffle like any
+  * aggregation.
   */
 object StreamOps {
 
@@ -210,23 +207,6 @@ object StreamOps {
     math.min(sizing.maxPartitions, math.max(1, byVolume))
   }
 
-  /** The archive as a LIVE source: tail the
-    * `(att_conf_id, period)`-partitioned parquet layout
-    * [[graft.sources.ArchiveWriter]] writes — every new file an
-    * archiver appends becomes a micro-batch, so the same directory
-    * serves the batch scans AND a push pipeline (the reference lists
-    * websocket push as an unimplemented Idea, `server.py:33`; in Spark
-    * it is `readStream` on the storage you already have). The schema
-    * must be supplied (streams cannot infer) and should include the
-    * partition columns; `maxFilesPerTrigger` bounds micro-batch size
-    * during backfill so a cold start does not build one giant batch. */
-  def archiveStream(spark: SparkSession, root: String, table: String,
-      schema: StructType, maxFilesPerTrigger: Int = 100): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(s"$root/$table")
-
   /** A1 as a streaming aggregation: tumbling mean of `value_r` per
     * attribute with round-to-NEAREST bucket parity. Spark's `window()`
     * floors, so event times are shifted by Δ/2 first — then
@@ -309,139 +289,6 @@ object StreamOps {
       .withColumnRenamed("_ot", outOpen)
   }
 
-  /** Streaming exact dedup of a document stream: drop any doc whose
-    * content digest was already seen (state = one digest per distinct
-    * doc, partitioned by the aggregation shuffle). Input needs
-    * `doc_id`, `text`; the digest column is kept in the output so
-    * downstream stages can skip re-hashing.
-    *
-    * CONTRACT: global-forever dedup — state grows one entry per
-    * distinct document for the life of the stream, which is the exact
-    * batch semantics but an eventual-OOM on an unbounded stream. Use it
-    * for bounded replays (backfill a day through the streaming path);
-    * long-running pipelines want [[streamingExactDedupWithinWatermark]],
-    * whose state is evicted once the watermark passes. */
-  def streamingExactDedup(docs: DataFrame): DataFrame =
-    docs.withColumn("fp", sha2(col("text"), 256))
-      .dropDuplicates("fp")
-
-  /** Bounded-state streaming dedup: duplicates are dropped only within
-    * the watermark horizon on `eventTimeCol`; older digests are evicted
-    * from the state store, so state is O(docs per `delay` window), not
-    * O(all docs ever). The tradeoff is the contract: a duplicate
-    * arriving after the watermark passed its original re-emits — that
-    * re-admission IS the eviction observable (tested in StreamOpsSpec). */
-  def streamingExactDedupWithinWatermark(docs: DataFrame,
-      eventTimeCol: String, delay: String): DataFrame =
-    docs.withColumn("fp", sha2(col("text"), 256))
-      .withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark("fp")
-
-  /** Continuous KMV distinct-token sketch: the per-cell distinct
-    * vocabulary estimate ([[graft.operators.TextStats
-    * .kmvDistinctTokens]]) maintained over a document stream. The
-    * batch operator is one explode + one UDAF aggregate, so it runs
-    * under Structured Streaming as-is — this alias exists to state
-    * the streaming contract: the bounded k-smallest-distinct-hash
-    * buffer becomes per-group STATE-STORE state, merged per
-    * micro-batch exactly as the batch aggregate merges per
-    * partition, so stream-over-prefix ≡ batch-over-prefix at every
-    * micro-batch boundary (the sketch's mergeability is what makes
-    * this exact, not approximate — pinned in StreamOpsSpec). No
-    * watermark: a stratum cell lives for the stream's life, and its
-    * state is k longs — O(cells × k) total, the operator's whole
-    * point. Emit with `complete`/`update` output mode. */
-  def streamingKmvDistinct(docs: DataFrame, groupCols: Seq[String],
-      k: Int = 128, salt: String = "kmv"): DataFrame =
-    graft.operators.TextStats.kmvDistinctTokens(docs, groupCols, k, salt)
-
-  /** Continuous HyperLogLog distinct-token sketch — the fixed-register
-    * sibling of [[streamingKmvDistinct]]
-    * ([[graft.operators.TextStats.hllDistinctTokens]]). The batch
-    * operator is one explode + one register-max UDAF aggregate
-    * ([[graft.operators.TopK.RegisterMax]]), so it runs under
-    * Structured Streaming as-is; per-group state is exactly m ints
-    * REGARDLESS of stream length, and max-merge idempotence means a
-    * replayed micro-batch cannot corrupt the sketch (addition-based
-    * sketch state would double-count on retry; max cannot). Same
-    * contract as the KMV form: no watermark, cells live for the
-    * stream's life, emit with `complete`/`update` mode;
-    * stream-over-prefix ≡ batch-over-prefix at every micro-batch
-    * boundary (pinned in StreamOpsSpec). */
-  def streamingHllDistinct(docs: DataFrame, groupCols: Seq[String],
-      logM: Int = 6, salt: String = "hll"): DataFrame =
-    graft.operators.TextStats.hllDistinctTokens(docs, groupCols,
-      logM = logM, salt = salt)
-
-  /** Continuous log-binned quantile histogram — the quantile member
-    * of the streaming sketch family ([[streamingKmvDistinct]],
-    * [[streamingHllDistinct]]): per-stratum bin counts
-    * ([[graft.operators.TextStats.histBins]]) maintained as
-    * state-store state, merged per micro-batch by addition exactly as
-    * the batch aggregate merges per partition — stream-over-prefix ≡
-    * batch-over-prefix at every micro-batch boundary (pinned in
-    * StreamOpsSpec). State is ≤ 64·B counters per cell, stream-length
-    * independent. Quantile EXTRACTION (the cumulative-sum finisher,
-    * [[graft.operators.TextStats.histQuantiles]]) is a chained
-    * aggregate + window — not streamable — so it runs batch-side over
-    * the emitted state, the same split every serving layer makes.
-    * Emit with `complete`/`update` mode, no watermark. */
-  def streamingHistBins(docs: DataFrame, groupCols: Seq[String],
-      binsPerOctave: Int = 8): DataFrame =
-    graft.operators.TextStats.histBins(docs, groupCols, binsPerOctave)
-
-  /** Streaming MinHash-LSH NEAR-dup detection with watermark-bounded
-    * state — the streaming form of
-    * [[graft.operators.Dedup.minhashNearDups]]'s array-native
-    * pipeline. Every per-doc step (shingle-id set, `minhash_sigs`
-    * signature, band keys) is an in-row projection over the stream —
-    * poly ids mean NO vocabulary, so nothing global blocks a stream.
-    * Candidates come from a watermarked stream-stream SELF-join on
-    * (band, bkey) restricted to docs whose event times lie within
-    * `horizon` of each other (the time-range predicate is what lets
-    * Spark evict join state); the exact Jaccard verify runs in-row on
-    * the carried id sets, and a final `dropDuplicatesWithinWatermark`
-    * collapses multi-band matches of the same pair.
-    *
-    * Contract: detects near-dup pairs whose members arrive within
-    * `horizon` of each other — the standard streaming-dedup tradeoff
-    * ([[streamingExactDedupWithinWatermark]] has the same one);
-    * cross-horizon duplicates need the batch pipeline over the archive.
-    * Input needs `doc_id`, `text`, and an event-time column. */
-  def streamingNearDups(docs: DataFrame, eventTimeCol: String,
-      horizon: String, shingleK: Int = 3, numPerms: Int = 16,
-      rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame = {
-    graft.functions.PolyHash31.register(docs.sparkSession)
-    val bands = graft.operators.TextOps
-      .shingleIdSets(docs, shingleK, keep = Seq(eventTimeCol))
-      .withColumn("sig", expr(s"minhash_sigs(tids, $numPerms)"))
-      .select(col("doc_id"), col(eventTimeCol).as("ts"), col("tids"),
-        posexplode(array(
-          graft.operators.Dedup.sigBandKeys(numPerms, rowsPerBand): _*))
-          .as(Seq("band", "bkey")))
-    val a = bands.select(col("doc_id").as("d1"), col("ts").as("ts1"),
-      col("tids").as("t1"), col("band").as("band1"),
-      col("bkey").as("bkey1")).withWatermark("ts1", horizon)
-    val b = bands.select(col("doc_id").as("d2"), col("ts").as("ts2"),
-      col("tids").as("t2"), col("band").as("band2"),
-      col("bkey").as("bkey2")).withWatermark("ts2", horizon)
-    a.join(b, expr(
-      s"""band1 = band2 AND bkey1 = bkey2 AND d1 < d2
-         |AND ts2 >= ts1 - interval $horizon
-         |AND ts2 <= ts1 + interval $horizon""".stripMargin))
-      .withColumn("n_inter",
-        size(array_intersect(col("t1"), col("t2"))).cast("long"))
-      .withColumn("n_union",
-        size(col("t1")).cast("long") + size(col("t2")) - col("n_inter"))
-      .withColumn("jaccard", col("n_inter").cast("double") / col("n_union"))
-      .where(col("jaccard") >= threshold)
-      .withColumn("pair_ts", greatest(col("ts1"), col("ts2")))
-      .withWatermark("pair_ts", horizon)
-      .dropDuplicatesWithinWatermark("d1", "d2")
-      .select(col("d1"), col("d2"), col("n_inter"), col("n_union"),
-        col("jaccard"), col("pair_ts"))
-  }
-
   /** Streaming EXACT dedup of a document stream against a persisted
     * corpus ([[graft.operators.Dedup.writeDedupState]] output): a
     * stream-static LEFT ANTI join on the content digest — the
@@ -455,108 +302,5 @@ object StreamOps {
     val exDigests = spark.read.parquet(s"$stateRoot/dedup_digests")
     docs.withColumn("fp", sha2(col("text"), 256))
       .join(exDigests, Seq("fp"), "left_anti")
-  }
-
-  /** Streaming NEAR-dup detection against a persisted corpus: flags
-    * stream docs whose shingle set verifies (exact Jaccard ≥
-    * `threshold`) against at least one corpus doc sharing an LSH band
-    * key. Banding parameters come from the state's meta table, so the
-    * stream side is always banded compatibly with the corpus side.
-    *
-    * Shape: the stream's band keys are an in-row projection (no
-    * vocabulary — nothing global blocks the stream); the corpus side
-    * joins as a STATIC equi-semi-join on (band, bkey) with the
-    * Jaccard verify folded into the join condition, so state is zero
-    * and a micro-batch costs one hash join against the band table.
-    * Multi-band hits of one doc collapse via
-    * `dropDuplicatesWithinWatermark` on the doc id (a doc's band rows
-    * share its event time, so the watermark can never split them).
-    *
-    * Returns the stream of FLAGGED docs (doc_id + event time) —
-    * callers route them out of the ingest (the stream-stream anti-join
-    * that would subtract them inline is unsupported by Structured
-    * Streaming; composing "exact-anti then flag" is the supported
-    * contract). */
-  def streamingNearDupsAgainstCorpus(docs: DataFrame, stateRoot: String,
-      eventTimeCol: String, delay: String,
-      threshold: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.PolyHash31.register(spark)
-    val meta = spark.read.parquet(s"$stateRoot/dedup_meta").head()
-    val (k, p, r) = (meta.getAs[Int]("shingle_k"),
-      meta.getAs[Int]("num_perms"), meta.getAs[Int]("rows_per_band"))
-    // "__c"-prefixed names cannot collide with the caller's event-time
-    // column (which is caller-chosen, e.g. "et")
-    val eb = spark.read.parquet(s"$stateRoot/dedup_bands")
-      .select(col("tids").as("__c_tids"), col("band").as("__c_band"),
-        col("bkey").as("__c_bkey"))
-    val bands = graft.operators.TextOps
-      .shingleIdSets(docs, k, keep = Seq(eventTimeCol))
-      .withColumn("sig", expr(s"minhash_sigs(tids, $p)"))
-      .select(col("doc_id"), col(eventTimeCol), col("tids"),
-        posexplode(array(
-          graft.operators.Dedup.sigBandKeys(p, r): _*))
-          .as(Seq("band", "bkey")))
-    // the intersect appears three times, but this residual predicate
-    // only runs on rows the (band, bkey) hash keys already matched —
-    // LSH collisions, not the corpus
-    val verify = col("band") === col("__c_band") &&
-      col("bkey") === col("__c_bkey") &&
-      size(array_intersect(col("tids"), col("__c_tids"))).cast("double") /
-        (size(col("tids")) + size(col("__c_tids")) -
-          size(array_intersect(col("tids"), col("__c_tids")))) >= threshold
-    bands.join(eb, verify, "left_semi")
-      .withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark("doc_id")
-      .select(col("doc_id"), col(eventTimeCol))
-  }
-
-  final case class RawPoint(att_name: String, t: Long, value_r: Double)
-  final case class ArchivedPoint(att_name: String, t: Long,
-      value_r: Double, prev: Double)
-
-  /** Threshold archiver: per attribute, emit a point only when its
-    * value moved at least `delta` from the LAST EMITTED value (first
-    * point always emits) — the HDB++ "archive event" contract, kept as
-    * one double of state per attribute via flatMapGroupsWithState.
-    * Within a batch, points are processed in `t` order.
-    *
-    * NaN is a VALUE here (a sensor-fault reading the archive must
-    * record), not a sentinel: transitions into and out of NaN emit,
-    * repeated NaNs are suppressed like any unchanged value, and NaN
-    * state survives micro-batch boundaries. (An earlier version used
-    * NaN as the "no state yet" marker, which silently dropped every
-    * fault reading — NaN satisfies no delta comparison — and lost the
-    * detector's state whenever the last emitted value was NaN.) The
-    * `prev` of a group's FIRST emitted point stays NaN: "no previous"
-    * and "previous was a fault" coincide there, which consumers of an
-    * append-only archive can disambiguate by position. */
-  def archiveEvents(points: Dataset[RawPoint],
-      delta: Double): Dataset[ArchivedPoint] = {
-    import points.sparkSession.implicits._
-    points
-      .groupByKey(_.att_name)
-      .flatMapGroupsWithState[Double, ArchivedPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[RawPoint], state: GroupState[Double]) =>
-          var last: Option[Double] = state.getOption
-          val out = rows.toSeq.sortBy(p => (p.t, p.value_r)).flatMap { p =>
-            val moved = last match {
-              case None => true // first point always emits
-              case Some(l) if l.isNaN || p.value_r.isNaN =>
-                // fault-transition: exactly one side NaN emits;
-                // NaN → NaN is "unchanged", like a small delta
-                l.isNaN != p.value_r.isNaN
-              case Some(l) => math.abs(p.value_r - l) >= delta
-            }
-            if (moved) {
-              val prev = last.getOrElse(Double.NaN)
-              last = Some(p.value_r)
-              Some(ArchivedPoint(key, p.t, p.value_r, prev))
-            } else None
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
   }
 }

@@ -505,73 +505,6 @@ class PropertySpec extends AnyFunSuite {
     }, n = 12)
   }
 
-  // ------------------------------------------------- archive events
-  test("property: archiveEvents ≡ a scalar change-detector model on " +
-    "random sequences with NaN faults, across batch boundaries") {
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // per group: ~8 points with values from a small set (forcing both
-    // under- and over-delta moves) plus NaN faults; split into two
-    // micro-batches so the state (including NaN state) must survive
-    val genGroup = for {
-      n <- Gen.choose(2, 8)
-      vals <- Gen.listOfN(n, Gen.oneOf(
-        Seq(0.0, 0.4, 1.1, 5.0, Double.NaN)))
-      cut <- Gen.choose(0, n)
-    } yield (vals, cut)
-    def modelFold(batches: Seq[Seq[StreamOps.RawPoint]])
-        : Seq[(Long, Double)] = {
-      var last: Option[Double] = None
-      val out = Seq.newBuilder[(Long, Double)]
-      batches.foreach { b =>
-        b.sortBy(p => (p.t, p.value_r)).foreach { p =>
-          val moved = last match {
-            case None => true
-            case Some(l) if l.isNaN || p.value_r.isNaN =>
-              l.isNaN != p.value_r.isNaN
-            case Some(l) => math.abs(p.value_r - l) >= 1.0
-          }
-          if (moved) { out += ((p.t, p.value_r)); last = Some(p.value_r) }
-        }
-      }
-      out.result()
-    }
-    check(Prop.forAll(Gen.listOfN(12, genGroup)) { groups =>
-      implicit val sc = spark.sqlContext
-      val in = MemoryStream[StreamOps.RawPoint]
-      val q = StreamOps.archiveEvents(in.toDS(), delta = 1.0)
-        .writeStream.format("memory").queryName("ae_prop")
-        .outputMode("append").start()
-      try {
-        val perGroup = groups.zipWithIndex.map { case ((vals, cut), g) =>
-          val pts = vals.zipWithIndex.map { case (v, i) =>
-            StreamOps.RawPoint(s"g$g", i.toLong + 1, v) }
-          s"g$g" -> Seq(pts.take(cut), pts.drop(cut))
-        }
-        in.addData(perGroup.flatMap(_._2.head))
-        q.processAllAvailable()
-        in.addData(perGroup.flatMap(_._2(1)))
-        q.processAllAvailable()
-        val got = spark.table("ae_prop").collect()
-          .groupBy(_.getString(0))
-          .map { case (k, rs) =>
-            k -> rs.map(r => (r.getLong(1), r.getDouble(2)))
-              .sortBy(_._1).toSeq }
-        perGroup.forall { case (k, batches) =>
-          val want = modelFold(batches)
-          val have = got.getOrElse(k, Seq.empty)
-          // NaN-tolerant comparison (NaN != NaN under ==)
-          want.length == have.length && want.zip(have).forall {
-            case ((t1, v1), (t2, v2)) =>
-              t1 == t2 && (v1 == v2 || (v1.isNaN && v2.isNaN)) }
-        }
-      } finally {
-        q.stop()
-        spark.sql("DROP TABLE IF EXISTS ae_prop")
-      }
-    }, n = 4)
-  }
-
   // --------------------------------------------------- K3/U4/C10 render
   // The four goldens-only rows (PNG bytes, compositing, base64, fence)
   // sit outside the DuckDB gate; these properties widen their evidence

@@ -34,12 +34,6 @@ class CatalogSpec extends AnyFunSuite {
     assert(r.toSeq == Seq("cs1:10000", "cs2:10000"))
   }
 
-  test("namesPerCs groups and sorts attribute lists (J2)") {
-    val r = Catalog.namesPerCs(names).orderBy("cs_name").collect()
-    assert(r(0).getString(0) == "cs1:10000" && r(0).getLong(1) == 3L)
-    assert(r(0).getString(2).startsWith("r1/vac"))
-  }
-
   test("latestBefore picks the latest row strictly before the cutoff (S6/O3)") {
     val df = Seq(("a", 10L, 100L, 1.0), ("a", 20L, 101L, 2.0),
       ("a", 30L, 102L, 3.0), ("b", 5L, 103L, 4.0))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
 import graft.SparkTestBase
 import graft.model.{AttributePath, TangoTypes}
 
@@ -223,7 +222,7 @@ class MiscSpec extends AnyFunSuite {
   }
 
   test("GifVideoCodecProvider decodes an animated GIF as real video: " +
-    "frame count, temporal sampling, per-frame pixels") {
+    "every frame's pixels, corrupt marker") {
     // a JDK-written 3-frame 4×2 animation: black, white, half-and-half
     def solid(rgb: Int) = {
       val im = new java.awt.image.BufferedImage(4, 2,
@@ -259,57 +258,12 @@ class MiscSpec extends AnyFunSuite {
     val crc = new java.util.zip.CRC32
     crc.update(gif)
     assert(r(0).checksum == crc.getValue)
-    // luminance over ALL 24 pixels: 12 black (bin 0) + 12 white (bin 7)
+    // luminance over ALL 24 pixels of the 3 frames: 12 black (bin 0) +
+    // 12 white (bin 7) — a first-frame-only decode would read all black
     assert(math.abs(r(0).feature(0) - 0.5f) < 1e-6)
     assert(math.abs(r(0).feature(7) - 0.5f) < 1e-6)
     assert(r(1).width == 0 && r(1).height == 0) // corrupt marker
     assert(r(1).feature.forall(_ == 0f) && r(1).checksum != 0L)
-    // temporal sampling: 3 of 3 real frames, 8 pixels each, and the
-    // per-frame checksums match an independent direct-ImageIO re-read
-    val fr = Multimodal.sampleFrames(
-      media.where(col("doc_id") === 1L), 3).collect().sortBy(_.frame_no)
-    assert(fr.length == 3)
-    assert(fr.forall(_.frame_len == 8L))
-    val stream = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(gif))
-    val reader = javax.imageio.ImageIO.getImageReaders(stream).next()
-    reader.setInput(stream)
-    assert(reader.getNumImages(true) == 3)
-    val want = (0 until 3).map { i =>
-      val im = reader.read(i)
-      val c = new java.util.zip.CRC32
-      (0 until im.getHeight).foreach(y => (0 until im.getWidth).foreach { x =>
-        val rgb = im.getRGB(x, y)
-        c.update((rgb >> 16) & 0xff); c.update((rgb >> 8) & 0xff)
-        c.update(rgb & 0xff)
-      })
-      c.getValue
-    }
-    reader.dispose(); stream.close()
-    assert(fr.map(_.checksum).toSeq == want)
-    assert(want.distinct.length == 3) // the frames really differ
-    // corrupt payloads sample to zero frames, no task failure
-    assert(Multimodal.sampleFrames(
-      media.where(col("doc_id") === 2L), 3).collect().isEmpty)
-  }
-
-  test("Multimodal.sampleFrames fans one payload into n decoded frames") {
-    val d = Seq((0L, "en", "s", 10L, "abcdefghij"))
-      .toDF("doc_id", "lang", "source", "n_chars", "text")
-    val frames = Multimodal.sampleFrames(Multimodal.withPayload(d), 4)
-      .collect().sortBy(_.frame_no)
-    assert(frames.length == 4)
-    assert(frames.map(_.frame_len).sum == 10L) // slices cover the payload
-    assert(frames.map(_.frame_no).toSeq == Seq(0, 1, 2, 3))
-  }
-
-  test("Multimodal.resized shrinks the payload and re-decodes") {
-    val d = Seq((0L, "en", "s", 9L, "abcdefghi"))
-      .toDF("doc_id", "lang", "source", "n_chars", "text")
-    val r = Multimodal.resized(Multimodal.withPayload(d), keepEvery = 3)
-      .collect().head
-    assert(r.byte_len == 3L) // bytes 0,3,6
-    assert(r.kind == "image/fake;thumb")
   }
 
   test("Model path codec round-trips 5-part attribute paths (C1)") {
@@ -336,13 +290,6 @@ class MiscSpec extends AnyFunSuite {
     assert(cs3 == "" && rest3 == "r3/mag/dia-01/current")
     val trail = AttributePath.splitName("r3/mag/dia-01/")
     assert(trail.member == "dia-01" && trail.name == "")
-  }
-
-  test("Multimodal.resized validates keepEvery at plan time") {
-    val media = Seq((1L, "image/fake", Array[Byte](1, 2, 3)))
-      .toDF("doc_id", "kind", "payload")
-    intercept[IllegalArgumentException] { Multimodal.resized(media, 0) }
-    intercept[IllegalArgumentException] { Multimodal.resized(media, -3) }
   }
 
   test("TangoTypes: 26 tables, type resolution") {

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -453,13 +455,11 @@ class SimilaritySpec extends AnyFunSuite {
     // the hot branch (gate collects the bucket, nb = ceil(40/3) = 14,
     // the d1 side replicates across 14 blocks) — every same-bucket
     // pair must still meet exactly once, so the two branches return
-    // identical pair sets. Also pins gate memoization invalidation via
-    // clearHotBucketCache.
+    // identical pair sets.
     val emb = (0 until 40).map { i =>
       (i.toLong, Array.tabulate(8)(j => 1.0f + (i * 8 + j) % 7 * 1e-3f))
     }.toDF("vec_id", "embedding")
     def pairs(mb: Int) = {
-      Similarity.clearHotBucketCache()
       Similarity.cosineNearDups(emb, threshold = 0.9, nPlanes = 4,
         dim = 8, maxBlock = mb)
         .orderBy("d1", "d2").collect()
@@ -472,6 +472,43 @@ class SimilaritySpec extends AnyFunSuite {
     assert(split == plain,
       s"sub-blocked branch diverges: plain=${plain.size} rows, " +
         s"split=${split.size} rows")
+  }
+
+  test("cosineNearDups takes the hot-bucket decision per call: files " +
+    "rewritten under an identical plan re-decide the split") {
+    // the near-parallel vectors of the case above share ONE bucket; the
+    // first write holds 4 of them (≤ maxBlock = 5 → plain bucket join),
+    // the rewrite all 40 (→ sub-blocked on (bucket, blk), nb = 8)
+    def vecs(n: Int) = (0 until n).map { i =>
+      (i.toLong, Array.tabulate(8)(j => 1.0f + (i * 8 + j) % 7 * 1e-3f))
+    }.toDF("vec_id", "embedding")
+    def call(emb: DataFrame, mb: Int) = Similarity.cosineNearDups(emb,
+      threshold = 0.9, nPlanes = 4, dim = 8, maxBlock = mb)
+    def joinsOnBlk(df: DataFrame) = df.queryExecution.analyzed.exists {
+      case j: Join => j.condition.exists(_.references.exists(_.name == "blk"))
+      case _ => false
+    }
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft-cnd").toString
+    vecs(4).write.mode("overwrite").parquet(dir)
+    val emb1 = spark.read.parquet(dir)
+    val r1 = call(emb1, 5)
+    assert(!joinsOnBlk(r1))
+    assert(pairs(r1).size == 6)
+    vecs(40).write.mode("overwrite").parquet(dir)
+    val emb2 = spark.read.parquet(dir)
+    assert(emb2.queryExecution.analyzed.semanticHash() ==
+      emb1.queryExecution.analyzed.semanticHash(),
+      "the re-read plan must be identical to the first read's")
+    val r2 = call(emb2, 5)
+    assert(joinsOnBlk(r2),
+      "the second call replayed the first call's plain-join decision")
+    val split = pairs(r2)
+    val r3 = call(emb2, 100000) // no bucket over the cap → plain branch
+    assert(!joinsOnBlk(r3))
+    val plain = pairs(r3)
+    assert(split.size == 40 * 39 / 2 && split == plain)
   }
 
   test("labelStats aggregates exact quantized sums per label") {

@@ -9,36 +9,18 @@ class SkewOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  test("saltedJoin matches the plain join and spreads the hot key") {
-    // one hot key (90% of rows) + a tail
-    val fact = ((1 to 900).map(i => (1, i.toLong)) ++
-      (1 to 100).map(i => (i % 7 + 2, 1000L + i)))
-      .toDF("key", "row_id")
-    val dim = Seq((1, "hot"), (2, "a"), (3, "b"), (4, "c"), (5, "d"),
-      (6, "e"), (7, "f"), (8, "g")).toDF("key", "label")
-    val plain = fact.join(dim, "key").groupBy("label")
-      .agg(count(lit(1)).as("n")).orderBy("label").collect()
-    val salted = SkewOps.saltedJoin(fact, dim, "key", "row_id", 8)
-      .groupBy("label").agg(count(lit(1)).as("n")).orderBy("label").collect()
-    assert(plain.map(r => (r.getString(0), r.getLong(1))).toSeq ==
-      salted.map(r => (r.getString(0), r.getLong(1))).toSeq)
-    // the salt actually distributes the hot key over several buckets
-    val saltSpread = fact.where(col("key") === 1)
-      .withColumn("_salt", pmod(xxhash64(col("row_id")), lit(8)))
-      .select("_salt").distinct().count()
-    assert(saltSpread >= 6)
-  }
-
   test("saltedJoin: null salt-source rows still join (xxhash64(null) = seed)") {
     // the salted token joins feed doc_id as the salt source; a null
     // there must not DROP the row — xxhash64 of a null column yields
     // the seed (a stable long), so pmod still lands in [0, buckets)
     // and the row matches a replica of its dim key. Pinned so a future
-    // hash/salt change cannot silently turn nulls into lost rows.
+    // hash/salt change cannot silently turn nulls into lost rows. Both
+    // keys hold half the weight, so the gate salts both.
     val fact = Seq((1, Some(10L)), (1, None), (2, Some(20L)), (2, None))
       .toDF("key", "row_id")
-    val dim = Seq((1, "x"), (2, "y")).toDF("key", "label")
-    val r = SkewOps.saltedJoin(fact, dim, "key", "row_id", 8)
+    val dim = Seq((1, "x", 2L), (2, "y", 2L)).toDF("key", "label", "w")
+    assert(SkewOps.hotKeys(dim, "key", "w", 8).count() == 2)
+    val r = SkewOps.hotSaltedJoin(fact, dim, "key", "row_id", 8, "w")
       .groupBy("label").agg(count(lit(1)).as("n"))
       .orderBy("label").as[(String, Long)].collect().toSeq
     assert(r == Seq(("x", 2L), ("y", 2L)),

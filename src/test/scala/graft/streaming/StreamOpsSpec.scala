@@ -146,87 +146,6 @@ class StreamOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamingExactDedup drops repeated content across batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val out = StreamOps.streamingExactDedup(
-      in.toDF().toDF("doc_id", "text"))
-    val q = out.writeStream.format("memory").queryName("sd")
-      .outputMode("append").start()
-    try {
-      in.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
-      q.processAllAvailable()
-      in.addData((4L, "beta"), (5L, "gamma")) // beta already seen
-      q.processAllAvailable()
-      val texts = spark.table("sd").select("text")
-        .as[String].collect().sorted
-      assert(texts.toSeq == Seq("alpha", "beta", "gamma"))
-    } finally q.stop()
-  }
-
-  test("streamingNearDups pairs near-dup docs within the horizon only") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Long, String, Long)]
-    val base = "the quick brown fox jumps over the lazy dog again and again today"
-    val out = StreamOps.streamingNearDups(
-      in.toDF().toDF("doc_id", "text", "t_us")
-        .withColumn("ts", timestamp_micros(col("t_us"))),
-      "ts", "60 seconds", threshold = 0.5)
-    val q = out.writeStream.format("memory").queryName("snd")
-      .outputMode("append").start()
-    try {
-      // two near-dups 2 s apart, one unrelated doc
-      in.addData(
-        (1L, base, 10000000L),
-        (2L, "quick brown fox jumps over the lazy dog again and again today", 12000000L),
-        (3L, "completely different words with nothing shared at all in here", 15000000L))
-      q.processAllAvailable()
-      // the same text again FAR outside the horizon: no pair with 1/2
-      in.addData((4L, base, 10000000000L))
-      q.processAllAvailable()
-      val pairs = spark.table("snd")
-        .select("d1", "d2", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(pairs.toSeq == Seq((1L, 2L)),
-        s"expected exactly (1,2), got ${pairs.toSeq}")
-    } finally q.stop()
-  }
-
-  test("archiveStream tails the writer's layout: appended days become batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft-astream")
-      .toString
-    def day(d: String, ids: Seq[Int]): org.apache.spark.sql.DataFrame =
-      ids.map(i => (i, s"$d 10:0$i:00", i * 1.0))
-        .toDF("att_conf_id", "s", "value_r")
-        .select(col("att_conf_id"), to_timestamp(col("s")).as("data_time"),
-          col("value_r"))
-    graft.sources.ArchiveWriter.write(day("2024-03-01", Seq(1, 2)), root)
-    val schema = StructType(Seq(
-      StructField("data_time", TimestampType),
-      StructField("value_r", DoubleType),
-      StructField("att_conf_id", IntegerType),
-      StructField("period", StringType)))
-    val stream = StreamOps.archiveStream(spark, root,
-      "att_scalar_devdouble_ro", schema)
-    assert(stream.isStreaming)
-    val q = stream.writeStream.format("memory").queryName("astream")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("astream").count() == 2)
-      // an archiver appends the next day → picked up incrementally
-      graft.sources.ArchiveWriter.write(day("2024-03-02", Seq(1)), root)
-      q.processAllAvailable()
-      val rows = spark.table("astream")
-      assert(rows.count() == 3)
-      assert(rows.select("period").distinct().count() == 2)
-    } finally q.stop()
-  }
-
   test("stream-static dedup against a persisted corpus state") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
@@ -251,83 +170,6 @@ class StreamOpsSpec extends AnyFunSuite {
       assert(spark.table("sse").select("doc_id").as[Long].collect()
         .toSeq == Seq(11L))
     } finally qE.stop()
-    // near: the stream-static semi join flags verified band collisions
-    val inN = MemoryStream[(Long, String, Long)]
-    val flags = StreamOps.streamingNearDupsAgainstCorpus(
-      inN.toDF().toDF("doc_id", "text", "t_us")
-        .withColumn("et", timestamp_micros(col("t_us"))).drop("t_us"),
-      root, "et", "0 seconds")
-    val qN = flags.writeStream.format("memory").queryName("ssn")
-      .outputMode("append").start()
-    try {
-      // non-zero event times: epoch-0 rows are "late" against Spark's
-      // INITIAL watermark (also 0) and silently dropped by the
-      // dedup state op
-      inN.addData(
-        // near-copy of corpus doc 0 (one word dropped)
-        (20L, "quick brown fox jumps over the lazy dog again and again",
-          10000000L),
-        (21L, "utterly unrelated text goes right past every band",
-          10000000L))
-      qN.processAllAvailable()
-      assert(spark.table("ssn").select("doc_id").as[Long].collect()
-        .toSeq == Seq(20L))
-    } finally qN.stop()
-  }
-
-  test("streamingExactDedupWithinWatermark evicts state past the horizon") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Long, String, Long)]
-    val out = StreamOps.streamingExactDedupWithinWatermark(
-      in.toDF().toDF("doc_id", "text", "t_us")
-        .withColumn("ts", timestamp_micros(col("t_us"))),
-      "ts", "1 second")
-    val q = out.writeStream.format("memory").queryName("sdw")
-      .outputMode("append").start()
-    try {
-      // duplicate within the horizon is dropped
-      in.addData((1L, "alpha", 1000000L), (2L, "alpha", 1500000L))
-      q.processAllAvailable()
-      // push the watermark far past alpha's state (100 s − 1 s delay)
-      in.addData((3L, "beta", 100000000L))
-      q.processAllAvailable()
-      // alpha's digest was EVICTED → it re-admits: that re-admission is
-      // the observable proof state is bounded, vs streamingExactDedup
-      // which would still be holding it
-      in.addData((4L, "alpha", 101000000L))
-      q.processAllAvailable()
-      val ids = spark.table("sdw").select("doc_id").as[Long]
-        .collect().sorted
-      assert(ids.toSeq == Seq(1L, 3L, 4L))
-    } finally q.stop()
-  }
-
-  test("archiveEvents: stateful change detector across batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[StreamOps.RawPoint]
-    val out = StreamOps.archiveEvents(in.toDS(), delta = 1.0)
-    val q = out.writeStream.format("memory").queryName("ae")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        StreamOps.RawPoint("a", 1L, 10.0), // first → emit
-        StreamOps.RawPoint("a", 2L, 10.5), // |Δ|=0.5 < 1 → suppressed
-        StreamOps.RawPoint("a", 3L, 11.2), // vs last EMITTED 10.0 → emit
-        StreamOps.RawPoint("b", 1L, 0.0)) // first of b → emit
-      q.processAllAvailable()
-      // state survives into the next batch: last archived a = 11.2
-      in.addData(StreamOps.RawPoint("a", 4L, 11.9), // 0.7 < 1 → suppressed
-        StreamOps.RawPoint("a", 5L, 13.0)) // 1.8 ≥ 1 → emit
-      q.processAllAvailable()
-      val rows = spark.table("ae")
-        .orderBy("att_name", "t")
-        .as[StreamOps.ArchivedPoint].collect()
-      assert(rows.map(r => (r.att_name, r.t, r.value_r)).toSeq ==
-        Seq(("a", 1L, 10.0), ("a", 3L, 11.2), ("a", 5L, 13.0),
-          ("b", 1L, 0.0)))
-    } finally q.stop()
   }
 
   test("streamingKmvDistinct: sketch state equals the batch sketch " +
@@ -340,7 +182,8 @@ class StreamOpsSpec extends AnyFunSuite {
       s"tok$i shared common words here plus tok${i - 30}"))
     val in = MemoryStream[(Long, String, String)]
     val docs = in.toDF().toDF("doc_id", "lang", "text")
-    val agg = StreamOps.streamingKmvDistinct(docs, Seq("lang"), k = 8)
+    val agg = graft.operators.TextStats.kmvDistinctTokens(docs, Seq("lang"),
+      k = 8)
     val q = agg.writeStream.format("memory").queryName("kmv")
       .outputMode("complete").start()
     def batchOver(rows: Seq[(Long, String, String)]) =
@@ -373,7 +216,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val b2 = mkRows(40 until 80)
     val in = MemoryStream[(Long, String, String)]
     val docs = in.toDF().toDF("doc_id", "lang", "text")
-    val agg = StreamOps.streamingHistBins(docs, Seq("lang"), 8)
+    val agg = graft.operators.TextStats.histBins(docs, Seq("lang"), 8)
     val q = agg.writeStream.format("memory").queryName("histbins")
       .outputMode("complete").start()
     def batchOver(rows: Seq[(Long, String, String)]) =
@@ -403,7 +246,7 @@ class StreamOpsSpec extends AnyFunSuite {
       s"tok$i shared common words here plus tok${i - 30}"))
     val in = MemoryStream[(Long, String, String)]
     val docs = in.toDF().toDF("doc_id", "lang", "text")
-    val agg = StreamOps.streamingHllDistinct(docs, Seq("lang"))
+    val agg = graft.operators.TextStats.hllDistinctTokens(docs, Seq("lang"))
     val q = agg.writeStream.format("memory").queryName("hll")
       .outputMode("complete").start()
     def canon(rows: Array[org.apache.spark.sql.Row]) =
@@ -483,34 +326,6 @@ class StreamOpsSpec extends AnyFunSuite {
     val rows = j.select("pid", "oid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rows == Seq((1L, 10L))) // ts(60) is outside the 10 s window
-  }
-
-  test("archiveEvents: NaN is a recorded fault value, not a sentinel") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[StreamOps.RawPoint]
-    val out = StreamOps.archiveEvents(in.toDS(), delta = 1.0)
-    val q = out.writeStream.format("memory").queryName("aenan")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        StreamOps.RawPoint("a", 1L, 5.0),        // first → emit
-        StreamOps.RawPoint("a", 2L, Double.NaN)) // fault transition → emit
-      q.processAllAvailable()
-      // NaN state survives the batch boundary: a repeated fault is
-      // "unchanged" (suppressed), recovery emits
-      in.addData(
-        StreamOps.RawPoint("a", 3L, Double.NaN), // still faulted → suppress
-        StreamOps.RawPoint("a", 4L, 5.05),       // recovery → emit
-        StreamOps.RawPoint("a", 5L, 5.5))        // |Δ|=0.45 < 1 → suppress
-      q.processAllAvailable()
-      val rows = spark.table("aenan").orderBy("t")
-        .as[StreamOps.ArchivedPoint].collect()
-      assert(rows.map(_.t).toSeq == Seq(1L, 2L, 4L))
-      assert(rows(0).value_r == 5.0 && rows(0).prev.isNaN) // no previous
-      assert(rows(1).value_r.isNaN && rows(1).prev == 5.0)
-      assert(rows(2).value_r == 5.05 && rows(2).prev.isNaN) // prev = fault
-    } finally q.stop()
   }
 
   // ---- chaos: kill-and-restart from checkpoint, one per stateful ----
@@ -642,74 +457,6 @@ class StreamOpsSpec extends AnyFunSuite {
         // the pre-kill (1,100), no loss of the buffered +15s point)
         assert(sunk().sorted == Seq(1L -> 100L, 2L -> 200L))
         assert(stateDirs(ckpt) == Set("0", "1", "2"))
-      } finally q2.stop()
-    }
-  }
-
-  test("chaos: streamingExactDedup restarts from checkpoint — a " +
-    "duplicate of a pre-kill doc stays suppressed") {
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_dd").toString
-    StreamOps.withStatePartitions(spark, 3) { sess =>
-      import sess.implicits._
-      implicit val sc = sess.sqlContext
-      val in = MemoryStream[(Long, String)]
-      val docs = in.toDF().toDF("doc_id", "text")
-      val out = StreamOps.streamingExactDedup(docs)
-      val outDir = java.nio.file.Files.createTempDirectory("out_dd").toString
-      def start() = out.select("doc_id").writeStream
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
-      def sunk(): Seq[Long] =
-        sess.read.parquet(outDir).as[Long].collect().toSeq
-      val q1 = start()
-      try {
-        in.addData((1L, "alpha"), (2L, "beta"))
-        q1.processAllAvailable()
-        assert(sunk().sorted == Seq(1L, 2L))
-      } finally q1.stop()
-      // doc 3 duplicates pre-kill doc 1: only recovered digest state
-      // can suppress it (lost state lets it through); doc 4 is new
-      // and must pass — and the exactly-once file sink would expose a
-      // replayed batch as duplicate 1/2 rows in the sorted seq
-      in.addData((3L, "alpha"), (4L, "gamma"))
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        assert(sunk().sorted == Seq(1L, 2L, 4L))
-      } finally q2.stop()
-    }
-  }
-
-  test("chaos: archiveEvents restarts from checkpoint — the custom " +
-    "per-attribute deadband state survives the kill") {
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_ae").toString
-    StreamOps.withStatePartitions(spark, 3) { sess =>
-      import sess.implicits._
-      implicit val sc = sess.sqlContext
-      val in = MemoryStream[StreamOps.RawPoint]
-      val out = StreamOps.archiveEvents(in.toDS(), delta = 1.0)
-      val outDir = java.nio.file.Files.createTempDirectory("out_ae").toString
-      def start() = out.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      val q1 = start()
-      try {
-        in.addData(StreamOps.RawPoint("a", 1L, 5.0)) // first → emit
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // post-restart: 5.4 is within the deadband of the PRE-KILL 5.0
-      // (suppressed only if state recovered; lost state re-emits it as
-      // a first reading), 7.0 is a real change and must emit with
-      // prev = 5.0 — the recovered state value, not 5.4
-      in.addData(StreamOps.RawPoint("a", 2L, 5.4),
-        StreamOps.RawPoint("a", 3L, 7.0))
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        val rows = sess.read.parquet(outDir).orderBy("t")
-          .as[StreamOps.ArchivedPoint].collect()
-        assert(rows.map(_.t).toSeq == Seq(1L, 3L))
-        assert(rows(1).value_r == 7.0 && rows(1).prev == 5.0)
       } finally q2.stop()
     }
   }
