@@ -598,13 +598,9 @@ object PipelineQueries {
 
   /** p40 — k-means at L=128 cells (`vec_id % 128 + 1`), hash-pinning
     * the broadcast-matrix `argmax_dot_e4` codegen expression end-to-end
-    * against the same DuckDB round-CTEs at a cluster count where the
-    * one-time literal-SQL alternative would already be unwieldy. (Since
-    * [[graft.operators.Similarity.LiteralCentroidMaxL]] dropped to 0 —
-    * the literal form breaks whole-stage fusion when combined with
-    * joins — every production query runs this broadcast path; p38
-    * pins it at oracle label counts too, and SimilaritySpec keeps the
-    * literal form as a path-vs-path reference.) TWO Lloyd rounds, because
+    * against the same DuckDB round-CTEs at a cluster count where a
+    * literal-SQL centroid array would be unwieldy (p38 pins the same
+    * path at oracle label counts). TWO Lloyd rounds, because
     * round 2 re-aggregates centroids FROM expression-assigned cells —
     * a wrong dot, tie-break, or floor-div anywhere in the broadcast
     * path moves some vector and breaks the hash. */

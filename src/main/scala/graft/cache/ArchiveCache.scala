@@ -28,40 +28,28 @@ object ArchiveCache {
 
   /** Closed-period persist cache. `fetch` loads one period's frame;
     * `today` supplies the current UTC date (injectable for tests).
-    *
-    * `maxPersistedDays` bounds how many closed days stay persisted at
-    * once, LRU-evicted — the explicit analog of the reference's
-    * size-bounded cache (`utils.py:174-236`, 1 GB LRU). The default
-    * (unbounded) delegates eviction entirely to Spark's own LRU block
-    * manager, which is already safe (MEMORY_AND_DISK: a full store
-    * degrades to disk, then to recompute — never OOM); the bound
-    * additionally releases the MEMOIZED frame reference, so a
-    * long-lived session serving thousands of distinct days does not
-    * accumulate one logical-plan + block-set registration per day.
-    * Eviction is invisible in results: a re-accessed evicted day is
-    * simply re-fetched and re-persisted. */
+    * Eviction of the persisted blocks is Spark's own LRU block manager
+    * (MEMORY_AND_DISK: a full store degrades to disk, then to
+    * recompute — never OOM). */
   final class PeriodCache(fetch: String => DataFrame,
-      today: () => String, maxPersistedDays: Int = Int.MaxValue) {
-    require(maxPersistedDays > 0, "maxPersistedDays must be positive")
-    // access-ordered for LRU. The map's monitor guards only get/put/
-    // evict BOOKKEEPING — the fetch+persist itself runs under the
-    // per-day Slot's own lazy-val lock, so a miss in flight blocks
-    // only same-day callers; cache hits on other days never wait
-    // behind it (an earlier design ran fetch under this monitor,
-    // turning every concurrent hit into a full-fetch-latency stall).
-    private val closed = new java.util.LinkedHashMap[String, Slot](
-      16, 0.75f, true)
+      today: () => String) {
+    // The map's monitor guards only get/put BOOKKEEPING — the
+    // fetch+persist itself runs under the per-day Slot's own lazy-val
+    // lock, so a miss in flight blocks only same-day callers; cache
+    // hits on other days never wait behind it (an earlier design ran
+    // fetch under this monitor, turning every concurrent hit into a
+    // full-fetch-latency stall).
+    private val closed = new java.util.HashMap[String, Slot]
     private[graft] var fetches = 0L   // instrumentation for tests
-    private[graft] var evictions = 0L // instrumentation for tests
 
     /** One closed day's memoized frame. `df` is a lazy val: the first
       * accessor computes fetch+persist (confined to this slot's
       * monitor), later same-day callers block here and reuse it; a
       * failed fetch leaves the lazy val uninitialized, so the next
       * access retries rather than caching the failure. `ready` is set
-      * only after a successful compute — eviction unpersists through
-      * it and skips slots still mid-compute (the computing thread's
-      * post-insert check below handles that race). */
+      * only after a successful compute — [[invalidate]] unpersists
+      * through it and skips slots still mid-compute (the computing
+      * thread's post-insert check below handles that race). */
     private final class Slot(p: String) {
       @volatile var ready: DataFrame = _
       lazy val df: DataFrame = {
@@ -82,7 +70,7 @@ object ArchiveCache {
       }
       var created: Slot = null
       val slot = closed.synchronized {
-        val hit = closed.get(p) // get() records the access for LRU
+        val hit = closed.get(p)
         if (hit != null) hit
         else {
           created = new Slot(p)
@@ -91,26 +79,14 @@ object ArchiveCache {
         }
       }
       val df = slot.df // fetch+persist OUTSIDE the map monitor
-      if (created != null) {
-        val evictedMeanwhile = closed.synchronized {
-          while (closed.size > maxPersistedDays) {
-            val it = closed.entrySet().iterator()
-            val eldest = it.next().getValue
-            if (eldest.ready != null) eldest.ready.unpersist()
-            it.remove()
-            evictions += 1
-          }
-          // IDENTITY check, not containsKey: if OUR mid-compute slot
-          // was evicted and another caller already re-created the key,
-          // containsKey would be true and this thread's persisted frame
-          // would leak untracked forever
-          closed.get(p) ne created
-        }
-        // lost a race with eviction/invalidate while computing: the
-        // frame is no longer tracked, so release it ourselves (the
-        // caller still gets a valid, merely unpersisted, frame)
-        if (evictedMeanwhile) df.unpersist()
-      }
+      // IDENTITY check, not containsKey: if invalidate() dropped OUR
+      // mid-compute slot and another caller already re-created the
+      // key, containsKey would be true and this thread's persisted
+      // frame would leak untracked forever. Lost that race: the frame
+      // is no longer tracked, so release it ourselves (the caller
+      // still gets a valid, merely unpersisted, frame).
+      if (created != null && closed.synchronized(closed.get(p) ne created))
+        df.unpersist()
       df
     }
 
@@ -118,9 +94,7 @@ object ArchiveCache {
       * per-day fan-out ∪ (reference U1) with closed days served from
       * cache. */
     def range(p0: String, p1: String): DataFrame = {
-      val days = Iterator.iterate(java.time.LocalDate.parse(p0))(_.plusDays(1))
-        .takeWhile(!_.isAfter(java.time.LocalDate.parse(p1)))
-        .map(_.toString).toSeq
+      val days = graft.sources.CassandraArchiveSource.periods(p0, p1)
       // loud on a reversed range — the empty Seq would otherwise
       // surface as an opaque `empty.reduceLeft` from deep inside
       require(days.nonEmpty,

@@ -7,27 +7,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Broadcast-matrix centroid assignment — the LARGE-L path of
+/** Broadcast-matrix centroid assignment — the one path of
   * [[graft.operators.Similarity]]'s Lloyd/IVF assignment.
   *
-  * The small-L path re-emits the collected centroids as literal SQL
-  * (`array_max` over L `struct(dot_e4c(embedding, array(<dims
-  * literals>)))` entries) — measured fastest at oracle cluster counts,
-  * but a driver/codegen wall at the cluster counts semantic dedup
-  * actually deploys (SemDeDup-style runs cite ~50k clusters: L=50k ×
-  * dims=64 would be a multi-MB SQL string, an expression tree past
-  * Janino's 64KB method limit, and quadratic analyzer cost). Here the
-  * L×dims int64 centroid matrix instead travels ONCE per executor as a
+  * Re-emitting the collected centroids as literal SQL (`array_max` over
+  * L `struct(dot_e4c(embedding, array(<dims literals>)))` entries) is a
+  * driver/codegen wall at the cluster counts semantic dedup actually
+  * deploys (SemDeDup-style runs cite ~50k clusters: L=50k × dims=64
+  * would be a multi-MB SQL string, an expression tree past Janino's
+  * 64KB method limit, and quadratic analyzer cost). Here the L×dims
+  * int64 centroid matrix instead travels ONCE per executor as a
   * regular Spark broadcast; the expression holds only the broadcast
   * handle, so the plan stays O(1) in L and whole-stage codegen survives
   * any cluster count — the generated code is one static call per row.
   *
-  * Semantics are pinned to the literal form (p13/p38/p39 oracle
-  * hashes): per centroid the exact int64 dot Σ round(eᵢ·10⁴)·cᵢ with
-  * [[DotE8.roundE4]]'s half-away-from-zero rounding and `min(|e|,|c|)`
-  * length contract, argmax by (dot desc, label asc). The embedding is
-  * quantized ONCE per row into a scratch array instead of once per
-  * centroid — a pure win the literal form cannot express.
+  * Semantics are pinned by the p13/p38/p39 oracle hashes: per centroid
+  * the exact int64 dot Σ round(eᵢ·10⁴)·cᵢ with [[DotE8.roundE4]]'s
+  * half-away-from-zero rounding and `min(|e|,|c|)` length contract,
+  * argmax by (dot desc, label asc). The embedding is quantized ONCE
+  * per row into a scratch array instead of once per centroid.
   */
 case class ArgmaxDotE4(child: Expression,
     bc: Broadcast[(Array[Int], Array[Array[Long]])])
@@ -58,9 +56,8 @@ case class ArgmaxDotE4(child: Expression,
 
 /** The probe-cell sibling of [[ArgmaxDotE4]]: the `k` best centroid
   * labels by (dot desc, label asc) — what IVF `nprobe` fans a QUERY
-  * vector out to. Mirrors the literal form's
-  * `transform(slice(reverse(array_sort(cells)), 1, k), s -> …)` exactly
-  * (including returning all L labels when k ≥ L). Query-side only, so
+  * vector out to, in that order (all L labels when k ≥ L; p41/p58
+  * oracle hashes replay the probe order). Query-side only, so
   * the per-row top-k insertion cost is |Q|-bound, never corpus-bound. */
 case class TopCellsDotE4(child: Expression,
     bc: Broadcast[(Array[Int], Array[Array[Long]])], k: Int)
@@ -153,8 +150,7 @@ object ArgmaxDot {
     acc
   }
 
-  /** Label of the max-dot centroid; ties to the SMALLEST label — the
-    * literal form's `array_max` over (d, −label) structs. */
+  /** Label of the max-dot centroid; ties to the SMALLEST label. */
   def argmax(a: ArrayData,
       bc: Broadcast[(Array[Int], Array[Array[Long]])]): Int = {
     val (labels, matrix) = bc.value

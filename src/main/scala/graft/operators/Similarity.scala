@@ -128,11 +128,9 @@ object Similarity {
     * hash aggregate over per-dimension `element_at` projections — no
     * posexplode — and the L finished centroids (L×dims longs) are
     * collected to the driver and re-emitted per [[CentroidSet]] as one
-    * broadcast matrix read by a codegen expression (the literal-SQL
-    * alternative survives only as the tests' reference path, forced
-    * via `literalMaxL` — see [[LiteralCentroidMaxL]]'s scaladoc). Each
-    * corpus row then computes its L cell dots and takes the argmax in
-    * the same projection: zero joins, zero shuffles, nothing
+    * broadcast matrix read by a codegen expression. Each corpus row
+    * then computes its L cell dots and takes the argmax in the same
+    * projection: zero joins, zero shuffles, nothing
     * materialized per (row, dim, label) — round 2's explode-join built
     * exactly that n×dims×L intermediate. The floor-div mean is
     * `Math.floorDiv` ≡ the oracle's `(s − pmod(s, n)) / n` (both true
@@ -149,11 +147,9 @@ object Similarity {
     * with the corpus. nprobe=1 is bit-identical to the oracle-checked
     * default. */
   def ivfTopK(emb: DataFrame, queryFilter: Column, k: Int,
-      dims: Int = 64, nprobe: Int = 1,
-      literalMaxL: Int = LiteralCentroidMaxL): DataFrame = {
+      dims: Int = 64, nprobe: Int = 1): DataFrame = {
     ensureDotE8(emb)
-    val cells = new CentroidSet(emb,
-      collectCentroids(emb, "label", dims), literalMaxL)
+    val cells = new CentroidSet(emb, collectCentroids(emb, "label", dims))
     val withCell = emb.withColumn("clab", cells.assignCol)
     // query side: nprobe nearest cells by (d desc, label asc) — the
     // same tie-break as the assignment — then explode. Query rows
@@ -225,7 +221,7 @@ object Similarity {
     * (`element_at` projections, map-side partial, no posexplode);
     * (2) every vector re-assigned to the argmax integer dot over the L
     * centroids (tie → smallest label), via [[CentroidSet]]'s
-    * literal-or-broadcast assignment column.
+    * broadcast assignment column.
     *
     * Scale shape: per iteration the corpus is scanned once and NEVER
     * shuffled or joined — centroid state is L×dims longs through the
@@ -235,40 +231,8 @@ object Similarity {
     * full ITERATED fixpoint is DuckDB-oracle-reproducible (p38) —
     * impossible for a float k-means, whose ulp drift compounds per
     * iteration. Returns `(vec_id, clab)`. */
-  def kmeansAssign(emb: DataFrame, iters: Int, dims: Int = 64,
-      literalMaxL: Int = LiteralCentroidMaxL): DataFrame =
-    kmeansAssignFull(emb, iters, dims, literalMaxL)
-      .select(col("vec_id"), col("clab"))
-
-  /** Centroid-count threshold splitting the two assignment codepaths.
-    * At or below it the collected centroids are re-emitted as literal
-    * struct-array SQL; above it the centroid matrix ships as ONE Spark
-    * broadcast read by the codegen'd [[graft.functions.ArgmaxDotE4]] /
-    * [[graft.functions.TopCellsDotE4]] expressions, so plan size,
-    * analysis cost, and generated code stay O(1) in L (SemDeDup-cited
-    * deployments run ~50k clusters; L=50k × dims=64 literals would be
-    * a multi-MB SQL string per Lloyd round).
-    *
-    * The default is 0 — the broadcast path ALWAYS. The literal form
-    * measured fastest at oracle cluster counts when the assignment was
-    * its own codegen stage, but the round-12 IVF profile (PROFILE_IVF)
-    * caught a 50× cliff the isolated measurement missed: fused into a
-    * join stage (ivfTopK's candidate scoring, semanticDedup's pair
-    * stage), the combined stage's generated code blows past the
-    * codegen limits, Spark silently falls back to INTERPRETED eval for
-    * the whole stage, and the interpreted literal argmax re-allocates
-    * all L×dims literal arrays per corpus row — ivfTopK at a 200k-row
-    * corpus: 78 s literal vs 1.2 s broadcast, identical results. The
-    * broadcast expressions generate O(1)-size code that never breaks
-    * stage fusion, and win or tie in every plan shape measured.
-    *
-    * Both paths share the exact int64 dot and (d desc, label asc)
-    * tie-break, so assignments are bit-identical — asserted
-    * path-vs-path in SimilaritySpec (which pins the literal form at
-    * literalMaxL=Int.MaxValue as an in-engine reference
-    * implementation); p40 hash-pins the broadcast path against the
-    * DuckDB oracle end-to-end, and StressSpec runs L=2048 through it. */
-  val LiteralCentroidMaxL = 0
+  def kmeansAssign(emb: DataFrame, iters: Int, dims: Int = 64): DataFrame =
+    kmeansAssignFull(emb, iters, dims).select(col("vec_id"), col("clab"))
 
   /** ONE Lloyd centroid build, shared by [[ivfTopK]] and
     * [[kmeansAssignFull]] (both paths are oracle-hash-pinned against
@@ -299,49 +263,46 @@ object Similarity {
   }
 
   /** The collected centroids' two consumer columns — argmax assignment
-    * (corpus side) and nprobe probe cells (query side) — each emitted
-    * through the [[LiteralCentroidMaxL]]-switched codepath. The
-    * broadcast is built lazily and shared by both columns. */
+    * (corpus side) and nprobe probe cells (query side) — both read ONE
+    * Spark broadcast of the L×dims centroid matrix through the
+    * codegen'd [[graft.functions.ArgmaxDotE4]] /
+    * [[graft.functions.TopCellsDotE4]] expressions, so plan size,
+    * analysis cost and generated code stay O(1) in L (SemDeDup-cited
+    * deployments run ~50k clusters). The same expressions keep stage
+    * fusion intact when the assignment sits inside a join stage: the
+    * literal struct-array SQL they replaced blew past the codegen
+    * limits there and fell back to interpreted eval — ivfTopK at a
+    * 200k-row corpus ran 78 s literal vs 1.2 s broadcast, identical
+    * results (PROFILE_IVF). Both columns use the exact int64 dot and
+    * the (d desc, label asc) tie-break; SimilaritySpec checks them
+    * against a plain Scala reference, p13/p38–p41/p50/p58/p68
+    * hash-pin them against DuckDB. The broadcast is built lazily and
+    * shared by both columns. */
   private[graft] final class CentroidSet(df: DataFrame,
-      centroids: Array[(Int, Array[Long])], literalMax: Int) {
+      centroids: Array[(Int, Array[Long])]) {
     require(centroids.nonEmpty, "no centroids: empty assignment frame")
-    private def cellsSql: String =
-      centroids.map { case (lab, c) =>
-        s"struct(dot_e4c(embedding, array(${c.mkString("L,")}L)) AS d, " +
-          s"${-lab} AS nl)"
-      }.mkString("array(", ", ", ")")
     private lazy val bc = df.sparkSession.sparkContext.broadcast(
       (centroids.map(_._1), centroids.map(_._2)))
     /** `clab`: label of the max-dot centroid, ties to smallest label. */
-    def assignCol: Column =
-      if (centroids.length <= literalMax)
-        expr(s"cast(-array_max($cellsSql).nl as int)")
-      else GraftPlanBridge.column(
-        ArgmaxDotE4(UnresolvedAttribute("embedding"), bc))
-    /** The `min(nprobe, L)` best cell labels, (d desc, label asc). The
-      * literal form sorts the (d, −label) structs ascending and
-      * reverses — d desc then label asc, the same order the broadcast
-      * expression maintains directly. */
-    def probeCol(nprobe: Int): Column =
-      if (centroids.length <= literalMax)
-        expr(s"transform(slice(reverse(array_sort($cellsSql)), 1, $nprobe)," +
-          s" s -> cast(-s.nl as int))")
-      else GraftPlanBridge.column(
-        TopCellsDotE4(UnresolvedAttribute("embedding"), bc, nprobe))
+    def assignCol: Column = GraftPlanBridge.column(
+      ArgmaxDotE4(UnresolvedAttribute("embedding"), bc))
+    /** The `min(nprobe, L)` best cell labels, (d desc, label asc). */
+    def probeCol(nprobe: Int): Column = GraftPlanBridge.column(
+      TopCellsDotE4(UnresolvedAttribute("embedding"), bc, nprobe))
   }
 
   /** [[kmeansAssign]] keeping the embedding column — what
     * [[semanticDedup]]'s pair stage consumes without re-joining the
     * corpus to its own assignment. */
   private[graft] def kmeansAssignFull(emb: DataFrame, iters: Int,
-      dims: Int, literalMaxL: Int = LiteralCentroidMaxL): DataFrame = {
+      dims: Int): DataFrame = {
     require(iters >= 1 && dims >= 1)
     ensureDotE8(emb)
     var assigned = emb.select(col("vec_id"), col("embedding"),
       col("label").cast("int").as("clab"))
     (1 to iters).foreach { _ =>
       val cells = new CentroidSet(assigned,
-        collectCentroids(assigned, "clab", dims), literalMaxL)
+        collectCentroids(assigned, "clab", dims))
       assigned = assigned.withColumn("clab", cells.assignCol)
     }
     assigned
@@ -355,9 +316,9 @@ object Similarity {
     * is all-pairs WITHIN a cell only: the caller sizes the cluster
     * count so cells stay small (the technique's own contract — its
     * reference deployments use ~50k clusters, an operating point the
-    * assignment reaches via the broadcast-matrix path past
-    * [[LiteralCentroidMaxL]]), giving O(n²/L) candidate
-    * work spread cell-parallel instead of O(n²) global; the self-join
+    * assignment reaches via [[CentroidSet]]'s broadcast matrix),
+    * giving O(n²/L) candidate work spread cell-parallel instead of
+    * O(n²) global; the self-join
     * shuffles on `clab`, so each cell's pairs build where its vectors
     * already live. Duplicates missed across cell boundaries are the
     * documented recall trade — the same contract as [[annLsh]]'s
@@ -373,10 +334,9 @@ object Similarity {
     * same honest way. Cell sizes are one tiny aggregate (≤ L rows,
     * broadcast back). */
   def semanticDedup(emb: DataFrame, threshold: Double,
-      iters: Int = 1, dims: Int = 64, maxCell: Int = 1000,
-      literalMaxL: Int = LiteralCentroidMaxL): DataFrame = {
+      iters: Int = 1, dims: Int = 64, maxCell: Int = 1000): DataFrame = {
     ensureDotE8(emb)
-    val assigned = kmeansAssignFull(emb, iters, dims, literalMaxL)
+    val assigned = kmeansAssignFull(emb, iters, dims)
       .withColumn("nrm", expr("dot_e8(embedding, embedding)"))
     val sizes = assigned.groupBy(col("clab"))
       .agg(count(lit(1)).as("cell_n"), min(col("vec_id")).as("anchor"))
@@ -439,10 +399,9 @@ object Similarity {
     * map-side combine) — no per-cell sort, no corpus shuffle beyond
     * the aggregate. Output: (clab, rn, vec_id, h_quota). */
   def clusterBalancedSample(emb: DataFrame, k: Int, iters: Int = 1,
-      dims: Int = 64, salt: String = "diverse",
-      literalMaxL: Int = LiteralCentroidMaxL): DataFrame = {
+      dims: Int = 64, salt: String = "diverse"): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val assigned = kmeansAssignFull(emb, iters, dims, literalMaxL)
+    val assigned = kmeansAssignFull(emb, iters, dims)
       .select(col("clab"), col("vec_id").as("doc_id"))
     Sampling.quotaSample(assigned, Seq("clab"), k, salt)
       .select(col("clab"), col("rn"), col("doc_id").as("vec_id"),
@@ -735,10 +694,8 @@ object Similarity {
     * Scale shape: codebook training is one corpus-scan hash aggregate
     * over the m-exploded subvectors (state = m×codes×(dims/m+1) longs
     * through the driver — the broadcast-Lloyd layout, O(1) in corpus
-    * size); encoding is a pure per-row projection (the m argmin cells
-    * emitted as literal dot_e4c structs, each over a dims/m slice —
-    * m×codes cells of dims/m components ≈ the documented
-    * [[LiteralCentroidMaxL]] literal budget). Nothing ever shuffles
+    * size); encoding is a pure per-row projection ([[pqEncodeWith]]'s
+    * broadcast codebook expression). Nothing ever shuffles
     * the corpus. All arithmetic int64-exact, so the codebooks AND
     * codes are DuckDB-reproducible (p56).
     *
@@ -775,8 +732,7 @@ object Similarity {
     * per subspace the argmin-distance codebook cell, computed as
     * argmax of `2·(x·c) − ‖c‖²` (equal up to the code-independent
     * ‖x‖², so int64-exact with no squared-difference blowup), ties to
-    * the smallest code — the [[CentroidSet]] `array_max(struct(d,
-    * −code))` idiom per subspace. */
+    * the smallest code — the [[CentroidSet]] tie-break per subspace. */
   def pqEncode(emb: DataFrame, m: Int = 8, codes: Int = 16,
       dims: Int = 64): DataFrame =
     pqEncodeWith(emb, pqCodebooks(emb, m, codes, dims), m, dims)
@@ -789,9 +745,7 @@ object Similarity {
     * expression nodes and its analyzer+Janino cost dominated the p56
     * bench at the default 8×16 geometry; the broadcast expression
     * keeps the plan O(1) in the codebook size (same argument as
-    * [[LiteralCentroidMaxL]]'s large-L path, applied unconditionally
-    * here because PQ's m×codes product starts past the literal
-    * sweet spot). */
+    * [[CentroidSet]]'s broadcast centroid matrix). */
   private[graft] def pqEncodeWith(emb: DataFrame,
       books: Array[Array[(Int, Array[Long], Long)]], m: Int,
       dims: Int, keep: Seq[String] = Nil): DataFrame = {
@@ -887,14 +841,12 @@ object Similarity {
     * pinned by the p58 oracle, which replays probe order, cell
     * membership, codes, and table lookups exactly. */
   def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int, nprobe: Int = 2,
-      m: Int = 8, codes: Int = 16, dims: Int = 64,
-      literalMaxL: Int = LiteralCentroidMaxL): DataFrame = {
+      m: Int = 8, codes: Int = 16, dims: Int = 64): DataFrame = {
     ensureDotE8(emb)
     val spark = emb.sparkSession
     import spark.implicits._
     val sd = dims / m
-    val cells = new CentroidSet(emb,
-      collectCentroids(emb, "label", dims), literalMaxL)
+    val cells = new CentroidSet(emb, collectCentroids(emb, "label", dims))
     val books = pqCodebooks(emb, m, codes, dims)
     val corpus = pqEncodeWith(emb.withColumn("clab", cells.assignCol),
       books, m, dims, keep = Seq("clab"))

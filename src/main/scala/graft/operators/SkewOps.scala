@@ -43,6 +43,11 @@ object SkewOps {
     * (one scalar aggregate + the share filter over `dim`) is a
     * LATENCY constant (~1.3–1.4× plain on a local run, StressSpec),
     * paid per CALL before this cache and once per corpus after it.
+    * Measured against a per-call gate (in-JVM interleaved pairs over
+    * the six `hotSaltedJoin` queries p33/p37/p45/p47/p48/p66 in one
+    * session, DESIGN_CENSUS.md): per-call ran 1.82× the cached
+    * sequence at sf0.1 and 1.55× at sf1 — the gate re-aggregates the
+    * whole dim (a corpus-wide token model) on every call.
     * The hot set is ≤ 2·buckets keys by construction, so an entry is tiny;
     * the map is size-capped as a leak backstop. Caveat (shared with
     * every plan-keyed cache): a dim whose UNDERLYING FILES change

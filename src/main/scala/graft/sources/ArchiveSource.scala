@@ -46,6 +46,38 @@ trait ArchiveSource {
   def attHistory: DataFrame
 }
 
+object ArchiveSource {
+  /** Multi-type scan: resolve each requested attribute's data table
+    * from the catalog (`att_conf.data_type`, reference
+    * `hdbpp.py:404-410`), `scan` each table only for ITS attribute ids,
+    * and union with `value_r` widened to double (numeric Tango types
+    * only — string/encoded attributes need their own pipeline, as in
+    * the reference where they simply are not plottable).
+    *
+    * Scale: the catalog lookup is a driver-side collect of O(#requested
+    * attributes) rows — the same role as the reference's `configs`
+    * dict — and each per-table scan keeps the source's own pruning. */
+  private[sources] def resolvedUnion(src: ArchiveSource,
+      attConfIds: Seq[Int])(
+      scan: (String, Seq[Int]) => DataFrame): DataFrame = {
+    val wanted = src.attConf
+      .where(col("att_conf_id").isin(attConfIds: _*))
+      .select(col("att_conf_id"), col("data_type"))
+      .collect()
+      .map(r => r.getInt(0) -> r.getString(1))
+    val frames = wanted.groupBy { case (_, dt) => s"att_$dt" }
+      .toSeq.sortBy(_._1).map { case (tbl, ids) =>
+        scan(tbl, ids.map(_._1).toSeq)
+          .withColumn("value_r", col("value_r").cast("double"))
+      }
+    frames.reduceOption(_ unionByName _)
+      .getOrElse(src.spark.createDataFrame(
+        src.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        graft.model.TangoTypes.pointSchema(
+          org.apache.spark.sql.types.DoubleType)))
+  }
+}
+
 /** Parquet-backed archive laid out as
   * `root/att_scalar_<type>_<rw>/att_conf_id=…/period=…/…parquet`.
   * Both partition predicates prune at planning time. */
@@ -62,37 +94,15 @@ final class ParquetArchiveSource(val spark: SparkSession, root: String,
   def attParameter: DataFrame = spark.read.parquet(s"$root/att_parameter")
   def attHistory: DataFrame = spark.read.parquet(s"$root/att_history")
 
-  /** Multi-type scan: resolve each requested attribute's data table
-    * from the catalog (`att_conf.data_type`, reference
-    * `hdbpp.py:404-410`), scan each table only for ITS attribute ids,
-    * and union with `value_r` widened to double (numeric Tango types
-    * only — string/encoded attributes need their own pipeline, as in
-    * the reference where they simply are not plottable).
-    *
-    * Scale: the catalog lookup is a driver-side collect of O(#requested
-    * attributes) rows — the same role as the reference's `configs`
-    * dict — and each per-table scan keeps its own partition pruning on
-    * (att_conf_id, period). */
+  /** Multi-type scan ([[ArchiveSource.resolvedUnion]]), each per-type
+    * table pruned on (att_conf_id, period) like [[points]]. */
   def pointsResolved(attConfIds: Seq[Int], p0: String,
-      p1: String): DataFrame = {
-    val wanted = attConf
-      .where(col("att_conf_id").isin(attConfIds: _*))
-      .select(col("att_conf_id"), col("data_type"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getString(1))
-    val byTable = wanted.groupBy { case (_, dt) => s"att_$dt" }
-    val frames = byTable.toSeq.sortBy(_._1).map { case (tbl, ids) =>
+      p1: String): DataFrame =
+    ArchiveSource.resolvedUnion(this, attConfIds) { (tbl, ids) =>
       spark.read.parquet(s"$root/$tbl")
-        .where(col("att_conf_id").isin(ids.map(_._1).toIndexedSeq: _*)
+        .where(col("att_conf_id").isin(ids: _*)
           && col("period").between(p0, p1))
-        .withColumn("value_r", col("value_r").cast("double"))
     }
-    frames.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.TangoTypes.pointSchema(
-          org.apache.spark.sql.types.DoubleType)))
-  }
 }
 
 /** Adapter exposing the driver's synthetic `events` table
@@ -297,31 +307,14 @@ final class CassandraArchiveSource(val spark: SparkSession,
   def attParameter: DataFrame = read("att_parameter")
   def attHistory: DataFrame = read("att_history")
 
-  /** Multi-type scan with catalog-driven table resolution — the same
-    * shape as [[ParquetArchiveSource.pointsResolved]] (reference
-    * `hdbpp.py:404-410`): O(#requested attrs) catalog rows collected
-    * driver-side, one pruned per-type scan each, union with `value_r`
-    * widened. Partition-key pushdown per scan as in [[points]]. */
+  /** Multi-type scan ([[ArchiveSource.resolvedUnion]]) with
+    * partition-key pushdown per scan as in [[points]]. */
   def pointsResolved(attConfIds: Seq[Int], p0: String,
-      p1: String): DataFrame = {
-    val wanted = attConf
-      .where(col("att_conf_id").isin(attConfIds: _*))
-      .select(col("att_conf_id"), col("data_type"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getString(1))
-    val frames = wanted.groupBy { case (_, dt) => s"att_$dt" }
-      .toSeq.sortBy(_._1).map { case (tbl, ids) =>
-        read(tbl)
-          .where(CassandraArchiveSource.pointsPredicate(
-            ids.map(_._1).toSeq, p0, p1))
-          .withColumn("value_r", col("value_r").cast("double"))
-      }
-    frames.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.TangoTypes.pointSchema(
-          org.apache.spark.sql.types.DoubleType)))
-  }
+      p1: String): DataFrame =
+    ArchiveSource.resolvedUnion(this, attConfIds) { (tbl, ids) =>
+      read(tbl)
+        .where(CassandraArchiveSource.pointsPredicate(ids, p0, p1))
+    }
 }
 
 object CassandraArchiveSource {
@@ -340,7 +333,9 @@ object CassandraArchiveSource {
   val TableOption = "table"
 
   /** Inclusive day enumeration "YYYY-MM-DD" — the reference's
-    * `timestamp_to_period_range` (`hdbpp.py:16-21`). */
+    * `timestamp_to_period_range` (`hdbpp.py:16-21`); empty when p0 is
+    * after p1. Also [[graft.cache.ArchiveCache.PeriodCache.range]]'s
+    * day fan-out. */
   def periods(p0: String, p1: String): Seq[String] =
     Iterator.iterate(java.time.LocalDate.parse(p0))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse(p1)))

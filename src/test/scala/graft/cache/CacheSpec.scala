@@ -33,33 +33,6 @@ class CacheSpec extends AnyFunSuite {
     cache.invalidate()
   }
 
-  test("PeriodCache: maxPersistedDays LRU-evicts the coldest closed day " +
-    "(reference's size-bounded cache, utils.py:174-236)") {
-    val backing = Map(
-      "2024-01-01" -> Seq((1, 100L, 1.0)),
-      "2024-01-02" -> Seq((1, 200L, 2.0)),
-      "2024-01-03" -> Seq((1, 300L, 3.0)))
-    val cache = new ArchiveCache.PeriodCache(
-      p => backing(p).toDF("att_conf_id", "t", "value_r"),
-      () => "2024-09-01", maxPersistedDays = 2)
-    assert(cache.period("2024-01-01").count() == 1)
-    assert(cache.period("2024-01-02").count() == 1)
-    assert(cache.fetches == 2 && cache.evictions == 0)
-    // touch day 1 so day 2 is now the LRU victim
-    assert(cache.period("2024-01-01").count() == 1)
-    assert(cache.fetches == 2) // still a hit
-    // a third day exceeds the bound → exactly one eviction
-    assert(cache.period("2024-01-03").count() == 1)
-    assert(cache.fetches == 3 && cache.evictions == 1)
-    // the recently-touched day survived…
-    assert(cache.period("2024-01-01").count() == 1)
-    assert(cache.fetches == 3)
-    // …the cold one was released and transparently re-fetches
-    assert(cache.period("2024-01-02").count() == 1)
-    assert(cache.fetches == 4 && cache.evictions == 2)
-    cache.invalidate()
-  }
-
   test("PeriodCache: a hit never waits behind another day's in-flight " +
     "fetch; same-day callers share one fetch") {
     val fetchGate = new java.util.concurrent.CountDownLatch(1)
@@ -112,7 +85,7 @@ class CacheSpec extends AnyFunSuite {
         Seq((1, 100L, 1.0)).toDF("att_conf_id", "t", "value_r")
           .where(lit(fetchTag.incrementAndGet()) >= 0)
       },
-      () => "2024-09-01", maxPersistedDays = 1)
+      () => "2024-09-01")
     val ex = java.util.concurrent.Executors.newSingleThreadExecutor()
     try {
       val first = ex.submit(
@@ -120,9 +93,9 @@ class CacheSpec extends AnyFunSuite {
           def call() = cache.period("2024-01-01")
         })
       assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS))
-      // over the bound while day 1 is mid-compute → its slot is
+      // invalidate() while day 1 is mid-compute → its slot is
       // removed WITHOUT unpersist (ready not yet set)…
-      cache.period("2024-01-02")
+      cache.invalidate()
       // …and the key is re-created by a fresh caller before the first
       // creator finishes — a containsKey post-insert check would now
       // see the NEW entry and leak the first creator's persisted frame
@@ -133,7 +106,7 @@ class CacheSpec extends AnyFunSuite {
       while (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
         && System.nanoTime() < deadline) Thread.sleep(50)
       assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "the mid-compute-evicted creator's frame stayed persisted")
+        "the mid-compute-invalidated creator's frame stayed persisted")
       assert(df.count() == 1L) // still a valid (merely unpersisted) frame
       // the slot the map tracks is untouched by the loser's release
       assert(recreated.storageLevel !=

@@ -124,146 +124,16 @@ class MiscSpec extends AnyFunSuite {
     assert(r(0).getLong(5) == r(1).getLong(5)) // checksum deterministic
     assert(r(0).getSeq[Float](6).length == 8) // 8 histogram buckets
     assert(math.abs(r(0).getSeq[Float](6).sum - 1.0f) < 1e-6)
-  }
-
-  test("MediaCodec ServiceLoader: test codec claims its kind, fake backstops") {
-    // direct resolution: the loader found the test-classpath provider…
-    assert(MediaCodec.forKind("image/test").isInstanceOf[TestMediaCodec])
-    // …the sandbox default still owns its kind and any unclaimed kind
-    assert(MediaCodec.forKind("image/fake").isInstanceOf[FakeCodecProvider])
-    assert(MediaCodec.forKind("audio/unknown").isInstanceOf[FakeCodecProvider])
-    // through the operator: per-kind dispatch inside one partition
-    val media = Seq(
-      (1L, "image/test", "abc".getBytes("UTF-8")),
-      (2L, "image/fake", "abc".getBytes("UTF-8")),
-      (3L, "audio/unknown", "abc".getBytes("UTF-8")))
-      .toDF("doc_id", "kind", "payload").coalesce(1)
-    val r = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
-    assert(r(0).width == 7 && r(0).height == 9 && r(0).checksum == 42L)
-    val fake = Multimodal.FakeCodec.decode(
-      Multimodal.MediaRow(2L, "image/fake", "abc".getBytes("UTF-8")))
-    assert(r(1).checksum == fake.checksum && r(1).width == fake.width)
-    assert(r(2).checksum == fake.checksum) // fallback decode, same math
-  }
-
-  test("ImageIoCodecProvider decodes real PNGs through the ServiceLoader, " +
-    "marks corrupt payloads, never claims fake kinds") {
-    // a real 4×3 PNG written by the JDK encoder: top row white, rest black
-    val img = new java.awt.image.BufferedImage(4, 3,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    (0 until 4).foreach(x => img.setRGB(x, 0, 0xffffff))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val png = bos.toByteArray
-    // resolution: the provider is registered via META-INF/services
-    assert(MediaCodec.forKind("image/png").isInstanceOf[ImageIoCodecProvider])
-    assert(MediaCodec.forKind("image/png;thumb")
-      .isInstanceOf[ImageIoCodecProvider])
-    assert(MediaCodec.forKind("image/fake").isInstanceOf[FakeCodecProvider])
-    // through the operator: one real decode, one corrupt marker
-    val media = Seq(
-      (1L, "image/png", png),
-      (2L, "image/png", "not a png at all".getBytes("UTF-8")))
-      .toDF("doc_id", "kind", "payload")
-    val r = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
-    assert(r(0).width == 4 && r(0).height == 3)
-    val crc = new java.util.zip.CRC32
-    crc.update(png)
-    assert(r(0).checksum == crc.getValue)
-    // luminance histogram: 4 white pixels in the top bin, 8 black in
-    // bin 0, of 12 total
-    val feat = r(0).feature
-    assert(math.abs(feat(0) - 8f / 12f) < 1e-6)
-    assert(math.abs(feat(7) - 4f / 12f) < 1e-6)
-    assert(math.abs(feat.sum - 1.0f) < 1e-6)
-    // corrupt: zero dims, zero features, checksum still computed
-    assert(r(1).width == 0 && r(1).height == 0)
-    assert(r(1).feature.forall(_ == 0f) && r(1).checksum != 0L)
-  }
-
-  test("WavCodecProvider decodes real PCM WAV through the ServiceLoader, " +
-    "marks corrupt payloads, never claims fake kinds") {
-    // a JDK-written WAV: 100 frames of 16-bit mono silence at 8 kHz,
-    // with 10 full-scale-positive samples planted at the front
-    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-    val pcm = new Array[Byte](200)
-    (0 until 10).foreach { i =>
-      pcm(2 * i) = 0xff.toByte // little-endian 0x7fff
-      pcm(2 * i + 1) = 0x7f.toByte
-    }
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, 100)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    val wav = bos.toByteArray
-    assert(MediaCodec.forKind("audio/wav").isInstanceOf[WavCodecProvider])
-    assert(MediaCodec.forKind("audio/x-wav;thumb")
-      .isInstanceOf[WavCodecProvider])
-    assert(MediaCodec.forKind("audio/fake").isInstanceOf[FakeCodecProvider])
-    val media = Seq(
-      (1L, "audio/wav", wav),
-      (2L, "audio/wav", "not a riff file".getBytes("UTF-8")))
-      .toDF("doc_id", "kind", "payload")
-    val r = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
-    // audio geometry in the image-shaped dims: channels × sample rate
-    assert(r(0).width == 1 && r(0).height == 8000)
-    val crc = new java.util.zip.CRC32
-    crc.update(wav)
-    assert(r(0).checksum == crc.getValue)
-    // amplitude histogram: 90 silent samples in bin 0, 10 full-scale
-    // in bin 7 (32767 >> 12)
-    assert(math.abs(r(0).feature(0) - 90f / 100f) < 1e-6)
-    assert(math.abs(r(0).feature(7) - 10f / 100f) < 1e-6)
-    assert(math.abs(r(0).feature.sum - 1.0f) < 1e-6)
-    // corrupt: zero dims, zero features, checksum still computed
-    assert(r(1).width == 0 && r(1).height == 0)
-    assert(r(1).feature.forall(_ == 0f) && r(1).checksum != 0L)
-  }
-
-  test("GifVideoCodecProvider decodes an animated GIF as real video: " +
-    "every frame's pixels, corrupt marker") {
-    // a JDK-written 3-frame 4×2 animation: black, white, half-and-half
-    def solid(rgb: Int) = {
-      val im = new java.awt.image.BufferedImage(4, 2,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 until 4).foreach(x => (0 until 2).foreach(y => im.setRGB(x, y, rgb)))
-      im
-    }
-    val half = solid(0x000000)
-    (0 until 4).foreach(x => half.setRGB(x, 0, 0xffffff))
-    val frames = Seq(solid(0x000000), solid(0xffffff), half)
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    frames.foreach(im => writer.writeToSequence(
-      new javax.imageio.IIOImage(im, null, null), null))
-    writer.endWriteSequence()
-    writer.dispose()
-    ios.close()
-    val gif = bos.toByteArray
-    // claims routing: video/gif here, still image/gif unchanged, mp4 fake
-    assert(MediaCodec.forKind("video/gif").isInstanceOf[GifVideoCodecProvider])
-    assert(MediaCodec.forKind("image/gif").isInstanceOf[ImageIoCodecProvider])
-    assert(MediaCodec.forKind("video/mp4").isInstanceOf[FakeCodecProvider])
-    // whole-animation decode through the operator
-    val media = Seq(
-      (1L, "video/gif", gif),
-      (2L, "video/gif", "not a gif".getBytes("UTF-8")))
-      .toDF("doc_id", "kind", "payload")
-    val r = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
-    assert(r(0).width == 4 && r(0).height == 2)
-    val crc = new java.util.zip.CRC32
-    crc.update(gif)
-    assert(r(0).checksum == crc.getValue)
-    // luminance over ALL 24 pixels of the 3 frames: 12 black (bin 0) +
-    // 12 white (bin 7) — a first-frame-only decode would read all black
-    assert(math.abs(r(0).feature(0) - 0.5f) < 1e-6)
-    assert(math.abs(r(0).feature(7) - 0.5f) < 1e-6)
-    assert(r(1).width == 0 && r(1).height == 0) // corrupt marker
-    assert(r(1).feature.forall(_ == 0f) && r(1).checksum != 0L)
+    // every kind gets the same decode, not only `image/fake`
+    val wav = Multimodal.MediaRow(2L, "audio/wav", "RIFF....WAVE".getBytes("UTF-8"))
+    val got = Multimodal.extractFeatures(
+      Seq((wav.doc_id, wav.kind, wav.payload)).toDF("doc_id", "kind", "payload"))
+      .collect().head
+    val want = Multimodal.FakeCodec.decode(wav)
+    assert(got.kind == "audio/wav")
+    assert((got.byte_len, got.width, got.height, got.checksum) ==
+      (want.byte_len, want.width, want.height, want.checksum))
+    assert(got.feature.toSeq == want.feature.toSeq)
   }
 
   test("Model path codec round-trips 5-part attribute paths (C1)") {

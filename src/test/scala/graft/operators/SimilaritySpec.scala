@@ -145,7 +145,7 @@ class SimilaritySpec extends AnyFunSuite {
       (5L, Array(0.0f, 0.8f, 0.2f, 0.0f), 1)) // wrong init
       .toDF("vec_id", "embedding", "label")
     val r1 = Similarity.kmeansAssign(emb, iters = 1, dims = 4)
-    // assignment must stay join-free (centroids travel as literals)
+    // assignment must stay join-free (centroids travel as a broadcast)
     val joins = r1.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     assert(joins.isEmpty, s"kmeans assignment must not join: $joins")
@@ -161,29 +161,47 @@ class SimilaritySpec extends AnyFunSuite {
     assert(c3 == c1)
   }
 
-  test("broadcast-matrix assignment is bit-identical to the literal path " +
+  // Plain Scala reference for the centroid assignment and probe order:
+  // e4-quantized components, floor-div centroid means per label, exact
+  // int64 dots, cells ranked by (dot desc, label asc).
+  private def quant(e: Array[Float]): Array[Long] =
+    e.map(graft.functions.DotE8.roundE4)
+  private def dotRef(a: Array[Long], b: Array[Long]): Long =
+    a.indices.map(i => a(i) * b(i)).sum
+  private def centroidsRef(vs: Seq[(Array[Long], Int)]): Seq[(Int, Array[Long])] =
+    vs.groupBy(_._2).toSeq.sortBy(_._1).map { case (lab, g) =>
+      lab -> g.head._1.indices.map(d =>
+        Math.floorDiv(g.map(_._1(d)).sum, g.size.toLong)).toArray
+    }
+  private def rankedCells(e: Array[Long], cs: Seq[(Int, Array[Long])]): Seq[Int] =
+    cs.sortBy { case (lab, c) => (-dotRef(e, c), lab) }.map(_._1)
+
+  test("broadcast-matrix assignment matches a Scala Lloyd reference " +
     "(values, ties, join-free plan)") {
     val rnd = new scala.util.Random(7)
     // labels 1 and 2 hold IDENTICAL single vectors → identical centroids
     // → every row's dots against cells 1 and 2 tie exactly, and the
-    // smallest-label break must agree across both codepaths
+    // break must go to the smallest label
     val tied = Seq(
       (900L, Array.fill(16)(0.25f), 1),
       (901L, Array.fill(16)(0.25f), 2))
-    val emb = ((0L until 300L).map { i =>
+    val rows = (0L until 300L).map { i =>
       (i, Array.fill(16)(rnd.nextFloat() * 2 - 1), (i % 10).toInt + 3)
-    } ++ tied).toDF("vec_id", "embedding", "label")
-    def cells(lm: Int): Map[Long, Int] =
-      Similarity.kmeansAssign(emb, iters = 2, dims = 16, literalMaxL = lm)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaLiteral = cells(Int.MaxValue)
-    val viaBroadcast = cells(0)
-    assert(viaBroadcast == viaLiteral)
+    } ++ tied
+    val emb = rows.toDF("vec_id", "embedding", "label")
+    // two Lloyd rounds from the label init
+    var ref = rows.map { case (id, e, lab) => (id, quant(e), lab) }
+    (1 to 2).foreach { _ =>
+      val cs = centroidsRef(ref.map(r => (r._2, r._3)))
+      ref = ref.map { case (id, e, _) => (id, e, rankedCells(e, cs).head) }
+    }
+    val viaBroadcast = Similarity.kmeansAssign(emb, iters = 2, dims = 16)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(viaBroadcast == ref.map(r => r._1 -> r._3).toMap)
     assert(viaBroadcast(900L) == 1 && viaBroadcast(901L) == 1,
-      "exact tie must break to the smallest label on both paths")
-    // the broadcast path must stay join-free like the literal one
-    val r = Similarity.kmeansAssign(emb, iters = 1, dims = 16,
-      literalMaxL = 0)
+      "exact tie must break to the smallest label")
+    // the broadcast assignment is a projection, never a join
+    val r = Similarity.kmeansAssign(emb, iters = 1, dims = 16)
     val joins = r.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     assert(joins.isEmpty, s"broadcast kmeans assignment must not join: $joins")
@@ -216,25 +234,38 @@ class SimilaritySpec extends AnyFunSuite {
     bc.destroy()
   }
 
-  test("ivfTopK broadcast path matches the literal path incl. nprobe " +
+  test("ivfTopK broadcast path matches a Scala reference incl. nprobe " +
     "probe cells") {
     val rnd = new scala.util.Random(19)
-    val emb = (0L until 200L).map { i =>
+    val rows = (0L until 200L).map { i =>
       (i, Array.fill(8)(rnd.nextFloat() * 2 - 1), (i % 6).toInt + 1)
-    }.toDF("vec_id", "embedding", "label")
-    def res(lm: Int): Set[(Long, Int, Long, Long, Long)] =
-      Similarity.ivfTopK(emb, col("vec_id") < 5, k = 3, dims = 8,
-        nprobe = 3, literalMaxL = lm).collect()
+    }
+    val emb = rows.toDF("vec_id", "embedding", "label")
+    // one Lloyd step from the label init, then exact within-cell top-k
+    // over the query's `nprobe` best cells
+    val qv = rows.map { case (id, e, lab) => (id, quant(e), lab) }
+    val cs = centroidsRef(qv.map(r => (r._2, r._3)))
+    val cell = qv.map { case (id, e, _) => id -> rankedCells(e, cs).head }.toMap
+    def ref(qids: Set[Long], k: Int,
+        nprobe: Int): Set[(Long, Int, Long, Long, Long)] =
+      qv.filter(r => qids(r._1)).flatMap { case (qid, qe, _) =>
+        rankedCells(qe, cs).take(nprobe).flatMap { c =>
+          qv.filter(r => r._1 != qid && cell(r._1) == c)
+            .map(r => (r._1, c, dotRef(qe, r._2)))
+        }.sortBy { case (nid, _, d) => (-d, nid) }.take(k).zipWithIndex
+          .map { case ((nid, c, d), i) => (qid, c, i + 1L, nid, d) }
+      }.toSet
+    def res(filter: org.apache.spark.sql.Column, k: Int,
+        nprobe: Int): Set[(Long, Int, Long, Long, Long)] =
+      Similarity.ivfTopK(emb, filter, k = k, dims = 8, nprobe = nprobe)
+        .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
-    assert(res(0) == res(Int.MaxValue))
-    // nprobe past L returns every cell, like the literal slice
-    def resAll(lm: Int): Set[(Long, Int, Long, Long, Long)] =
-      Similarity.ivfTopK(emb, col("vec_id") === 0, k = 2, dims = 8,
-        nprobe = 99, literalMaxL = lm).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toSet
-    assert(resAll(0) == resAll(Int.MaxValue))
+    assert(res(col("vec_id") < 5, k = 3, nprobe = 3) ==
+      ref((0L until 5L).toSet, k = 3, nprobe = 3))
+    // nprobe past L (= 6 cells) probes every cell
+    assert(res(col("vec_id") === 0, k = 2, nprobe = 99) ==
+      ref(Set(0L), k = 2, nprobe = 99))
   }
 
   test("semanticDedup drops the larger id of a within-cell near-pair, " +
