@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.operators.{Catalog, Extrema, Raster, Resample}
 import graft.render.Render
 
@@ -93,11 +94,14 @@ object ArchiveApi {
     * range renders at most this many rows. */
   val DefaultRawRowCap: Int = 1000000
 
-  /** Target rows per range partition of the raw render's final sort —
-    * the unit `toLocalIterator` buffers driver-side. 64k rows of
-    * (name, t, value) is a few MB; at the 1M default cap the regroup
-    * spreads over ~16 partitions, so peak driver state is ~1/16 of the
-    * cap instead of the whole cap. */
+  /** The raw render's driver-side unit, used twice by [[rawQuery]]:
+    * its first collect asks for one more row than this, so an answer
+    * of at most this many rows comes back whole in one collect; a
+    * larger answer is regrouped into range partitions of about this
+    * many rows, which `toLocalIterator` buffers one at a time. 64k
+    * rows of (name, t, value) is a few MB; an answer larger than one
+    * batch spreads over ~16 partitions at the 1M default cap, so peak
+    * driver state is ~1/16 of the cap instead of the whole cap. */
   val RawRenderBatchRows: Int = 65536
 
   /** The distributed plan behind [[rawQuery]], exposed so RenderSpec
@@ -105,6 +109,11 @@ object ArchiveApi {
     * REAL frame instead of a reconstruction: cap on the time-first
     * sort, then the request-attribute-major re-sort whose RANGE
     * partitions are what `toLocalIterator` pulls one at a time.
+    * `ceil(maxRows / batchRows)` is the partition count: [[rawQuery]]
+    * first passes its one-batch page as both `maxRows` and `batchRows`
+    * (one partition, one local sort, collected whole); only an answer
+    * larger than that page takes the range regroup at the default
+    * `batchRows`.
     *
     * The explicit `repartitionByRange` before the regroup sort is
     * load-bearing: `limit(maxRows)` plans TakeOrderedAndProject, whose
@@ -166,21 +175,32 @@ object ArchiveApi {
     * the render covers [t0, t_cap] uniformly across EVERY requested
     * attribute (an attribute-first cap would silently drop whole
     * later-sorted attributes — indistinguishable from "no data").
-    * (2) The surviving ≤cap rows are RE-SORTED DISTRIBUTED into
-    * request-attribute-major order and streamed through
-    * [[Render.SeriesStream]]: `toLocalIterator` pulls one sort
-    * partition at a time and every row appends straight into the
-    * output buffer, so peak driver state beyond the response payload
-    * itself is one partition of rows — not the old per-attribute
-    * LinkedHashMap that buffered all ≤cap rows a second time. The cap
-    * bounds the intervaled (resampled) path too: a micro-interval over
-    * a wide range explodes the same way raw points do. */
+    * (2) The surviving rows are re-sorted into request-attribute-major
+    * order and rendered through [[Render.SeriesStream]], sized by the
+    * ANSWER, not the cap. The first collect caps at one more row than
+    * [[RawRenderBatchRows]] (or at `maxRows`, if smaller) and sorts
+    * in one partition: one job for a raw export, two for an intervaled
+    * one. When it comes back short of that page, or the page is the
+    * cap, it IS the whole answer and renders as is. Otherwise the page
+    * is dropped and the ≤cap rows are RE-SORTED DISTRIBUTED into range
+    * partitions of about one batch; `toLocalIterator` pulls one at a
+    * time, so peak driver state beyond the response payload itself is
+    * one batch of rows on either path. Only an answer larger than a
+    * batch pays the top-k twice. The cap bounds the intervaled
+    * (resampled) path too: a micro-interval over a wide range explodes
+    * the same way raw points do. */
   def rawQuery(points: DataFrame, attrNames: Seq[String],
       t0Us: Long, t1Us: Long, interval: Option[String],
       asCsv: Boolean, maxRows: Int = DefaultRawRowCap): String = {
-    val regrouped =
-      rawQueryFrame(points, attrNames, t0Us, t1Us, interval, maxRows)
-    val it = regrouped.toLocalIterator()
+    val page = math.min(maxRows, RawRenderBatchRows + 1)
+    val whole = Option(rawQueryFrame(points, attrNames, t0Us, t1Us,
+        interval, page, batchRows = page).collect())
+      .filter(rows => rows.length < page || page == maxRows)
+    val it: Iterator[Row] = whole match {
+      case Some(rows) => rows.iterator
+      case None => rawQueryFrame(points, attrNames, t0Us, t1Us, interval,
+        maxRows).toLocalIterator().asScala
+    }
     val w: Render.SeriesStream =
       if (asCsv) new Render.CsvStream(new java.lang.StringBuilder)
       else new Render.GrafanaStream(new java.lang.StringBuilder)

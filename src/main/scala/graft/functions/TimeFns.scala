@@ -33,7 +33,10 @@ object TimeFns {
 
   /** Parse an interval string like "500ms", "30s", "15m", "2h", "1d"
     * into microseconds. Unit set mirrors data.py:37-42 (+h/d which
-    * pandas accepted natively). */
+    * pandas accepted natively). A zero interval, or one past
+    * `Long.MaxValue` µs, is an `IllegalArgumentException` here rather
+    * than a division by zero or a wrapped negative Δ once the query
+    * runs. */
   def intervalUs(freq: String): Long = {
     val m = "^([0-9]+)(ms|us|s|m|h|d)$".r
     freq.trim match {
@@ -46,7 +49,13 @@ object TimeFns {
           case "h" => 3600L * 1000000L
           case "d" => 86400L * 1000000L
         }
-        n.toLong * k
+        val d = try Math.multiplyExact(n.toLong, k) catch {
+          case _: ArithmeticException => throw new IllegalArgumentException(
+            s"interval '$freq' overflows a 64-bit µs count")
+        }
+        if (d <= 0) throw new IllegalArgumentException(
+          s"interval must be positive, got '$freq'")
+        d
       case other => throw new IllegalArgumentException(
         s"bad interval '$other' (expected e.g. 30s, 15m, 500ms)")
     }

@@ -32,17 +32,16 @@ import org.apache.spark.sql.functions._
 object TimeJoins {
 
   /** As-of join: for every left row, the most recent right row with
-    * `right(rightTime) <= left(leftTime)` (strictly `<` when
-    * `inclusive = false`) within the same `keyCols` group; right
-    * payload columns `valueCols` are appended (null when no right row
-    * precedes). Ties on the right time are broken toward the LARGEST
+    * `right(rightTime) <= left(leftTime)` within the same `keyCols`
+    * group; right payload columns `valueCols` are appended (null when
+    * no right row precedes). Ties on the right time are broken toward the LARGEST
     * `rightTie` value — pass a unique id column for determinism.
     *
     * All left columns are preserved; `valueCols` must not collide with
     * left column names. */
   def asofJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       leftTime: String, rightTime: String, valueCols: Seq[String],
-      rightTie: String, inclusive: Boolean = true): DataFrame = {
+      rightTie: String): DataFrame = {
     val leftPayload = left.columns.filterNot(keyCols.contains).toSeq
     require(valueCols.forall(!left.columns.contains(_)),
       "valueCols collide with left columns")
@@ -68,14 +67,12 @@ object TimeJoins {
           col(rightTie).cast("long").as("_tie"),
           struct(valueCols.map(col): _*).as("_payload")) ++
         leftPayload.map(c => lit(null).cast(lSchema(c).dataType).as(c)): _*)
-    // inclusive: right rows sort BEFORE left rows at an equal time
-    // (is_left ascending puts 0 first), so an equal-time right row is
-    // visible; exclusive flips the side order. _tie orders equal-time
-    // right rows so `last` picks the largest tie deterministically.
-    val sideOrder =
-      if (inclusive) col("_is_left").asc else col("_is_left").desc
+    // right rows sort BEFORE left rows at an equal time (is_left
+    // ascending puts 0 first), so an equal-time right row is visible.
+    // _tie orders equal-time right rows so `last` picks the largest tie
+    // deterministically.
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_t").asc, sideOrder, col("_tie").asc)
+      .orderBy(col("_t").asc, col("_is_left").asc, col("_tie").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     lTagged.unionByName(rTagged)
       .select(keyCols.map(col) ++ Seq(col("_is_left")) ++
@@ -96,14 +93,14 @@ object TimeJoins {
     * bucket are done; rows whose predecessor lies in an EARLIER bucket
     * take a carry-in computed from the per-(key, bucket) last-right
     * table (tiny: one row per non-empty cell) with a window over
-    * buckets. Carry-in needs no inclusive/exclusive care: an
-    * equal-time right row is by definition in the SAME bucket.
+    * buckets. Carry-in needs no equal-time care: an equal-time right
+    * row is by definition in the SAME bucket.
     * Cost: one extra shuffle of the cell summary — the classic
     * bounded-state trade. */
   def asofJoinBucketed(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], leftTime: String, rightTime: String,
-      valueCols: Seq[String], rightTie: String, bucketUs: Long,
-      inclusive: Boolean = true): DataFrame = {
+      valueCols: Seq[String], rightTie: String,
+      bucketUs: Long): DataFrame = {
     require(bucketUs > 0)
     val leftPayload = left.columns.filterNot(keyCols.contains).toSeq
     require(valueCols.forall(!left.columns.contains(_)),
@@ -135,10 +132,8 @@ object TimeJoins {
     val u = lTagged.unionByName(rTagged)
       .withColumn("_b", expr(s"_t div ${bucketUs}L")).persist()
     // pass 1: merge within each (key, bucket) cell — bounded tasks
-    val sideOrder =
-      if (inclusive) col("_is_left").asc else col("_is_left").desc
     val wCell = Window.partitionBy((keyCols :+ "_b").map(col): _*)
-      .orderBy(col("_t").asc, sideOrder, col("_tie").asc)
+      .orderBy(col("_t").asc, col("_is_left").asc, col("_tie").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val inCell = u.select(
       (keyCols :+ "_b").map(col) ++ Seq(col("_is_left")) ++

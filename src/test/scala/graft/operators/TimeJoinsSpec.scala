@@ -34,16 +34,6 @@ class TimeJoinsSpec extends AnyFunSuite {
       ("c50", -1L))) // no right rows for key
   }
 
-  test("asofJoin exclusive: equal-time right row is not visible") {
-    val r = TimeJoins.asofJoin(left, right, Seq("k"),
-      leftTime = "t", rightTime = "rt", valueCols = Seq("rid", "v"),
-      rightTie = "rid", inclusive = false)
-      .orderBy("k", "t").collect()
-      .map(row => (row.getString(2),
-        if (row.isNullAt(3)) -1L else row.getLong(3)))
-    assert(r.head == (("a10", -1L))) // rt=10 == t=10 now excluded
-  }
-
   test("asofJoin: equal right times resolve to the largest tie id") {
     val dupRight = Seq(("a", 5L, 1L, 1.0), ("a", 5L, 9L, 9.0))
       .toDF("k", "rt", "rid", "v")
@@ -81,7 +71,7 @@ class TimeJoinsSpec extends AnyFunSuite {
       Seq("a", "b"), "rid", bucketUs = 100L))
   }
 
-  test("asofJoinBucketed: parity with asofJoin across widths and modes") {
+  test("asofJoinBucketed: parity with asofJoin across widths") {
     // rights in earlier buckets, empty buckets, tie at a bucket edge
     val l = Seq(
       ("a", 3L, "l3"), ("a", 19L, "l19"), ("a", 21L, "l21"),
@@ -91,14 +81,13 @@ class TimeJoinsSpec extends AnyFunSuite {
       ("a", 1L, 1L, 1.0), ("a", 19L, 2L, 2.0), ("a", 20L, 3L, 3.0),
       ("b", 40L, 4L, 4.0)) // b's right is after its left; c has none
       .toDF("k", "rt", "rid", "v")
-    for (w <- Seq(7L, 10L, 100L); inc <- Seq(true, false)) {
-      val plain = TimeJoins.asofJoin(l, r, Seq("k"), "t", "rt",
-        Seq("rid", "v"), "rid", inclusive = inc)
-        .collect().map(_.toSeq).toSet
+    val plain = TimeJoins.asofJoin(l, r, Seq("k"), "t", "rt",
+      Seq("rid", "v"), "rid").collect().map(_.toSeq).toSet
+    for (w <- Seq(7L, 10L, 100L)) {
       val bucketed = TimeJoins.asofJoinBucketed(l, r, Seq("k"), "t", "rt",
-        Seq("rid", "v"), "rid", bucketUs = w, inclusive = inc)
+        Seq("rid", "v"), "rid", bucketUs = w)
         .collect().map(_.toSeq).toSet
-      assert(bucketed == plain, s"width=$w inclusive=$inc")
+      assert(bucketed == plain, s"width=$w")
     }
   }
 
@@ -130,28 +119,25 @@ class TimeJoinsSpec extends AnyFunSuite {
         rnd.nextInt(100).toDouble))
     val l = lRows.toDF("k", "t", "lid")
     val r = rRows.toDF("k", "rt", "rid", "v")
-    for (inc <- Seq(true, false)) {
-      val got = TimeJoins.asofJoin(l, r, Seq("k"), "t", "rt",
-        Seq("rid", "v"), "rid", inclusive = inc)
-        .collect()
-        .map(row => (row.getString(0), row.getLong(1), row.getLong(2),
-          if (row.isNullAt(3)) -1L else row.getLong(3))).toSet
-      val want = lRows.map { case (k, t, lid) =>
-        val cands = rRows.filter(rr =>
-          rr._1 == k && (if (inc) rr._2 <= t else rr._2 < t))
-        val best = if (cands.isEmpty) -1L
-          else cands.maxBy(rr => (rr._2, rr._3))._3
-        (k, t, lid, best)
-      }.toSet
-      assert(got == want, s"inclusive=$inc")
-      // bucketed variant agrees on the same random data
-      val gotB = TimeJoins.asofJoinBucketed(l, r, Seq("k"), "t", "rt",
-        Seq("rid", "v"), "rid", bucketUs = 7L, inclusive = inc)
-        .collect()
-        .map(row => (row.getString(0), row.getLong(1), row.getLong(2),
-          if (row.isNullAt(3)) -1L else row.getLong(3))).toSet
-      assert(gotB == want, s"bucketed inclusive=$inc")
-    }
+    val got = TimeJoins.asofJoin(l, r, Seq("k"), "t", "rt",
+      Seq("rid", "v"), "rid")
+      .collect()
+      .map(row => (row.getString(0), row.getLong(1), row.getLong(2),
+        if (row.isNullAt(3)) -1L else row.getLong(3))).toSet
+    val want = lRows.map { case (k, t, lid) =>
+      val cands = rRows.filter(rr => rr._1 == k && rr._2 <= t)
+      val best = if (cands.isEmpty) -1L
+        else cands.maxBy(rr => (rr._2, rr._3))._3
+      (k, t, lid, best)
+    }.toSet
+    assert(got == want)
+    // bucketed variant agrees on the same random data
+    val gotB = TimeJoins.asofJoinBucketed(l, r, Seq("k"), "t", "rt",
+      Seq("rid", "v"), "rid", bucketUs = 7L)
+      .collect()
+      .map(row => (row.getString(0), row.getLong(1), row.getLong(2),
+        if (row.isNullAt(3)) -1L else row.getLong(3))).toSet
+    assert(gotB == want, "bucketed")
   }
 
   test("rangeJoin: containment matches, each pair exactly once") {

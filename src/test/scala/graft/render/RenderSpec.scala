@@ -195,6 +195,79 @@ class RenderSpec extends AnyFunSuite {
       """[[2.0, 0.4], [5.0, 1.0]]}]""")
   }
 
+  /** `n` points over three attributes, one every 10 µs, with NaN runs:
+    * at a "10us" interval every point is its own bucket, so the raw and
+    * the intervaled answer both have `n` rows. Filtered from a range
+    * longer than one batch so that, as over a file scan, the optimizer
+    * knows no row bound within the page: over exactly `n` rows it would
+    * drop the page's limit, and with it the one-partition top-k. */
+  private def answerOf(n: Int) = {
+    import org.apache.spark.sql.functions._
+    spark.range(n.toLong + B + 1).where(col("id") < n).select(
+      concat(lit("a"), (col("id") % 3).cast("string")).as("att_name"),
+      col("id").as("point_id"), (col("id") * 10).as("t"),
+      when(col("id") % 13 === 0, lit(Double.NaN))
+        .otherwise((col("id") % 17).cast("double")).as("value_r"))
+  }
+  private val answerAttrs = Seq("a2", "a0", "a1") // not lexicographic
+  private val B = ArchiveApi.RawRenderBatchRows
+
+  /** The body the range regroup renders: `rawQueryFrame(…, maxRows)`
+    * iterated partition by partition with rawQuery's render loop. */
+  private def regroupedBody(n: Int, interval: Option[String],
+      asCsv: Boolean, maxRows: Int): String = {
+    val it = ArchiveApi.rawQueryFrame(answerOf(n), answerAttrs, 0L,
+      Long.MaxValue / 2, interval, maxRows).toLocalIterator()
+    val w: Render.SeriesStream =
+      if (asCsv) new Render.CsvStream(new java.lang.StringBuilder)
+      else new Render.GrafanaStream(new java.lang.StringBuilder)
+    var current: String = null
+    while (it.hasNext) {
+      val r = it.next()
+      val name = r.getString(0)
+      if (name != current) { w.startSeries(name); current = name }
+      val v = r.getDouble(2)
+      w.row(r.getDouble(1), if (v.isNaN) None else Some(v))
+    }
+    w.finish()
+  }
+
+  private def checkBodies(n: Int, maxRows: Int): Unit =
+    for (interval <- Seq(None, Some("10us")); asCsv <- Seq(true, false)) {
+      val got = ArchiveApi.rawQuery(answerOf(n), answerAttrs, 0L,
+        Long.MaxValue / 2, interval, asCsv, maxRows)
+      val want = regroupedBody(n, interval, asCsv, maxRows)
+      assert(got == want, s"n=$n maxRows=$maxRows interval=$interval " +
+        s"csv=$asCsv: ${got.length} vs ${want.length} chars")
+    }
+
+  for ((label, n) <- Seq("1 row" -> 1, "RawRenderBatchRows rows" -> B,
+      "RawRenderBatchRows + 1 rows" -> (B + 1)))
+    test(s"rawQuery of an answer of $label renders the range regroup's " +
+      "body (raw and intervaled, CSV and JSON)") {
+      checkBodies(n, ArchiveApi.DefaultRawRowCap)
+    }
+
+  test("rawQuery under a cap below one batch that the answer hits " +
+    "renders the range regroup's body") {
+    checkBodies(5000, 1000)
+    assert(ArchiveApi.rawQuery(answerOf(5000), answerAttrs, 0L,
+      Long.MaxValue / 2, None, asCsv = true, maxRows = 1000)
+      .split("\n").count(_.headOption.exists(_.isDigit)) == 1000)
+  }
+
+  test("rawQuery: an answer of one batch is one collect; one row more " +
+    "takes the range regroup") {
+    def jobs(n: Int, interval: Option[String]) = jobsAndCompiles(
+      ArchiveApi.rawQuery(answerOf(n), answerAttrs, 0L, Long.MaxValue / 2,
+        interval, asCsv = false))._1
+    val (raw, intervaled) = (jobs(B, None), jobs(B, Some("10us")))
+    assert(raw == 1, s"a one-batch raw answer ran $raw jobs")
+    assert(intervaled <= 2, s"a one-batch intervaled answer ran $intervaled")
+    val over = jobs(B + 1, None)
+    assert(over > raw + 1, s"one row over a batch ran $over jobs")
+  }
+
   test("imageQuery produces per-axis PNGs and hover descs (§3.1)") {
     val pts = (0 until 50).map { i =>
       ("sensor/a", i.toLong, i.toLong * 20, 1.0 + (i % 10))

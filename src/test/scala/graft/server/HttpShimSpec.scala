@@ -180,6 +180,33 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Json.arr(Json.parse(r.body())).nonEmpty)
   }
 
+  test("a small export at the default cap is one collect: one job raw " +
+    "(/httpquery), at most two intervaled (/query)") {
+    val raw = jobsDuring(assert(post("/httpquery",
+      """{"attributes": ["u1/click", "u2/view"],
+        |"time_range": ["2024-01-05", "2024-01-20"]}""".stripMargin)
+      .statusCode() == 200))
+    assert(raw == 1, s"raw /httpquery ran $raw jobs")
+    val intervaled = jobsDuring(assert(post("/query",
+      """{"targets": [{"cs": "events.cs:10000", "target": "u1/click"}],
+        |"range": {"from": "2024-01-05", "to": "2024-01-20"},
+        |"interval": "1h"}""".stripMargin).statusCode() == 200))
+    assert(intervaled >= 1 && intervaled <= 2,
+      s"intervaled /query ran $intervaled jobs")
+  }
+
+  test("POST /query answers a zero or overflowing interval with 400") {
+    for (interval <- Seq("0s", "106751992d")) {
+      val r = post("/query",
+        s"""{"targets": [{"cs": "events.cs:10000", "target": "u1/click"}],
+           |"range": {"from": "2024-01-05", "to": "2024-01-20"},
+           |"interval": "$interval"}""".stripMargin)
+      assert(r.statusCode() == 400, s"interval $interval answered ${r.body()}")
+      assert(Json.str(Json.obj(Json.parse(r.body()))("error"))
+        .contains(interval))
+    }
+  }
+
   test("POST /image renders per-axis PNGs with hover descs") {
     val r = post("/image",
       """{"attributes": [{"name": "u1/click", "color": "#00ff00",
