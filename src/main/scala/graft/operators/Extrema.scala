@@ -43,6 +43,33 @@ object Extrema {
         count(lit(1)).as("points")) // A7: total visible point count
   }
 
+  /** [[perAttribute]] over rows already on the driver, with its Spark
+    * semantics: a row `(key, value_r, log)` is kept unless `log` and
+    * its value is null or `<= 0` (Spark orders NaN above all reals, so
+    * `NaN > 0` keeps the row); NaN and null are left out of min/max but
+    * counted. Each key maps to (vmin, vmax, points), min and max as
+    * `value_r`'s own type renders them, as a collected aggregate row
+    * read through `toString` does. */
+  private[graft] def perAttributeLocal[K](
+      rows: Iterator[(K, Any, Boolean)]): Map[K, (Option[Double], Option[Double], Long)] = {
+    def num(v: Any): Double = v.asInstanceOf[Number].doubleValue
+    val acc = scala.collection.mutable.LinkedHashMap.empty[K, (Any, Any, Long)]
+    rows.foreach { case (key, v, log) =>
+      if (!log || (v != null && (num(v).isNaN || num(v) > 0))) {
+        val (mn, mx, n) = acc.getOrElse(key, (null, null, 0L))
+        val clean = v != null && !num(v).isNaN
+        acc(key) = (
+          if (clean && (mn == null || num(v) < num(mn))) v else mn,
+          if (clean && (mx == null || num(v) > num(mx))) v else mx,
+          n + 1)
+      }
+    }
+    acc.iterator.map { case (key, (mn, mx, n)) =>
+      key -> (Option(mn).map(_.toString.toDouble),
+        Option(mx).map(_.toString.toDouble), n)
+    }.toMap
+  }
+
   /** Per-axis limits: min-of-mins / max-of-maxes across the attributes
     * sharing a y-axis (A3, reference `plot.py:112-130`). Input is the
     * output of [[perAttribute]] joined with an axis assignment. */

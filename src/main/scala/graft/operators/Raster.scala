@@ -18,6 +18,12 @@ import graft.plans.{RasterParams, YScale}
   * then a flatMap that emits covered pixels per segment (≤
   * width+height per segment) followed by a hash aggregate.
   *
+  * Driver twin: a window that fits one driver page
+  * ([[graft.api.ArchiveApi.DriverPageRows]] rows) is already collected
+  * for `/image`, so its lines run on the driver ([[linesLocal]]) with
+  * the same projection and per-pair kernel, and no job — there the
+  * work is O(points) of driver CPU, bounded by the page.
+  *
   * Divergence: datashader draws anti-aliased lines with numba kernels
   * (`plot.py:22-27`); we use a deterministic integer Bresenham so
   * golden tests are stable (SURVEY.md §7.5.2).
@@ -26,7 +32,7 @@ object Raster {
 
   /** A line point before pixel projection: series key, time, value,
     * tie-breaker and y-scale index (null: no scale, dropped). */
-  private[operators] final case class LinePoint(k: String, t: Long,
+  private[graft] final case class LinePoint(k: String, t: Long,
       v: java.lang.Double, tie: Long, s: java.lang.Integer)
 
   /** A line point after pixel projection; `k` is the NUL-joined series
@@ -158,7 +164,6 @@ object Raster {
       s"degenerate raster window: t=[${p.t0},${p.t1}] ${p.width}x${p.height}")
     val spark = points.sparkSession
     import spark.implicits._
-    val height = p.height
     val prepared = points
       .where(col("t").isNotNull)
       .select(
@@ -168,21 +173,7 @@ object Raster {
         col(tieCol).cast("long").as("tie"),
         scaleOf.cast("int").as("s"))
       .as[LinePoint]
-      .flatMap { r =>
-        if (r.s == null || !p.inWindow(r.t)) Iterator.empty
-        else {
-          val scale = p.scales(r.s)
-          // a NaN value breaks the line; so does a non-positive value
-          // on a log axis (datashader: log10 of it is NaN → the
-          // segment is dropped). A null value projects to the top
-          // row, as the oracles' null-skipping `least` has it.
-          val py =
-            if (r.v == null) Some(height - 1L)
-            else if (scale.breaks(r.v)) None
-            else Some(scale.py(r.v, height))
-          Iterator.single(LP(r.k, p.px(r.t), py, r.t, r.tie))
-        }
-      }
+      .flatMap(project(p))
     // the edge collect and the cell pass below read ONE RDD, so they
     // share its range shuffle: the second job finds the map output of
     // the same ShuffleDependency and skips the map stage — no cache
@@ -190,21 +181,8 @@ object Raster {
       .repartitionByRange(col("k"), col("t"), col("tie"))
       .sortWithinPartitions(col("k"), col("t"), col("tie"))
       .rdd
-    // cells outside the canvas are clipped per cell, here rather than
-    // in SQL, so the canvas size stays out of generated code
-    val kernel = { (a: LP, b: LP) =>
-      segCells(aa, height)(a, b).filter { case (_, x, y, _) =>
-        x >= 0 && x < p.width && y >= 0 && y < height }
-    }
     // within-partition consecutive pairs
-    val inner = spark.createDataset(sorted.mapPartitions { it =>
-      var prev: LP = null
-      it.flatMap { cur =>
-        val out = if (prev != null) kernel(prev, cur) else Nil
-        prev = cur
-        out
-      }
-    })
+    val inner = spark.createDataset(sorted.mapPartitions(pairCells(p, aa)))
     // cross-partition pairs: (last of partition i, first of the next
     // non-empty partition) — O(#partitions) rows, stitched driver-side
     val edges = sorted.mapPartitionsWithIndex { (i, it) =>
@@ -216,7 +194,7 @@ object Raster {
       }
     }.collect().sortBy(_._1)
     val boundary = edges.toSeq.sliding(2).flatMap {
-      case Seq((_, _, last), (_, first, _)) => kernel(last, first)
+      case Seq((_, _, last), (_, first, _)) => clippedCells(p, aa)(last, first)
       case _ => Nil
     }.toSeq
     val cells = inner.toDF("k", "px", "py", "w")
@@ -229,6 +207,66 @@ object Raster {
       .groupBy(col("k"), col("px"), col("py"))
       .agg(sum(col("w")).as(outCol))
       .select(keyCols ++ Seq(col("px"), col("py"), col(outCol)): _*)
+  }
+
+  /** [[linesRaster]] over points already on the driver, summed per
+    * (series key, px, py): the window filter, projection and per-pair
+    * kernel are the executors' own ([[project]], [[pairCells]]), run
+    * over the points sorted by (key, t, tie) as one run — the order the
+    * range partitions concatenate to, so no boundary is left to stitch.
+    * Each point's `k` is its key parts joined by [[seriesKey]]; the
+    * result's key is split back into them, as the distributed output's
+    * key columns are. */
+  private[graft] def linesLocal(points: Iterator[LinePoint], p: RasterParams,
+      aa: Boolean): Map[(Seq[String], Long, Long), Long] = {
+    require(p.t1 > p.t0 && p.width > 0 && p.height > 0,
+      s"degenerate raster window: t=[${p.t0},${p.t1}] ${p.width}x${p.height}")
+    val sorted = points.flatMap(project(p)).toArray
+      .sortBy(lp => (lp.k, lp.t, lp.tie))
+    val sums = scala.collection.mutable.HashMap.empty[(String, Long, Long), Long]
+    pairCells(p, aa)(sorted.iterator).foreach { case (k, x, y, w) =>
+      sums((k, x, y)) = sums.getOrElse((k, x, y), 0L) + w
+    }
+    sums.iterator.map { case ((k, x, y), w) =>
+      (k.split(KeySep, -1).toSeq, x, y) -> w }.toMap
+  }
+
+  /** The series key [[linesRaster]] builds from its key columns. */
+  private[graft] def seriesKey(parts: Seq[String]): String =
+    parts.mkString(KeySep)
+
+  /** A line point's pixel projection, or none when it has no y-scale or
+    * lies outside the window. A NaN value breaks the line; so does a
+    * non-positive value on a log axis (datashader: log10 of it is NaN
+    * → the segment is dropped). A null value projects to the top row,
+    * as the oracles' null-skipping `least` has it. */
+  private def project(p: RasterParams)(r: LinePoint): Option[LP] =
+    if (r.s == null || !p.inWindow(r.t)) None
+    else {
+      val scale = p.scales(r.s)
+      val py =
+        if (r.v == null) Some(p.height - 1L)
+        else if (scale.breaks(r.v)) None
+        else Some(scale.py(r.v, p.height))
+      Some(LP(r.k, p.px(r.t), py, r.t, r.tie))
+    }
+
+  /** [[segCells]] clipped to the canvas — per cell, here rather than in
+    * SQL, so the canvas size stays out of generated code. */
+  private def clippedCells(p: RasterParams, aa: Boolean)(
+      a: LP, b: LP): Seq[(String, Long, Long, Long)] =
+    segCells(aa, p.height)(a, b).filter { case (_, x, y, _) =>
+      x >= 0 && x < p.width && y >= 0 && y < p.height }
+
+  /** The clipped cells of every consecutive pair of a sorted run. */
+  private def pairCells(p: RasterParams, aa: Boolean)(
+      it: Iterator[LP]): Iterator[(String, Long, Long, Long)] = {
+    var prev: LP = null
+    it.flatMap { cur =>
+      val out = if (prev != null) clippedCells(p, aa)(prev, cur) else Nil
+      prev = cur
+      out
+    }
   }
 
   /** A4 (opt-in variant) — ANTI-ALIASED line rasterization: per-cell

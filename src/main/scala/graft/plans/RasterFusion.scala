@@ -110,6 +110,28 @@ object RasterFusion {
       RasterParams(keys.length, t0Us, t1Us, width, height,
         scales.toIndexedSeq))(RasterHoverPlan(_, _))
 
+  /** [[hoverColumns]] over rows already on the driver: each row
+    * `(key, t, value_r, scale)` that [[RasterParams.keep]] keeps folds
+    * into its (key, px) column's [[CellAgg]], as the fused partial and
+    * merge execs fold it (the py level they key by first never changes
+    * a column's min, max or count). A null value or scale is skipped,
+    * as the partial exec skips it. */
+  private[graft] def hoverLocal[K](rows: Iterator[(K, Long, java.lang.Double,
+      java.lang.Integer)], p: RasterParams): Map[(K, Long), CellAgg] = {
+    require(p.t1 > p.t0 && p.width > 0 && p.height > 0)
+    val cols = scala.collection.mutable.HashMap.empty[(K, Long), CellAgg]
+    rows.foreach { case (key, t, v, s) =>
+      if (v != null && s != null && p.keep(t, v, s)) {
+        val px = p.px(t)
+        cols.get((key, px)) match {
+          case Some(agg) => agg.add(v)
+          case None => cols((key, px)) = new CellAgg(1L, CellAgg.e6(v), v, v)
+        }
+      }
+    }
+    cols.toMap
+  }
+
   private def fused(points: DataFrame, keys: Seq[String], scaleOf: Column,
       params: RasterParams)(
       node: (RasterParams, LogicalPlan) => LogicalPlan): DataFrame = {
@@ -261,7 +283,7 @@ object RasterStrategy extends SparkStrategy {
   * populations are tiny so the double sum stays exact" assumption).
   * Integer sums are merge-order-free, so vmean is bit-identical at
   * any scale; overflow needs Σ|v| > 9.2×10¹² in ONE pixel cell. */
-private[plans] final class CellAgg(var cnt: Long, var sum: Long,
+private[graft] final class CellAgg(var cnt: Long, var sum: Long,
     var mn: Double, var mx: Double) {
   def add(v: Double): Unit = {
     cnt += 1; sum += CellAgg.e6(v)
@@ -275,7 +297,7 @@ private[plans] final class CellAgg(var cnt: Long, var sum: Long,
   }
 }
 
-private[plans] object CellAgg {
+private[graft] object CellAgg {
   /** `round(v·10⁶)` half-away-from-zero — see [[graft.functions.DotE8
     * .roundE4]] for the shared tie contract with SQL `round()`.
     *

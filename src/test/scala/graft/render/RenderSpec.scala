@@ -198,25 +198,33 @@ class RenderSpec extends AnyFunSuite {
   /** `n` points over three attributes, one every 10 µs, with NaN runs:
     * at a "10us" interval every point is its own bucket, so the raw and
     * the intervaled answer both have `n` rows. Filtered from a range
-    * longer than one batch so that, as over a file scan, the optimizer
-    * knows no row bound within the page: over exactly `n` rows it would
-    * drop the page's limit, and with it the one-partition top-k. */
+    * longer than one page so that, as over a file scan, the optimizer
+    * knows no row bound within the page. */
   private def answerOf(n: Int) = {
     import org.apache.spark.sql.functions._
-    spark.range(n.toLong + B + 1).where(col("id") < n).select(
+    answerRows(spark.range(n.toLong + B + 1).where(col("id") < n))
+  }
+  /** [[answerOf]]'s columns over the ids `ids`. */
+  private def answerRows(ids: org.apache.spark.sql.Dataset[java.lang.Long]) = {
+    import org.apache.spark.sql.functions._
+    ids.select(
       concat(lit("a"), (col("id") % 3).cast("string")).as("att_name"),
       col("id").as("point_id"), (col("id") * 10).as("t"),
       when(col("id") % 13 === 0, lit(Double.NaN))
         .otherwise((col("id") % 17).cast("double")).as("value_r"))
   }
   private val answerAttrs = Seq("a2", "a0", "a1") // not lexicographic
-  private val B = ArchiveApi.RawRenderBatchRows
+  private val B = ArchiveApi.DriverPageRows
 
   /** The body the range regroup renders: `rawQueryFrame(…, maxRows)`
     * iterated partition by partition with rawQuery's render loop. */
   private def regroupedBody(n: Int, interval: Option[String],
-      asCsv: Boolean, maxRows: Int): String = {
-    val it = ArchiveApi.rawQueryFrame(answerOf(n), answerAttrs, 0L,
+      asCsv: Boolean, maxRows: Int): String =
+    regroupedBody(answerOf(n), interval, asCsv, maxRows)
+
+  private def regroupedBody(points: org.apache.spark.sql.DataFrame,
+      interval: Option[String], asCsv: Boolean, maxRows: Int): String = {
+    val it = ArchiveApi.rawQueryFrame(points, answerAttrs, 0L,
       Long.MaxValue / 2, interval, maxRows).toLocalIterator()
     val w: Render.SeriesStream =
       if (asCsv) new Render.CsvStream(new java.lang.StringBuilder)
@@ -241,8 +249,8 @@ class RenderSpec extends AnyFunSuite {
         s"csv=$asCsv: ${got.length} vs ${want.length} chars")
     }
 
-  for ((label, n) <- Seq("1 row" -> 1, "RawRenderBatchRows rows" -> B,
-      "RawRenderBatchRows + 1 rows" -> (B + 1)))
+  for ((label, n) <- Seq("1 row" -> 1, "DriverPageRows rows" -> B,
+      "DriverPageRows + 1 rows" -> (B + 1)))
     test(s"rawQuery of an answer of $label renders the range regroup's " +
       "body (raw and intervaled, CSV and JSON)") {
       checkBodies(n, ArchiveApi.DefaultRawRowCap)
@@ -430,20 +438,28 @@ class RenderSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs and codegen compiles started while `body` runs on this
-    * thread (jobs matched by a local-property tag, counted once the
-    * listener bus has delivered every job end). */
-  private def jobsAndCompiles(body: => Unit): (Int, Long) = {
+  /** Spark jobs and codegen compiles started while a body ran on this
+    * thread, and whether a stage of those jobs read a persisted RDD. */
+  private final case class JobRun(jobs: Int, compiles: Long,
+      persisted: Boolean)
+
+  /** The [[JobRun]] of `body` (jobs matched by a local-property tag,
+    * counted once the listener bus has delivered every job end). */
+  private def jobRun(body: => Unit): JobRun = {
     import org.apache.spark.scheduler._
     import org.apache.spark.metrics.source.CodegenMetrics
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
     val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val persisted = new java.util.concurrent.atomic.AtomicBoolean()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.jobTag") == tag))
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobTag") == tag)) {
           started.add(e.jobId)
+          if (e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid)))
+            persisted.set(true)
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (started.contains(e.jobId)) ended.incrementAndGet()
     }
@@ -456,7 +472,14 @@ class RenderSpec extends AnyFunSuite {
     while ((started.isEmpty || started.size != ended.get) &&
       System.nanoTime() < deadline) Thread.sleep(50)
     sc.removeSparkListener(l)
-    (started.size, compiles)
+    JobRun(started.size, compiles, persisted.get)
+  }
+
+  /** Jobs and codegen compiles started while `body` runs on this
+    * thread. */
+  private def jobsAndCompiles(body: => Unit): (Int, Long) = {
+    val r = jobRun(body)
+    (r.jobs, r.compiles)
   }
 
   test("imageQuery: a three-axis request runs no more Spark jobs than " +
@@ -478,5 +501,63 @@ class RenderSpec extends AnyFunSuite {
     run(0L, 1000L, 24, 12)
     val (_, compiles) = jobsAndCompiles(run(13L, 977L, 31, 9))
     assert(compiles <= 1, s"a new window compiled $compiles classes")
+  }
+
+  test("rawQuery over a relation Spark bounds at one page keeps the " +
+    "one-partition plan: one job raw, at most two intervaled") {
+    // spark.range(B) holds at most B rows, so the optimizer drops the
+    // page's limit and its time-first sort
+    val bounded = answerRows(spark.range(B.toLong))
+    for (interval <- Seq(None, Some("10us"))) {
+      var body = ""
+      val jobs = jobsAndCompiles {
+        body = ArchiveApi.rawQuery(bounded, answerAttrs, 0L,
+          Long.MaxValue / 2, interval, asCsv = false)
+      }._1
+      assert(jobs <= (if (interval.isEmpty) 1 else 2),
+        s"interval=$interval ran $jobs jobs")
+      assert(body == regroupedBody(bounded, interval, asCsv = false,
+        ArchiveApi.DefaultRawRowCap), s"interval=$interval")
+    }
+  }
+
+  /** `imageQuery` over the first `n` rows of a longer range, one every
+    * 10 µs: the window [0, 10·(n − 1)] holds exactly `n` rows. */
+  private def imageOfRows(n: Int) = {
+    val attrs = Seq(ArchiveApi.AttrSpec("a0", 0xff0000, 0),
+      ArchiveApi.AttrSpec("a1", 0x00ff00, 0),
+      ArchiveApi.AttrSpec("a2", 0x0000ff, 1))
+    val axes = Map(1 -> ArchiveApi.AxisSpec(scale = Some("log")))
+    val points = answerOf(n + 100)
+    val t1 = 10L * (n - 1)
+    def driverBody = {
+      val rows = ArchiveApi.windowRows(ArchiveApi.windowOf(points,
+        attrs.map(_.name), 0L, t1), "point_id", n + 1)
+      assert(rows.length == n)
+      ArchiveApi.imageOf(ArchiveApi.OnDriver(rows), attrs, 0L, t1, 240, 90,
+        axes, antialias = false)
+    }
+    var served: ArchiveApi.ImageResult = null
+    val run = jobRun {
+      served = ArchiveApi.imageQuery(points, attrs, 0L, t1, 240, 90, axes)
+    }
+    (run, served, () => driverBody)
+  }
+
+  test("imageQuery: a window of DriverPageRows rows is one page: at " +
+    "most two jobs and no persist") {
+    val (run, served, driver) = imageOfRows(B)
+    assert(run.jobs <= 2, s"a one-page window ran ${run.jobs} jobs")
+    assert(!run.persisted, "a one-page window was persisted")
+    assert(served == driver())
+    assert(served.images.keySet == Set("0", "1"))
+  }
+
+  test("imageQuery: a window of DriverPageRows + 1 rows takes the " +
+    "distributed path and renders the driver's body over the same rows") {
+    val (run, served, driver) = imageOfRows(B + 1)
+    assert(run.persisted && run.jobs > 2,
+      s"${run.jobs} jobs, persisted=${run.persisted}")
+    assert(served == driver())
   }
 }

@@ -929,4 +929,33 @@ class HttpShimSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(twice == once, s"two requests ran $twice jobs, one runs $once")
     }
   }
+
+  test("a small /image is one driver page: at most two Spark jobs") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    withShim(ad.pointsAll) { s =>
+      val jobs = jobsDuring(assert(postImage(s, imageReq(150, 60),
+        gzip = false).statusCode() == 200))
+      assert(jobs > 0 && jobs <= 2, s"a small /image ran $jobs jobs")
+    }
+  }
+
+  test("concurrent different /image requests answer the bodies they " +
+    "answer one at a time") {
+    val ad = new EventsArchiveAdapter(spark, graft.Harness.warmDir)
+    val reqs = Seq(imageReq(160, 64), imageReq(90, 30, Seq("u14/view",
+      "u9/purchase")), imageReq(200, 80, Seq("u2/view")), imageReq(75, 25,
+      Seq("u3/click", "u5/click", "u1/click")))
+    val alone = reqs.map(r => fresh(ad.pointsAll, r, gzip = false).body())
+    withShim(ad.pointsAll) { s =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = reqs.map(r => java.util.concurrent.CompletableFuture
+        .supplyAsync(() => { start.await(); postImage(s, r, gzip = false) }))
+      start.countDown()
+      val together = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(together.forall(_.statusCode() == 200))
+      together.map(_.body()).zip(alone).zipWithIndex.foreach {
+        case ((got, want), i) => assert(got.sameElements(want), s"request $i")
+      }
+    }
+  }
 }
